@@ -16,18 +16,94 @@ round-trip the built index through parquet (Iceberg on a real cluster).
 from __future__ import annotations
 
 import json
+import threading
 import time
+from collections import namedtuple
 from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .compression import assign_doc_indexes, block_postings
 from .indexer import build_postings, docs_from_pages
 from .pagerank import extract_edges, pagerank, vertices_from_pages
 from .ranker import expand_query, score_bm25, score_tfidf
-from .wand import blocked_maxscore_topk, maxscore_topk
+from .wand import (
+    _local_result_df,
+    bm25_idf,
+    bm25_partial,
+    blocked_maxscore_threshold,
+    blocked_maxscore_topk,
+    blocked_phrase_topk,
+    blocked_proximity_topk,
+    entry_partials,
+    idf_map,
+    maxscore_topk,
+)
 
 TERM_BUCKETS = 64
+
+# one opened blocked index: the lazy blocks scan, the cached doc-stats
+# dimension, N, (avgdl, min_dl) and the driver-side {term: (df, max_tf,
+# bucket)} dictionary (None when it exceeds DICT_CAP or is absent)
+Shard = namedtuple("Shard", "blocks doc_stats_idx total stats term_stats")
+# what reading an absent sidecar raises: pyarrow locally, Spark elsewhere
+_MISSING_SIDECAR = (FileNotFoundError, AnalysisException)
+
+
+class Deployment:
+    """A list of blocked indexes queried as one corpus; a single index
+    is a one-shard deployment. Opened once per shard-path tuple
+    (SearchEngine._deployment) and dropped with the blocked cache, it
+    holds what every query kind shares:
+
+    - global collection stats: N = sum of shard totals, avgdl = the
+      doc-weighted mean, and (``lookup``) per-term df = the sum over
+      shards. BM25 scores are comparable across shards only under these.
+    - url masks: later shards take precedence per url (merge_pages /
+      merge_blocked_shards semantics), so a url a later shard owns masks
+      every earlier shard's copy, even when the newer version does not
+      match the query. Masking happens after each shard's top-k, so a
+      shard over-fetches by ``extra`` (its urls a later shard owns):
+      at most that many of its rows are masked, so >= k live rows
+      survive whenever it has them. The masks use the shards' driver-side
+      forward indexes; beyond URL_DICT_CAP precedence degrades to
+      keep-latest-on-collision. Global stats count superseded copies
+      until a compaction (merge_blocked_shards) — the standard
+      segment-store trade (Lucene's deleted docs inflate stats until
+      merge); none of this affects disjoint shards.
+    """
+
+    def __init__(self, engine: "SearchEngine", paths: tuple):
+        self.engine = engine
+        self.paths = paths
+        self.shards = [engine._blocked_handles(p) for p in paths]
+        self.n = sum(s.total for s in self.shards)
+        self.avgdl = (
+            sum(s.total * s.stats[0] for s in self.shards) / self.n if self.n else 1.0
+        )
+        self.url_lookups = [engine._blocked_url_dict(p) for p in paths]
+        self.masked, self.extra = [], []
+        later: set = set()
+        for lookup in reversed(self.url_lookups):
+            urls = set(lookup.values()) if lookup is not None else set()
+            self.masked.insert(0, frozenset(later))
+            self.extra.insert(0, len(urls & later))
+            later |= urls
+
+    def lookup(self, terms) -> tuple:
+        """([per-shard {term: (df, max_tf, bucket)} of ``terms`` present
+        in that shard], global {term: df})."""
+        terms = sorted(set(terms))
+        infos = [
+            self.engine._shard_terms(p, s, terms)
+            for p, s in zip(self.paths, self.shards)
+        ]
+        df: dict = {}
+        for info in infos:
+            for t, (d, _mt, _bk) in info.items():
+                df[t] = df.get(t, 0) + d
+        return infos, df
 
 
 class SearchEngine:
@@ -40,6 +116,14 @@ class SearchEngine:
         self.total_documents: int = 0
         self._avgdl: float | None = None
         self.build_metrics: dict = {}
+        # opened blocked indexes: {path: Shard}, {path: {doc_index: url}
+        # or None}, and {paths tuple: Deployment}. Server threads open
+        # and invalidate them concurrently: the lock keeps a deployment
+        # from holding handles the cache no longer owns.
+        self._blocked_cache: dict = {}
+        self._blocked_url_dicts: dict = {}
+        self._deployments: dict = {}
+        self._blocked_lock = threading.RLock()
 
     # -- build ------------------------------------------------------------
 
@@ -321,154 +405,152 @@ class SearchEngine:
         )
 
     def _invalidate_blocked_cache(self, index_path: str | None = None) -> None:
-        """Drop cached blocked-index handles (one path, or all when
-        ``index_path`` is None), unpersisting their doc_stats dimension."""
-        cache = getattr(self, "_blocked_cache", None)
-        if not cache:
-            return
-        keys = [index_path] if index_path is not None else list(cache)
-        for key in keys:
-            entry = cache.pop(key, None)
-            if entry is not None:
-                entry[1].unpersist()
-            getattr(self, "_blocked_url_dicts", {}).pop(key, None)
+        """Drop cached blocked-index handles and url dicts (one path, or
+        all when ``index_path`` is None), unpersisting their doc_stats
+        dimension, plus every deployment that includes them."""
+        with self._blocked_lock:
+            for key in [index_path] if index_path is not None else list(self._blocked_cache):
+                shard = self._blocked_cache.pop(key, None)
+                if shard is not None:
+                    shard.doc_stats_idx.unpersist()
+                self._blocked_url_dicts.pop(key, None)
+            self._deployments = {
+                paths: dep for paths, dep in self._deployments.items()
+                if index_path is not None and index_path not in paths
+            }
 
-    def _blocked_handles(self, index_path: str):
+    def _blocked_handles(self, index_path: str) -> Shard:
         """Per-path blocked-index handles, opened once: the blocks scan
         (lazy; term_bucket pruning applies per query), the cached
-        doc-stats dimension, and its count. The old per-query re-read +
-        count() cost two extra jobs per query and dominated cold CLI
-        latency."""
-        cache = getattr(self, "_blocked_cache", None)
-        if cache is None:
-            cache = self._blocked_cache = {}
-        if index_path not in cache:
-            blocks = self.spark.read.parquet(f"{index_path}/blocks")
-            total, stats, term_stats = self._read_sidecars(index_path)
-            doc_stats_idx = self.spark.read.parquet(f"{index_path}/doc_stats_idx")
-            if total is not None:
-                # right-size the cached dimension (~250k rows/partition):
-                # the per-query url lookup probes every cached partition,
-                # so a small corpus cached across 32 file-splits pays 32
-                # scheduled tasks per query for no parallelism gain.
-                # coalesce only ever reduces, so at 10^12 docs this is a
-                # no-op and the dimension stays fully distributed.
-                doc_stats_idx = doc_stats_idx.coalesce(
-                    max(1, -(-total // 250_000))
-                )
-            doc_stats_idx = doc_stats_idx.persist()
-            if total is None:
-                total = doc_stats_idx.count()
-            cache[index_path] = (blocks, doc_stats_idx, total, stats, term_stats)
-        return cache[index_path]
+        doc-stats dimension, its count and dl stats, and the dictionary.
+        The old per-query re-read + count() cost two extra jobs per query
+        and dominated cold CLI latency."""
+        with self._blocked_lock:
+            if index_path not in self._blocked_cache:
+                self._blocked_cache[index_path] = self._open_blocked(index_path)
+            return self._blocked_cache[index_path]
+
+    def _open_blocked(self, index_path: str) -> Shard:
+        blocks = self.spark.read.parquet(f"{index_path}/blocks")
+        total, stats, term_stats = self._read_sidecars(index_path)
+        doc_stats_idx = self.spark.read.parquet(f"{index_path}/doc_stats_idx")
+        if total is not None:
+            # right-size the cached dimension (~250k rows/partition):
+            # the per-query url lookup probes every cached partition,
+            # so a small corpus cached across 32 file-splits pays 32
+            # scheduled tasks per query for no parallelism gain.
+            # coalesce only ever reduces, so at 10^12 docs this is a
+            # no-op and the dimension stays fully distributed.
+            doc_stats_idx = doc_stats_idx.coalesce(
+                max(1, -(-total // 250_000))
+            )
+        doc_stats_idx = doc_stats_idx.persist()
+        if total is None:  # pre-meta layout: one stats job per open
+            r = doc_stats_idx.agg(
+                F.count(F.lit(1)), F.avg("n_term_entries"), F.min("n_term_entries")
+            ).collect()[0]
+            total, stats = int(r[0]), (float(r[1] or 1.0), float(r[2] or 1.0))
+        return Shard(blocks, doc_stats_idx, total, stats, term_stats)
+
+    def _sidecar_rows(self, index_path: str, name: str, terms=None, cap=None):
+        """Rows (dicts) of a small sidecar table: pyarrow on local paths
+        (zero Spark jobs on the query path), a Spark read on s3/hdfs.
+        ``terms`` keeps only those terms' rows; with ``cap``, a table
+        holding more rows returns None."""
+        if "://" in index_path and not index_path.startswith("file://"):
+            df = self.spark.read.parquet(f"{index_path}/{name}")
+            if terms is not None:
+                df = df.where(F.col("term").isin(list(terms)))
+            rows = [r.asDict() for r in (df.take(cap + 1) if cap else df.collect())]
+        else:
+            import pyarrow.parquet as pq
+
+            tbl = pq.read_table(
+                f"{index_path.removeprefix('file://')}/{name}",
+                filters=[("term", "in", list(terms))] if terms is not None else None,
+            )
+            if cap and tbl.num_rows > cap:
+                return None
+            rows = tbl.to_pylist()
+        return None if cap and len(rows) > cap else rows
+
+    @staticmethod
+    def _dictionary(rows) -> dict:
+        """term_stats rows -> {term: (df, max_tf, bucket)}; bucket is None
+        on pre-bucket layouts."""
+        return {
+            r["term"]: (
+                int(r["df"]),
+                int(r["max_tf"]),
+                None if r.get("bucket") is None else int(r["bucket"]),
+            )
+            for r in rows
+        }
 
     def _read_sidecars(self, index_path: str):
-        """Read the tiny meta + term_stats sidecars. Local paths go
-        through pyarrow directly — zero Spark jobs on the cold query
-        path; non-local filesystems (s3/hdfs) fall back to Spark reads."""
+        """(total, (avgdl, min_dl), dictionary) from the tiny meta and
+        term_stats sidecars; None marks a pre-meta / pre-dictionary
+        layout, or a dictionary over DICT_CAP (queries then read just
+        their terms' rows, ``_shard_terms``)."""
         total = stats = term_stats = None
-
-        def _local(p):
-            return not ("://" in p and not p.startswith("file://"))
-
         try:
-            if _local(index_path):
-                import pyarrow.parquet as pq
-
-                m = pq.read_table(
-                    index_path.removeprefix("file://") + "/meta"
-                ).to_pylist()[0]
-            else:
-                m = self.spark.read.parquet(f"{index_path}/meta").collect()[0]
+            m = self._sidecar_rows(index_path, "meta")[0]
             total = int(m["total_documents"])
             stats = (float(m["avgdl"] or 1.0), float(m["min_dl"] or 1.0))
-        except Exception:  # pre-meta index layout
+        except _MISSING_SIDECAR:  # pre-meta index layout
             pass
         try:
-            if _local(index_path):
-                import pyarrow.parquet as pq
-
-                tbl = pq.read_table(index_path.removeprefix("file://") + "/term_stats")
-                if tbl.num_rows <= self.DICT_CAP:
-                    has_bucket = "bucket" in tbl.column_names
-                    term_stats = {
-                        t: (int(d), int(mt), int(bk) if has_bucket else None)
-                        for t, d, mt, bk in zip(
-                            tbl.column("term").to_pylist(),
-                            tbl.column("df").to_pylist(),
-                            tbl.column("max_tf").to_pylist(),
-                            tbl.column("bucket").to_pylist()
-                            if has_bucket
-                            else [None] * tbl.num_rows,
-                        )
-                    }
-            else:
-                rows = self.spark.read.parquet(f"{index_path}/term_stats").take(
-                    self.DICT_CAP + 1
-                )
-                if len(rows) <= self.DICT_CAP:
-                    term_stats = {
-                        r["term"]: (
-                            int(r["df"]),
-                            int(r["max_tf"]),
-                            int(r["bucket"]) if "bucket" in r else None,
-                        )
-                        for r in rows
-                    }
-        except Exception:  # pre-dictionary index layout
+            rows = self._sidecar_rows(index_path, "term_stats", cap=self.DICT_CAP)
+            if rows is not None:
+                term_stats = self._dictionary(rows)
+        except _MISSING_SIDECAR:  # pre-dictionary index layout
             pass
         return total, stats, term_stats
 
-    def _pruned_blocked_scan(
-        self,
-        index_path: str,
-        words: list,
-        require_all: bool = False,
-        compute_fallback: bool = False,
-    ):
-        """Shared term-bucket partition pruning for every blocked query
-        path. Returns (blocks-or-None, doc_stats_idx, total, stats,
-        term_stats); ``None`` blocks means the result is provably empty
-        (a required term, or every term, is absent from the dictionary).
-
-        Bucket ids come from the driver-side dictionary sidecar when
-        available (zero jobs). Pruning only applies when EVERY matched
-        term's bucket is known — partial pruning on a mixed layout
-        would silently drop a term's blocks. ``compute_fallback`` (the
-        BM25 path) recomputes bucket ids with one tiny job on
-        pre-dictionary layouts; positional paths just scan unpruned.
-        """
-        blocks, dsi, total, stats, term_stats = self._blocked_handles(index_path)
-        if not words:
-            return blocks, dsi, total, stats, term_stats
-        if term_stats is not None:
-            present = [w for w in words if w in term_stats]
-            if require_all and len(present) < len(words):
-                return None, dsi, total, stats, term_stats
-            ids = {term_stats[w][2] for w in present}
-            if None not in ids:
-                if not ids:  # no query term indexed at all
-                    return None, dsi, total, stats, term_stats
-                return (
-                    blocks.where(F.col("term_bucket").isin(sorted(ids))),
-                    dsi, total, stats, term_stats,
-                )
-            # fall through: pre-bucket dictionary layout
-        if compute_fallback:
-            ids = sorted(
-                {
-                    r["b"]
-                    for r in self.spark.createDataFrame(
-                        [(w,) for w in words], "term string"
-                    )
-                    .select(
-                        F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS)).alias("b")
-                    )
-                    .collect()
-                }
+    def _shard_terms(self, index_path: str, shard: Shard, terms: list) -> dict:
+        """{term: (df, max_tf, bucket)} for the ``terms`` one index holds:
+        from its driver-side dictionary, else from only those terms' rows
+        of the term_stats sidecar, else (pre-dictionary layout) from one
+        block-metadata aggregation."""
+        if shard.term_stats is not None:
+            return {t: shard.term_stats[t] for t in terms if t in shard.term_stats}
+        if not terms:
+            return {}
+        try:
+            return self._dictionary(
+                self._sidecar_rows(index_path, "term_stats", terms=terms)
             )
-            blocks = blocks.where(F.col("term_bucket").isin(ids))
-        return blocks, dsi, total, stats, term_stats
+        except _MISSING_SIDECAR:  # pre-dictionary index layout
+            return self._dictionary(
+                r.asDict()
+                for r in shard.blocks.where(F.col("term").isin(terms))
+                .groupBy("term")
+                .agg(
+                    F.sum("n_docs").alias("df"),
+                    F.max("max_tf").alias("max_tf"),
+                    F.first("term_bucket").alias("bucket"),
+                )
+                .collect()
+            )
+
+    def _shard_scan(self, shard: Shard, info: dict) -> DataFrame:
+        """The blocks of the terms in ``info`` (``_shard_terms`` output),
+        pruned to their term_bucket partitions — the term filter becomes
+        partition pruning before any decode. A pre-bucket dictionary
+        costs one tiny job to hash the bucket ids."""
+        if not info:
+            return shard.blocks.limit(0).drop("term_bucket")
+        buckets = {v[2] for v in info.values()}
+        if None in buckets:
+            buckets = {
+                r["b"]
+                for r in self.spark.createDataFrame([(t,) for t in info], "term string")
+                .select(F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS)).alias("b"))
+                .collect()
+            }
+        return shard.blocks.where(F.col("term_bucket").isin(sorted(buckets))).drop(
+            "term_bucket"
+        )
 
     URL_DICT_CAP = 250_000  # max forward-index entries held driver-side
 
@@ -481,19 +563,65 @@ class SearchEngine:
         winners' urls driver-side saves the broadcast-exchange +
         lookup-join jobs on the latency path. Beyond the cap the
         distributed join path runs unchanged."""
-        dicts = getattr(self, "_blocked_url_dicts", None)
-        if dicts is None:
-            dicts = self._blocked_url_dicts = {}
-        if index_path not in dicts:
-            _b, dsi, total, _s, _t = self._blocked_handles(index_path)
-            if total is not None and total <= self.URL_DICT_CAP:
-                dicts[index_path] = {
-                    r["doc_index"]: r["url"]
-                    for r in dsi.select("doc_index", "url").collect()
-                }
-            else:
-                dicts[index_path] = None
-        return dicts[index_path]
+        with self._blocked_lock:
+            dicts = self._blocked_url_dicts
+            if index_path not in dicts:
+                shard = self._blocked_handles(index_path)
+                dicts[index_path] = (
+                    {
+                        r["doc_index"]: r["url"]
+                        for r in shard.doc_stats_idx.select("doc_index", "url").collect()
+                    }
+                    if shard.total <= self.URL_DICT_CAP
+                    else None
+                )
+            return dicts[index_path]
+
+    def _deployment(self, index_paths) -> Deployment:
+        key = tuple(index_paths)
+        with self._blocked_lock:
+            if key not in self._deployments:
+                self._deployments[key] = Deployment(self, key)
+            return self._deployments[key]
+
+    def _scatter(self, fn, items) -> list:
+        """[fn(item) for item in items], run concurrently — Spark schedules
+        jobs from many threads, so fan-out latency is the slowest item,
+        not the sum. Pool threads inherit the caller's JVM local
+        properties (job group, description) and session tags, so
+        job-group pins and cancellation cover every shard's jobs. Each
+        item is wrapped on its own: a wrapper carries one copy of the
+        properties, and threads sharing it would also share the SQL
+        execution ids Spark writes there. One item runs inline."""
+        items = list(items)
+        if len(items) == 1:
+            return [fn(items[0])]
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
+        with ThreadPoolExecutor(max_workers=min(8, len(items))) as ex:
+            futures = [
+                ex.submit(inheritable_thread_target(self.spark)(fn), item)
+                for item in items
+            ]
+            return [f.result() for f in futures]
+
+    def _federate(self, dep: Deployment, shard_rows, k: int | None = None,
+                  value_col: str = "score", value_type: str = "double") -> DataFrame:
+        """Scatter ``shard_rows(i) -> [(url, value)]`` over the shards and
+        merge: a url a later shard owns is masked, a later shard wins a
+        url collision, rows order by (value desc, url) — the single-index
+        tie-break — and the top ``k`` (all when None) return as a VALUES
+        relation whose collect is zero jobs."""
+        per_url: dict = {}
+        if dep.n:
+            for i, rows in enumerate(self._scatter(shard_rows, range(len(dep.paths)))):
+                for url, v in rows:
+                    if url not in dep.masked[i]:
+                        per_url[url] = v
+        merged = sorted(per_url.items(), key=lambda x: (-x[1], x[0]))
+        return _local_result_df(self.spark, merged[:k], value_col, value_type)
 
     def search_bm25_blocked(
         self,
@@ -503,46 +631,16 @@ class SearchEngine:
         required: list | None = None,
         excluded: list | None = None,
     ) -> DataFrame:
-        """BM25 top-k straight off the on-disk blocked index: the term
-        filter prunes term_bucket partitions before any decode.
-        ``required``/``excluded``: `+term -term` boolean filters with
-        the served path's semantics (wand.blocked_maxscore_topk)."""
-        words = sorted({w.lower() for w in expand_query(query)})
-        req = [w.lower() for w in (required or [])]
-        exc = [w.lower() for w in (excluded or [])]
-        # bucket pruning must keep the FILTER terms' buckets too
-        blocks, doc_stats_idx, total, stats, term_stats = self._pruned_blocked_scan(
-            index_path, sorted(set(words + req + exc)), compute_fallback=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return blocked_maxscore_topk(
-            self.spark, query, blocks.drop("term_bucket"), doc_stats_idx, total,
-            k=k, doc_stats_agg=stats, term_stats=term_stats,
-            url_lookup=self._blocked_url_dict(index_path),
-            required=req, excluded=exc,
+        """BM25 top-k off one blocked index (a one-shard deployment)."""
+        return self.search_bm25_sharded(
+            [index_path], query, k=k, required=required, excluded=excluded
         )
 
     def search_bm25_threshold_blocked(
         self, index_path: str, query: str, threshold: float
     ) -> DataFrame:
-        """Every document scoring >= ``threshold`` (rounded BM25),
-        through the MaxScore/block-max pruned plan over the on-disk
-        blocked index — the alerting/filtering form of search (return
-        all sufficiently-relevant docs, not a fixed k), with the same
-        term-bucket partition pruning as the top-k path."""
-        from .wand import blocked_maxscore_threshold
-
-        words = sorted({w.lower() for w in expand_query(query)})
-        blocks, doc_stats_idx, total, stats, _ts = self._pruned_blocked_scan(
-            index_path, words, compute_fallback=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return blocked_maxscore_threshold(
-            self.spark, query, blocks.drop("term_bucket"), doc_stats_idx,
-            total, threshold=threshold, doc_stats_agg=stats,
-        )
+        """Every document of one blocked index scoring >= ``threshold``."""
+        return self.search_bm25_threshold_sharded([index_path], query, threshold)
 
     def search_hybrid_rrf(
         self,
@@ -570,37 +668,23 @@ class SearchEngine:
         fusion cost is O(pool), independent of corpus size.
 
         ``index_path`` may be a LIST of blocked shard dirs: the lexical
-        retriever then federates through search_bm25_sharded (global
-        stats recombined, concurrent shard fan-out) and fusion is
-        unchanged — hybrid search over a sharded deployment."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        retriever then federates through search_bm25_sharded and fusion
+        is unchanged — hybrid search over a sharded deployment. The two
+        retrievers run concurrently (``_scatter``), so request latency is
+        the slower retriever, not the sum."""
         from .analytics.simsearch import cosine_topk
 
+        paths = list(index_path) if isinstance(index_path, (list, tuple)) else [index_path]
+
         def _lexical():
-            if isinstance(index_path, (list, tuple)):
-                return self.search_bm25_sharded(
-                    list(index_path), query, k=pool
-                ).collect()
-            return self.search_bm25_blocked(index_path, query, k=pool).collect()
+            return self.search_bm25_sharded(paths, query, k=pool).collect()
 
         def _vector():
             return cosine_topk(
                 emb, query_vec, k=pool, id_col=id_col, vec_col=vec_col
             ).collect()
 
-        # the two retrievers are independent jobs — submit them
-        # concurrently (guide §2.6) so request latency is the slower
-        # retriever, not the sum; same pattern as the shard fan-out.
-        # inheritable_thread_target propagates the caller thread's JVM
-        # local properties (job group / description), so UI labels and
-        # statusTracker job-count pins keep working across the pool.
-        from pyspark.util import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            bm_f = ex.submit(inheritable_thread_target(_lexical))
-            cs_f = ex.submit(inheritable_thread_target(_vector))
-            bm_rows, cs_rows = bm_f.result(), cs_f.result()
+        bm_rows, cs_rows = self._scatter(lambda retrieve: retrieve(), [_lexical, _vector])
         ranks: dict = {}
         for i, r in enumerate(bm_rows):
             ranks[str(r["url"])] = [i + 1, 0]
@@ -639,129 +723,37 @@ class SearchEngine:
         required: list | None = None,
         excluded: list | None = None,
     ) -> DataFrame:
-        """Federated BM25 top-k over MULTIPLE independently built
-        blocked indexes — the serving shape a 100 TB corpus actually
-        deploys (no single build job owns the whole corpus; shards are
-        built, merged and replaced independently, and queries
-        scatter-gather).
+        """BM25 top-k over a deployment of blocked indexes (one path is a
+        single index). Each shard runs wand.blocked_maxscore_topk under
+        the deployment's global N/avgdl/df — its own max_tf and min_dl
+        keep its block-max bounds valid — and the shard winners merge by
+        (score desc, url), row-identical to one index over the union
+        corpus (pinned by test). Cost: one pruned scoring job per shard,
+        concurrently, plus a k*shards driver merge.
 
-        Correctness hinges on GLOBAL collection statistics: BM25's
-        idf and length normalization must use corpus-wide df / N /
-        avgdl or shard scores aren't comparable. Both are recovered
-        from the shards' meta + term_stats sidecars (driver-side
-        pyarrow, zero Spark jobs): N = sum of shard totals, avgdl =
-        doc-weighted mean, df = per-term sum. Each shard then runs the
-        normal MaxScore/block-max pruned plan with the global stats
-        injected (per-shard max_tf keeps its block-max bounds valid —
-        they only need to bound that shard's scores), and the k
-        winners per shard merge driver-side by (score desc, url) —
-        the same tie-break as the single-index path, so the result is
-        row-identical to querying one index over the union corpus
-        (pinned by test). Per-query cost: one pruned scoring job per
-        shard (submitted CONCURRENTLY — Spark schedules jobs from
-        multiple threads, so fan-out latency is the slowest shard, not
-        the sum) + a k*shards driver merge.
-
-        ``required``/``excluded``: the blocked path's `+term -term`
-        filters. Doc membership is shard-local, so applying them
-        per-shard is exact; a required term absent from a shard's
-        dictionary empties that shard's contribution, which is exactly
-        the single-index semantics restricted to the shard.
-
-        Overlapping shards (a base + an uncompacted delta rewriting
-        some urls): later listed shards take precedence per url —
-        merge_pages/merge_blocked_shards semantics. A url owned by a
-        later shard MASKS every earlier shard's version (even when the
-        newer version doesn't match the query), using the later
-        shards' driver-side forward indexes; shards beyond
-        URL_DICT_CAP can't mask cheaply, so there precedence degrades
-        to keep-latest-on-collision. Global df/avgdl still count
-        superseded copies until a compaction (merge_blocked_shards)
-        runs; that bounded stats drift is the standard segment-store
-        trade (Lucene's deleted docs inflate stats until merge) and
-        none of this affects disjoint shards."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .wand import _local_result_df
-
+        ``required``/``excluded``: `+term -term` filters. Doc membership
+        is shard-local, so applying them per shard is exact."""
         words = sorted({w.lower() for w in expand_query(query)})
         req = [w.lower() for w in (required or [])]
         exc = [w.lower() for w in (excluded or [])]
-        shard_meta = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"sharded search needs meta + term_stats sidecars: {p}"
-                )
-            shard_meta.append((p, total, stats, ts))
-        n_global = sum(m[1] for m in shard_meta)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = (
-            sum(m[1] * m[2][0] for m in shard_meta) / n_global
-        )
-        df_global: dict = {}
-        for _p, _t, _s, ts in shard_meta:
-            for w in words:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
+        dep = self._deployment(index_paths)
+        infos, df = dep.lookup(words + req + exc)
 
-        # urls owned by later shards mask earlier shards' (stale) rows.
-        # Masking happens AFTER each shard's top-k truncation, so a
-        # shard whose top-k slots are partly occupied by superseded
-        # urls must OVER-FETCH by the number of its docs that can be
-        # masked (|masked ∩ shard's own url set|) — otherwise live docs
-        # ranked k+1..k+m in that shard would never reach the merge and
-        # the federated result could miss documents the merged single
-        # index returns. At most `extra` rows of a k+extra result are
-        # masked, so >= k unmasked rows survive whenever the shard has
-        # that many matches — exact. Shards beyond URL_DICT_CAP have no
-        # driver-side url set; there precedence already degrades to
-        # keep-latest-on-collision (docstring) and k is unchanged.
-        owned = [self._blocked_url_dict(m[0]) for m in shard_meta]
-        masked = [
-            set().union(
-                *(set(d.values()) for d in owned[i + 1:] if d is not None)
-            )
-            for i in range(len(shard_meta))
-        ]
-        extra = [
-            len(masked[i] & set(owned[i].values())) if owned[i] is not None else 0
-            for i in range(len(shard_meta))
-        ]
-
-        def scatter(args):
-            si, meta = args
-            p, _total, stats, ts = meta
-            blocks, dsi, _t2, _s2, _ts2 = self._pruned_blocked_scan(
-                p, sorted(set(words + req + exc)), compute_fallback=True
-            )
-            if blocks is None:
-                return []
-            gts = {
-                w: (df_global[w], ts[w][1], ts[w][2]) for w in words if w in ts
-            }
-            if not gts:
+        def shard(i):
+            info = infos[i]
+            gts = {w: (df[w],) + info[w][1:] for w in words if w in info}
+            if not gts or any(w not in info for w in req):
                 return []
             part = blocked_maxscore_topk(
-                self.spark, query, blocks.drop("term_bucket"), dsi,
-                n_global, k=k + extra[si], doc_stats_agg=(avgdl_global, stats[1]),
-                term_stats=gts, url_lookup=self._blocked_url_dict(p),
+                self.spark, query, self._shard_scan(dep.shards[i], info),
+                dep.shards[i].doc_stats_idx, dep.n, k=k + dep.extra[i],
+                doc_stats_agg=(dep.avgdl, dep.shards[i].stats[1]),
+                term_stats=gts, url_lookup=dep.url_lookups[i],
                 required=req, excluded=exc,
             )
             return [(r["url"], float(r["score"])) for r in part.collect()]
 
-        per_url: dict = {}
-        with ThreadPoolExecutor(max_workers=min(8, len(shard_meta))) as ex:
-            # ex.map yields in shard order: a later shard's row for the
-            # same url overwrites an earlier collision
-            for si, rows in enumerate(ex.map(scatter, enumerate(shard_meta))):
-                for url, score in rows:
-                    if url not in masked[si]:
-                        per_url[url] = score
-        merged = sorted(per_url.items(), key=lambda x: (-x[1], x[0]))
-        return _local_result_df(self.spark, merged[:k])
+        return self._federate(dep, shard, k)
 
     def promote_stream_index(self, store_dir: str, out_path: str) -> None:
         """Promote a Structured-Streaming incremental index store
@@ -837,141 +829,82 @@ class SearchEngine:
     def search_phrase_sharded(
         self, index_paths: list, phrase: str, k: int = 10
     ) -> DataFrame:
-        """Federated phrase search: phrase occurrence counts are purely
-        shard-local (no collection statistics at all), so federation is
-        the trivial scatter-gather — per-shard phrase top-k, merged by
-        (n_occurrences desc, url) which is the single-index tie-break.
-        Row-identical to one index over the union corpus (tested)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .wand import _local_result_df
-
-        def scatter(p):
-            part = self.search_phrase_blocked(p, phrase, k=k)
-            return [(r["url"], int(r["n_occurrences"])) for r in part.collect()]
-
-        rows: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter, index_paths):
-                rows.extend(part)
-        rows.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(
-            self.spark, rows[:k], value_col="n_occurrences", value_type="long"
-        )
-
-    def search_bm25_threshold_sharded(
-        self, index_paths: list, query: str, threshold: float
-    ) -> DataFrame:
-        """Federated threshold search (all docs scoring >= cutoff):
-        per-shard blocked_maxscore_threshold with GLOBAL df/N/avgdl
-        injected — same statistics recombination as
-        search_bm25_sharded — then a plain union (no k to merge; the
-        result set is exact per shard). The alerting form of federated
-        search."""
-        from .wand import blocked_maxscore_threshold
-
-        words = sorted({w.lower() for w in expand_query(query)})
-        shard_meta = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"sharded search needs meta + term_stats sidecars: {p}"
-                )
-            shard_meta.append((p, total, stats, ts))
-        n_global = sum(m[1] for m in shard_meta)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = sum(m[1] * m[2][0] for m in shard_meta) / n_global
-        df_global: dict = {}
-        for _p, _t, _s, ts in shard_meta:
-            for w in words:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
-        out = None
-        for p, _total, stats, _ts in shard_meta:
-            blocks, dsi, _t2, _s2, _ts2 = self._pruned_blocked_scan(
-                p, words, compute_fallback=True
-            )
-            if blocks is None:
-                continue
-            part = blocked_maxscore_threshold(
-                self.spark, query, blocks.drop("term_bucket"), dsi,
-                n_global, threshold=threshold,
-                doc_stats_agg=(avgdl_global, stats[1]),
-                df_override=df_global,
-            )
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return out
-
-    def search_phrase_blocked(self, index_path: str, phrase: str, k: int = 10) -> DataFrame:
-        """Exact positional phrase query off the blocked index's varint
-        positions store (wand.blocked_phrase_topk). Term-bucket
-        partition pruning applies exactly as for BM25; with the
-        dictionary sidecar a phrase word absent from the corpus
-        short-circuits to an empty result with zero jobs."""
-        from .wand import blocked_phrase_topk
-
+        """Exact positional phrase counts (wand.blocked_phrase_topk) over
+        a deployment, ranked by (n_occurrences desc, url)."""
         words = [w.lower() for w in phrase.split() if w]
-        if not words:
-            return self.spark.createDataFrame([], "url string, n_occurrences long")
-        blocks, doc_stats_idx, _t, _s, _ts = self._pruned_blocked_scan(
-            index_path, words, require_all=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, n_occurrences long")
-        return blocked_phrase_topk(
-            self.spark, phrase, blocks.drop("term_bucket"), doc_stats_idx, k=k,
-            url_lookup=self._blocked_url_dict(index_path),
-        )
-
-    def search_proximity_blocked(
-        self, index_path: str, terms: list, window: int = 5, k: int = 10
-    ) -> DataFrame:
-        """Proximity query (all ``terms`` within ``window`` tokens of
-        each anchor occurrence of ``terms[0]``) off the blocked index's
-        positions store, with the same term-bucket partition pruning and
-        dictionary short-circuit as the phrase path."""
-        from .wand import blocked_proximity_topk
-
-        words = [w.lower() for w in terms if w]
-        if not words:
-            return self.spark.createDataFrame([], "url string, n_matches long")
-        blocks, doc_stats_idx, _t, _s, _ts = self._pruned_blocked_scan(
-            index_path, words, require_all=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, n_matches long")
-        return blocked_proximity_topk(
-            self.spark, words, window, blocks.drop("term_bucket"), doc_stats_idx,
-            k=k, url_lookup=self._blocked_url_dict(index_path),
+        return self._positional(
+            index_paths, words, k, "n_occurrences",
+            lambda blocks, dsi, kk, lookup: blocked_phrase_topk(
+                self.spark, phrase, blocks, dsi, k=kk, url_lookup=lookup
+            ),
         )
 
     def search_proximity_sharded(
         self, index_paths: list, terms: list, window: int = 5, k: int = 10
     ) -> DataFrame:
-        """Federated proximity search — like search_phrase_sharded,
-        match counts are shard-local so federation is plain
-        scatter-gather with the single-index (n_matches desc, url)
-        tie-break."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .wand import _local_result_df
-
-        def scatter(p):
-            part = self.search_proximity_blocked(p, terms, window=window, k=k)
-            return [(r["url"], int(r["n_matches"])) for r in part.collect()]
-
-        rows: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter, index_paths):
-                rows.extend(part)
-        rows.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(
-            self.spark, rows[:k], value_col="n_matches", value_type="long"
+        """Proximity query (all ``terms`` within ``window`` tokens of each
+        anchor occurrence of ``terms[0]``, wand.blocked_proximity_topk)
+        over a deployment, ranked by (n_matches desc, url)."""
+        words = [w.lower() for w in terms if w]
+        return self._positional(
+            index_paths, words, k, "n_matches",
+            lambda blocks, dsi, kk, lookup: blocked_proximity_topk(
+                self.spark, words, window, blocks, dsi, k=kk, url_lookup=lookup
+            ),
         )
+
+    def _positional(self, index_paths, words, k, value_col, topk) -> DataFrame:
+        """Positional counts need no collection stats, so federation is a
+        plain scatter-gather of ``topk(blocks, doc_stats_idx, k, url
+        lookup)`` per shard. A shard missing any query word contributes
+        nothing, with zero jobs."""
+        dep = self._deployment(index_paths)
+        infos, _df = dep.lookup(words)
+
+        def shard(i):
+            if not words or len(infos[i]) < len(set(words)):
+                return []
+            part = topk(
+                self._shard_scan(dep.shards[i], infos[i]),
+                dep.shards[i].doc_stats_idx, k + dep.extra[i], dep.url_lookups[i],
+            )
+            return [(r["url"], int(r[value_col])) for r in part.collect()]
+
+        return self._federate(dep, shard, k, value_col, "bigint")
+
+    def search_bm25_threshold_sharded(
+        self, index_paths: list, query: str, threshold: float
+    ) -> DataFrame:
+        """Every document scoring >= ``threshold`` (rounded BM25) over a
+        deployment — the alerting form of search: per shard,
+        wand.blocked_maxscore_threshold with the global df/N/avgdl
+        injected, then the union (no k to merge)."""
+        words = sorted({w.lower() for w in expand_query(query)})
+        dep = self._deployment(index_paths)
+        infos, df = dep.lookup(words)
+
+        def shard(i):
+            if not infos[i]:
+                return []
+            part = blocked_maxscore_threshold(
+                self.spark, query, self._shard_scan(dep.shards[i], infos[i]),
+                dep.shards[i].doc_stats_idx, dep.n, threshold=threshold,
+                doc_stats_agg=(dep.avgdl, dep.shards[i].stats[1]),
+                df_override=df,
+            )
+            return [(r["url"], float(r["score"])) for r in part.collect()]
+
+        return self._federate(dep, shard)
+
+    def search_phrase_blocked(self, index_path: str, phrase: str, k: int = 10) -> DataFrame:
+        """Exact phrase counts off one blocked index (a one-shard deployment)."""
+        return self.search_phrase_sharded([index_path], phrase, k=k)
+
+    def search_proximity_blocked(
+        self, index_path: str, terms: list, window: int = 5, k: int = 10
+    ) -> DataFrame:
+        """Proximity query off one blocked index (a one-shard deployment)."""
+        return self.search_proximity_sharded([index_path], terms, window=window, k=k)
 
     def index_stats(self, index_path: str) -> dict:
         """Observability over a blocked index: size/shape numbers from
@@ -1219,59 +1152,15 @@ class SearchEngine:
         """Boolean retrieval over the index with the full query
         language — ``a AND (b OR c) AND NOT d`` — evaluated as one
         term-filtered aggregation producing per-doc presence flags and
-        one compiled filter (functions.library.parse_boolean_query /
-        boolean_expr): no per-operator set joins regardless of clause
-        count. Docs matching no query term still evaluate (pure
-        negation is correct). Returns (url) ordered by url, capped;
-        ``ranked=True`` instead orders the matches by BM25 over the
-        query's POSITIVE terms (purely negated terms only filter) and
-        returns (url, score)."""
-        from .functions.library import (
-            boolean_expr,
-            parse_boolean_query,
-            positive_terms,
-        )
+        one compiled filter (``_boolean_matches``). Returns (url)
+        ordered by url, capped; ``ranked=True`` instead orders the
+        matches by BM25 over the query's POSITIVE terms (purely negated
+        terms only filter) and returns (url, score)."""
+        from .functions.library import parse_boolean_query, positive_terms
 
         assert self.postings is not None, "build or load first"
         ast = parse_boolean_query(query)
-        terms = ast.terms()
-
-        def fname(t):  # wildcard-safe flag column name
-            return "has_" + t.replace("*", "_pre")
-
-        def match(t):  # exact term, or dictionary prefix for "foo*"
-            if t.endswith("*"):
-                return F.col("term").startswith(t[:-1])
-            return F.col("term") == t
-
-        prefilter = match(terms[0])
-        for t in terms[1:]:
-            prefilter = prefilter | match(t)
-        flags = (
-            self.postings.where(prefilter)
-            .groupBy("url")
-            .agg(
-                *[
-                    F.max(match(t).cast("int")).alias(f"_m_{fname(t)}")
-                    for t in terms
-                ]
-            )
-        )
-        full = (
-            self.doc_stats.select("url")
-            .join(flags, "url", "left")
-            .select(
-                "url",
-                *[
-                    F.coalesce(F.col(f"_m_{fname(t)}") == 1, F.lit(False)).alias(
-                        fname(t)
-                    )
-                    for t in terms
-                ],
-            )
-        )
-        pred = boolean_expr(ast, lambda t: F.col(fname(t)))
-        matched = full.where(pred).select("url")
+        matched = _boolean_matches(self.postings, self.doc_stats.select("url"), "url", ast)
         pos = [
             t for t in (positive_terms(ast) if ranked else [])
             if not t.endswith("*")  # prefixes filter; BM25 ranks exact terms
@@ -1291,214 +1180,72 @@ class SearchEngine:
     def search_boolean_blocked(
         self, index_path: str, query: str, k: int = 100, ranked: bool = False
     ) -> DataFrame:
-        """The boolean query language served off the compressed blocked
-        index — same semantics as search_boolean (one compiled filter
-        over per-doc presence flags, pure negation correct, wildcard
-        prefixes, ``ranked=True`` BM25-orders matches by the positive
-        exact terms) with the blocked layout's mechanics: wildcard
-        prefixes expand against the driver-side dictionary sidecar
-        (zero jobs), term buckets prune at the scan when every
-        expansion's bucket is known, and presence flags come from the
-        columnar scoring entries — no flat postings needed. Pinned
-        result-identical to the flat path by test."""
-        if not ranked:
-            return self._boolean_blocked(index_path, query, k)
-        from .functions.library import parse_boolean_query, positive_terms
-
-        ast = parse_boolean_query(query)
-        pos = [t for t in positive_terms(ast) if not t.endswith("*")]
-        blocks, _d, total, stats, term_stats = self._blocked_handles(index_path)
-        if term_stats is not None:
-            dfs = {t: term_stats[t][0] for t in pos if t in term_stats}
-        else:
-            dfs = {
-                r["term"]: int(r["df"])
-                for r in blocks.where(F.col("term").isin(pos))
-                .groupBy("term")
-                .agg(F.sum("n_docs").alias("df"))
-                .collect()
-            }
-        if not dfs:  # unranked fallback: nothing rankable (pure negation)
-            return self._boolean_blocked(index_path, query, k)
-        return self._boolean_blocked(
-            index_path, query, k,
-            dfs=dfs, n=total, avgdl=float(stats[0]) if stats else 1.0,
-        )
+        """Boolean retrieval off one blocked index (a one-shard deployment)."""
+        return self.search_boolean_sharded([index_path], query, k=k, ranked=ranked)
 
     def search_boolean_sharded(
         self, index_paths: list, query: str, k: int = 100,
         ranked: bool = False,
     ) -> DataFrame:
-        """Federated boolean retrieval: presence flags are shard-local,
-        so the match SET is the union of per-shard boolean matches.
-        Unranked merges by url (the single-index order); ranked scores
-        each shard's matches with GLOBAL document frequencies injected
-        (same stats recombination as search_bm25_sharded — per-shard
-        BM25 with shard-local dfs would mis-order the merged list) and
-        merges by (score desc, url). Row-identical to the single-index
-        boolean paths by test."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        """search_boolean's query language over a deployment of blocked
+        indexes. Presence flags are shard-local, so the match set is the
+        union of per-shard matches, merged by url. ``ranked=True``
+        scores each shard's matches by BM25 over the positive exact
+        terms under the deployment's global stats and merges by (score
+        desc, url); with no positive term indexed it falls back to the
+        unranked match set, like the flat path. Wildcard prefixes expand
+        against each shard's driver-side dictionary, and term buckets
+        prune the scan when every expansion's bucket is known.
+        Row-identical to the flat path by test."""
         from .functions.library import parse_boolean_query, positive_terms
-        from .wand import _local_result_df
 
-        if not ranked:
-            def scatter_plain(p):
-                part = self.search_boolean_blocked(p, query, k=k)
-                return [r["url"] for r in part.collect()]
-
-            urls: set = set()
-            with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-                for part in ex.map(scatter_plain, index_paths):
-                    urls.update(part)
-            rows = [(u, 1) for u in sorted(urls)[:k]]
-            return _local_result_df(
-                self.spark, rows, value_col="_one", value_type="long"
-            ).select("url")
-
-        # ranked: recombine global dfs for the positive exact terms
         ast = parse_boolean_query(query)
-        pos = [t for t in positive_terms(ast) if not t.endswith("*")]
-        if not pos:  # nothing rankable: same fallback as the flat path
-            return self.search_boolean_sharded(index_paths, query, k)
-        # mirror search_bm25_sharded's sidecar validation: a missing
-        # meta/stats sidecar raises the same clean ValueError (not a
-        # TypeError on None), and an all-empty deployment returns the
-        # empty relation instead of dividing by zero
-        df_global: dict = {}
-        metas = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"ranked sharded boolean needs meta + term_stats sidecars: {p}"
-                )
-            metas.append((total, stats))
-            for w in pos:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
-        n_global = sum(t for t, _s in metas)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = sum(t * s[0] for t, s in metas) / n_global
+        dep = self._deployment(index_paths)
+        pos = [t for t in positive_terms(ast) if not t.endswith("*")] if ranked else []
+        _infos, df = dep.lookup(pos)
+        if not df:
+            def shard(i):
+                part = self._boolean_blocked(dep, i, ast, k + dep.extra[i])
+                return [(r["url"], 1) for r in part.collect()]
 
-        def scatter_ranked(p):
-            part = self._boolean_blocked(
-                p, query, k,
-                dfs={
-                    t: df_global[t]
-                    for t in df_global
-                },
-                n=n_global, avgdl=avgdl_global,
-            )
+            return self._federate(dep, shard, k, "_one", "bigint").select("url")
+
+        def shard_ranked(i):
+            part = self._boolean_blocked(dep, i, ast, k + dep.extra[i], df=df)
             return [(r["url"], float(r["score"])) for r in part.collect()]
 
-        rows_s: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter_ranked, index_paths):
-                rows_s.extend(part)
-        rows_s.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(self.spark, rows_s[:k])
+        return self._federate(dep, shard_ranked, k)
 
-    def _boolean_blocked(
-        self, index_path, query, k, dfs=None, n=None, avgdl=None
-    ):
-        """Shared boolean-on-blocked implementation: presence flags +
-        compiled filter; with (dfs, n, avgdl) supplied, BM25-ranks the
-        matches using exactly those collection stats (the single-index
-        path passes its own sidecar stats, the sharded scatter passes
-        the recombined GLOBAL ones); without them, returns the match
-        set ordered by url."""
-        import math
-
+    def _boolean_blocked(self, dep: Deployment, i: int, ast, k: int,
+                         df: dict | None = None) -> DataFrame:
+        """Shard ``i``'s boolean matches: (url) ordered by url, or with
+        global ``df`` supplied, (url, score) BM25-ranked over those terms
+        with the deployment's N and avgdl."""
         from .compression import scoring_entries
-        from .functions.library import boolean_expr, parse_boolean_query
 
-        ast = parse_boolean_query(query)
+        shard = dep.shards[i]
         terms = ast.terms()
-        _b, dsi, _total, _stats, term_stats = self._blocked_handles(index_path)
-        exact = [t for t in terms if not t.endswith("*")]
-        wild = [t for t in terms if t.endswith("*")]
-        if term_stats is not None:
-            prune_words = sorted(
-                set(exact)
-                | {
-                    w
-                    for t in wild
-                    for w in term_stats
-                    if w.startswith(t[:-1])
-                }
-            )
+        prefixes = [t[:-1] for t in terms if t.endswith("*")]
+        if prefixes and shard.term_stats is None:
+            blocks = shard.blocks.drop("term_bucket")  # expansion needs the dictionary
         else:
-            prune_words = []
-        blocks, dsi, _total, _stats, term_stats = self._pruned_blocked_scan(
-            index_path, prune_words
-        ) if prune_words else (_b, dsi, _total, _stats, term_stats)
-        if blocks is None:
-            blocks = _b.limit(0)
-
-        def fname(t):
-            return "has_" + t.replace("*", "_pre")
-
-        def match(t):
-            if t.endswith("*"):
-                return F.col("term").startswith(t[:-1])
-            return F.col("term") == t
-
-        prefilter = match(terms[0])
-        for t in terms[1:]:
-            prefilter = prefilter | match(t)
-        entries = scoring_entries(blocks.drop("term_bucket").where(prefilter))
-        flags = entries.groupBy("doc_index").agg(
-            *[F.max(match(t).cast("int")).alias(f"_m_{fname(t)}") for t in terms]
-        )
-        full = (
-            dsi.select("doc_index", "url")
-            .join(flags, "doc_index", "left")
-            .select(
-                "doc_index",
-                "url",
-                *[
-                    F.coalesce(F.col(f"_m_{fname(t)}") == 1, F.lit(False)).alias(
-                        fname(t)
-                    )
-                    for t in terms
-                ],
+            words = {t for t in terms if not t.endswith("*")} | {
+                w for p in prefixes for w in shard.term_stats if w.startswith(p)
+            }
+            blocks = self._shard_scan(
+                shard, self._shard_terms(dep.paths[i], shard, sorted(words))
             )
+        entries = scoring_entries(blocks)
+        matched = _boolean_matches(
+            entries, shard.doc_stats_idx.select("doc_index", "url"), "doc_index", ast
         )
-        pred = boolean_expr(ast, lambda t: F.col(fname(t)))
-        matched = full.where(pred).select("doc_index", "url")
-        if not dfs:  # unranked, or nothing rankable
+        if df is None:
             return matched.select("url").orderBy("url").limit(k)
-        k1, b = 1.2, 0.75
-        n = float(n)
-        idf_map = F.create_map(
-            *[
-                x
-                for t in dfs
-                for x in (
-                    F.lit(t),
-                    F.lit(math.log((n - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)),
-                )
-            ]
-        )
-        pe = entries.where(F.col("term").isin(sorted(dfs)))
-        if "dl" not in pe.columns:
-            pe = pe.join(
-                dsi.select("doc_index", F.col("n_term_entries").alias("dl")),
-                "doc_index",
-            )
         scored = (
-            pe.select(
-                "doc_index",
-                (
-                    idf_map[F.col("term")]
-                    * (F.col("tf") * (k1 + 1))
-                    / (
-                        F.col("tf")
-                        + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))
-                    )
-                ).alias("partial"),
+            entry_partials(
+                entries.where(F.col("term").isin(sorted(df))),
+                {t: bm25_idf(float(dep.n), d) for t, d in df.items()},
+                dep.avgdl, shard.doc_stats_idx,
             )
             .groupBy("doc_index")
             .agg(F.sum("partial").alias("score"))
@@ -1596,10 +1343,6 @@ class SearchEngine:
         left-semi/left-anti joins, so the query stays one job. A
         required term absent from the dictionary short-circuits empty;
         an absent excluded term is a no-op."""
-        import math
-
-        from .ranker import expand_query
-
         assert getattr(self, "_served", None) is not None, "enable_serving first"
         words = sorted({w.lower() for w in expand_query(query)})
         hit = [w for w in words if w in self._dict]
@@ -1611,20 +1354,9 @@ class SearchEngine:
         if not hit:
             return self.spark.createDataFrame([], "url string, score double")
         n = float(self.total_documents)
-        idf = {
-            w: math.log((n - self._dict[w] + 0.5) / (self._dict[w] + 0.5) + 1.0)
-            for w in hit
-        }
-        idf_map = F.create_map(
-            *[x for w in hit for x in (F.lit(w), F.lit(idf[w]))]
-        )
-        partial = (
-            idf_map[F.col("term")]
-            * (F.col("tf") * (k1 + 1))
-            / (
-                F.col("tf")
-                + k1 * (1 - b + b * F.col("n_term_entries") / F.lit(self._avgdl))
-            )
+        partial = bm25_partial(
+            F.col("tf"), F.col("n_term_entries"),
+            idf_map({w: bm25_idf(n, self._dict[w]) for w in hit}), self._avgdl, k1, b,
         )
         # DICT_CAP bounds distinct terms, not posting counts: a
         # stopword-like filter term's url list is proportional to the
@@ -1709,11 +1441,9 @@ class SearchEngine:
         if getattr(self, "_served", None) is not None:
             clone._served = rebind(self._served, "served")
             clone._dict = self._dict
-        for path in tuple(getattr(self, "_blocked_cache", None) or ()):
+        for path in tuple(self._blocked_cache):
             clone._blocked_handles(path)
-        dicts = getattr(self, "_blocked_url_dicts", None)
-        if dicts:
-            clone._blocked_url_dicts = dicts
+        clone._blocked_url_dicts = self._blocked_url_dicts
         return clone
 
     def low_latency(self):
@@ -1740,6 +1470,45 @@ class SearchEngine:
             if df is not None:
                 df.unpersist()
         self._invalidate_blocked_cache()
+
+
+def _boolean_matches(entries: DataFrame, docs: DataFrame, key: str, ast) -> DataFrame:
+    """Rows of ``docs`` (keyed by ``key``) satisfying the boolean query
+    ``ast``: one term-filtered aggregation of the (term, ``key``)
+    ``entries`` into per-doc presence flags, then ONE compiled filter
+    (functions.library.boolean_expr) — no per-operator set joins
+    regardless of clause count. Docs matching no query term still
+    evaluate, so pure negation is correct; ``foo*`` matches a prefix."""
+    from .functions.library import boolean_expr
+
+    terms = ast.terms()
+
+    def flag(t):  # wildcard-safe flag column name
+        return "has_" + t.replace("*", "_pre")
+
+    def match(t):
+        if t.endswith("*"):
+            return F.col("term").startswith(t[:-1])
+        return F.col("term") == t
+
+    prefilter = match(terms[0])
+    for t in terms[1:]:
+        prefilter = prefilter | match(t)
+    flags = entries.where(prefilter).groupBy(key).agg(
+        *[F.max(match(t).cast("int")).alias(f"_m_{flag(t)}") for t in terms]
+    )
+    return (
+        docs.join(flags, key, "left")
+        .select(
+            *docs.columns,
+            *[
+                F.coalesce(F.col(f"_m_{flag(t)}") == 1, F.lit(False)).alias(flag(t))
+                for t in terms
+            ],
+        )
+        .where(boolean_expr(ast, lambda t: F.col(flag(t))))
+        .select(*docs.columns)
+    )
 
 
 @contextmanager

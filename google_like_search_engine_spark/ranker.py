@@ -144,6 +144,8 @@ def score_bm25(
         avgdl_row = doc_stats.agg(F.avg("n_term_entries").alias("avgdl")).collect()[0]
         avgdl = float(avgdl_row["avgdl"] or 1.0)
 
+    from .wand import bm25_idf, bm25_partial, idf_map
+
     # isin, not a broadcast-join with a literal term DF: the filter
     # pushes to the scan / cache batch stats and costs no per-query
     # createDataFrame driver round-trip
@@ -155,12 +157,8 @@ def score_bm25(
         # map, like search_bm25_served does — the per-query broadcast
         # exchange + hash join disappear from the plan, which both
         # shrinks per-query planning time and removes the broadcast
-        # machinery from the latency path. Identical arithmetic: the
-        # idf expression below mirrors the JVM expression's operation
-        # order exactly (the served==flat score-identity tests pin
-        # math.log against the JVM log on this data).
-        import math
-
+        # machinery from the latency path (idf: wand.bm25_idf's Python
+        # twin of the JVM expression below)
         dfmap = {
             r["term"]: int(r["df"])
             for r in term_df.where(F.col("term").isin(words)).collect()
@@ -168,25 +166,17 @@ def score_bm25(
         hit = [w for w in words if w in dfmap]
         if not hit:
             return spark.createDataFrame([], "url string, score double")
-        idf = {
-            w: math.log((n - dfmap[w] + 0.5) / (dfmap[w] + 0.5) + 1.0)
-            for w in hit
-        }
         matched = postings.where(F.col("term").isin(hit)).select(
             "term", "url", "tf", *(["dl"] if has_dl else ["doc_id"])
         )
-        idf_col = F.create_map(
-            *[x for w in hit for x in (F.lit(w), F.lit(idf[w]))]
-        )[F.col("term")]
+        idf_col = idf_map({w: bm25_idf(n, dfmap[w]) for w in hit})
     else:
         matched = postings.where(F.col("term").isin(words)).select(
             "term", "doc_id", "url", "tf", *(["dl"] if has_dl else [])
         )
         dfc = matched.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
         matched = matched.join(F.broadcast(dfc), "term")
-        idf_col = F.log(
-            (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
+        idf_col = bm25_idf(n, F.col("df"))
     scored = matched
     if has_dl:
         # dl is denormalized into the postings (indexer.build_postings):
@@ -196,12 +186,7 @@ def score_bm25(
         scored = scored.join(doc_stats.select("doc_id", "n_term_entries"), "doc_id")
         dl_col = F.col("n_term_entries")
     scored = scored.select(
-        "url",
-        (
-            idf_col
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * dl_col / F.lit(avgdl)))
-        ).alias("partial"),
+        "url", bm25_partial(F.col("tf"), dl_col, idf_col, avgdl, k1, b).alias("partial")
     )
     return (
         scored.groupBy("url")

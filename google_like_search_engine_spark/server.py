@@ -28,14 +28,8 @@ Run: ``python scripts/serve.py --index <dir> --port 8080``.
 from __future__ import annotations
 
 import json
-import re
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
-
-# /percolate analyzer tokenization: lowercase letter runs and digit
-# runs (the cleaning chain's punct-strip + digit-boundary split, in
-# one regex over an already-lowercased string)
-_PERC_TOKEN_RE = re.compile(r"[a-z]+|[0-9]+")
 
 ENTRY_PAGE = """<!doctype html>
 <html><head><meta charset="utf-8"><title>spark search</title>
@@ -132,8 +126,8 @@ def make_server(
 ) -> ThreadingHTTPServer:
     """Build (not start) the HTTP server; caller runs serve_forever().
 
-    With ``blocked_path`` (a save_blocked dir), four more routes open
-    up over the compressed store:
+    With ``blocked_path`` (a save_blocked dir, served as a one-shard
+    deployment), four more routes open up over the compressed store:
       GET /phrase?query=a+b&k=10           exact phrase counts
       GET /proximity?terms=a,b&window=5    all terms near each anchor
       GET /threshold?query=a+b&threshold=1.5  all docs scoring >= cutoff
@@ -337,6 +331,9 @@ def make_server(
 
         def _dispatch(self, u, q):
             engine, blocked_path, _snap = state["active"]
+            # the blocked-index deployment: the shards, or the one
+            # blocked index as a one-shard deployment
+            paths = shard_paths or ([blocked_path] if blocked_path else None)
             if u.path == "/admin/reload" and versioned_root:
                 import os as _os
 
@@ -498,23 +495,19 @@ def make_server(
                 self._json(200, _metrics_snapshot())
             elif u.path == "/stats" and blocked_path:
                 self._json(200, engine.index_stats(blocked_path))
-            elif u.path == "/phrase" and (blocked_path or shard_paths):
+            elif u.path == "/phrase" and paths:
                 query = q.get("query", "")
                 k = self._k(q)
                 if not query or k is None:
                     self._json(400, {"error": "need ?query= and integer ?k="})
                     return
-                res = (
-                    engine.search_phrase_sharded(shard_paths, query, k=k)
-                    if shard_paths
-                    else engine.search_phrase_blocked(blocked_path, query, k=k)
-                )
+                res = engine.search_phrase_sharded(paths, query, k=k)
                 rows = [
                     {"url": r["url"], "n_occurrences": int(r["n_occurrences"])}
                     for r in res.collect()
                 ]
                 self._json(200, {"query": query, "results": rows})
-            elif u.path == "/threshold" and (blocked_path or shard_paths):
+            elif u.path == "/threshold" and paths:
                 query = q.get("query", "")
                 try:
                     threshold = float(q.get("threshold", ""))
@@ -525,14 +518,8 @@ def make_server(
                         400, {"error": "need ?query= and float ?threshold="}
                     )
                     return
-                res = (
-                    engine.search_bm25_threshold_sharded(
-                        shard_paths, query, threshold=threshold
-                    )
-                    if shard_paths
-                    else engine.search_bm25_threshold_blocked(
-                        blocked_path, query, threshold=threshold
-                    )
+                res = engine.search_bm25_threshold_sharded(
+                    paths, query, threshold=threshold
                 )
                 rows = [
                     {"url": r["url"], "score": float(r["score"])}
@@ -542,7 +529,7 @@ def make_server(
                     200,
                     {"query": query, "threshold": threshold, "results": rows},
                 )
-            elif u.path == "/proximity" and (blocked_path or shard_paths):
+            elif u.path == "/proximity" and paths:
                 terms = [t for t in q.get("terms", "").split(",") if t]
                 k = self._k(q)
                 try:
@@ -555,14 +542,8 @@ def make_server(
                         {"error": "need ?terms=a,b integer ?k= and ?window>=0"},
                     )
                     return
-                res = (
-                    engine.search_proximity_sharded(
-                        shard_paths, terms, window=window, k=k
-                    )
-                    if shard_paths
-                    else engine.search_proximity_blocked(
-                        blocked_path, terms, window=window, k=k
-                    )
+                res = engine.search_proximity_sharded(
+                    paths, terms, window=window, k=k
                 )
                 rows = [
                     {"url": r["url"], "n_matches": int(r["n_matches"])}
@@ -575,13 +556,19 @@ def make_server(
                     self._json(400, {"error": "missing ?text="})
                     return
                 from .functions.library import eval_boolean
+                from .kernels.textclean import (
+                    _PUNCT_RE,
+                    _TOKEN_SPLIT_RE,
+                    java_split,
+                )
 
-                # analyzer tokenization, not bare split: the indexed
-                # boolean/reverse_search paths see punctuation-stripped
-                # lowercase tokens with digit boundaries split, so the
-                # arriving document must be tokenized the same way or
-                # 'spark,' silently fails to match a stored 'spark'
-                tokens = set(_PERC_TOKEN_RE.findall(text.lower()))
+                # the indexed analyzer's own Python twin (the crawler
+                # cleaning chain): ASCII punctuation stripped, lowercase,
+                # split on whitespace and digit boundaries — so 'spark,'
+                # matches a stored 'spark' and 'café' stays 'café'
+                tokens = set(
+                    java_split(_TOKEN_SPLIT_RE, _PUNCT_RE.sub(" ", text).lower())
+                ) - {""}
                 matches = [
                     qid
                     for qid, ast in _percolator_asts.items()
@@ -591,10 +578,7 @@ def make_server(
                     200,
                     {"n_queries": len(_percolator_asts), "matches": matches},
                 )
-            elif u.path == "/hybrid" and embeddings_path and (
-
-                blocked_path or shard_paths
-            ):
+            elif u.path == "/hybrid" and embeddings_path and paths:
                 query = q.get("query", "")
                 qurl = q.get("qurl", "")
                 k = self._k(q)
@@ -616,7 +600,7 @@ def make_server(
                     self._json(404, {"error": f"no embedding for url {qurl!r}"})
                     return
                 res = engine.search_hybrid_rrf(
-                    shard_paths or blocked_path, query, emb, row[0][0],
+                    paths, query, emb, row[0][0],
                     k=k, id_col="url",
                 )
                 rows = [

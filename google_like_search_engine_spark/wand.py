@@ -11,10 +11,9 @@ This implementation is a DataFrame-level MaxScore, provably
 score-identical to ranker.score_bm25 (property-tested in
 tests/test_wand.py):
 
-1. per-term upper bound: ub_t = idf_t * (k1+1)  (BM25 term
-   contribution is monotone in tf and bounded by idf*(k1+1) as
-   tf -> inf; a tighter bound with global max_tf per term and min dl is
-   used when doc_stats are available).
+1. per-term upper bound: ub_t = bm25_partial at the term's global
+   max_tf and the corpus min dl (the term contribution is monotone in
+   tf and antitone in dl).
 2. threshold theta = exact k-th best score using only the
    highest-ub term's postings (a valid lower bound on the final k-th
    score; 0 when that list has < k entries).
@@ -30,15 +29,81 @@ On blocked postings (compression.block_postings) step 4's semi-join
 additionally skips whole blocks via (base, max_doc_index, max_tf)
 metadata — the block-max part; the flat-posting form below keeps the
 same plan shape.
+
+Every path scores through one kernel: ``bm25_idf`` for idf and
+``bm25_partial`` for a term's contribution (a Column in plans, a float
+for upper bounds).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .ranker import expand_query
+
+_EMPTY = "url string, score double"
+
+
+def bm25_idf(n, df):
+    """Robertson/Sparck-Jones idf ln((N - df + 0.5) / (df + 0.5) + 1),
+    the one idf source. A Column ``df`` gives the JVM expression (the
+    flat path counts df in-plan); a number gives the driver-side float
+    that literal idf maps carry. The JVM log (StrictMath) and Python's
+    libm log differ by one ulp on a few percent of (N, df) pairs —
+    pinned by tests/test_wand_and_lineage.py — so scores agree across
+    paths to ~1e-16 relative, not bit for bit."""
+    if isinstance(df, Column):
+        return F.log((F.lit(n) - df + 0.5) / (df + 0.5) + 1.0)
+    return math.log((n - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def bm25_partial(tf, dl, idf, avgdl: float, k1: float = 1.2, b: float = 0.75):
+    """One term's BM25 contribution, the one scoring kernel. With a
+    Column ``tf`` it builds the plan expression; with plain numbers it
+    is the Python twin MaxScore uses for upper bounds (tf = max_tf,
+    dl = min_dl)."""
+    if isinstance(tf, Column):
+        return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / F.lit(avgdl)))
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
+def idf_map(idf: dict) -> Column:
+    """{term: idf} as a literal map looked up by the ``term`` column:
+    idf enters the plan as literals (no df join, no per-query
+    createDataFrame)."""
+    return F.create_map(*[x for t in idf for x in (F.lit(t), F.lit(idf[t]))])[
+        F.col("term")
+    ]
+
+
+def entry_partials(entries, idf: dict, avgdl, doc_stats_idx, k1=1.2, b=0.75):
+    """(doc_index, partial) for decoded (term, doc_index, tf[, dl])
+    entries. dl rides the blocks; pre-dl layouts join it in from the
+    doc-stats dimension."""
+    if "dl" not in entries.columns:
+        entries = entries.join(
+            doc_stats_idx.select("doc_index", F.col("n_term_entries").alias("dl")),
+            "doc_index",
+        )
+    return entries.select(
+        "doc_index",
+        bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b).alias("partial"),
+    )
+
+
+def essential_terms(ub: dict, theta: float) -> set:
+    """MaxScore split: drop the longest ub-ascending prefix whose ub sum
+    stays below ``theta`` (a doc holding only those terms scores below
+    theta) and return the remaining, essential, terms."""
+    cum, essential = 0.0, set(ub)
+    for t, u in sorted(ub.items(), key=lambda kv: kv[1]):
+        if cum + u >= theta:
+            break
+        cum += u
+        essential.discard(t)
+    return essential
 
 
 def _local_result_df(spark: SparkSession, rows: list,
@@ -63,12 +128,65 @@ def _local_result_df(spark: SparkSession, rows: list,
     )
 
 
-def _bm25_partial(k1: float, b: float, n: float, avgdl: float):
-    return (
-        F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        * (F.col("tf") * (k1 + 1))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("n_term_entries") / F.lit(avgdl)))
-    )
+def _query_words(query: str, use_stems: bool) -> list:
+    return sorted({w.lower() for w in (expand_query(query) if use_stems else query.split())})
+
+
+def _dl_stats(doc_stats_idx: DataFrame, doc_stats_agg: tuple | None) -> tuple:
+    """(avgdl, min_dl): the build-time sidecar pair, else one aggregation."""
+    if doc_stats_agg is not None:
+        return float(doc_stats_agg[0]), float(doc_stats_agg[1])
+    r = doc_stats_idx.agg(F.avg("n_term_entries"), F.min("n_term_entries")).collect()[0]
+    return float(r[0] or 1.0), float(r[1] or 1.0)
+
+
+def _term_stats(qblocks: DataFrame, words: list, term_stats: dict | None) -> dict:
+    """{term: (df, max_tf)} for the query words present in the index:
+    from the build-time dictionary (zero jobs), else one metadata-only
+    aggregation over the pruned block scan."""
+    if term_stats is not None:
+        return {w: (int(term_stats[w][0]), int(term_stats[w][1]))
+                for w in words if w in term_stats}
+    return {
+        r["term"]: (int(r["df"]), int(r["max_tf"]))
+        for r in qblocks.groupBy("term")
+        .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
+        .collect()
+    }
+
+
+def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
+          value_col="score", value_type="double") -> DataFrame:
+    """Top ``k`` of (doc_index, value) by (value desc, url), then
+    unpersist the per-query ``cached`` inputs.
+
+    With ``url_lookup`` (the driver-side {doc_index: url} forward
+    index — the in-process stand-in for the reference's KVS doc-store
+    lookup after ranking) this is ONE Spark job: TakeOrdered collects
+    the k winners and urls resolve driver-side. Engine layouts assign
+    doc_index in url order, so the doc_index tiebreak IS the url
+    tiebreak. Without it the url join runs distributed, and a result
+    that still reads ``cached`` inputs is materialized executor-side
+    first (k rows, no driver round-trip)."""
+    if url_lookup is not None:
+        rows = by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k).collect()
+        cast = float if value_type == "double" else int
+        out = _local_result_df(
+            spark, [(url_lookup[r["doc_index"]], cast(r[value_col])) for r in rows],
+            value_col=value_col, value_type=value_type,
+        )
+    else:
+        out = (
+            by_doc.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
+            .select("url", value_col)
+            .orderBy(F.desc(value_col), F.asc("url"))
+            .limit(k)
+        )
+        if cached:
+            out = out.localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    return out
 
 
 def blocked_maxscore_topk(
@@ -113,96 +231,47 @@ def blocked_maxscore_topk(
        whole blocks skip without touching their bytes).
 
     ``doc_stats_agg``: optional precomputed (avgdl, min_dl) and
-    ``term_stats``: optional driver-side {term: (df, max_tf)}
+    ``term_stats``: optional driver-side {term: (df, max_tf, ...)}
     dictionary — both written by the build as sidecars — together they
     remove every per-query metadata job. When the matched posting
-    volume (sum of term dfs, known from the dictionary or one metadata
-    scan) is below ``small_query_entries``, the theta-seeding and
-    essential-term machinery is skipped and all matched blocks score in
-    ONE job — pruning can't save more than the extra driver round-trips
-    cost on a small candidate set, and the result is identical either
-    way (MaxScore is exact).
+    volume (sum of term dfs) is below ``small_query_entries``, the
+    theta-seeding and essential-term machinery is skipped and all
+    matched blocks score in ONE job — pruning can't save more than the
+    extra driver round-trips cost on a small candidate set, and the
+    result is identical either way (MaxScore is exact).
 
-    ``url_lookup``: optional driver-side {doc_index: url} forward-index
-    dictionary (engine sidecar, capped — the sandbox stand-in for the
-    reference's KVS doc-store lookup after ranking). With it, the
-    small-query fast path runs as ONE Spark job: the scoring
-    aggregation collects the k (doc_index, score) winners and urls
-    resolve driver-side, instead of a broadcast-exchange job + a
-    lookup-join job against the doc-stats dimension. Result-identical
-    (doc_index is assigned in url order, so the tiebreak matches).
+    ``url_lookup``: optional driver-side {doc_index: url} forward
+    index; see ``_topk``.
     """
     from .compression import scoring_entries
 
-    words = sorted({w.lower() for w in (expand_query(query) if use_stems else query.split())})
+    words = _query_words(query, use_stems)
     if not words:
-        return spark.createDataFrame([], "url string, score double")
+        return spark.createDataFrame([], _EMPTY)
     req = sorted({w.lower() for w in (required or [])})
     exc = sorted({w.lower() for w in (excluded or [])})
     n = float(total_documents)
-
-    if doc_stats_agg is not None:
-        avgdl, min_dl = float(doc_stats_agg[0]), float(doc_stats_agg[1])
-    else:
-        stats = doc_stats_idx.agg(
-            F.avg("n_term_entries").alias("avgdl"), F.min("n_term_entries").alias("min_dl")
-        ).collect()[0]
-        avgdl = float(stats["avgdl"] or 1.0)
-        min_dl = float(stats["min_dl"] or 1.0)
+    avgdl, min_dl = _dl_stats(doc_stats_idx, doc_stats_agg)
 
     # isin (not a broadcast-join with a literal DF): reaches the parquet
     # scan as PushedFilters In(term, ...) and costs no driver round-trip
     qblocks = blocks.where(F.col("term").isin(words))
-
-    # (1) term stats: from the build-time dictionary when available
-    # (zero jobs), else one metadata-only aggregation over the pruned
-    # block scan
-    if term_stats is not None:
-        tstats = [
-            {"term": w, "df": term_stats[w][0], "max_tf": term_stats[w][1]}
-            for w in words
-            if w in term_stats
-        ]
-    else:
-        qblocks = qblocks.persist()
-        tstats = (
-            qblocks.groupBy("term")
-            .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
-            .collect()
-        )
+    cached = [qblocks.persist()] if term_stats is None else []
+    tstats = _term_stats(qblocks, words, term_stats)
     if not tstats:
-        if qblocks.is_cached:
-            qblocks.unpersist()
-        return spark.createDataFrame([], "url string, score double")
-
-    def idf(df_):
-        return math.log((n - df_ + 0.5) / (df_ + 0.5) + 1.0)
-
-    ub = {
-        r["term"]: idf(r["df"])
-        * (float(r["max_tf"]) * (k1 + 1))
-        / (float(r["max_tf"]) + k1 * (1 - b + b * min_dl / avgdl))
-        for r in tstats
-    }
-    dfs = {r["term"]: int(r["df"]) for r in tstats}
-
-    def _score_col():
-        return (
-            F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("n_term_entries") / F.lit(avgdl)))
-        )
+        for df in cached:
+            df.unpersist()
+        return spark.createDataFrame([], _EMPTY)
+    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
+    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
+          for t, (_df, mt) in tstats.items()}
 
     # small-query fast path: total matched entries below the threshold
     # -> pruning saves less than its driver round-trips cost; score all
-    # matched blocks in ONE job. idf enters as a literal map (no df-join,
-    # no per-query createDataFrame — the single-job shape of the served
-    # path, engine.search_bm25_served).
-    if req or exc or sum(dfs.values()) <= small_query_entries:
-        idf_map = F.create_map(
-            *[x for t in dfs for x in (F.lit(t), F.lit(idf(dfs[t])))]
-        )
-        entries = scoring_entries(qblocks.where(F.col("term").isin(list(dfs))))
+    # matched blocks in ONE job (the single-job shape of the served
+    # path, engine.search_bm25_served)
+    if req or exc or sum(df for df, _mt in tstats.values()) <= small_query_entries:
+        entries = scoring_entries(qblocks)
         # boolean filters: per-doc semi/anti joins against the decoded
         # doc sets of the filter terms (every entry of a doc survives
         # or drops together, so filtering entries == filtering docs)
@@ -218,147 +287,76 @@ def blocked_maxscore_topk(
                 .select("doc_index").distinct(),
                 "doc_index", "left_anti",
             )
-
-        def _partial(dl_col):
-            return (
-                idf_map[F.col("term")]
-                * (F.col("tf") * (k1 + 1))
-                / (F.col("tf") + k1 * (1 - b + b * dl_col / F.lit(avgdl)))
-            )
-
-        if "dl" in entries.columns:
-            # join-free scoring off the denormalized block dls; doc_index
-            # is assigned in url order, so the doc_index tiebreak IS the
-            # url tiebreak — urls are looked up for the k winners only
-            topk = (
-                entries.select("doc_index", _partial(F.col("dl")).alias("partial"))
-                .groupBy("doc_index")
-                .agg(F.sum("partial").alias("score"))
-                .orderBy(F.desc("score"), F.asc("doc_index"))
-                .limit(k)
-            )
-            if url_lookup is not None:
-                rows = topk.collect()  # ONE job: TakeOrdered over the agg
-                return _local_result_df(
-                    spark,
-                    [(url_lookup[r["doc_index"]], float(r["score"])) for r in rows],
-                )
-            # k rows: coalesce(1)+sortWithinPartitions gives the same
-            # global order on collect WITHOUT a range-partitioning
-            # exchange (whose sampling pass is a whole extra job)
-            out = (
-                topk.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
-                .select("url", "score")
-                .coalesce(1)
-                .sortWithinPartitions(F.desc("score"), F.asc("url"))
-            )
-        else:
-            full = (
-                entries.join(
-                    doc_stats_idx.select("doc_index", "url", "n_term_entries"),
-                    "doc_index",
-                )
-                .select("url", _partial(F.col("n_term_entries")).alias("partial"))
-            )
-            out = (
-                full.groupBy("url")
-                .agg(F.sum("partial").alias("score"))
-                .orderBy(F.desc("score"), F.asc("url"))
-                .limit(k)
-            )
-        if qblocks.is_cached:
-            out = out.localCheckpoint(eager=True)
-            qblocks.unpersist()
-        return out
-
-    dfc_all = spark.createDataFrame(
-        [(t, dfs[t]) for t in dfs], "term string, df long"
-    )
-
-    # big query: the MaxScore path reads qblocks several times — cache it
-    if not qblocks.is_cached:
-        qblocks = qblocks.persist()
-
-    # (2) theta from the best term only
-    best_term = max(ub, key=ub.get)
-    best_decoded = scoring_entries(qblocks.where(F.col("term") == best_term))
-    scored_best = (
-        best_decoded.join(F.broadcast(dfc_all), "term")
-        .join(doc_stats_idx.select("doc_index", "n_term_entries"), "doc_index")
-        .select(_score_col().alias("s"))
-        .orderBy(F.desc("s"))
-        .limit(k)
-        .collect()
-    )
-    theta = float(scored_best[-1]["s"]) if len(scored_best) >= k else 0.0
-
-    by_ub = sorted(ub.items(), key=lambda kv: kv[1])
-    cum = 0.0
-    essential = set(ub)
-    for t, u in by_ub:
-        if cum + u < theta:
-            cum += u
-            essential.discard(t)
-        else:
-            break
-
-    # (2.5) TRUE block-max: per-block upper bound from metadata only.
-    # A doc in block-range B scores at most the sum over query terms
-    # with a block at B of idf_t * ub(block max_tf) — strictly below
-    # theta means no doc in B can reach the top-k (theta lower-bounds
-    # the final k-th score, and the k theta-seeding docs all lie in
-    # live blocks, so >= k candidates always survive). This skips
-    # ESSENTIAL-term blocks too — the part plain MaxScore can't do —
-    # and touches only (term, block) metadata rows, never the bytes.
-    if theta > 0.0:
-        idf_by_term = {t2: idf(dfs[t2]) for t2 in dfs}
-        live_blocks = _live_block_ids(
-            qblocks, idf_by_term, theta, k1, b, min_dl, avgdl
-        )
-        qblocks_live = qblocks.join(live_blocks, "block_id", "left_semi")
     else:
-        qblocks_live = qblocks
+        # big query: the MaxScore path reads qblocks several times
+        if not cached:
+            cached = [qblocks.persist()]
+        # theta from the best term only
+        best = max(ub, key=ub.get)
+        seed = (
+            entry_partials(
+                scoring_entries(qblocks.where(F.col("term") == best)),
+                idf, avgdl, doc_stats_idx, k1, b,
+            )
+            .orderBy(F.desc("partial"))
+            .limit(k)
+            .collect()
+        )
+        theta = float(seed[-1]["partial"]) if len(seed) >= k else 0.0
+        # essential is never empty here: theta <= ub[best]
+        entries, ess = _candidate_entries(
+            qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl
+        )
+        cached.append(ess)
+    by_doc = (
+        entry_partials(entries, idf, avgdl, doc_stats_idx, k1, b)
+        .groupBy("doc_index")
+        .agg(F.sum("partial").alias("score"))
+    )
+    return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
 
-    ess_terms = spark.createDataFrame([(t,) for t in sorted(essential)], "term string")
-    ess_decoded = scoring_entries(
-        qblocks_live.join(F.broadcast(ess_terms), "term")
-    ).persist()
-    candidates = ess_decoded.select("doc_index").distinct()
-    cand_blocks = candidates.select(
-        (F.col("doc_index") / F.lit(float(_block_span(blocks)))).cast("long").alias("block_id")
-    ).distinct()
 
+def _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl):
+    """MaxScore + block-max candidate generation, shared by the top-k
+    and threshold plans. Returns (entries of every doc that can reach
+    ``theta``, the persisted essential-term decode the caller must
+    unpersist), or (None, None) when no doc can.
+
+    1. essential terms: a doc holding only non-essential terms scores
+       below theta;
+    2. TRUE block-max: a block whose metadata upper bound is below theta
+       holds no qualifying doc, so it drops before any byte is decoded —
+       essential-term blocks too, the part plain MaxScore can't skip;
+    3. candidates decode from the essential terms' live blocks;
+       non-essential terms decode only blocks whose doc range holds a
+       candidate.
+    """
+    from .compression import scoring_entries
+
+    essential = essential_terms(ub, theta)
+    if not essential:
+        return None, None
+    live = qblocks
+    if theta > 0.0:
+        live = qblocks.join(
+            _live_block_ids(qblocks, idf, theta, k1, b, min_dl, avgdl),
+            "block_id", "left_semi",
+        )
+    ess = scoring_entries(live.where(F.col("term").isin(sorted(essential)))).persist()
+    candidates = ess.select("doc_index").distinct()
+    decoded = ess
     non_ess = sorted(set(ub) - essential)
     if non_ess:
-        ne_terms = spark.createDataFrame([(t,) for t in non_ess], "term string")
-        # (3) block skipping: only decode non-essential blocks whose
-        # doc range holds a candidate
-        ne_blocks = qblocks.join(F.broadcast(ne_terms), "term").join(
+        cand_blocks = candidates.select(
+            (F.col("doc_index") / F.lit(float(_block_span(blocks))))
+            .cast("long")
+            .alias("block_id")
+        ).distinct()
+        ne_blocks = qblocks.where(F.col("term").isin(non_ess)).join(
             F.broadcast(cand_blocks), "block_id", "left_semi"
         )
-        decoded = ess_decoded.unionByName(scoring_entries(ne_blocks))
-    else:
-        decoded = ess_decoded
-
-    full = (
-        decoded.join(candidates, "doc_index", "left_semi")
-        .join(F.broadcast(dfc_all), "term")
-        .join(doc_stats_idx.select("doc_index", "url", "n_term_entries"), "doc_index")
-        .select("url", _score_col().alias("partial"))
-    )
-    out = (
-        full.groupBy("url")
-        .agg(F.sum("partial").alias("score"))
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
-    # materialize executor-side (k rows) so the persisted inputs can be
-    # released without the caller's later action recomputing them; no
-    # driver round-trip (the old collect + createDataFrame).
-    out = out.localCheckpoint(eager=True)
-    qblocks.unpersist()
-    ess_decoded.unpersist()
-    return out
+        decoded = ess.unionByName(scoring_entries(ne_blocks))
+    return decoded.join(candidates, "doc_index", "left_semi"), ess
 
 
 def _live_block_ids(
@@ -371,25 +369,19 @@ def _live_block_ids(
     avgdl: float,
 ) -> DataFrame:
     """block_ids whose metadata-level BM25 upper bound can reach
-    ``theta``: sum over the query terms present in the block of
-    idf_t * block-max-tf contribution (with the global min_dl bound).
+    ``theta``: sum over the query terms present in the block of the
+    term's contribution at the block's max_tf and the global min_dl.
     Pure aggregation over (term, block_id, max_tf) metadata — no block
     bytes are touched. Blocks below theta are provably top-k-free.
 
-    The comparison carries a relative epsilon slack: theta is computed
-    JVM-side (F.log in the seeding job) while the block bounds use
-    driver-side math.log idf literals, and at an exact boundary (k-th
-    doc has tf == block max_tf and dl == min_dl) a 1-ulp log
-    discrepancy between the two runtimes could otherwise prune the
+    The comparison carries a relative epsilon slack. Theta is a doc's
+    score summed JVM-side in aggregation order, the bound a per-block
+    sum in another order (and the threshold plan's theta comes from a
+    rounded cut), so at an exact boundary — the k-th doc has tf ==
+    block max_tf and dl == min_dl — one ulp of summation-order or
+    log-library difference (see bm25_idf) could otherwise prune the
     block holding a true top-k doc."""
-    idf_lit = F.create_map(
-        *[x for t in idf_by_term for x in (F.lit(t), F.lit(idf_by_term[t]))]
-    )
-    block_ub = (
-        idf_lit[F.col("term")]
-        * (F.col("max_tf") * (k1 + 1))
-        / (F.col("max_tf") + k1 * (1 - b + b * min_dl / avgdl))
-    )
+    block_ub = bm25_partial(F.col("max_tf"), min_dl, idf_map(idf_by_term), avgdl, k1, b)
     return (
         qblocks.groupBy("block_id")
         .agg(F.sum(block_ub).alias("_ub"))
@@ -422,18 +414,12 @@ def blocked_maxscore_threshold(
     threshold with a wide score gap around it selects the same set in
     any engine. The oracle is plain relational BM25 + HAVING.
 
-    The same pruning as blocked_maxscore_topk's big-query path runs,
-    with theta := threshold - 0.5*10^-round_to - 1e-9: the final filter
-    compares round(score, round_to) >= threshold, so any doc with true
-    score >= threshold - 0.5*10^-round_to can round up into the result
-    set and must survive pruning; the extra 1e-9 absorbs the <=1-ulp
-    driver-math vs JVM log discrepancy (every pruning step is exact):
-    1. non-essential terms: ub-sorted prefix with cumsum < theta —
-       docs appearing only there are provably below the threshold;
-    2. TRUE block-max: blocks whose metadata ub < theta are dropped
-       before any byte/array is touched (essential terms included);
-    3. candidates decode from essential terms' live blocks only;
-       non-essential terms decode only candidate-intersecting blocks.
+    The same pruning as blocked_maxscore_topk's big-query path runs
+    (``_candidate_entries``), with theta := threshold - 0.5*10^-round_to
+    - 1e-9: the final filter compares round(score, round_to) >=
+    threshold, so any doc with true score >= threshold -
+    0.5*10^-round_to can round up into the result set and must survive
+    pruning; the extra 1e-9 absorbs ulp-level float discrepancies.
     Returns (url, score) with score rounded to ``round_to``.
 
     ``df_override``: {term: df} replacing the block-metadata dfs —
@@ -441,115 +427,28 @@ def blocked_maxscore_threshold(
     max_tf/min_dl stay shard-local (valid: they only bound this
     shard's scores).
     """
-    words = sorted(
-        {w.lower() for w in (expand_query(query) if use_stems else query.split())}
-    )
-    empty = spark.createDataFrame([], "url string, score double")
+    words = _query_words(query, use_stems)
     if not words:
-        return empty
+        return spark.createDataFrame([], _EMPTY)
     n = float(total_documents)
     theta = threshold - 0.5 * 10.0 ** (-round_to) - 1e-9
-
-    if doc_stats_agg is not None:
-        avgdl, min_dl = float(doc_stats_agg[0]), float(doc_stats_agg[1])
-    else:
-        stats = doc_stats_idx.agg(
-            F.avg("n_term_entries").alias("avgdl"),
-            F.min("n_term_entries").alias("min_dl"),
-        ).collect()[0]
-        avgdl = float(stats["avgdl"] or 1.0)
-        min_dl = float(stats["min_dl"] or 1.0)
+    avgdl, min_dl = _dl_stats(doc_stats_idx, doc_stats_agg)
 
     qblocks = blocks.where(F.col("term").isin(words)).persist()
-    tstats = (
-        qblocks.groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
-        .collect()
-    )
-    if not tstats:
-        qblocks.unpersist()
-        return empty
-
-    def idf(df_):
-        return math.log((n - df_ + 0.5) / (df_ + 0.5) + 1.0)
-
-    dfs = {r["term"]: int(r["df"]) for r in tstats}
+    tstats = _term_stats(qblocks, words, None)
     if df_override is not None:
-        dfs = {t2: int(df_override.get(t2, d)) for t2, d in dfs.items()}
-    ub = {
-        r["term"]: idf(dfs[r["term"]])
-        * (float(r["max_tf"]) * (k1 + 1))
-        / (float(r["max_tf"]) + k1 * (1 - b + b * min_dl / avgdl))
-        for r in tstats
-    }
-
-    # (1) essential suffix by ub; a doc only in the dropped prefix
-    # scores < theta < threshold
-    by_ub = sorted(ub.items(), key=lambda kv: kv[1])
-    cum = 0.0
-    essential = set(ub)
-    for t, u in by_ub:
-        if cum + u < theta:
-            cum += u
-            essential.discard(t)
-        else:
-            break
-    if not essential:  # sum of ALL ubs < theta: provably empty
+        tstats = {t: (int(df_override.get(t, df)), mt) for t, (df, mt) in tstats.items()}
+    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
+    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
+          for t, (_df, mt) in tstats.items()}
+    # no term indexed, or the sum of ALL ubs < theta: provably empty
+    entries, ess = _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl)
+    if entries is None:
         qblocks.unpersist()
-        return empty
-
-    # (2) block-max pruning straight off (term, block_id, max_tf) rows
-    idf_by_term = {t2: idf(dfs[t2]) for t2 in dfs}
-    live = _live_block_ids(qblocks, idf_by_term, theta, k1, b, min_dl, avgdl)
-    qblocks_live = qblocks.join(live, "block_id", "left_semi")
-
-    # (3) candidates from essential live blocks; non-essential terms
-    # decode only blocks holding a candidate's doc range
-    from .compression import scoring_entries
-
-    ess_decoded = scoring_entries(
-        qblocks_live.where(F.col("term").isin(sorted(essential)))
-    ).persist()
-    candidates = ess_decoded.select("doc_index").distinct()
-    non_ess = sorted(set(ub) - essential)
-    if non_ess:
-        cand_blocks = candidates.select(
-            (F.col("doc_index") / F.lit(float(_block_span(blocks))))
-            .cast("long")
-            .alias("block_id")
-        ).distinct()
-        ne_blocks = qblocks.where(F.col("term").isin(non_ess)).join(
-            F.broadcast(cand_blocks), "block_id", "left_semi"
-        )
-        decoded = ess_decoded.unionByName(scoring_entries(ne_blocks))
-    else:
-        decoded = ess_decoded
-
-    idf_map = F.create_map(
-        *[x for t in idf_by_term for x in (F.lit(t), F.lit(idf_by_term[t]))]
-    )
-
-    def _partial(dl_col):
-        return (
-            idf_map[F.col("term")]
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * dl_col / F.lit(avgdl)))
-        )
-
-    if "dl" in decoded.columns:  # join-free off the denormalized block dls
-        scored = decoded.join(candidates, "doc_index", "left_semi").select(
-            "doc_index", _partial(F.col("dl")).alias("partial")
-        )
-    else:
-        scored = (
-            decoded.join(candidates, "doc_index", "left_semi")
-            .join(
-                doc_stats_idx.select("doc_index", "n_term_entries"), "doc_index"
-            )
-            .select("doc_index", _partial(F.col("n_term_entries")).alias("partial"))
-        )
+        return spark.createDataFrame([], _EMPTY)
     survivors = (
-        scored.groupBy("doc_index")
+        entry_partials(entries, idf, avgdl, doc_stats_idx, k1, b)
+        .groupBy("doc_index")
         .agg(F.round(F.sum("partial"), round_to).alias("score"))
         .where(F.col("score") >= F.lit(threshold))
     )
@@ -559,7 +458,7 @@ def blocked_maxscore_threshold(
         .localCheckpoint(eager=True)
     )
     qblocks.unpersist()
-    ess_decoded.unpersist()
+    ess.unpersist()
     return out
 
 
@@ -599,81 +498,49 @@ def maxscore_topk(
 ) -> DataFrame:
     """Exact BM25 top-k with MaxScore pruning. Returns (url, score) desc,
     identical to ranker.score_bm25(...).limit(k)."""
-    words = sorted({w.lower() for w in (expand_query(query) if use_stems else query.split())})
+    words = _query_words(query, use_stems)
     if not words:
-        return spark.createDataFrame([], "url string, score double")
+        return spark.createDataFrame([], _EMPTY)
     n = float(total_documents)
-
-    stats = doc_stats.agg(
-        F.avg("n_term_entries").alias("avgdl"), F.min("n_term_entries").alias("min_dl")
-    ).collect()[0]
-    avgdl = float(stats["avgdl"] or 1.0)
-    min_dl = float(stats["min_dl"] or 1.0)
-
-    terms = spark.createDataFrame([(w,) for w in words], "term string")
-    matched = postings.join(F.broadcast(terms), "term").select(
-        "term", "doc_id", "url", "tf"
-    )
+    avgdl, min_dl = _dl_stats(doc_stats, None)
+    dl = doc_stats.select("doc_id", F.col("n_term_entries").alias("dl"))
+    matched = postings.where(F.col("term").isin(words)).select("term", "doc_id", "url", "tf")
 
     # term stats: df and max_tf -> tight upper bound per term
-    tstats = (
-        matched.groupBy("term")
+    tstats = {
+        r["term"]: (int(r["df"]), int(r["max_tf"]))
+        for r in matched.groupBy("term")
         .agg(F.countDistinct("doc_id").alias("df"), F.max("tf").alias("max_tf"))
         .collect()
-    )
+    }
     if not tstats:
-        return spark.createDataFrame([], "url string, score double")
-
-    def idf(df_):
-        return math.log((n - df_ + 0.5) / (df_ + 0.5) + 1.0)
-
-    ub = {}
-    for r in tstats:
-        mt = float(r["max_tf"])
-        ub[r["term"]] = idf(r["df"]) * (mt * (k1 + 1)) / (
-            mt + k1 * (1 - b + b * min_dl / avgdl)
-        )
+        return spark.createDataFrame([], _EMPTY)
+    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
+    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
+          for t, (_df, mt) in tstats.items()}
+    partial = bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b)
 
     # theta: exact k-th score scoring only the highest-ub term
-    dfs = {r["term"]: r["df"] for r in tstats}
-    best_term = max(ub, key=ub.get)
-    dfc_all = spark.createDataFrame(
-        [(t, int(dfs[t])) for t in dfs], "term string, df long"
-    )
-    scored_best = (
-        matched.where(F.col("term") == best_term)
-        .join(F.broadcast(dfc_all), "term")
-        .join(doc_stats.select("doc_id", "n_term_entries"), "doc_id")
-        .select("doc_id", _bm25_partial(k1, b, n, avgdl).alias("s"))
+    best = max(ub, key=ub.get)
+    seed = (
+        matched.where(F.col("term") == best)
+        .join(dl, "doc_id")
+        .select(partial.alias("s"))
         .orderBy(F.desc("s"))
         .limit(k)
         .collect()
     )
-    theta = float(scored_best[-1]["s"]) if len(scored_best) >= k else 0.0
-
-    # essential terms: smallest suffix by ub whose cumsum >= theta
-    by_ub = sorted(ub.items(), key=lambda kv: kv[1])
-    cum = 0.0
-    essential = set(t for t, _ in by_ub)
-    for t, u in by_ub:
-        if cum + u < theta:
-            cum += u
-            essential.discard(t)
-        else:
-            break
-
-    ess_terms = spark.createDataFrame([(t,) for t in sorted(essential)], "term string")
+    theta = float(seed[-1]["s"]) if len(seed) >= k else 0.0
     candidates = (
-        matched.join(F.broadcast(ess_terms), "term").select("doc_id").distinct()
-    )
-    full = (
-        matched.join(candidates, "doc_id", "left_semi")
-        .join(F.broadcast(dfc_all), "term")
-        .join(doc_stats.select("doc_id", "n_term_entries"), "doc_id")
-        .select("url", _bm25_partial(k1, b, n, avgdl).alias("partial"))
+        matched.where(F.col("term").isin(sorted(essential_terms(ub, theta))))
+        .select("doc_id")
+        .distinct()
     )
     return (
-        full.groupBy("url")
+        matched.join(candidates, "doc_id", "left_semi")
+        .join(dl, "doc_id")
+        .select("url", partial.alias("partial"))
+        .groupBy("url")
         .agg(F.sum("partial").alias("score"))
         .orderBy(F.desc("score"), F.asc("url"))
         .limit(k)
@@ -693,77 +560,17 @@ def blocked_phrase_topk(
     index keeps per-doc position lists, Indexer.java:64-82; its ranker
     never used them for phrases, so this is the capability completed).
 
-    Block skipping before any byte is decoded: a doc containing the
-    whole phrase must hold EVERY term, so only blocks whose doc-range
-    contains all phrase terms (metadata intersection on block_id) are
-    decoded. Adjacency is JVM-side: positions of term i+1 intersect
-    (positions of term i) + 1, folded across the phrase.
-
-    Positions are the index's own 1-based blank-counting token
-    positions, so results agree with the index, by construction.
-    Returns (url, n_occurrences) by descending count.
+    Adjacency is JVM-side: positions of term i+1 intersect (positions
+    of term i) + 1, folded across the phrase (``_positional_topk`` does
+    the block skipping and ranking). Returns (url, n_occurrences) by
+    descending count.
     """
-    from .compression import unblock_postings
-
     words = [w.lower() for w in phrase.split() if w]
-    if not words:
-        return spark.createDataFrame([], "url string, n_occurrences long")
-    uniq = sorted(set(words))
-    qblocks = blocks.where(F.col("term").isin(uniq)).persist()
-
-    # metadata-only block intersection: keep block_ids holding all terms
-    full_blocks = (
-        qblocks.groupBy("block_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .where(F.col("nt") == len(uniq))
-        .select("block_id")
+    fold = F.array_intersect(F.transform("p", lambda x: x + 1), F.col("p_next"))
+    return _positional_topk(
+        spark, words, words[1:], fold, blocks, doc_stats_idx, k, url_lookup,
+        "n_occurrences",
     )
-    qblocks_hit = qblocks.join(full_blocks, "block_id", "left_semi")
-
-    def term_positions(w):
-        dec = unblock_postings(qblocks_hit.where(F.col("term") == w))
-        return dec.select("doc_index", F.col("positions").alias("p"))
-
-    cur = term_positions(words[0])
-    for w in words[1:]:
-        nxt = term_positions(w).withColumnRenamed("p", "p_next")
-        cur = (
-            cur.join(nxt, "doc_index")
-            .select(
-                "doc_index",
-                F.array_intersect(
-                    F.transform("p", lambda x: x + 1), F.col("p_next")
-                ).alias("p"),
-            )
-            .where(F.size("p") > 0)
-        )
-    counts = cur.select(
-        "doc_index", F.size("p").cast("long").alias("n_occurrences")
-    )
-    if url_lookup is not None:
-        # engine layouts assign doc_index in url order, so the
-        # doc_index tiebreak IS the url tiebreak; ONE job + driver-side
-        # url resolution (see blocked_maxscore_topk)
-        rows = (
-            counts.orderBy(F.desc("n_occurrences"), F.asc("doc_index"))
-            .limit(k)
-            .collect()
-        )
-        qblocks.unpersist()
-        return _local_result_df(
-            spark,
-            [(url_lookup[r["doc_index"]], int(r["n_occurrences"])) for r in rows],
-            value_col="n_occurrences", value_type="bigint",
-        )
-    out = (
-        counts.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
-        .select("url", "n_occurrences")
-        .orderBy(F.desc("n_occurrences"), F.asc("url"))
-        .limit(k)
-        .localCheckpoint(eager=True)
-    )
-    qblocks.unpersist()
-    return out
 
 
 def blocked_proximity_topk(
@@ -779,65 +586,53 @@ def blocked_proximity_topk(
     the number of anchor positions of ``terms[0]`` that have EVERY
     other term within ``window`` tokens (either side).
 
-    Same block-skipping as the phrase path — a qualifying doc holds all
-    terms, so only blocks whose doc-range contains every term (metadata
-    intersection) are decoded. The window check is JVM-side array
-    algebra: fold ``filter(p, x -> exists(p_other, y -> |y-x| <= W))``
-    over the non-anchor terms. Positions are the index's 1-based
-    blank-counting token positions. Returns (url, n_matches) desc.
+    The window check is JVM-side array algebra: fold
+    ``filter(p, x -> exists(p_other, y -> |y-x| <= W))`` over each
+    non-anchor term once (``_positional_topk`` does the block skipping
+    and ranking). Returns (url, n_matches) desc.
     """
+    words = [w.lower() for w in terms if w]
+    fold = F.expr(f"filter(p, x -> exists(p_next, y -> abs(y - x) <= {int(window)}))")
+    return _positional_topk(
+        spark, words, list(dict.fromkeys(words[1:])), fold, blocks,
+        doc_stats_idx, k, url_lookup, "n_matches",
+    )
+
+
+def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
+                     url_lookup, value_col) -> DataFrame:
+    """Shared positional core. A qualifying doc holds every term, so
+    only blocks whose doc range contains all of them (metadata
+    intersection on block_id) are decoded. The anchor term's positions
+    ``p`` then fold against each partner's positions ``p_next`` through
+    ``fold`` (a Column over p/p_next); docs rank by the surviving
+    anchor count. Positions are the index's own 1-based blank-counting
+    token positions, so results agree with the index by construction."""
     from .compression import unblock_postings
 
-    words = [w.lower() for w in terms if w]
     if not words:
-        return spark.createDataFrame([], "url string, n_matches long")
+        return spark.createDataFrame([], f"url string, {value_col} long")
     uniq = sorted(set(words))
     qblocks = blocks.where(F.col("term").isin(uniq)).persist()
-
     full_blocks = (
         qblocks.groupBy("block_id")
         .agg(F.countDistinct("term").alias("nt"))
         .where(F.col("nt") == len(uniq))
         .select("block_id")
     )
-    qblocks_hit = qblocks.join(full_blocks, "block_id", "left_semi")
+    hit = qblocks.join(full_blocks, "block_id", "left_semi")
 
-    def term_positions(w, col):
-        dec = unblock_postings(qblocks_hit.where(F.col("term") == w))
+    def positions(w, col):
+        dec = unblock_postings(hit.where(F.col("term") == w))
         return dec.select("doc_index", F.col("positions").alias(col))
 
-    cur = term_positions(words[0], "p")
-    for w in dict.fromkeys(words[1:]):  # each partner term once
-        nxt = term_positions(w, "p_next")
+    cur = positions(words[0], "p")
+    for w in partners:
         cur = (
-            cur.join(nxt, "doc_index")
-            .select(
-                "doc_index",
-                F.expr(
-                    f"filter(p, x -> exists(p_next, y -> abs(y - x) <= {int(window)}))"
-                ).alias("p"),
-            )
+            cur.join(positions(w, "p_next"), "doc_index")
+            .select("doc_index", fold.alias("p"))
             .where(F.size("p") > 0)
         )
-    counts = cur.select("doc_index", F.size("p").cast("long").alias("n_matches"))
-    if url_lookup is not None:
-        rows = (
-            counts.orderBy(F.desc("n_matches"), F.asc("doc_index"))
-            .limit(k)
-            .collect()
-        )
-        qblocks.unpersist()
-        return _local_result_df(
-            spark,
-            [(url_lookup[r["doc_index"]], int(r["n_matches"])) for r in rows],
-            value_col="n_matches", value_type="bigint",
-        )
-    out = (
-        counts.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
-        .select("url", "n_matches")
-        .orderBy(F.desc("n_matches"), F.asc("url"))
-        .limit(k)
-        .localCheckpoint(eager=True)
-    )
-    qblocks.unpersist()
-    return out
+    counts = cur.select("doc_index", F.size("p").cast("long").alias(value_col))
+    return _topk(spark, counts, doc_stats_idx, k, url_lookup, [qblocks],
+                 value_col=value_col, value_type="bigint")

@@ -23,8 +23,9 @@ def main():
     ap.add_argument("--port", type=int, default=8080)
     ap.add_argument(
         "--blocked",
-        help="blocked index dir for /phrase /proximity /threshold routes "
-        "(defaults to <index>/blocked when present)",
+        help="blocked index dir, served as a one-shard deployment, for "
+        "the /phrase /proximity /threshold /hybrid routes (defaults to "
+        "<index>/blocked when present)",
     )
     ap.add_argument(
         "--cache", type=int, default=0, metavar="N",
@@ -33,9 +34,10 @@ def main():
     )
     ap.add_argument(
         "--shards", default="",
-        help="comma-separated blocked shard dirs: /search scatter-"
-        "gathers over them with global stats (no flat index needed; "
-        "--index may point anywhere when set)",
+        help="comma-separated blocked shard dirs served as one "
+        "deployment: /search and the blocked routes scatter-gather over "
+        "them with global stats (no flat index needed; --index may "
+        "point anywhere when set)",
     )
     ap.add_argument(
         "--embeddings",

@@ -8,6 +8,7 @@ from google_like_search_engine_spark.compression import (
     assign_doc_indexes,
     block_postings,
 )
+from google_like_search_engine_spark.engine import SearchEngine
 from google_like_search_engine_spark.indexer import build_postings
 from google_like_search_engine_spark.ranker import score_bm25
 from google_like_search_engine_spark.wand import blocked_maxscore_topk
@@ -417,6 +418,37 @@ def test_url_dict_invalidated_on_rebuild(spark, tmp_path):
     eng.save_blocked(path)
     got2 = {r["url"] for r in eng.search_bm25_blocked(path, "shared", k=5).collect()}
     assert got2 == {"http://new/0", "http://new/1"}
+
+    # sharded: the memoized deployment over [path, other] (its stats and
+    # url masks) is dropped when merge_blocked_shards or
+    # promote_stream_index rewrites one of its paths
+    def docs_of(urls):
+        return spark.createDataFrame(
+            [(str(i), u, f"shared token corpus{i}") for i, u in enumerate(urls)],
+            "doc_id string, url string, text string",
+        )
+
+    other = str(tmp_path / "other")
+    o = SearchEngine(spark)
+    o.postings = build_postings(docs_of(["http://other/0"]))
+    o.doc_stats = o.postings.groupBy("doc_id", "url").agg(
+        F.sum("tf").alias("n_term_entries")
+    )
+    o.save_blocked(other)
+
+    def sharded():
+        return [r["url"] for r in eng.search_bm25_sharded(
+            [path, other], "shared", k=5).collect()]
+
+    assert set(sharded()) == {"http://new/0", "http://new/1", "http://other/0"}
+    eng.merge_blocked_shards([other], path)  # path now holds other's doc
+    assert sharded() == ["http://other/0"]  # masked by the later shard
+    store = str(tmp_path / "store")
+    build_postings(docs_of(["http://stream/0", "http://stream/1"])).withColumn(
+        "_batch_id", F.lit(0)
+    ).write.parquet(store)
+    eng.promote_stream_index(store, path)
+    assert set(sharded()) == {"http://stream/0", "http://stream/1", "http://other/0"}
 
 
 def test_blocked_required_excluded_filters(spark, tmp_path):
@@ -859,3 +891,133 @@ def test_sharded_mask_overfetch_keeps_live_docs(spark, tmp_path):
             ).collect()
         ]
         assert sharded == single and len(single) == k, k
+
+
+@pytest.fixture(scope="module")
+def url_hash_shards(spark, tmp_path_factory):
+    """A small corpus saved whole and as two url-hash shards."""
+    root = tmp_path_factory.mktemp("url_hash_shards")
+    eng = SearchEngine(spark)
+    eng.postings = build_postings(_random_docs(spark, n=60, seed=7)).persist()
+    eng.doc_stats = eng.postings.groupBy("doc_id", "url").agg(
+        F.sum("tf").alias("n_term_entries")
+    ).persist()
+    eng.total_documents = 60
+    full = str(root / "full")
+    eng.save_blocked(full)
+    paths = []
+    shard_of = F.pmod(F.xxhash64("url"), F.lit(2))
+    for i in range(2):
+        se = SearchEngine(spark)
+        se.postings = eng.postings.where(shard_of == i)
+        se.doc_stats = eng.doc_stats.where(shard_of == i)
+        paths.append(str(root / f"s{i}"))
+        se.save_blocked(paths[-1])
+    yield eng, full, paths
+    eng.unpersist()
+
+
+def test_sharded_fanout_jobs_stay_in_caller_job_group(spark, url_hash_shards):
+    """Shard fan-out runs on pool threads; their Spark jobs must carry
+    the caller's job group, or statusTracker pins and job-group
+    cancellation miss them. A warm 2-shard query records exactly the
+    jobs of its two one-shard runs, for BM25 and for phrase search."""
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+
+    def jobs(run, shard_paths, query):
+        run(shard_paths, query, k=10).collect()  # warm the handles
+        group = f"probe_{len(shard_paths)}_{shard_paths[0]}"
+        sc.setJobGroup(group, "job count probe")
+        try:
+            assert run(shard_paths, query, k=10).collect()
+        finally:
+            sc.setJobGroup("probe_done", "clear")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        with eng.low_latency():
+            for run, query in (
+                (eng.search_bm25_sharded, "spark shuffle"),
+                (eng.search_phrase_sharded, "spark"),
+            ):
+                one = [jobs(run, [p], query) for p in paths]
+                assert min(one) >= 1 and jobs(run, paths, query) == sum(one), one
+    finally:
+        eng.unpersist()
+
+
+def test_sharded_over_dict_cap_reads_term_rows(spark, url_hash_shards):
+    """Shards whose dictionary exceeds DICT_CAP keep it on disk and a
+    query reads only its terms' term_stats rows: sharded over [s0, s1]
+    == blocked over the union == the flat score_bm25 top-k."""
+    eng, full, paths = url_hash_shards
+    capped = SearchEngine(spark)
+    capped.DICT_CAP = 1
+    try:
+        for query, k in [("spark shuffle", 8), ("index merge join", 5), ("table rank", 12)]:
+            flat = [
+                (r["url"], round(r["score"], 6))
+                for r in score_bm25(
+                    spark, query, eng.postings, eng.doc_stats, eng.total_documents
+                ).limit(k).collect()
+            ]
+            blocked = [(r["url"], round(r["score"], 6))
+                       for r in capped.search_bm25_blocked(full, query, k=k).collect()]
+            sharded = [(r["url"], round(r["score"], 6))
+                       for r in capped.search_bm25_sharded(paths, query, k=k).collect()]
+            assert sharded == blocked == flat and flat, query
+        assert all(capped._blocked_handles(p).term_stats is None for p in [full] + paths)
+    finally:
+        capped.unpersist()
+
+
+def test_concurrent_first_queries_share_one_deployment(spark, tmp_path):
+    """Server threads race to open the same shard set. Every thread gets
+    the same answer, and the memoized deployment holds exactly the
+    handles the engine caches: a lost update would leave it on an
+    orphaned doc-stats cache that invalidation never unpersists."""
+    import sys
+    import threading
+
+    paths = []
+    for i in range(2):
+        docs = spark.createDataFrame(
+            [(f"{i}{j}", f"http://s{i}/{j}", f"shared token t{j}") for j in range(3)],
+            "doc_id string, url string, text string",
+        )
+        se = SearchEngine(spark)
+        se.postings = build_postings(docs)
+        se.doc_stats = se.postings.groupBy("doc_id", "url").agg(
+            F.sum("tf").alias("n_term_entries")
+        )
+        paths.append(str(tmp_path / f"s{i}"))
+        se.save_blocked(paths[-1])
+
+    eng = SearchEngine(spark)
+    results, errors = [], []
+
+    def query():
+        try:
+            rows = eng.search_bm25_sharded(paths, "shared", k=10).collect()
+            results.append(sorted(r["url"] for r in rows))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=query) for _ in range(12)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    want = sorted(f"http://s{i}/{j}" for i in range(2) for j in range(3))
+    assert results == [want] * len(threads)
+    dep = eng._deployments[tuple(paths)]
+    assert all(s is eng._blocked_cache[p] for p, s in zip(paths, dep.shards))
+    eng.unpersist()

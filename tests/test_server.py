@@ -549,8 +549,10 @@ def test_percolate_route(engine):
 def test_percolate_analyzer_tokenization(engine):
     """Punctuation-adjacent occurrences must match stored queries: the
     arriving document is tokenized like the indexed boolean paths
-    (lowercased letter/digit runs), not bare-whitespace split."""
-    queries = {"q_punct": "spark AND engine", "q_num": "42"}
+    (the cleaning chain's punct strip, lowercase, whitespace and digit
+    boundary split), not bare-whitespace split; non-ASCII letters stay
+    in the token, as they do in the index."""
+    queries = {"q_punct": "spark AND engine", "q_num": "42", "q_cafe": "café"}
     srv = make_server(engine, "127.0.0.1", 0, percolator=queries)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -562,5 +564,7 @@ def test_percolate_analyzer_tokenization(engine):
         code, body = _get(f"{base}/percolate?{q}")
         assert code == 200
         assert sorted(body["matches"]) == ["q_num", "q_punct"]
+        code, body = _get(f"{base}/percolate?{urlencode({'text': 'Café, anyone?'})}")
+        assert code == 200 and body["matches"] == ["q_cafe"]
     finally:
         srv.shutdown()

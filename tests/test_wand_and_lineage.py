@@ -54,6 +54,35 @@ def test_maxscore_equals_naive_bm25(spark, query, k):
     doc_stats.unpersist()
 
 
+def test_bm25_idf_python_twin_matches_jvm_log(spark):
+    """One idf source: wand.bm25_idf's Python twin (the literal idf maps
+    of the served, blocked and sharded paths) against its JVM expression
+    (the flat path) over (N, df) grids spanning the test and bench
+    corpus sizes. The JVM's StrictMath log and Python's libm log are not
+    bit-identical: they differ by at most one ulp, on a few percent of
+    the points, which is why cross-path scores are compared to rel 1e-9
+    and block-max pruning keeps an epsilon."""
+    import math
+
+    from google_like_search_engine_spark.wand import bm25_idf
+
+    rows = []
+    for n in (1, 24, 120, 150, 200, 1_000, 10_000, 10**6, 10**9, 10**12):
+        dfs = set(range(1, min(n, 300) + 1)) | {n} | {
+            max(1, n // d) for d in (2, 3, 7, 10, 1000)
+        }
+        rows += [(float(n), d) for d in sorted(dfs)]
+    got = (
+        spark.createDataFrame(rows, "n double, df long")
+        .select("n", "df", bm25_idf(F.col("n"), F.col("df")).alias("jvm"))
+        .collect()
+    )
+    assert len(got) == len(rows)
+    ulps = [abs(r["jvm"] - bm25_idf(r["n"], r["df"])) / math.ulp(r["jvm"]) for r in got]
+    assert max(ulps) <= 1.0
+    assert sum(u > 0 for u in ulps) < 0.1 * len(ulps)
+
+
 def test_checkpointed_build_and_resume(spark, tmp_path):
     out = str(tmp_path / "idx")
     docs = _random_docs(spark, n=60, seed=5)
