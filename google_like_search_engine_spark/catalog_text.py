@@ -1406,8 +1406,9 @@ SELECT doc_id, n_hits, snippet FROM best WHERE n_hits > 0
 
 def bm25_filtered_blocked(spark, sf_dir):
     """The `+term -term` boolean-filtered BM25 answered from the
-    COMPRESSED BLOCKED index (wand.blocked_maxscore_topk with
-    required/excluded semi/anti joins over decoded doc sets), checked
+    COMPRESSED BLOCKED index (wand.blocked_maxscore_topk: one scan of
+    query + filter terms aggregated per doc into a score plus
+    required/excluded presence flags), checked
     against the same relational EXISTS/NOT-EXISTS oracle as the flat
     bm25_filtered_search — the filter capability proven on the serving
     layout, not just the posting relation."""

@@ -621,7 +621,9 @@ class SearchEngine:
                     if url not in dep.masked[i]:
                         per_url[url] = v
         merged = sorted(per_url.items(), key=lambda x: (-x[1], x[0]))
-        return _local_result_df(self.spark, merged[:k], value_col, value_type)
+        return _local_result_df(
+            self.spark, merged[:k], f"url string, {value_col} {value_type}"
+        )
 
     def search_bm25_blocked(
         self,
@@ -697,22 +699,8 @@ class SearchEngine:
             )
             fused.append((url, br, cr, rrf))
         fused.sort(key=lambda t: (-t[3], t[0]))
-        fused = fused[:k]
-        schema = "url string, bm25_rnk int, cos_rnk int, rrf double"
-        if not fused:
-            return self.spark.createDataFrame([], schema)
-
-        def esc(s: str) -> str:
-            return s.replace("\\", "\\\\").replace("'", "''")
-
-        vals = ", ".join(
-            f"('{esc(u)}', {br}, {cr}, CAST({rrf!r} AS DOUBLE))"
-            for u, br, cr, rrf in fused
-        )
-        return self.spark.sql(
-            "SELECT url, CAST(bm25_rnk AS INT) AS bm25_rnk,"
-            " CAST(cos_rnk AS INT) AS cos_rnk, rrf"
-            f" FROM (VALUES {vals}) AS t(url, bm25_rnk, cos_rnk, rrf)"
+        return _local_result_df(
+            self.spark, fused[:k], "url string, bm25_rnk int, cos_rnk int, rrf double"
         )
 
     def search_bm25_sharded(
@@ -856,8 +844,8 @@ class SearchEngine:
     def _positional(self, index_paths, words, k, value_col, topk) -> DataFrame:
         """Positional counts need no collection stats, so federation is a
         plain scatter-gather of ``topk(blocks, doc_stats_idx, k, url
-        lookup)`` per shard. A shard missing any query word contributes
-        nothing, with zero jobs."""
+        lookup)`` per shard: one job each. A shard missing any
+        query word contributes nothing, with zero jobs."""
         dep = self._deployment(index_paths)
         infos, _df = dep.lookup(words)
 
@@ -877,20 +865,22 @@ class SearchEngine:
     ) -> DataFrame:
         """Every document scoring >= ``threshold`` (rounded BM25) over a
         deployment — the alerting form of search: per shard,
-        wand.blocked_maxscore_threshold with the global df/N/avgdl
-        injected, then the union (no k to merge)."""
+        wand.blocked_maxscore_threshold with the global df/N/avgdl and
+        the shard's dictionary max_tf injected (no per-query metadata
+        job), then the union (no k to merge)."""
         words = sorted({w.lower() for w in expand_query(query)})
         dep = self._deployment(index_paths)
         infos, df = dep.lookup(words)
 
         def shard(i):
-            if not infos[i]:
+            info = infos[i]
+            if not info:
                 return []
             part = blocked_maxscore_threshold(
-                self.spark, query, self._shard_scan(dep.shards[i], infos[i]),
+                self.spark, query, self._shard_scan(dep.shards[i], info),
                 dep.shards[i].doc_stats_idx, dep.n, threshold=threshold,
                 doc_stats_agg=(dep.avgdl, dep.shards[i].stats[1]),
-                df_override=df,
+                term_stats={t: (df[t],) + v[1:] for t, v in info.items()},
             )
             return [(r["url"], float(r["score"])) for r in part.collect()]
 
@@ -1348,11 +1338,9 @@ class SearchEngine:
         hit = [w for w in words if w in self._dict]
         required = [w.lower() for w in (required or [])]
         excluded = [w.lower() for w in (excluded or [])]
-        if any(w not in self._dict for w in required):
-            return self.spark.createDataFrame([], "url string, score double")
+        if any(w not in self._dict for w in required) or not hit:
+            return _local_result_df(self.spark, [])
         excluded = [w for w in excluded if w in self._dict]
-        if not hit:
-            return self.spark.createDataFrame([], "url string, score double")
         n = float(self.total_documents)
         partial = bm25_partial(
             F.col("tf"), F.col("n_term_entries"),

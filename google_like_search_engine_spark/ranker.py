@@ -131,6 +131,8 @@ def score_bm25(
     dictionary table (term, df) from build time — each removes one
     aggregation job per query (a real engine's dictionary stores df).
     """
+    from .wand import _local_result_df, bm25_idf, bm25_partial, idf_map
+
     if terms is not None:
         words = sorted({w.lower() for w in terms})
     else:
@@ -138,13 +140,11 @@ def score_bm25(
             {w.lower() for w in (expand_query(query) if use_stems else query.split())}
         )
     if not words:
-        return spark.createDataFrame([], "url string, score double")
+        return _local_result_df(spark, [])
 
     if avgdl is None:
         avgdl_row = doc_stats.agg(F.avg("n_term_entries").alias("avgdl")).collect()[0]
         avgdl = float(avgdl_row["avgdl"] or 1.0)
-
-    from .wand import bm25_idf, bm25_partial, idf_map
 
     # isin, not a broadcast-join with a literal term DF: the filter
     # pushes to the scan / cache batch stats and costs no per-query
@@ -165,7 +165,7 @@ def score_bm25(
         }
         hit = [w for w in words if w in dfmap]
         if not hit:
-            return spark.createDataFrame([], "url string, score double")
+            return _local_result_df(spark, [])
         matched = postings.where(F.col("term").isin(hit)).select(
             "term", "url", "tf", *(["dl"] if has_dl else ["doc_id"])
         )

@@ -97,8 +97,8 @@ QUERIES = {
 def _phrase_search_blocked(spark, sf_dir):
     """The same positional phrase query as phrase_search, but answered
     from the compressed blocked index's varint positions store
-    (encode -> metadata block-intersection -> decode -> adjacency),
-    checked against the identical relational oracle. The documents
+    (encode -> one grouped pass per block_id: skip groups lacking a
+    word, decode, fold adjacency per doc), checked against the identical relational oracle. The documents
     table has no blank/punct tokens, so the index's blank-counting
     1-based positions coincide with the oracle's non-empty renumbering."""
     from .compression import assign_doc_indexes, block_postings

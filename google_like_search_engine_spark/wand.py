@@ -37,13 +37,16 @@ for upper bounds).
 
 from __future__ import annotations
 
+import bisect
+import functools
 import math
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .ranker import expand_query
 
-_EMPTY = "url string, score double"
+_SCORED = "url string, score double"
 
 
 def bm25_idf(n, df):
@@ -79,7 +82,7 @@ def idf_map(idf: dict) -> Column:
 
 
 def entry_partials(entries, idf: dict, avgdl, doc_stats_idx, k1=1.2, b=0.75):
-    """(doc_index, partial) for decoded (term, doc_index, tf[, dl])
+    """(doc_index, term, partial) for decoded (term, doc_index, tf[, dl])
     entries. dl rides the blocks; pre-dl layouts join it in from the
     doc-stats dimension."""
     if "dl" not in entries.columns:
@@ -88,7 +91,7 @@ def entry_partials(entries, idf: dict, avgdl, doc_stats_idx, k1=1.2, b=0.75):
             "doc_index",
         )
     return entries.select(
-        "doc_index",
+        "doc_index", "term",
         bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b).alias("partial"),
     )
 
@@ -106,26 +109,29 @@ def essential_terms(ub: dict, theta: float) -> set:
     return essential
 
 
-def _local_result_df(spark: SparkSession, rows: list,
-                     value_col: str = "score",
-                     value_type: str = "double") -> DataFrame:
-    """(url, value) rows already resolved driver-side -> a DataFrame
-    whose collect() is a LocalTableScan (zero Spark jobs). A plain
-    createDataFrame would round-trip the rows through parallelize and
-    cost one more scheduled job on the latency path."""
+def _local_result_df(spark: SparkSession, rows: list, schema: str = _SCORED) -> DataFrame:
+    """Rows already resolved driver-side (columns and SQL types given by
+    the DDL ``schema``) -> a DataFrame whose collect() is a
+    LocalTableScan (zero Spark jobs). A plain createDataFrame would
+    round-trip the rows through parallelize and cost one more scheduled
+    job on the latency path — even with no rows, so an empty result is
+    a ``WHERE false`` select of typed NULLs."""
+    cols = [c.split() for c in schema.split(",")]
     if not rows:
-        return spark.createDataFrame([], f"url string, {value_col} {value_type}")
+        nulls = ", ".join(f"CAST(NULL AS {t.upper()}) AS {n}" for n, t in cols)
+        return spark.sql(f"SELECT {nulls} WHERE false")
 
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "''")
+    def lit(v, t: str) -> str:
+        if t == "string":
+            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+        return f"CAST({v!r} AS {t.upper()})"
 
-    sqlt = value_type.upper()
+    names = ", ".join(n for n, _t in cols)
     vals = ", ".join(
-        f"('{esc(u)}', CAST({v!r} AS {sqlt}))" for u, v in rows
+        "(" + ", ".join(lit(v, t) for v, (_n, t) in zip(row, cols)) + ")"
+        for row in rows
     )
-    return spark.sql(
-        f"SELECT url, {value_col} FROM (VALUES {vals}) AS t(url, {value_col})"
-    )
+    return spark.sql(f"SELECT {names} FROM (VALUES {vals}) AS t({names})")
 
 
 def _query_words(query: str, use_stems: bool) -> list:
@@ -173,7 +179,7 @@ def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
         cast = float if value_type == "double" else int
         out = _local_result_df(
             spark, [(url_lookup[r["doc_index"]], cast(r[value_col])) for r in rows],
-            value_col=value_col, value_type=value_type,
+            f"url string, {value_col} {value_type}",
         )
     else:
         out = (
@@ -212,11 +218,15 @@ def blocked_maxscore_topk(
     ``required``/``excluded``: boolean doc filters (`+term -term`
     syntax) — results must contain every required term and no excluded
     term (raw lowercased terms, matching the served path's semantics).
-    Filters apply as semi/anti joins on decoded doc sets and force the
-    all-matched-blocks scoring path: MaxScore's unfiltered upper bounds
-    cannot order a FILTERED top-k, and a required term absent from the
-    index yields an empty doc set, hence an empty result, with no
-    dictionary lookup needed.
+    A filtered query scans the blocks of words ∪ required ∪ excluded
+    ONCE and aggregates per doc into its score (the query words'
+    partials) plus one presence flag per required term and one for the
+    excluded set — engine._boolean_matches' shape, no per-filter
+    semi/anti joins, so it stays one job. It always scores every
+    matched block: MaxScore's unfiltered upper bounds cannot order a
+    FILTERED top-k. A required term absent from the index leaves its
+    flag false everywhere, hence an empty result, with no dictionary
+    lookup needed.
 
     ``doc_stats_idx``: (doc_index, url, n_term_entries). Score-identical
     to the flat maxscore_topk / naive scorer (property-tested).
@@ -247,7 +257,7 @@ def blocked_maxscore_topk(
 
     words = _query_words(query, use_stems)
     if not words:
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     req = sorted({w.lower() for w in (required or [])})
     exc = sorted({w.lower() for w in (excluded or [])})
     n = float(total_documents)
@@ -261,32 +271,37 @@ def blocked_maxscore_topk(
     if not tstats:
         for df in cached:
             df.unpersist()
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
     ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
           for t, (_df, mt) in tstats.items()}
 
+    if req or exc:
+        # one scan, one per-doc aggregation: score + presence flags
+        keep = F.col("score").isNotNull()
+        flags = []
+        for i, w in enumerate(req):
+            flags.append(F.max(F.col("term") == w).alias(f"_req{i}"))
+            keep &= F.col(f"_req{i}")
+        if exc:
+            flags.append(F.max(F.col("term").isin(exc)).alias("_exc"))
+            keep &= ~F.col("_exc")
+        scanned = blocks.where(F.col("term").isin(sorted({*words, *req, *exc})))
+        score = F.sum(F.when(F.col("term").isin(words), F.col("partial")))
+        by_doc = (
+            entry_partials(scoring_entries(scanned), idf, avgdl, doc_stats_idx, k1, b)
+            .groupBy("doc_index")
+            .agg(score.alias("score"), *flags)
+            .where(keep)
+            .select("doc_index", "score")
+        )
+        return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
     # small-query fast path: total matched entries below the threshold
     # -> pruning saves less than its driver round-trips cost; score all
     # matched blocks in ONE job (the single-job shape of the served
     # path, engine.search_bm25_served)
-    if req or exc or sum(df for df, _mt in tstats.values()) <= small_query_entries:
+    if sum(df for df, _mt in tstats.values()) <= small_query_entries:
         entries = scoring_entries(qblocks)
-        # boolean filters: per-doc semi/anti joins against the decoded
-        # doc sets of the filter terms (every entry of a doc survives
-        # or drops together, so filtering entries == filtering docs)
-        for w in req:
-            entries = entries.join(
-                scoring_entries(blocks.where(F.col("term") == w))
-                .select("doc_index").distinct(),
-                "doc_index", "left_semi",
-            )
-        if exc:
-            entries = entries.join(
-                scoring_entries(blocks.where(F.col("term").isin(exc)))
-                .select("doc_index").distinct(),
-                "doc_index", "left_anti",
-            )
     else:
         # big query: the MaxScore path reads qblocks several times
         if not cached:
@@ -402,7 +417,7 @@ def blocked_maxscore_threshold(
     use_stems: bool = True,
     doc_stats_agg: tuple | None = None,
     round_to: int = 4,
-    df_override: dict | None = None,
+    term_stats: dict | None = None,
 ) -> DataFrame:
     """ALL documents whose BM25 score rounds to >= ``threshold`` —
     the score-threshold form of the MaxScore/block-max pruned path
@@ -422,22 +437,21 @@ def blocked_maxscore_threshold(
     pruning; the extra 1e-9 absorbs ulp-level float discrepancies.
     Returns (url, score) with score rounded to ``round_to``.
 
-    ``df_override``: {term: df} replacing the block-metadata dfs —
-    the sharded path injects GLOBAL document frequencies here while
-    max_tf/min_dl stay shard-local (valid: they only bound this
-    shard's scores).
+    ``term_stats``: optional driver-side {term: (df, max_tf, ...)}
+    dictionary, as in blocked_maxscore_topk; without it one
+    block-metadata aggregation supplies them. The sharded path passes
+    GLOBAL document frequencies here while max_tf/min_dl stay
+    shard-local (valid: they only bound this shard's scores).
     """
     words = _query_words(query, use_stems)
     if not words:
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     n = float(total_documents)
     theta = threshold - 0.5 * 10.0 ** (-round_to) - 1e-9
     avgdl, min_dl = _dl_stats(doc_stats_idx, doc_stats_agg)
 
     qblocks = blocks.where(F.col("term").isin(words)).persist()
-    tstats = _term_stats(qblocks, words, None)
-    if df_override is not None:
-        tstats = {t: (int(df_override.get(t, df)), mt) for t, (df, mt) in tstats.items()}
+    tstats = _term_stats(qblocks, words, term_stats)
     idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
     ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
           for t, (_df, mt) in tstats.items()}
@@ -445,7 +459,7 @@ def blocked_maxscore_threshold(
     entries, ess = _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl)
     if entries is None:
         qblocks.unpersist()
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     survivors = (
         entry_partials(entries, idf, avgdl, doc_stats_idx, k1, b)
         .groupBy("doc_index")
@@ -500,7 +514,7 @@ def maxscore_topk(
     identical to ranker.score_bm25(...).limit(k)."""
     words = _query_words(query, use_stems)
     if not words:
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     n = float(total_documents)
     avgdl, min_dl = _dl_stats(doc_stats, None)
     dl = doc_stats.select("doc_id", F.col("n_term_entries").alias("dl"))
@@ -514,7 +528,7 @@ def maxscore_topk(
         .collect()
     }
     if not tstats:
-        return spark.createDataFrame([], _EMPTY)
+        return _local_result_df(spark, [])
     idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
     ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
           for t, (_df, mt) in tstats.items()}
@@ -560,16 +574,16 @@ def blocked_phrase_topk(
     index keeps per-doc position lists, Indexer.java:64-82; its ranker
     never used them for phrases, so this is the capability completed).
 
-    Adjacency is JVM-side: positions of term i+1 intersect (positions
-    of term i) + 1, folded across the phrase (``_positional_topk`` does
-    the block skipping and ranking). Returns (url, n_occurrences) by
-    descending count.
+    The fold is adjacency (``_adjacent``): the positions x + 1 of the
+    words so far that the next word holds, left to right over the
+    phrase; a doc counts its surviving phrase ends. ``_positional_topk``
+    runs it in one grouped pass with the block skipping and ranking.
+    Returns (url, n_occurrences) by descending count.
     """
     words = [w.lower() for w in phrase.split() if w]
-    fold = F.array_intersect(F.transform("p", lambda x: x + 1), F.col("p_next"))
     return _positional_topk(
-        spark, words, words[1:], fold, blocks, doc_stats_idx, k, url_lookup,
-        "n_occurrences",
+        spark, words, words[1:], _adjacent, blocks, doc_stats_idx, k,
+        url_lookup, "n_occurrences",
     )
 
 
@@ -586,53 +600,91 @@ def blocked_proximity_topk(
     the number of anchor positions of ``terms[0]`` that have EVERY
     other term within ``window`` tokens (either side).
 
-    The window check is JVM-side array algebra: fold
-    ``filter(p, x -> exists(p_other, y -> |y-x| <= W))`` over each
-    non-anchor term once (``_positional_topk`` does the block skipping
-    and ranking). Returns (url, n_matches) desc.
+    The fold (``_near``) keeps the anchor positions with a position of
+    the next distinct non-anchor term within the window;
+    ``_positional_topk`` runs it in one grouped pass with the block
+    skipping and ranking. Returns (url, n_matches) desc.
     """
     words = [w.lower() for w in terms if w]
-    fold = F.expr(f"filter(p, x -> exists(p_next, y -> abs(y - x) <= {int(window)}))")
     return _positional_topk(
-        spark, words, list(dict.fromkeys(words[1:])), fold, blocks,
-        doc_stats_idx, k, url_lookup, "n_matches",
+        spark, words, list(dict.fromkeys(words[1:])),
+        functools.partial(_near, window=int(window)), blocks, doc_stats_idx,
+        k, url_lookup, "n_matches",
     )
+
+
+def _adjacent(p: list, nxt: list) -> list:
+    """Phrase fold: the positions x + 1 (x in ``p``) that ``nxt`` holds."""
+    held = set(nxt)
+    return [x + 1 for x in p if x + 1 in held]
+
+
+def _near(p: list, other: list, window: int) -> list:
+    """Proximity fold: the positions of ``p`` with a position of
+    ``other`` at most ``window`` tokens away (``other`` is ascending, as
+    decoded, so one bisect per position finds its nearest candidate)."""
+    out = []
+    for x in p:
+        i = bisect.bisect_left(other, x - window)
+        if i < len(other) and other[i] <= x + window:
+            out.append(x)
+    return out
 
 
 def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
                      url_lookup, value_col) -> DataFrame:
-    """Shared positional core. A qualifying doc holds every term, so
-    only blocks whose doc range contains all of them (metadata
-    intersection on block_id) are decoded. The anchor term's positions
-    ``p`` then fold against each partner's positions ``p_next`` through
-    ``fold`` (a Column over p/p_next); docs rank by the surviving
-    anchor count. Positions are the index's own 1-based blank-counting
-    token positions, so results agree with the index by construction."""
-    from .compression import unblock_postings
+    """Shared positional core: ONE grouped Arrow pass keyed by
+    ``block_id``, so a query is one Spark job. Blocks are doc-range
+    aligned, so a block group holds every posting of its docs. A group
+    lacking any query term holds no qualifying doc and is skipped
+    without decoding (the block skipping); otherwise each term's varint
+    blob decodes once (compression.decode_block) and, per doc holding
+    every term, the anchor ``words[0]``'s positions fold against each
+    partner's positions in turn (``fold(p, positions) -> p``). A doc
+    whose positions fold to nothing drops; the rest rank by how many
+    survive. Positions are the index's own 1-based blank-counting token
+    positions, so results agree with the index by construction.
+
+    The exchange is sized from the shard's doc count (the size of
+    ``url_lookup``, when given) over the build's block span — the number
+    of block groups there can be — capped at
+    spark.sql.shuffle.partitions, which also applies without a lookup
+    (it is only absent past engine.URL_DICT_CAP docs, where the count
+    exceeds any serving partition setting anyway)."""
+    from .compression import BLOCK_SPAN, decode_block
 
     if not words:
-        return spark.createDataFrame([], f"url string, {value_col} long")
+        return _local_result_df(spark, [], f"url string, {value_col} bigint")
     uniq = sorted(set(words))
-    qblocks = blocks.where(F.col("term").isin(uniq)).persist()
-    full_blocks = (
-        qblocks.groupBy("block_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .where(F.col("nt") == len(uniq))
-        .select("block_id")
+    anchor = words[0]
+
+    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = {"doc_index": [], value_col: []}
+        if pdf["term"].nunique() == len(uniq):
+            pos = {}
+            for term, base, blob in zip(pdf["term"], pdf["base"], pdf["block"]):
+                idxs, _tfs, plists = decode_block(bytes(blob), base=int(base))
+                pos[term] = dict(zip(idxs, plists))
+            for d in set.intersection(*(set(m) for m in pos.values())):
+                p = pos[anchor][d]
+                for w in partners:
+                    p = fold(p, pos[w][d])
+                    if not p:
+                        break
+                else:
+                    out["doc_index"].append(d)
+                    out[value_col].append(len(p))
+        return pd.DataFrame(out, dtype="int64")
+
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if url_lookup is not None:
+        nparts = max(1, min(nparts, -(-len(url_lookup) // BLOCK_SPAN)))
+    counts = (
+        blocks.where(F.col("term").isin(uniq))
+        .select("term", "block_id", "base", "block")
+        .repartition(nparts, "block_id")
+        .groupBy("block_id")
+        .applyInPandas(per_block, f"doc_index long, {value_col} long")
     )
-    hit = qblocks.join(full_blocks, "block_id", "left_semi")
-
-    def positions(w, col):
-        dec = unblock_postings(hit.where(F.col("term") == w))
-        return dec.select("doc_index", F.col("positions").alias(col))
-
-    cur = positions(words[0], "p")
-    for w in partners:
-        cur = (
-            cur.join(positions(w, "p_next"), "doc_index")
-            .select("doc_index", fold.alias("p"))
-            .where(F.size("p") > 0)
-        )
-    counts = cur.select("doc_index", F.size("p").cast("long").alias(value_col))
-    return _topk(spark, counts, doc_stats_idx, k, url_lookup, [qblocks],
+    return _topk(spark, counts, doc_stats_idx, k, url_lookup,
                  value_col=value_col, value_type="bigint")

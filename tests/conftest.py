@@ -1,5 +1,7 @@
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -8,6 +10,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from google_like_search_engine_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+_probe_ids = itertools.count()
+
+
+@contextmanager
+def spark_jobs(sc):
+    """Count the Spark jobs the calling thread (and the pool threads
+    that inherit its job group) runs inside the block. Yields a counter:
+    ``jobs()`` is the number recorded so far, also after the block. The
+    job group is cleared on exit, even when the block raises."""
+    group = f"probe_{next(_probe_ids)}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
 
 
 @pytest.fixture(scope="session")

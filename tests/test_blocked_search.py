@@ -13,6 +13,7 @@ from google_like_search_engine_spark.indexer import build_postings
 from google_like_search_engine_spark.ranker import score_bm25
 from google_like_search_engine_spark.wand import blocked_maxscore_topk
 
+from tests.conftest import spark_jobs
 from tests.test_wand_and_lineage import _random_docs
 
 
@@ -817,12 +818,10 @@ def test_warm_blocked_query_is_one_spark_job(spark, tmp_path):
             eng.search_bm25_blocked(out, "search engine", k=10).collect()
             sc = spark.sparkContext
             for q in ("index merge", "web page", "search engine index"):
-                sc.setJobGroup(f"probe_{q}", "job count probe")
-                rows = eng.search_bm25_blocked(out, q, k=10).collect()
-                ids = sc.statusTracker().getJobIdsForGroup(f"probe_{q}")
-                assert len(ids) == 1, (q, len(ids))
+                with spark_jobs(sc) as jobs:
+                    rows = eng.search_bm25_blocked(out, q, k=10).collect()
+                assert jobs() == 1, (q, jobs())
                 assert rows  # nonempty on this corpus
-            sc.setJobGroup("probe_done", "clear")
     finally:
         eng.unpersist()
 
@@ -928,13 +927,9 @@ def test_sharded_fanout_jobs_stay_in_caller_job_group(spark, url_hash_shards):
 
     def jobs(run, shard_paths, query):
         run(shard_paths, query, k=10).collect()  # warm the handles
-        group = f"probe_{len(shard_paths)}_{shard_paths[0]}"
-        sc.setJobGroup(group, "job count probe")
-        try:
+        with spark_jobs(sc) as count:
             assert run(shard_paths, query, k=10).collect()
-        finally:
-            sc.setJobGroup("probe_done", "clear")
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return count()
 
     try:
         with eng.low_latency():
@@ -1021,3 +1016,194 @@ def test_concurrent_first_queries_share_one_deployment(spark, tmp_path):
     dep = eng._deployments[tuple(paths)]
     assert all(s is eng._blocked_cache[p] for p, s in zip(paths, dep.shards))
     eng.unpersist()
+
+
+def test_positional_topk_matches_flat_positions(spark):
+    """Phrase and proximity counts off the one-pass positional core
+    equal a plain-Python check over the flat postings' positions. A
+    4-doc block span splits the corpus into ten block groups, and the
+    rare term ``stream`` is missing from half of them (groups skipped
+    without decoding)."""
+    import random
+
+    from google_like_search_engine_spark.wand import (
+        blocked_phrase_topk,
+        blocked_proximity_topk,
+    )
+
+    rng = random.Random(41)
+    rows = []
+    for i in range(40):
+        words = [rng.choice(["spark", "index", "table", "query"])
+                 for _ in range(rng.randint(3, 12))]
+        if i % 9 == 0:
+            words.insert(rng.randint(0, len(words)), "stream")
+        rows.append((f"d{i:02d}", f"u{i:02d}", " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id string, url string, text string")
+    postings = build_postings(docs).persist()
+    idx = assign_doc_indexes(docs).persist()
+    blocks = block_postings(postings.join(idx, "doc_id"), block_span=4).persist()
+    dsi = (
+        postings.groupBy("doc_id", "url")
+        .agg(F.sum("tf").alias("n_term_entries"))
+        .join(idx, "doc_id")
+        .select("doc_index", "url", "n_term_entries")
+        .persist()
+    )
+    pos: dict = {}
+    for r in postings.select("url", "term", "positions").collect():
+        pos.setdefault(r["url"], {})[r["term"]] = set(r["positions"])
+    all_blocks = {r["block_id"] for r in blocks.select("block_id").collect()}
+    rare_blocks = {
+        r["block_id"]
+        for r in blocks.where(F.col("term") == "stream").select("block_id").collect()
+    }
+    assert len(all_blocks) == 10 and len(rare_blocks) == 5
+
+    def phrase_ref(words):
+        return {
+            url: n
+            for url, terms in pos.items()
+            if all(w in terms for w in words)
+            for n in [sum(
+                all(x + j in terms[w] for j, w in enumerate(words))
+                for x in terms[words[0]]
+            )]
+            if n
+        }
+
+    def near_ref(words, window):
+        return {
+            url: n
+            for url, terms in pos.items()
+            if all(w in terms for w in words)
+            for n in [sum(
+                all(any(abs(y - x) <= window for y in terms[w]) for w in words[1:])
+                for x in terms[words[0]]
+            )]
+            if n
+        }
+
+    for phrase in ["spark index", "table table", "spark spark spark",
+                   "index query table", "stream spark", "spark stream"]:
+        got = {
+            r["url"]: r["n_occurrences"]
+            for r in blocked_phrase_topk(spark, phrase, blocks, dsi, k=1000).collect()
+        }
+        assert got == phrase_ref(phrase.split()), phrase
+    for terms in (["spark", "table"], ["table", "table"], ["stream", "spark", "index"]):
+        for window in range(4):
+            got = {
+                r["url"]: r["n_matches"]
+                for r in blocked_proximity_topk(
+                    spark, terms, window, blocks, dsi, k=1000
+                ).collect()
+            }
+            assert got == near_ref(terms, window), (terms, window)
+    for df in (postings, idx, blocks, dsi):
+        df.unpersist()
+
+
+def test_filtered_bm25_sharded_equals_blocked_equals_flat(spark, url_hash_shards):
+    """+/- filtered BM25: sharded over [s0, s1] == blocked over the
+    union == ranker.score_bm25 filtered in Python, for a required term
+    that is also a query word, one that is not, and an excluded head
+    term."""
+    eng, full, paths = url_hash_shards
+    terms_of: dict = {}
+    for r in eng.postings.select("url", "term").collect():
+        terms_of.setdefault(r["url"], set()).add(r["term"])
+    cases = [
+        ("spark shuffle", ["spark"], []),
+        ("index merge", ["table"], []),
+        ("table rank", [], ["spark"]),
+        ("query join", ["row"], ["block"]),
+    ]
+    k = 8
+    for query, req, exc in cases:
+        flat = [
+            (r["url"], r["score"])
+            for r in score_bm25(spark, query, eng.postings, eng.doc_stats, 60).collect()
+            if all(w in terms_of[r["url"]] for w in req)
+            and not any(w in terms_of[r["url"]] for w in exc)
+        ][:k]
+        assert flat, query
+        for got in (
+            eng.search_bm25_blocked(full, query, k=k, required=req, excluded=exc),
+            eng.search_bm25_sharded(paths, query, k=k, required=req, excluded=exc),
+        ):
+            got = [(r["url"], r["score"]) for r in got.collect()]
+            assert [u for u, _s in got] == [u for u, _s in flat], (query, req, exc)
+            for (_u, a), (_v, b) in zip(got, flat):
+                assert a == pytest.approx(b, rel=1e-9)
+
+
+def test_warm_positional_and_filtered_queries_are_one_job_per_shard(
+    spark, url_hash_shards
+):
+    """Phrase, proximity and +/- filtered BM25 each run one grouped
+    pass per shard: one Spark job on each shard, two over both."""
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+    queries = [
+        lambda p: eng.search_phrase_sharded(p, "spark index", k=10),
+        lambda p: eng.search_proximity_sharded(p, ["spark", "table"], window=2, k=10),
+        lambda p: eng.search_bm25_sharded(
+            p, "spark shuffle", k=10, required=["index"], excluded=["merge"]
+        ),
+    ]
+    try:
+        with eng.low_latency():
+            for i, run in enumerate(queries):
+                for shard_paths in [[p] for p in paths] + [paths]:
+                    run(shard_paths).collect()  # warm the handles
+                    with spark_jobs(sc) as jobs:
+                        assert run(shard_paths).collect()
+                    assert jobs() == len(shard_paths), (i, shard_paths, jobs())
+    finally:
+        eng.unpersist()
+
+
+def test_threshold_uses_deployment_dictionary(spark, url_hash_shards):
+    """/threshold reads (df, max_tf) from the deployment's dictionary:
+    no block-metadata aggregation job per shard, so this 2-shard
+    threshold query runs 14 jobs (16 when each shard aggregated its own
+    term stats), and the answer is the single index's."""
+    _eng, full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+    try:
+        with eng.low_latency():
+            want = sorted(
+                (r["url"], r["score"]) for r in
+                eng.search_bm25_threshold_blocked(full, "spark shuffle", 0.5).collect()
+            )
+            eng.search_bm25_threshold_sharded(paths, "spark shuffle", 0.5).collect()
+            with spark_jobs(sc) as jobs:
+                got = sorted(
+                    (r["url"], r["score"]) for r in
+                    eng.search_bm25_threshold_sharded(paths, "spark shuffle", 0.5).collect()
+                )
+            assert got == want and got
+            assert jobs() == 14, jobs()
+    finally:
+        eng.unpersist()
+
+
+def test_no_hit_results_collect_with_zero_jobs(spark, url_hash_shards):
+    """An empty result is a LocalRelation: collecting a no-hit BM25 or
+    phrase answer schedules no Spark job."""
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+    try:
+        for res in (
+            eng.search_bm25_sharded(paths, "zzznope", k=10),
+            eng.search_phrase_sharded(paths, "spark zzznope", k=10),
+        ):
+            with spark_jobs(sc) as jobs:
+                assert res.collect() == []
+            assert jobs() == 0, res.columns
+    finally:
+        eng.unpersist()

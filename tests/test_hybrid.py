@@ -19,6 +19,8 @@ from google_like_search_engine_spark.corpus import generate_pages
 from google_like_search_engine_spark.engine import SearchEngine
 from google_like_search_engine_spark.server import make_server
 
+from tests.conftest import spark_jobs
+
 QUERY = "search engine index"
 RRF_K = 60
 
@@ -241,11 +243,8 @@ def test_warm_hybrid_is_two_spark_jobs(hybrid_setup):
     qv = _qv(emb, top)
     with eng.low_latency():
         eng.search_hybrid_rrf(blocked, QUERY, emb, qv, k=5, id_col="url").collect()
-        sc = eng.spark.sparkContext
-        sc.setJobGroup("probe_hybrid", "job count probe")
-        eng.search_hybrid_rrf(
-            blocked, "index merge", emb, qv, k=5, id_col="url"
-        ).collect()
-        ids = sc.statusTracker().getJobIdsForGroup("probe_hybrid")
-        sc.setJobGroup("probe_done", "clear")
-    assert len(ids) == 2, len(ids)
+        with spark_jobs(eng.spark.sparkContext) as jobs:
+            eng.search_hybrid_rrf(
+                blocked, "index merge", emb, qv, k=5, id_col="url"
+            ).collect()
+    assert jobs() == 2, jobs()

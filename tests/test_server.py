@@ -12,6 +12,8 @@ from google_like_search_engine_spark.corpus import generate_pages
 from google_like_search_engine_spark.engine import SearchEngine
 from google_like_search_engine_spark.server import make_server
 
+from tests.conftest import spark_jobs
+
 
 @pytest.fixture(scope="module")
 def engine(spark):
@@ -506,12 +508,18 @@ def test_warm_served_query_is_one_spark_job(engine):
     """Structural pin for the served path: a warm single-index BM25
     request on the serving cache is exactly ONE Spark job."""
     engine.search_bm25_served("search engine", k=10).collect()
-    sc = engine.spark.sparkContext
-    sc.setJobGroup("probe_served", "job count probe")
-    rows = engine.search_bm25_served("index merge", k=10).collect()
-    ids = sc.statusTracker().getJobIdsForGroup("probe_served")
-    sc.setJobGroup("probe_done", "clear")
-    assert len(ids) == 1 and rows
+    with spark_jobs(engine.spark.sparkContext) as jobs:
+        rows = engine.search_bm25_served("index merge", k=10).collect()
+    assert jobs() == 1 and rows
+
+
+def test_no_hit_served_query_collects_with_zero_jobs(engine):
+    """A served query with no indexed term returns a LocalRelation:
+    its collect schedules no Spark job."""
+    res = engine.search_bm25_served("zzznope", k=10)
+    with spark_jobs(engine.spark.sparkContext) as jobs:
+        assert res.collect() == []
+    assert jobs() == 0
 
 
 def test_percolate_route(engine):
@@ -535,10 +543,9 @@ def test_percolate_route(engine):
         assert code == 200 and body["n_queries"] == 4
         assert body["matches"] == ["q_and", "q_not", "q_wild"]
         # no Spark job: the route works even for giant stored-query sets
-        sc = engine.spark.sparkContext
-        sc.setJobGroup("probe_perc", "x")
-        _get(f"{base}/percolate?{q}")
-        assert len(sc.statusTracker().getJobIdsForGroup("probe_perc")) == 0
+        with spark_jobs(engine.spark.sparkContext) as jobs:
+            _get(f"{base}/percolate?{q}")
+        assert jobs() == 0
         # validation + absence of the route without stored queries
         code2, _ = _get_allow_error(f"{base}/percolate")
         assert code2 == 400
