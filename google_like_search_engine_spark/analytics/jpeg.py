@@ -749,10 +749,6 @@ def _rgb_to_ycbcr(r, g, b):
     return y, cb, cr
 
 
-def _clamp8(v):
-    return 0 if v < 0 else (255 if v > 255 else int(round(v)))
-
-
 def _component_planes(width, height, pixel_fn, subsample):
     """-> list of (plane rows [list of list], h, v) for Y, Cb, Cr."""
     ys = [[0] * width for _ in range(height)]

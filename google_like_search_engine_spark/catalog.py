@@ -481,38 +481,11 @@ WHERE s_acctbal = (SELECT max(s2.s_acctbal) FROM supplier s2
 # Spark provides natively (SURVEY.md section 2.1 closing note)
 # --------------------------------------------------------------------------
 
-def setop_union(spark, sf_dir):
-    c = load(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9500)
-    s = load(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 9500)
-    return c.select(F.col("c_name").alias("name")).union(
-        s.select(F.col("s_name").alias("name"))
-    ).distinct()
-
-
-SETOP_UNION_SQL = """
-SELECT c_name AS name FROM customer WHERE c_acctbal > 9500
-UNION
-SELECT s_name AS name FROM supplier WHERE s_acctbal > 9500
-"""
-
-
-def setop_except(spark, sf_dir):
-    p = load(spark, sf_dir, "part").select(F.col("p_partkey").alias("key"))
-    li = load(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("key"))
-    return p.exceptAll(li).distinct()
-
-
-SETOP_EXCEPT_SQL = """
-SELECT p_partkey AS key FROM part
-EXCEPT
-SELECT l_partkey AS key FROM lineitem
-"""
-
-
 def setop_union_except(spark, sf_dir):
-    """UNION + EXCEPT in one tagged relation (both set ops exercised
-    with non-empty sides — the lone-op variants' EXCEPT was vacuously
-    empty at test SFs). ``op`` tags which set op produced the row."""
+    """UNION + EXCEPT in one tagged relation, both set ops exercised
+    with non-empty sides (a bare part-minus-lineitem EXCEPT is
+    vacuously empty at test SFs). ``op`` tags which set op produced the
+    row."""
     c = load(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9500)
     s = load(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 9500)
     u = (
@@ -579,37 +552,6 @@ SELECT l_returnflag,
        round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o,
        round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_f
 FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def join_semi(spark, sf_dir):
-    """Left-semi join (EXISTS): customers holding an order > 300k."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name"
-    )
-
-
-JOIN_SEMI_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-"""
-
-
-def join_anti(spark, sf_dir):
-    """Left-anti join (NOT EXISTS): parts never shipped."""
-    p = load(spark, sf_dir, "part")
-    li = load(spark, sf_dir, "lineitem")
-    return p.join(li, p.p_partkey == li.l_partkey, "left_anti").select(
-        "p_partkey", "p_name"
-    )
-
-
-JOIN_ANTI_SQL = """
-SELECT p_partkey, p_name FROM part
-WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
 """
 
 

@@ -205,7 +205,7 @@ def block_postings(
     block_span: int = BLOCK_SPAN,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(term, doc_index, tf, positions) -> compressed posting blocks.
+    """(term, doc_index, tf, positions, dl) -> compressed posting blocks.
 
     Blocks are aligned to *doc-index ranges* (block_id = doc_index //
     block_span), not fixed entry counts: block assignment is a pure
@@ -219,9 +219,9 @@ def block_postings(
     parquet) so readers never have to infer it.
 
     Two physical representations per block:
-    - ``doc_offs``/``tfs`` (+ ``dls`` when the input carries a per-doc
-      ``dl`` length column): columnar int arrays (offset = doc_index -
-      base, always < span so int32 is safe at any corpus size) — the
+    - ``doc_offs``/``tfs``/``dls``: columnar int arrays (offset =
+      doc_index - base, always < span so int32 is safe at any corpus
+      size; ``dls`` the per-doc lengths from the input's ``dl``) — the
       SCORING path reads these via arrays_zip + explode, fully inside
       whole-stage codegen, no Python workers in the query hot path
       (``scoring_entries``). With ``dls`` denormalized into the block,
@@ -237,19 +237,14 @@ def block_postings(
     streams Arrow batches, carrying the open group across batch
     boundaries so a group straddling a batch still emits one block.
     """
-    with_dl = "dl" in postings_idx.columns
-    sel = ["term", "doc_index", "tf", "positions"] + (["dl"] if with_dl else [])
-    with_block = postings_idx.select(*sel).withColumn(
-        "block_id", (F.col("doc_index") / block_span).cast("long")
-    )
+    with_block = postings_idx.select(
+        "term", "doc_index", "tf", "positions", "dl"
+    ).withColumn("block_id", (F.col("doc_index") / block_span).cast("long"))
 
     cols = [
-        "term", "block_id", "base", "max_doc_index",
-        "n_docs", "max_tf", "span", "doc_offs", "tfs",
-    ] + (["dls"] if with_dl else []) + ["block"]
-    out_schema = BLOCKS_SCHEMA if with_dl else BLOCKS_SCHEMA.replace(
-        "tfs array<int>, dls array<int>", "tfs array<int>"
-    )
+        "term", "block_id", "base", "max_doc_index", "n_docs", "max_tf",
+        "span", "doc_offs", "tfs", "dls", "block",
+    ]
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pending: pd.DataFrame | None = None  # open (term, block_id) group
@@ -262,15 +257,12 @@ def block_postings(
             tfs = [int(x) for x in g["tf"]]
             base = block_id * block_span
             blob = encode_block(idxs, tfs, g["positions"].tolist(), base)
-            row = [
+            return (
                 term, block_id, base, idxs[-1], len(idxs),
                 int(g["tf"].max()), block_span,
-                [int(d - base) for d in idxs], tfs,
-            ]
-            if with_dl:
-                row.append([int(x) for x in g["dl"]])
-            row.append(blob)
-            return tuple(row)
+                [int(d - base) for d in idxs], tfs, [int(x) for x in g["dl"]],
+                blob,
+            )
 
         for pdf in batches:
             if pending is not None:
@@ -307,27 +299,22 @@ def block_postings(
     return (
         with_block.repartition(n, "term", "block_id")
         .sortWithinPartitions("term", "block_id")
-        .mapInPandas(encode, schema=out_schema)
+        .mapInPandas(encode, schema=BLOCKS_SCHEMA)
     )
 
 
 def scoring_entries(blocks: DataFrame) -> DataFrame:
-    """(term, doc_index, tf[, dl]) from the columnar arrays — pure
+    """(term, doc_index, tf, dl) from the columnar arrays — pure
     arrays_zip + explode, stays in whole-stage codegen (the BM25 hot
-    path never touches a Python worker). ``dl`` rides along when the
-    block carries denormalized doc lengths (join-free scoring). Falls
-    back to the varint decoder for pre-columnar indexes."""
-    if "doc_offs" not in blocks.columns:
-        return unblock_postings(blocks).drop("positions")
-    arrays = ["doc_offs", "tfs"] + (["dls"] if "dls" in blocks.columns else [])
-    e = F.explode(F.arrays_zip(*arrays)).alias("e")
-    out = blocks.select("term", "base", e).select(
+    path never touches a Python worker), and ``dl`` rides along, so
+    scoring needs no doc-length join."""
+    e = F.explode(F.arrays_zip("doc_offs", "tfs", "dls")).alias("e")
+    return blocks.select("term", "base", e).select(
         "term",
         (F.col("base") + F.col("e.doc_offs")).alias("doc_index"),
         F.col("e.tfs").alias("tf"),
-        *([F.col("e.dls").alias("dl")] if "dls" in blocks.columns else []),
+        F.col("e.dls").alias("dl"),
     )
-    return out
 
 
 def unblock_postings(blocks: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from collections import namedtuple
 from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .compression import assign_doc_indexes, block_postings
 from .indexer import build_postings, docs_from_pages
@@ -37,6 +37,7 @@ from .wand import (
     blocked_phrase_topk,
     blocked_proximity_topk,
     entry_partials,
+    filtered_scores,
     idf_map,
     maxscore_topk,
 )
@@ -45,7 +46,7 @@ TERM_BUCKETS = 64
 
 # one opened blocked index: the lazy blocks scan, the cached doc-stats
 # dimension, N, (avgdl, min_dl) and the driver-side {term: (df, max_tf,
-# bucket)} dictionary (None when it exceeds DICT_CAP or is absent)
+# bucket)} dictionary (None when it exceeds DICT_CAP)
 Shard = namedtuple("Shard", "blocks doc_stats_idx total stats term_stats")
 # what reading an absent sidecar raises: pyarrow locally, Spark elsewhere
 _MISSING_SIDECAR = (FileNotFoundError, AnalysisException)
@@ -144,13 +145,12 @@ class SearchEngine:
         doc_id, url, tf). Defaults to the reference-parity tokenizer
         (indexer.build_postings: tag strip, raw+stem dual entries,
         positions, L2). ``merge_pages`` re-uses whichever analyzer the
-        index was built with.
+        index was built with; ``_with_dl`` adds ``dl`` when it omits it.
         """
         t0 = time.perf_counter()
         phases = {}
-        docs = docs_from_pages(pages)
         self._postings_fn = postings_fn or build_postings
-        self.postings = self._postings_fn(docs).persist()
+        self.postings = _with_dl(self._postings_fn(docs_from_pages(pages))).persist()
         self.doc_stats = (
             self.postings.groupBy("doc_id", "url")
             .agg(F.sum("tf").alias("n_term_entries"))
@@ -213,7 +213,9 @@ class SearchEngine:
         """
         assert self.postings is not None, "build first"
         delta_docs = docs_from_pages(pages_delta)
-        delta_postings = getattr(self, "_postings_fn", build_postings)(delta_docs)
+        delta_postings = _with_dl(
+            getattr(self, "_postings_fn", build_postings)(delta_docs)
+        )
         # replaced ids come from the DOCS in the delta, not its postings:
         # a re-crawled page whose new text yields zero postings (emptied
         # page) must still purge its old postings + doc_stats entry
@@ -306,10 +308,10 @@ class SearchEngine:
         clustered on doc_id (``bucketBy`` -> Spark's bucketing catalog
         metadata; data files land under ``path``). Both sides carry the
         same bucket count on the same key, so doc-keyed joins between
-        them — the BM25 dl join on pre-dl layouts, doc-stats enrichment,
-        MERGE-style reconciliation — read bucket-to-bucket with NO
-        shuffle exchange: at 10^12 docs the exchange this removes is the
-        dominant cost of every doc-keyed operation. (The blocked layout
+        them — doc-stats enrichment, MERGE-style reconciliation — read
+        bucket-to-bucket with NO shuffle exchange: at 10^12 docs the
+        exchange this removes is the dominant cost of every doc-keyed
+        operation. (The blocked layout
         stays the serving path; bucketing is the BUILD-side co-location
         story, exactly the "pre-partition the fact tables" discipline a
         warehouse uses.) Tables register as {name}_postings /
@@ -358,14 +360,7 @@ class SearchEngine:
         idx = assign_doc_indexes(
             self.postings.select("doc_id", "url").distinct(), order_col="url"
         )
-        if "dl" in self.postings.columns:
-            postings_dl = self.postings  # dl denormalized at tokenize time
-        else:  # pre-dl layout: join the doc-length dimension in
-            postings_dl = self.postings.join(
-                self.doc_stats.select("doc_id", F.col("n_term_entries").alias("dl")),
-                "doc_id",
-            )
-        blocks = block_postings(postings_dl.join(F.broadcast(idx), "doc_id"))
+        blocks = block_postings(self.postings.join(F.broadcast(idx), "doc_id"))
         (
             blocks.withColumn(
                 "term_bucket", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS))
@@ -432,32 +427,65 @@ class SearchEngine:
 
     def _open_blocked(self, index_path: str) -> Shard:
         blocks = self.spark.read.parquet(f"{index_path}/blocks")
-        total, stats, term_stats = self._read_sidecars(index_path)
-        doc_stats_idx = self.spark.read.parquet(f"{index_path}/doc_stats_idx")
-        if total is not None:
-            # right-size the cached dimension (~250k rows/partition):
-            # the per-query url lookup probes every cached partition,
-            # so a small corpus cached across 32 file-splits pays 32
-            # scheduled tasks per query for no parallelism gain.
-            # coalesce only ever reduces, so at 10^12 docs this is a
-            # no-op and the dimension stays fully distributed.
-            doc_stats_idx = doc_stats_idx.coalesce(
-                max(1, -(-total // 250_000))
+        gaps = self._layout_gaps(index_path, blocks)
+        if gaps:
+            raise ValueError(
+                f"{index_path} is not a blocked index of the current layout: "
+                f"it lacks {', '.join(gaps)}. Rebuild it with "
+                "SearchEngine.save_blocked."
             )
-        doc_stats_idx = doc_stats_idx.persist()
-        if total is None:  # pre-meta layout: one stats job per open
-            r = doc_stats_idx.agg(
-                F.count(F.lit(1)), F.avg("n_term_entries"), F.min("n_term_entries")
-            ).collect()[0]
-            total, stats = int(r[0]), (float(r[1] or 1.0), float(r[2] or 1.0))
+        total, stats, term_stats = self._read_sidecars(index_path)
+        # right-size the cached dimension (~250k rows/partition): the
+        # per-query url lookup probes every cached partition, so a small
+        # corpus cached across 32 file-splits pays 32 scheduled tasks per
+        # query for no parallelism gain. coalesce only ever reduces, so
+        # at 10^12 docs this is a no-op and the dimension stays fully
+        # distributed.
+        doc_stats_idx = (
+            self.spark.read.parquet(f"{index_path}/doc_stats_idx")
+            .coalesce(max(1, -(-total // 250_000)))
+            .persist()
+        )
         return Shard(blocks, doc_stats_idx, total, stats, term_stats)
+
+    def _layout_gaps(self, index_path: str, blocks: DataFrame) -> list:
+        """What ``index_path`` lacks of the one blocked layout
+        save_blocked writes: a columnar block array, the meta or
+        term_stats sidecar, or term_stats' bucket column. Empty for a
+        current index; the read path refuses any other and fsck reports
+        it."""
+        gaps = [
+            f"blocks.{c}" for c in ("doc_offs", "tfs", "dls", "span")
+            if c not in blocks.columns
+        ]
+        for name, needed in (("meta", ()), ("term_stats", ("bucket",))):
+            cols = self._sidecar_columns(index_path, name)
+            if cols is None:
+                gaps.append(name)
+            else:
+                gaps += [f"{name}.{c}" for c in needed if c not in cols]
+        return gaps
+
+    def _sidecar_columns(self, index_path: str, name: str) -> list | None:
+        """Column names of a sidecar table (a footer read; no Spark job on
+        local paths), or None when it is absent."""
+        local = _local_path(index_path)
+        try:
+            if local is None:
+                return self.spark.read.parquet(f"{index_path}/{name}").columns
+            import pyarrow.dataset as ds
+
+            return ds.dataset(f"{local}/{name}", format="parquet").schema.names
+        except _MISSING_SIDECAR:
+            return None
 
     def _sidecar_rows(self, index_path: str, name: str, terms=None, cap=None):
         """Rows (dicts) of a small sidecar table: pyarrow on local paths
         (zero Spark jobs on the query path), a Spark read on s3/hdfs.
         ``terms`` keeps only those terms' rows; with ``cap``, a table
         holding more rows returns None."""
-        if "://" in index_path and not index_path.startswith("file://"):
+        local = _local_path(index_path)
+        if local is None:
             df = self.spark.read.parquet(f"{index_path}/{name}")
             if terms is not None:
                 df = df.where(F.col("term").isin(list(terms)))
@@ -466,7 +494,7 @@ class SearchEngine:
             import pyarrow.parquet as pq
 
             tbl = pq.read_table(
-                f"{index_path.removeprefix('file://')}/{name}",
+                f"{local}/{name}",
                 filters=[("term", "in", list(terms))] if terms is not None else None,
             )
             if cap and tbl.num_rows > cap:
@@ -476,81 +504,44 @@ class SearchEngine:
 
     @staticmethod
     def _dictionary(rows) -> dict:
-        """term_stats rows -> {term: (df, max_tf, bucket)}; bucket is None
-        on pre-bucket layouts."""
+        """term_stats rows -> {term: (df, max_tf, bucket)}."""
         return {
-            r["term"]: (
-                int(r["df"]),
-                int(r["max_tf"]),
-                None if r.get("bucket") is None else int(r["bucket"]),
-            )
+            r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["bucket"]))
             for r in rows
         }
 
     def _read_sidecars(self, index_path: str):
         """(total, (avgdl, min_dl), dictionary) from the tiny meta and
-        term_stats sidecars; None marks a pre-meta / pre-dictionary
-        layout, or a dictionary over DICT_CAP (queries then read just
-        their terms' rows, ``_shard_terms``)."""
-        total = stats = term_stats = None
-        try:
-            m = self._sidecar_rows(index_path, "meta")[0]
-            total = int(m["total_documents"])
-            stats = (float(m["avgdl"] or 1.0), float(m["min_dl"] or 1.0))
-        except _MISSING_SIDECAR:  # pre-meta index layout
-            pass
-        try:
-            rows = self._sidecar_rows(index_path, "term_stats", cap=self.DICT_CAP)
-            if rows is not None:
-                term_stats = self._dictionary(rows)
-        except _MISSING_SIDECAR:  # pre-dictionary index layout
-            pass
-        return total, stats, term_stats
+        term_stats sidecars; the dictionary is None over DICT_CAP
+        (queries then read just their terms' rows, ``_shard_terms``)."""
+        m = self._sidecar_rows(index_path, "meta")[0]
+        rows = self._sidecar_rows(index_path, "term_stats", cap=self.DICT_CAP)
+        return (
+            int(m["total_documents"]),
+            (float(m["avgdl"] or 1.0), float(m["min_dl"] or 1.0)),
+            None if rows is None else self._dictionary(rows),
+        )
 
     def _shard_terms(self, index_path: str, shard: Shard, terms: list) -> dict:
         """{term: (df, max_tf, bucket)} for the ``terms`` one index holds:
-        from its driver-side dictionary, else from only those terms' rows
-        of the term_stats sidecar, else (pre-dictionary layout) from one
-        block-metadata aggregation."""
+        from its driver-side dictionary, else (over DICT_CAP) from only
+        those terms' rows of the term_stats sidecar."""
         if shard.term_stats is not None:
             return {t: shard.term_stats[t] for t in terms if t in shard.term_stats}
         if not terms:
             return {}
-        try:
-            return self._dictionary(
-                self._sidecar_rows(index_path, "term_stats", terms=terms)
-            )
-        except _MISSING_SIDECAR:  # pre-dictionary index layout
-            return self._dictionary(
-                r.asDict()
-                for r in shard.blocks.where(F.col("term").isin(terms))
-                .groupBy("term")
-                .agg(
-                    F.sum("n_docs").alias("df"),
-                    F.max("max_tf").alias("max_tf"),
-                    F.first("term_bucket").alias("bucket"),
-                )
-                .collect()
-            )
+        return self._dictionary(
+            self._sidecar_rows(index_path, "term_stats", terms=terms)
+        )
 
     def _shard_scan(self, shard: Shard, info: dict) -> DataFrame:
         """The blocks of the terms in ``info`` (``_shard_terms`` output),
         pruned to their term_bucket partitions — the term filter becomes
-        partition pruning before any decode. A pre-bucket dictionary
-        costs one tiny job to hash the bucket ids."""
+        partition pruning before any decode."""
         if not info:
             return shard.blocks.limit(0).drop("term_bucket")
-        buckets = {v[2] for v in info.values()}
-        if None in buckets:
-            buckets = {
-                r["b"]
-                for r in self.spark.createDataFrame([(t,) for t in info], "term string")
-                .select(F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS)).alias("b"))
-                .collect()
-            }
-        return shard.blocks.where(F.col("term_bucket").isin(sorted(buckets))).drop(
-            "term_bucket"
-        )
+        buckets = sorted({v[2] for v in info.values()})
+        return shard.blocks.where(F.col("term_bucket").isin(buckets)).drop("term_bucket")
 
     URL_DICT_CAP = 250_000  # max forward-index entries held driver-side
 
@@ -760,7 +751,7 @@ class SearchEngine:
 
         postings = compact_index(self.spark, store_dir)
         promoted = SearchEngine(self.spark)
-        promoted.postings = postings
+        promoted.postings = _with_dl(postings)
         promoted.doc_stats = postings.groupBy("doc_id", "url").agg(
             F.sum("tf").alias("n_term_entries")
         )
@@ -953,12 +944,22 @@ class SearchEngine:
           cross-checked against the columnar arrays (the two physical
           representations must agree byte-for-byte).
 
+        An index of another layout (``_layout_gaps``) reports only
+        ``bad_layout`` (the count of missing parts, named in
+        ``missing``): the other checks read those parts.
+
         Returns {"ok": bool, "checks": {name: violation_count}, ...}.
         """
         from .compression import decode_block
 
         spark = self.spark
         blocks = spark.read.parquet(f"{index_path}/blocks")
+        gaps = self._layout_gaps(index_path, blocks)
+        if gaps:
+            return {
+                "ok": False, "n_blocks": None, "total_documents": None,
+                "deep": deep, "checks": {"bad_layout": len(gaps)}, "missing": gaps,
+            }
         dsi = spark.read.parquet(f"{index_path}/doc_stats_idx")
         meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
 
@@ -981,6 +982,7 @@ class SearchEngine:
             F.sum((~bucket_ok).cast("int")).alias("bad_term_bucket"),
         ).collect()[0]
         checks = {
+            "bad_layout": 0,
             "bad_block_shape": int(bad["bad_block_shape"] or 0),
             "bad_doc_order": int(bad["bad_doc_order"] or 0),
             "bad_term_bucket": int(bad["bad_term_bucket"] or 0),
@@ -1067,8 +1069,14 @@ class SearchEngine:
         }
 
     def load(self, path: str, with_pageranks: bool = True) -> "SearchEngine":
+        postings = self.spark.read.parquet(f"{path}/postings")
+        if "dl" not in postings.columns:
+            raise ValueError(
+                f"{path}/postings lacks the per-doc length column dl; "
+                "rebuild the index with SearchEngine.build and save"
+            )
         self._loaded_path = path
-        self.postings = self.spark.read.parquet(f"{path}/postings").persist()
+        self.postings = postings.persist()
         self.doc_stats = self.spark.read.parquet(f"{path}/doc_stats").persist()
         self.total_documents = self.doc_stats.count()
         self._avgdl = float(
@@ -1235,7 +1243,7 @@ class SearchEngine:
             entry_partials(
                 entries.where(F.col("term").isin(sorted(df))),
                 {t: bm25_idf(float(dep.n), d) for t, d in df.items()},
-                dep.avgdl, shard.doc_stats_idx,
+                dep.avgdl,
             )
             .groupBy("doc_index")
             .agg(F.sum("partial").alias("score"))
@@ -1269,9 +1277,6 @@ class SearchEngine:
     # -- low-latency serving path ------------------------------------------
 
     DICT_CAP = 2_000_000  # max dictionary entries held driver-side
-    # max posting rows a boolean-filter side may have and still get the
-    # broadcast hint on the served path (roughly <=10 MB of urls)
-    FILTER_BROADCAST_DF_CAP = 250_000
 
     SERVE_ROWS_PER_PARTITION = 250_000
 
@@ -1297,14 +1302,9 @@ class SearchEngine:
         if self.term_df.count() > self.DICT_CAP:
             return False
         self._dict = {r["term"]: int(r["df"]) for r in self.term_df.collect()}
-        if "dl" in self.postings.columns:
-            served = self.postings.select(
-                "term", "url", "tf", F.col("dl").alias("n_term_entries")
-            )
-        else:  # pre-dl index layout
-            served = self.postings.join(
-                self.doc_stats.select("doc_id", "n_term_entries"), "doc_id"
-            ).select("term", "url", "tf", "n_term_entries")
+        served = self.postings.select(
+            "term", "url", "tf", F.col("dl").alias("n_term_entries")
+        )
         n_rows = sum(self._dict.values())
         nparts = max(1, -(-n_rows // self.SERVE_ROWS_PER_PARTITION))
         self._served = (
@@ -1329,10 +1329,12 @@ class SearchEngine:
 
         ``required``/``excluded``: boolean filters (the `+term -term`
         syntax) — results must contain every required term and no
-        excluded term. Filters ride the same cached serving relation as
-        left-semi/left-anti joins, so the query stays one job. A
-        required term absent from the dictionary short-circuits empty;
-        an absent excluded term is a no-op."""
+        excluded term. A filtered query scans the cached serving
+        relation once for query ∪ required ∪ excluded terms and
+        aggregates per url into the score plus presence flags
+        (wand.filtered_scores, the blocked path's shape), so it stays
+        one job. A required term absent from the dictionary
+        short-circuits empty; an absent excluded term is a no-op."""
         assert getattr(self, "_served", None) is not None, "enable_serving first"
         words = sorted({w.lower() for w in expand_query(query)})
         hit = [w for w in words if w in self._dict]
@@ -1346,42 +1348,22 @@ class SearchEngine:
             F.col("tf"), F.col("n_term_entries"),
             idf_map({w: bm25_idf(n, self._dict[w]) for w in hit}), self._avgdl, k1, b,
         )
-        # DICT_CAP bounds distinct terms, not posting counts: a
-        # stopword-like filter term's url list is proportional to the
-        # corpus, so the broadcast hint only applies when the term df
-        # (known driver-side from the dictionary) is small enough to
-        # ship; bigger filters fall back to a plain shuffle semi/anti
-        # join, which AQE may still broadcast if runtime stats allow.
-        def _maybe_broadcast(df_side, n_rows):
-            return F.broadcast(df_side) if n_rows <= self.FILTER_BROADCAST_DF_CAP else df_side
-
-        scored = self._served.where(F.col("term").isin(hit))
-        for w in dict.fromkeys(required):
-            scored = scored.join(
-                _maybe_broadcast(
-                    self._served.where(F.col("term") == w).select("url"),
-                    self._dict[w],
-                ),
-                "url",
-                "left_semi",
+        if required or excluded:
+            scanned = self._served.where(
+                F.col("term").isin(sorted({*hit, *required, *excluded}))
             )
-        if excluded:
-            exc = sorted(set(excluded))
-            scored = scored.join(
-                _maybe_broadcast(
-                    self._served.where(F.col("term").isin(exc)).select("url"),
-                    sum(self._dict[w] for w in exc),
-                ),
-                "url",
-                "left_anti",
+            by_url = filtered_scores(
+                scanned.select("url", "term", partial.alias("partial")),
+                "url", hit, required, excluded,
             )
-        return (
-            scored.select("url", partial.alias("partial"))
-            .groupBy("url")
-            .agg(F.sum("partial").alias("score"))
-            .orderBy(F.desc("score"), F.asc("url"))
-            .limit(k)
-        )
+        else:
+            by_url = (
+                self._served.where(F.col("term").isin(hit))
+                .select("url", partial.alias("partial"))
+                .groupBy("url")
+                .agg(F.sum("partial").alias("score"))
+            )
+        return by_url.orderBy(F.desc("score"), F.asc("url")).limit(k)
 
     def serving_clone(self) -> "SearchEngine":
         """A SearchEngine bound to a DEDICATED serving SparkSession —
@@ -1458,6 +1440,24 @@ class SearchEngine:
             if df is not None:
                 df.unpersist()
         self._invalidate_blocked_cache()
+
+
+def _with_dl(postings: DataFrame) -> DataFrame:
+    """``postings`` with the per-doc length ``dl``: an analyzer that
+    omits it gets the doc's sum(tf), the n_term_entries doc_stats
+    holds."""
+    if "dl" not in postings.columns:
+        postings = postings.withColumn(
+            "dl", F.sum("tf").over(Window.partitionBy("doc_id")).cast("int")
+        )
+    return postings
+
+
+def _local_path(index_path: str) -> str | None:
+    """The local filesystem path of ``index_path``, or None on s3/hdfs."""
+    if "://" in index_path and not index_path.startswith("file://"):
+        return None
+    return index_path.removeprefix("file://")
 
 
 def _boolean_matches(entries: DataFrame, docs: DataFrame, key: str, ast) -> DataFrame:

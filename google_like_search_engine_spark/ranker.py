@@ -22,14 +22,13 @@ Reference semantics pinned (rank-identity invariants):
 
 BM25 is the scale-path scorer the rebuild adds (north-star): standard
 Robertson/Sparck-Jones idf = ln((N-df+0.5)/(df+0.5)+1), k1=1.2, b=0.75,
-dl = per-doc term-entry count from doc_stats.
+dl = per-doc term-entry count, carried by every posting.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernels.hasher import kvs_hash
 from .kernels.porter import porter_stem
 
 
@@ -121,15 +120,17 @@ def score_bm25(
     must analyze queries the same way, e.g. CJK bigrams); bypasses the
     default expand_query/split tokenization.
 
-    dl = per-document term-entry count (sum tf over the doc's terms,
-    raw+stem — consistent between index and query side); df counted on
-    distinct docs per term. Query expansion mirrors expand_query but
-    dedupes on the lowercase form (BM25 is our own scorer; no reference
-    quirk to preserve).
+    dl = the postings' ``dl`` column, the per-document term-entry count
+    (sum tf over the doc's terms, raw+stem — consistent between index
+    and query side), so scoring joins nothing; df counted on distinct
+    docs per term. Query expansion mirrors expand_query but dedupes on
+    the lowercase form (BM25 is our own scorer; no reference quirk to
+    preserve).
 
-    Serving path: pass precomputed ``avgdl`` and a ``term_df``
-    dictionary table (term, df) from build time — each removes one
-    aggregation job per query (a real engine's dictionary stores df).
+    ``avgdl``: precomputed at build time; when None, one aggregation
+    over ``doc_stats`` supplies it. ``term_df``: the build-time
+    dictionary table (term, df); it removes the per-query df
+    aggregation (a real engine's dictionary stores df).
     """
     from .wand import _local_result_df, bm25_idf, bm25_partial, idf_map
 
@@ -149,7 +150,6 @@ def score_bm25(
     # isin, not a broadcast-join with a literal term DF: the filter
     # pushes to the scan / cache batch stats and costs no per-query
     # createDataFrame driver round-trip
-    has_dl = "dl" in postings.columns
     n = float(total_documents)
     if term_df is not None:
         # dictionary path (serving): resolve the (tiny, <= |words|-row)
@@ -167,34 +167,21 @@ def score_bm25(
         if not hit:
             return _local_result_df(spark, [])
         matched = postings.where(F.col("term").isin(hit)).select(
-            "term", "url", "tf", *(["dl"] if has_dl else ["doc_id"])
+            "term", "url", "tf", "dl"
         )
         idf_col = idf_map({w: bm25_idf(n, dfmap[w]) for w in hit})
     else:
         matched = postings.where(F.col("term").isin(words)).select(
-            "term", "doc_id", "url", "tf", *(["dl"] if has_dl else [])
+            "term", "doc_id", "url", "tf", "dl"
         )
         dfc = matched.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
         matched = matched.join(F.broadcast(dfc), "term")
         idf_col = bm25_idf(n, F.col("df"))
-    scored = matched
-    if has_dl:
-        # dl is denormalized into the postings (indexer.build_postings):
-        # scoring is join-free up to the final per-url aggregation
-        dl_col = F.col("dl")
-    else:
-        scored = scored.join(doc_stats.select("doc_id", "n_term_entries"), "doc_id")
-        dl_col = F.col("n_term_entries")
-    scored = scored.select(
-        "url", bm25_partial(F.col("tf"), dl_col, idf_col, avgdl, k1, b).alias("partial")
+    scored = matched.select(
+        "url", bm25_partial(F.col("tf"), F.col("dl"), idf_col, avgdl, k1, b).alias("partial")
     )
     return (
         scored.groupBy("url")
         .agg(F.sum("partial").alias("score"))
         .orderBy(F.desc("score"), F.asc("url"))
     )
-
-
-def hash_url(url: str) -> str:
-    """Query-side Hasher.hash (Ranker.java:100)."""
-    return kvs_hash(url)

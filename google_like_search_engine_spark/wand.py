@@ -9,7 +9,7 @@ candidate documents, never scanned in full.
 
 This implementation is a DataFrame-level MaxScore, provably
 score-identical to ranker.score_bm25 (property-tested in
-tests/test_wand.py):
+tests/test_wand_and_lineage.py and tests/test_blocked_search.py):
 
 1. per-term upper bound: ub_t = bm25_partial at the term's global
    max_tf and the corpus min dl (the term contribution is monotone in
@@ -81,18 +81,38 @@ def idf_map(idf: dict) -> Column:
     ]
 
 
-def entry_partials(entries, idf: dict, avgdl, doc_stats_idx, k1=1.2, b=0.75):
-    """(doc_index, term, partial) for decoded (term, doc_index, tf[, dl])
-    entries. dl rides the blocks; pre-dl layouts join it in from the
-    doc-stats dimension."""
-    if "dl" not in entries.columns:
-        entries = entries.join(
-            doc_stats_idx.select("doc_index", F.col("n_term_entries").alias("dl")),
-            "doc_index",
-        )
+def entry_partials(entries, idf: dict, avgdl, k1=1.2, b=0.75):
+    """(doc_index, term, partial) for decoded (term, doc_index, tf, dl)
+    entries (compression.scoring_entries): dl rides the blocks, so
+    scoring joins nothing."""
     return entries.select(
         "doc_index", "term",
         bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b).alias("partial"),
+    )
+
+
+def filtered_scores(partials: DataFrame, key: str, words, required, excluded) -> DataFrame:
+    """(``key``, score) for `+term -term` filtered BM25: ONE per-doc
+    aggregation of (``key``, term, partial) rows scanned for words ∪
+    required ∪ excluded into score = sum(partial of ``words``), one
+    max(term == r) flag per required term and one max(term ∈ excluded)
+    flag; a doc survives with every required flag, no excluded flag and
+    a score (it holds a query word). No per-filter semi/anti join, so
+    the served and blocked paths each stay one job."""
+    keep = F.col("score").isNotNull()
+    flags = []
+    for i, w in enumerate(sorted(set(required))):
+        flags.append(F.max(F.col("term") == w).alias(f"_req{i}"))
+        keep &= F.col(f"_req{i}")
+    if excluded:
+        flags.append(F.max(F.col("term").isin(sorted(set(excluded)))).alias("_exc"))
+        keep &= ~F.col("_exc")
+    score = F.sum(F.when(F.col("term").isin(list(words)), F.col("partial")))
+    return (
+        partials.groupBy(key)
+        .agg(score.alias("score"), *flags)
+        .where(keep)
+        .select(key, "score")
     )
 
 
@@ -221,12 +241,11 @@ def blocked_maxscore_topk(
     A filtered query scans the blocks of words ∪ required ∪ excluded
     ONCE and aggregates per doc into its score (the query words'
     partials) plus one presence flag per required term and one for the
-    excluded set — engine._boolean_matches' shape, no per-filter
-    semi/anti joins, so it stays one job. It always scores every
-    matched block: MaxScore's unfiltered upper bounds cannot order a
-    FILTERED top-k. A required term absent from the index leaves its
-    flag false everywhere, hence an empty result, with no dictionary
-    lookup needed.
+    excluded set (``filtered_scores``, shared with the served path), so
+    it stays one job. It always scores every matched block: MaxScore's
+    unfiltered upper bounds cannot order a FILTERED top-k. A required
+    term absent from the index leaves its flag false everywhere, hence
+    an empty result, with no dictionary lookup needed.
 
     ``doc_stats_idx``: (doc_index, url, n_term_entries). Score-identical
     to the flat maxscore_topk / naive scorer (property-tested).
@@ -277,23 +296,10 @@ def blocked_maxscore_topk(
           for t, (_df, mt) in tstats.items()}
 
     if req or exc:
-        # one scan, one per-doc aggregation: score + presence flags
-        keep = F.col("score").isNotNull()
-        flags = []
-        for i, w in enumerate(req):
-            flags.append(F.max(F.col("term") == w).alias(f"_req{i}"))
-            keep &= F.col(f"_req{i}")
-        if exc:
-            flags.append(F.max(F.col("term").isin(exc)).alias("_exc"))
-            keep &= ~F.col("_exc")
         scanned = blocks.where(F.col("term").isin(sorted({*words, *req, *exc})))
-        score = F.sum(F.when(F.col("term").isin(words), F.col("partial")))
-        by_doc = (
-            entry_partials(scoring_entries(scanned), idf, avgdl, doc_stats_idx, k1, b)
-            .groupBy("doc_index")
-            .agg(score.alias("score"), *flags)
-            .where(keep)
-            .select("doc_index", "score")
+        by_doc = filtered_scores(
+            entry_partials(scoring_entries(scanned), idf, avgdl, k1, b),
+            "doc_index", words, req, exc,
         )
         return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
     # small-query fast path: total matched entries below the threshold
@@ -311,7 +317,7 @@ def blocked_maxscore_topk(
         seed = (
             entry_partials(
                 scoring_entries(qblocks.where(F.col("term") == best)),
-                idf, avgdl, doc_stats_idx, k1, b,
+                idf, avgdl, k1, b,
             )
             .orderBy(F.desc("partial"))
             .limit(k)
@@ -319,22 +325,20 @@ def blocked_maxscore_topk(
         )
         theta = float(seed[-1]["partial"]) if len(seed) >= k else 0.0
         # essential is never empty here: theta <= ub[best]
-        entries, ess = _candidate_entries(
-            qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl
-        )
+        entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
         cached.append(ess)
     by_doc = (
-        entry_partials(entries, idf, avgdl, doc_stats_idx, k1, b)
+        entry_partials(entries, idf, avgdl, k1, b)
         .groupBy("doc_index")
         .agg(F.sum("partial").alias("score"))
     )
     return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
 
 
-def _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl):
+def _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl):
     """MaxScore + block-max candidate generation, shared by the top-k
     and threshold plans. Returns (entries of every doc that can reach
-    ``theta``, the persisted essential-term decode the caller must
+    ``theta``, the persisted live essential-term blocks the caller must
     unpersist), or (None, None) when no doc can.
 
     1. essential terms: a doc holding only non-essential terms scores
@@ -343,8 +347,10 @@ def _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl):
        holds no qualifying doc, so it drops before any byte is decoded —
        essential-term blocks too, the part plain MaxScore can't skip;
     3. candidates decode from the essential terms' live blocks;
-       non-essential terms decode only blocks whose doc range holds a
-       candidate.
+       non-essential terms decode only the blocks of those block_ids,
+       read off the live blocks' metadata: the encoder emits no empty
+       block, so every live essential-term block holds a candidate, and
+       blocks are doc-range aligned, so no other block does.
     """
     from .compression import scoring_entries
 
@@ -357,21 +363,22 @@ def _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl):
             _live_block_ids(qblocks, idf, theta, k1, b, min_dl, avgdl),
             "block_id", "left_semi",
         )
-    ess = scoring_entries(live.where(F.col("term").isin(sorted(essential)))).persist()
+    live_ess = (
+        live.where(F.col("term").isin(sorted(essential)))
+        .select("term", "block_id", "base", "doc_offs", "tfs", "dls")
+        .persist()
+    )
+    ess = scoring_entries(live_ess)
     candidates = ess.select("doc_index").distinct()
     decoded = ess
     non_ess = sorted(set(ub) - essential)
     if non_ess:
-        cand_blocks = candidates.select(
-            (F.col("doc_index") / F.lit(float(_block_span(blocks))))
-            .cast("long")
-            .alias("block_id")
-        ).distinct()
+        cand_blocks = live_ess.select("block_id").distinct()
         ne_blocks = qblocks.where(F.col("term").isin(non_ess)).join(
             F.broadcast(cand_blocks), "block_id", "left_semi"
         )
         decoded = ess.unionByName(scoring_entries(ne_blocks))
-    return decoded.join(candidates, "doc_index", "left_semi"), ess
+    return decoded.join(candidates, "doc_index", "left_semi"), live_ess
 
 
 def _live_block_ids(
@@ -456,12 +463,12 @@ def blocked_maxscore_threshold(
     ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
           for t, (_df, mt) in tstats.items()}
     # no term indexed, or the sum of ALL ubs < theta: provably empty
-    entries, ess = _candidate_entries(qblocks, blocks, ub, idf, theta, k1, b, min_dl, avgdl)
+    entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
     if entries is None:
         qblocks.unpersist()
         return _local_result_df(spark, [])
     survivors = (
-        entry_partials(entries, idf, avgdl, doc_stats_idx, k1, b)
+        entry_partials(entries, idf, avgdl, k1, b)
         .groupBy("doc_index")
         .agg(F.round(F.sum("partial"), round_to).alias("score"))
         .where(F.col("score") >= F.lit(threshold))
@@ -474,29 +481,6 @@ def blocked_maxscore_threshold(
     qblocks.unpersist()
     ess.unpersist()
     return out
-
-
-def _block_span(blocks: DataFrame) -> int:
-    """Block span: read the persisted ``span`` metadata column
-    (compression.block_postings writes it on every row). Falls back to
-    inferring base/block_id for pre-span-column indexes, then to the
-    build default — the old inference alone silently mis-sized spans
-    on single-block indexes built with a non-default span."""
-    if "span" in blocks.columns:
-        r = blocks.select("span").limit(1).collect()
-        if r:
-            return int(r[0]["span"])
-    r = (
-        blocks.where(F.col("block_id") > 0)
-        .select((F.col("base") / F.col("block_id")).cast("long").alias("span"))
-        .limit(1)
-        .collect()
-    )
-    if r:
-        return int(r[0]["span"])
-    from .compression import BLOCK_SPAN
-
-    return BLOCK_SPAN
 
 
 def maxscore_topk(

@@ -254,9 +254,8 @@ Host epochs drifted 3-9x during round 4 (busyloop probe 0.83 s ->
 sandbox), so round-4 evidence is same-session interleaved A/Bs, which
 cancel epoch effects:
 
-- **index_build attribution** (BENCH/ab_index_build_round4.json,
-  scripts/ab_index_build.py): the denormalized-dl tokenize costs
-  2-7% end-to-end (1451->1424 and 1712->1596 docs/s in two runs);
+- **index_build attribution** (BENCH/ab_index_build_round4.json):
+  the denormalized-dl tokenize costs 2-7% end-to-end (1451->1424 and 1712->1596 docs/s in two runs);
   the r2->r3 driver-bench drop to 1134 docs/s does not reproduce at
   either measured epoch — host drift, not the dl change. dl stays
   (it bought the 2.2x bm25_p50 win in round 3).

@@ -1167,9 +1167,11 @@ def test_warm_positional_and_filtered_queries_are_one_job_per_shard(
 
 def test_threshold_uses_deployment_dictionary(spark, url_hash_shards):
     """/threshold reads (df, max_tf) from the deployment's dictionary:
-    no block-metadata aggregation job per shard, so this 2-shard
-    threshold query runs 14 jobs (16 when each shard aggregated its own
-    term stats), and the answer is the single index's."""
+    no block-metadata aggregation job per shard, and the non-essential
+    term's candidate blocks come from block metadata, with no block-span
+    probe job, so this 2-shard threshold query runs 12 jobs (16 when
+    each shard aggregated its own term stats, 14 with the probe), and
+    the answer is the single index's."""
     _eng, full, paths = url_hash_shards
     eng = SearchEngine(spark)
     sc = spark.sparkContext
@@ -1186,7 +1188,7 @@ def test_threshold_uses_deployment_dictionary(spark, url_hash_shards):
                     eng.search_bm25_threshold_sharded(paths, "spark shuffle", 0.5).collect()
                 )
             assert got == want and got
-            assert jobs() == 14, jobs()
+            assert jobs() == 12, jobs()
     finally:
         eng.unpersist()
 
@@ -1205,5 +1207,133 @@ def test_no_hit_results_collect_with_zero_jobs(spark, url_hash_shards):
             with spark_jobs(sc) as jobs:
                 assert res.collect() == []
             assert jobs() == 0, res.columns
+    finally:
+        eng.unpersist()
+
+
+def test_maxscore_candidate_blocks_need_no_span_probe(spark):
+    """The big-query MaxScore path reads the non-essential terms'
+    candidate block ids off the live essential-term blocks' metadata,
+    so a query with a non-essential term runs no job to probe the
+    block span: 9 jobs warm without sidecar stats (10 with the probe),
+    with the naive answer."""
+    from google_like_search_engine_spark.engine import low_latency
+
+    rows = [
+        (f"d{i:02d}", f"http://x.com/{i:02d}.html",
+         "common " * 3 + ("rare " * (1 + i % 4) if i % 5 == 0 else "filler"))
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id string, url string, text string")
+    postings = build_postings(docs).persist()
+    idx = assign_doc_indexes(docs).persist()
+    blocks = block_postings(postings.join(idx, "doc_id"), block_span=8).persist()
+    doc_stats = postings.groupBy("doc_id", "url").agg(
+        F.sum("tf").alias("n_term_entries")
+    )
+    dsi = doc_stats.join(idx, "doc_id").select(
+        "doc_index", "url", "n_term_entries"
+    ).persist()
+    sc = spark.sparkContext
+
+    def run():
+        return blocked_maxscore_topk(
+            spark, "common rare", blocks, dsi, 40, k=3, small_query_entries=0
+        ).collect()
+
+    try:
+        naive = score_bm25(spark, "common rare", postings, doc_stats, 40).limit(3).collect()
+        with low_latency(spark, shuffle_partitions=8):
+            run()
+            with spark_jobs(sc) as jobs:
+                fast = run()
+        assert [r["url"] for r in fast] == [r["url"] for r in naive]
+        for a, b in zip(fast, naive):
+            assert a["score"] == pytest.approx(b["score"], rel=1e-9)
+        assert jobs() == 9, jobs()
+    finally:
+        for df in (postings, idx, blocks, dsi):
+            df.unpersist()
+
+
+def _rewrite_without(spark, path: str, column: str, partition_by=None) -> None:
+    """Rewrite the parquet table at ``path`` without ``column``."""
+    import shutil
+
+    tmp = path + ".tmp"
+    writer = spark.read.parquet(path).drop(column).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(tmp)
+    shutil.rmtree(path)
+    shutil.move(tmp, path)
+
+
+def test_downgraded_layouts_are_refused_and_reported(spark, url_hash_shards, tmp_path):
+    """One blocked layout: a save_blocked copy without its meta sidecar,
+    its blocks' dls array or term_stats' bucket column fails fsck with
+    bad_layout, and the read path refuses it with a ValueError naming
+    the missing part."""
+    import re
+    import shutil
+
+    _eng, full, _paths = url_hash_shards
+    downgrades = {
+        "meta": lambda p: shutil.rmtree(f"{p}/meta"),
+        "blocks.dls": lambda p: _rewrite_without(
+            spark, f"{p}/blocks", "dls", partition_by="term_bucket"
+        ),
+        "term_stats.bucket": lambda p: _rewrite_without(
+            spark, f"{p}/term_stats", "bucket"
+        ),
+    }
+    eng = SearchEngine(spark)
+    assert eng.fsck_blocked(full)["checks"]["bad_layout"] == 0
+    try:
+        for part, downgrade in downgrades.items():
+            p = str(tmp_path / part)
+            shutil.copytree(full, p)
+            downgrade(p)
+            report = eng.fsck_blocked(p)
+            assert not report["ok"] and report["checks"]["bad_layout"] > 0, report
+            assert part in report["missing"], report
+            with pytest.raises(ValueError, match=re.escape(part)):
+                eng.search_bm25_blocked(p, "spark shuffle", k=5)
+    finally:
+        eng.unpersist()
+
+
+def test_analyzer_without_dl_gets_doc_lengths(spark, tmp_path):
+    """An analyzer that emits no dl: the engine adds each doc's sum(tf),
+    so postings.dl equals doc_stats.n_term_entries, and the flat, served
+    and blocked BM25 paths return the same rows and scores."""
+    from google_like_search_engine_spark.corpus import generate_pages
+
+    pages = generate_pages(spark, 60).where(F.col("lang") == "en")
+    eng = SearchEngine(spark).build(
+        pages, run_pagerank=False, postings_fn=lambda d: build_postings(d).drop("dl")
+    )
+    try:
+        per_doc = {
+            (r["doc_id"], r["dl"])
+            for r in eng.postings.select("doc_id", "dl").distinct().collect()
+        }
+        assert per_doc == {
+            (r["doc_id"], r["n_term_entries"]) for r in eng.doc_stats.collect()
+        }
+        out = str(tmp_path / "blocked")
+        eng.save_blocked(out)
+        assert eng.enable_serving()
+        query = "search engine index"
+        flat = [(r["url"], r["score"]) for r in eng.search_bm25(query, k=20).collect()]
+        assert flat
+        for got in (
+            eng.search_bm25_served(query, k=20),
+            eng.search_bm25_blocked(out, query, k=20),
+        ):
+            got = [(r["url"], r["score"]) for r in got.collect()]
+            assert [u for u, _s in got] == [u for u, _s in flat]
+            for (_u, a), (_v, b) in zip(got, flat):
+                assert a == pytest.approx(b, rel=1e-12)
     finally:
         eng.unpersist()

@@ -95,6 +95,7 @@ def test_block_postings_one_row_per_key_across_arrow_batches(spark):
         F.col("id").alias("doc_index"),
         F.lit(1).alias("tf"),
         F.array(F.lit(1)).alias("positions"),
+        F.lit(1).alias("dl"),
     )
     blocks = block_postings(pidx, block_span=16384).collect()
     assert len(blocks) == 1
@@ -119,31 +120,6 @@ def test_assign_doc_indexes_dense_and_deterministic(spark):
     assert got == {d: i for i, d in enumerate(ids)}
     got2 = {r["doc_id"]: r["doc_index"] for r in assign_doc_indexes(docs).collect()}
     assert got2 == got
-
-
-def test_scoring_entries_fallback_matches_columnar(spark):
-    """A pre-columnar index (no doc_offs/tfs/dls columns) must decode to
-    the same (term, doc_index, tf) via the varint fallback."""
-    from google_like_search_engine_spark.compression import scoring_entries
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", f"u{i}", "alpha beta " * (1 + i % 3)) for i in range(30)],
-        "doc_id string, url string, text string",
-    )
-    postings = build_postings(docs)
-    idx = assign_doc_indexes(docs)
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=8).persist()
-    new = {
-        (r["term"], r["doc_index"]): r["tf"]
-        for r in scoring_entries(blocks).collect()
-    }
-    legacy = blocks.drop("doc_offs", "tfs", "dls", "span")
-    old = {
-        (r["term"], r["doc_index"]): r["tf"]
-        for r in scoring_entries(legacy).collect()
-    }
-    assert new == old and len(new) > 0
-    blocks.unpersist()
 
 
 def test_assign_doc_indexes_url_order_with_duplicates(spark):

@@ -80,29 +80,3 @@ def test_stem_idempotent_like(w):
     s = porter_stem(w)
     assert len(s) <= max(len(w), 1) or w == ""
     assert porter_stem(w) == s
-
-
-def test_bm25_join_free_path_equals_join_path(spark):
-    """Denormalized dl (join-free scoring) == doc_stats-join scoring,
-    exactly, across queries incl. stems and missing terms."""
-    from pyspark.sql import functions as F
-
-    from google_like_search_engine_spark.indexer import build_postings
-    from google_like_search_engine_spark.ranker import score_bm25
-    from tests.test_wand_and_lineage import _random_docs
-
-    docs = _random_docs(spark, n=100, seed=31)
-    postings = build_postings(docs).cache()
-    doc_stats = postings.groupBy("doc_id", "url").agg(
-        F.sum("tf").alias("n_term_entries")
-    ).cache()
-    n = docs.count()
-    legacy = postings.drop("dl")  # pre-dl layout forces the join path
-    for q in ("spark shuffle", "index", "stream block batch rank", "nope"):
-        a = score_bm25(spark, q, postings, doc_stats, n).collect()
-        b = score_bm25(spark, q, legacy, doc_stats, n).collect()
-        assert [(r["url"], round(r["score"], 10)) for r in a] == [
-            (r["url"], round(r["score"], 10)) for r in b
-        ], q
-    postings.unpersist()
-    doc_stats.unpersist()

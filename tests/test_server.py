@@ -513,6 +513,20 @@ def test_warm_served_query_is_one_spark_job(engine):
     assert jobs() == 1 and rows
 
 
+def test_warm_filtered_served_query_is_one_spark_job(engine):
+    """A +/- filtered served request scans the serving cache once and
+    aggregates its score and presence flags per url: ONE Spark job, no
+    semi/anti join."""
+    engine.search_bm25_served(
+        "search engine", k=10, required=["index"], excluded=["merge"]
+    ).collect()
+    with spark_jobs(engine.spark.sparkContext) as jobs:
+        rows = engine.search_bm25_served(
+            "index merge", k=10, required=["search"], excluded=["engine"]
+        ).collect()
+    assert jobs() == 1 and rows
+
+
 def test_no_hit_served_query_collects_with_zero_jobs(engine):
     """A served query with no indexed term returns a LocalRelation:
     its collect schedules no Spark job."""
