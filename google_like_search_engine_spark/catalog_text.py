@@ -820,10 +820,11 @@ def cosine_scores(spark, sf_dir):
     # (cross join) instead of an eager collect() job per call; the
     # fold arithmetic below is element-for-element identical to the old
     # literal-array form (same casts, same left-fold order), so scores
-    # are bit-identical.
+    # are bit-identical. limit(1): a duplicated vec_id = 0 row must not
+    # multiply every score row through the cross join.
     qrel = emb.where(F.col("vec_id") == 0).select(
         F.transform("embedding", lambda x: x.cast("double")).alias("qe")
-    )
+    ).limit(1)
     dot = F.aggregate(
         F.zip_with(F.col("embedding"), F.col("qe"), lambda x, y: x.cast("double") * y),
         F.lit(0.0),

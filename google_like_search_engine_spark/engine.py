@@ -23,8 +23,9 @@ from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .compression import assign_doc_indexes, block_postings
+from .compression import BLOCK_SPAN, assign_doc_indexes, block_postings
 from .indexer import build_postings, docs_from_pages
 from .pagerank import extract_edges, pagerank, vertices_from_pages
 from .ranker import expand_query, score_bm25, score_tfidf
@@ -42,6 +43,7 @@ from .wand import (
     maxscore_topk,
 )
 
+# cap on the term-bucket count save_blocked derives from a shard's bytes
 TERM_BUCKETS = 64
 
 # one opened blocked index: the lazy blocks scan, the cached doc-stats
@@ -347,9 +349,17 @@ class SearchEngine:
     def save_blocked(self, path: str) -> None:
         """Persist the compressed blocked index, hive-partitioned by a
         hash bucket of the term: a query's term filter becomes
-        *partition pruning* at the scan — only TERM_BUCKETS'
-        worth of the index relevant to the query terms is read, the
-        100 TB serving layout."""
+        *partition pruning* at the scan, so only the query terms'
+        buckets are read.
+
+        The bucket count comes from the data: one bucket per input split
+        (spark.sql.files.maxPartitionBytes, the size the reader packs
+        files by) of encoded blob bytes, at least 1 and at most
+        TERM_BUCKETS, and each bucket is written as one file. A small
+        shard is one blocks file; a large one keeps TERM_BUCKETS-way
+        pruning, and the reader splits an oversized bucket file by row
+        group. ``meta`` records the count (``term_buckets``) and the
+        doc-index span per block (``block_span``)."""
         assert self.postings is not None, "build first"
         # re-saving over a previously-queried path must drop its cached
         # handles, or later queries serve stale results / dead file lists
@@ -360,21 +370,36 @@ class SearchEngine:
         idx = assign_doc_indexes(
             self.postings.select("doc_id", "url").distinct(), order_col="url"
         )
-        blocks = block_postings(self.postings.join(F.broadcast(idx), "doc_id"))
-        (
-            blocks.withColumn(
-                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS))
+        blocks = block_postings(
+            self.postings.join(F.broadcast(idx), "doc_id")
+        ).persist()
+        try:
+            blob_bytes = blocks.agg(F.sum(F.length("block"))).collect()[0][0] or 0
+            split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            term_buckets = max(1, min(-(-blob_bytes // split), TERM_BUCKETS))
+            bucket = F.pmod(F.xxhash64("term"), F.lit(term_buckets))
+            (
+                blocks.withColumn("term_bucket", bucket)
+                .repartition(term_buckets, "term_bucket")
+                .sortWithinPartitions("term_bucket", "term", "block_id")
+                .write.mode("overwrite")
+                .partitionBy("term_bucket")
+                .parquet(f"{path}/blocks")
             )
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/blocks")
-        )
-        (
-            self.doc_stats.join(F.broadcast(idx.drop("url")), "doc_id")
-            .select("doc_index", "url", "n_term_entries")
-            .write.mode("overwrite")
-            .parquet(f"{path}/doc_stats_idx")
-        )
+            # per-term dictionary (df + max_tf from block metadata):
+            # queries resolve term stats driver-side instead of scanning
+            # block metadata per query (RankerStarter.java:38-42 keeps
+            # the same state in RAM)
+            (
+                blocks.groupBy("term")
+                .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
+                .withColumn("bucket", bucket)
+                .repartition(1)
+                .write.mode("overwrite")
+                .parquet(f"{path}/term_stats")
+            )
+        finally:
+            blocks.unpersist()
         # tiny meta sidecar: corpus stats precomputed at build time so a
         # cold query skips the count + agg jobs over doc_stats entirely
         stats = self.doc_stats.agg(
@@ -382,22 +407,21 @@ class SearchEngine:
             F.avg("n_term_entries").alias("avgdl"),
             F.min("n_term_entries").alias("min_dl"),
         )
-        stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        # per-term dictionary (df + max_tf from block metadata): queries
-        # resolve term stats driver-side instead of scanning block
-        # metadata per query (RankerStarter.java:38-42 keeps the same
-        # state in RAM). Read back from the written parquet — a
-        # metadata-column-only scan, not a re-run of the block encoder.
+        row = stats.collect()[0]
         (
-            self.spark.read.parquet(f"{path}/blocks")
-            .groupBy("term")
-            .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS))
-            )
+            self.doc_stats.join(F.broadcast(idx.drop("url")), "doc_id")
+            .select("doc_index", "url", "n_term_entries")
+            .coalesce(_dimension_parts(row["total_documents"]))
             .write.mode("overwrite")
-            .parquet(f"{path}/term_stats")
+            .parquet(f"{path}/doc_stats_idx")
         )
+        self.spark.createDataFrame(
+            [(*row, term_buckets, BLOCK_SPAN)],
+            StructType(stats.schema.fields + [
+                StructField("term_buckets", IntegerType()),
+                StructField("block_span", IntegerType()),
+            ]),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
     def _invalidate_blocked_cache(self, index_path: str | None = None) -> None:
         """Drop cached blocked-index handles and url dicts (one path, or
@@ -435,15 +459,9 @@ class SearchEngine:
                 "SearchEngine.save_blocked."
             )
         total, stats, term_stats = self._read_sidecars(index_path)
-        # right-size the cached dimension (~250k rows/partition): the
-        # per-query url lookup probes every cached partition, so a small
-        # corpus cached across 32 file-splits pays 32 scheduled tasks per
-        # query for no parallelism gain. coalesce only ever reduces, so
-        # at 10^12 docs this is a no-op and the dimension stays fully
-        # distributed.
         doc_stats_idx = (
             self.spark.read.parquet(f"{index_path}/doc_stats_idx")
-            .coalesce(max(1, -(-total // 250_000)))
+            .coalesce(_dimension_parts(total))
             .persist()
         )
         return Shard(blocks, doc_stats_idx, total, stats, term_stats)
@@ -451,14 +469,16 @@ class SearchEngine:
     def _layout_gaps(self, index_path: str, blocks: DataFrame) -> list:
         """What ``index_path`` lacks of the one blocked layout
         save_blocked writes: a columnar block array, the meta or
-        term_stats sidecar, or term_stats' bucket column. Empty for a
-        current index; the read path refuses any other and fsck reports
-        it."""
+        term_stats sidecar, meta's bucket count or block span, or
+        term_stats' bucket column. Empty for a current index; the read
+        path refuses any other and fsck reports it."""
         gaps = [
             f"blocks.{c}" for c in ("doc_offs", "tfs", "dls", "span")
             if c not in blocks.columns
         ]
-        for name, needed in (("meta", ()), ("term_stats", ("bucket",))):
+        for name, needed in (
+            ("meta", ("term_buckets", "block_span")), ("term_stats", ("bucket",))
+        ):
             cols = self._sidecar_columns(index_path, name)
             if cols is None:
                 gaps.append(name)
@@ -934,9 +954,13 @@ class SearchEngine:
         check scales with the index like any other job):
 
         - block shape: n_docs == len(doc_offs) == len(tfs), offsets
-          strictly increasing and < span, max_tf == max(tfs);
-        - partition layout: term_bucket matches pmod(xxhash64(term));
-        - term_stats sidecar agrees with block metadata (df, max_tf);
+          strictly increasing and < span, span == meta.block_span,
+          max_tf == max(tfs);
+        - partition layout: term_bucket matches pmod(xxhash64(term),
+          meta.term_buckets);
+        - term_stats sidecar agrees with block metadata (df, max_tf)
+          and its bucket with meta.term_buckets (the partition a query
+          reads for the term);
         - doc_stats_idx doc_index is dense 0..N-1 and every doc a block
           references exists;
         - meta sidecar totals match doc_stats_idx;
@@ -972,12 +996,12 @@ class SearchEngine:
             "doc_offs = array_sort(doc_offs) "
             "AND size(array_distinct(doc_offs)) = n_docs"
         )
-        bucket_ok = F.col("term_bucket") == F.pmod(
-            F.xxhash64("term"), F.lit(TERM_BUCKETS)
-        )
+        span_ok = F.col("span") == int(meta["block_span"])
+        term_bucket = F.pmod(F.xxhash64("term"), F.lit(int(meta["term_buckets"])))
+        bucket_ok = F.col("term_bucket") == term_bucket
         bad = blocks.agg(
             F.count(F.lit(1)).alias("n_blocks"),
-            F.sum((~offs_ok).cast("int")).alias("bad_block_shape"),
+            F.sum((~(offs_ok & span_ok)).cast("int")).alias("bad_block_shape"),
             F.sum((~sorted_ok).cast("int")).alias("bad_doc_order"),
             F.sum((~bucket_ok).cast("int")).alias("bad_term_bucket"),
         ).collect()[0]
@@ -998,6 +1022,7 @@ class SearchEngine:
                 F.col("b_df").isNull() | F.col("df").isNull()
                 | (F.col("df") != F.col("b_df"))
                 | (F.col("max_tf") != F.col("b_max_tf"))
+                | (F.col("bucket") != term_bucket)
             )
             .count()
         )
@@ -1113,7 +1138,11 @@ class SearchEngine:
         analyzer=None,
     ) -> DataFrame:
         """BM25 top-k; ``pruned=True`` routes through the MaxScore plan
-        (identical scores, skips non-essential posting scans).
+        (identical scores). Its threshold only drops docs from the final
+        ranking: it still aggregates every posting of the query terms,
+        plus two driver-side jobs (term stats, theta seed), so it is
+        slower than the unpruned plan (~0.5 s against ~0.23 s warm on a
+        400-page build, 4 cores).
 
         ``analyzer``: query-side half of the pluggable-analyzer seam —
         a ``str -> list[str]`` callable producing the same terms the
@@ -1451,6 +1480,16 @@ def _with_dl(postings: DataFrame) -> DataFrame:
             "dl", F.sum("tf").over(Window.partitionBy("doc_id")).cast("int")
         )
     return postings
+
+
+def _dimension_parts(total: int) -> int:
+    """Partitions for a blocked index's doc-stats dimension (~250k rows
+    each): the per-query url lookup probes every cached partition, so a
+    small corpus cached across 32 file-splits pays 32 scheduled tasks per
+    query for no parallelism gain. save_blocked writes that many files
+    and _open_blocked coalesces to it, a no-op at 10^12 docs, where the
+    dimension stays fully distributed."""
+    return max(1, -(-total // 250_000))
 
 
 def _local_path(index_path: str) -> str | None:

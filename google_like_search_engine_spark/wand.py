@@ -495,14 +495,17 @@ def maxscore_topk(
     use_stems: bool = True,
 ) -> DataFrame:
     """Exact BM25 top-k with MaxScore pruning. Returns (url, score) desc,
-    identical to ranker.score_bm25(...).limit(k)."""
+    identical to ranker.score_bm25(...).limit(k). dl is the postings'
+    own column, so no plan joins; ``doc_stats`` supplies only avgdl and
+    min_dl."""
     words = _query_words(query, use_stems)
     if not words:
         return _local_result_df(spark, [])
     n = float(total_documents)
     avgdl, min_dl = _dl_stats(doc_stats, None)
-    dl = doc_stats.select("doc_id", F.col("n_term_entries").alias("dl"))
-    matched = postings.where(F.col("term").isin(words)).select("term", "doc_id", "url", "tf")
+    matched = postings.where(F.col("term").isin(words)).select(
+        "term", "doc_id", "url", "tf", "dl"
+    )
 
     # term stats: df and max_tf -> tight upper bound per term
     tstats = {
@@ -522,24 +525,20 @@ def maxscore_topk(
     best = max(ub, key=ub.get)
     seed = (
         matched.where(F.col("term") == best)
-        .join(dl, "doc_id")
         .select(partial.alias("s"))
         .orderBy(F.desc("s"))
         .limit(k)
         .collect()
     )
     theta = float(seed[-1]["s"]) if len(seed) >= k else 0.0
-    candidates = (
-        matched.where(F.col("term").isin(sorted(essential_terms(ub, theta))))
-        .select("doc_id")
-        .distinct()
-    )
+    # candidates: docs holding an essential term, as a presence flag in
+    # the scoring aggregation rather than a semi join on doc_id
+    essential = F.col("term").isin(sorted(essential_terms(ub, theta)))
     return (
-        matched.join(candidates, "doc_id", "left_semi")
-        .join(dl, "doc_id")
-        .select("url", partial.alias("partial"))
-        .groupBy("url")
-        .agg(F.sum("partial").alias("score"))
+        matched.groupBy("url")
+        .agg(F.sum(partial).alias("score"), F.max(essential).alias("candidate"))
+        .where("candidate")
+        .select("url", "score")
         .orderBy(F.desc("score"), F.asc("url"))
         .limit(k)
     )

@@ -1258,10 +1258,15 @@ def test_maxscore_candidate_blocks_need_no_span_probe(spark):
 
 def _rewrite_without(spark, path: str, column: str, partition_by=None) -> None:
     """Rewrite the parquet table at ``path`` without ``column``."""
+    _rewrite(spark, path, lambda df: df.drop(column), partition_by)
+
+
+def _rewrite(spark, path: str, change, partition_by=None) -> None:
+    """Rewrite the parquet table at ``path`` as ``change(table)``."""
     import shutil
 
     tmp = path + ".tmp"
-    writer = spark.read.parquet(path).drop(column).write.mode("overwrite")
+    writer = change(spark.read.parquet(path)).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(tmp)
@@ -1271,15 +1276,23 @@ def _rewrite_without(spark, path: str, column: str, partition_by=None) -> None:
 
 def test_downgraded_layouts_are_refused_and_reported(spark, url_hash_shards, tmp_path):
     """One blocked layout: a save_blocked copy without its meta sidecar,
-    its blocks' dls array or term_stats' bucket column fails fsck with
-    bad_layout, and the read path refuses it with a ValueError naming
-    the missing part."""
+    meta's bucket count or block span, its blocks' dls array or
+    term_stats' bucket column fails fsck with bad_layout, and the read
+    path refuses it with a ValueError naming the missing part. A copy
+    whose term_stats buckets or meta.block_span disagree with the
+    blocks fails fsck's term-stats or block-shape check."""
     import re
     import shutil
 
     _eng, full, _paths = url_hash_shards
     downgrades = {
         "meta": lambda p: shutil.rmtree(f"{p}/meta"),
+        "meta.term_buckets": lambda p: _rewrite_without(
+            spark, f"{p}/meta", "term_buckets"
+        ),
+        "meta.block_span": lambda p: _rewrite_without(
+            spark, f"{p}/meta", "block_span"
+        ),
         "blocks.dls": lambda p: _rewrite_without(
             spark, f"{p}/blocks", "dls", partition_by="term_bucket"
         ),
@@ -1299,6 +1312,20 @@ def test_downgraded_layouts_are_refused_and_reported(spark, url_hash_shards, tmp
             assert part in report["missing"], report
             with pytest.raises(ValueError, match=re.escape(part)):
                 eng.search_bm25_blocked(p, "spark shuffle", k=5)
+        mismatches = {
+            "bad_term_stats": ("term_stats", lambda df: df.withColumn(
+                "bucket", F.pmod(F.xxhash64("term"), F.lit(7))
+            )),
+            "bad_block_shape": ("meta", lambda df: df.withColumn(
+                "block_span", F.col("block_span") * 2
+            )),
+        }
+        for check, (sidecar, change) in mismatches.items():
+            p = str(tmp_path / check)
+            shutil.copytree(full, p)
+            _rewrite(spark, f"{p}/{sidecar}", change)
+            report = eng.fsck_blocked(p)
+            assert not report["ok"] and report["checks"][check] > 0, report
     finally:
         eng.unpersist()
 

@@ -1,5 +1,9 @@
 """End-to-end SearchEngine facade: build -> save -> load -> query."""
 
+import glob
+import os
+import re
+
 import pytest
 
 from google_like_search_engine_spark.corpus import generate_pages
@@ -17,7 +21,11 @@ def test_engine_end_to_end(spark, tmp_path):
     assert all(r["pagerank"] != 0 for r in res)
 
     bm = eng.search_bm25("search engine", k=5).collect()
-    bm_pruned = eng.search_bm25("search engine", k=5, pruned=True).collect()
+    pruned_df = eng.search_bm25("search engine", k=5, pruned=True)
+    bm_pruned = pruned_df.collect()
+    # MaxScore reads dl off the postings: no join on doc_id, no doc_stats
+    plan = pruned_df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "n_term_entries" not in plan, plan
     assert [r["url"] for r in bm] == [r["url"] for r in bm_pruned]
     for a, b in zip(bm, bm_pruned):
         assert a["score"] == pytest.approx(b["score"], rel=1e-9)
@@ -47,25 +55,56 @@ def test_engine_served_bm25_identical(spark):
     eng.unpersist()
 
 
+def _parquet_files(path):
+    return glob.glob(f"{path}/**/*.parquet", recursive=True)
+
+
 def test_engine_blocked_index_path(spark, tmp_path):
+    """The blocked layout is sized to the shard: under the default split
+    size a small shard is one blocks file in one term bucket; with the
+    split lowered below the shard's blob bytes it derives several
+    buckets, still one file each, and a query's scan prunes to its
+    terms' buckets. Both layouts serve the flat path's results and pass
+    fsck."""
     pages = generate_pages(spark, 120, partitions=4).where("lang = 'en'")
     eng = SearchEngine(spark).build(pages, run_pagerank=False)
-    naive = eng.search_bm25("search engine index", k=8).collect()
+    query = "search engine index"
+    naive = eng.search_bm25(query, k=8).collect()
+
+    def check(path):
+        blocked = eng.search_bm25_blocked(path, query, k=8).collect()
+        assert [r["url"] for r in blocked] == [r["url"] for r in naive]
+        for a, b in zip(blocked, naive):
+            assert a["score"] == pytest.approx(b["score"], rel=1e-9)
+        assert eng.fsck_blocked(path)["ok"]
+        return spark.read.parquet(f"{path}/meta").collect()[0]["term_buckets"]
 
     path = str(tmp_path / "blocked_idx")
     eng.save_blocked(path)
-    blocked = eng.search_bm25_blocked(path, "search engine index", k=8).collect()
-    assert [r["url"] for r in blocked] == [r["url"] for r in naive]
-    for a, b in zip(blocked, naive):
-        import pytest as _pt
+    assert len(_parquet_files(f"{path}/blocks")) == 1
+    assert len(_parquet_files(f"{path}/doc_stats_idx")) == 1
+    assert check(path) == 1
 
-        assert a["score"] == _pt.approx(b["score"], rel=1e-9)
-
-    # the scan is partition-pruned: the physical plan carries a
-    # term_bucket partition filter
-    df = eng.search_bm25_blocked(path, "search", k=3)
-    assert df.collect() is not None
-    eng.unpersist()
+    split = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(split)
+    small = str(tmp_path / "blocked_small_split")
+    try:
+        spark.conf.set(split, "4k")
+        eng.save_blocked(small)
+        files = _parquet_files(f"{small}/blocks")
+        dirs = [os.path.basename(os.path.dirname(f)) for f in files]
+        assert len(dirs) > 1 and len(set(dirs)) == len(dirs), dirs
+        assert all(d.startswith("term_bucket=") for d in dirs)
+        assert check(small) == len(dirs)
+        dep = eng._deployment([small])
+        infos, _df = dep.lookup(["search"])
+        scan = eng._shard_scan(dep.shards[0], infos[0])
+        assert scan.count() > 0
+        plan = scan._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*term_bucket", plan), plan
+    finally:
+        spark.conf.set(split, old)
+        eng.unpersist()
 
 
 def test_merge_pages_replaces_and_appends(spark):
