@@ -19,6 +19,8 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import sqltext as sql
+
 
 def _dot(col, lit_arr):
     return F.aggregate(
@@ -47,19 +49,30 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact brute-force cosine top-k: (id, cos_sim) desc."""
-    q = _lit_vec(query_vec)
+    """Exact brute-force cosine top-k: (id, cos_sim) desc, ties by id.
+
+    Serving shape: ONE literal-substituted SQL text — the query vector an
+    array of DOUBLE literals, its norm a DOUBLE literal — so building
+    it is one ``spark.sql`` call (a Column chain pays a py4j round trip
+    per dimension), and the returned DataFrame's collect is the one
+    Spark job. The score is ``_dot`` / (``_norm`` * |q|) in the same
+    JVM-side expression (zip_with + aggregate over doubles), so it
+    gives the same floats."""
     qn = math.sqrt(sum(float(x) * float(x) for x in query_vec)) or 1.0
-    return (
-        emb.select(
-            F.col(id_col),
-            (_dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * F.lit(qn))).alias(
-                "cos_sim"
-            ),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
+    q = "array(" + ", ".join(sql.dbl(x) for x in query_vec) + ")"
+    i, v = f"`{id_col}`", f"`{vec_col}`"
+    dot = (
+        f"aggregate(zip_with({v}, {q}, (x, y) -> CAST(x AS DOUBLE) * y), "
+        "0.0D, (acc, p) -> acc + p)"
     )
+    norm = (
+        f"sqrt(aggregate({v}, 0.0D, "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+    return sql.over(emb, lambda t: (
+        f"SELECT {i}, {dot} / ({norm} * {sql.dbl(qn)}) AS cos_sim FROM {t} "
+        f"ORDER BY cos_sim DESC, {i} ASC LIMIT {int(k)}"
+    ))
 
 
 def hyperplanes(dim: int, bits: int = 16, seed: int = 42) -> list:

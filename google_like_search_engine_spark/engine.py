@@ -7,7 +7,7 @@ Indexer/PageRank jobs; RankerStarter's /search route —
     eng = SearchEngine(spark)
     eng.build(pages_df)          # index + pagerank (or .build_from_parquet)
     eng.search("apples figs")    # reference-identical TF-IDF x PageRank
-    eng.search_bm25("apples", k=10, pruned=True)   # BM25, MaxScore path
+    eng.search_bm25("apples", k=10)   # BM25 top-k
 
 State lives in persisted/cached DataFrames, not a KVS; ``save``/``load``
 round-trip the built index through parquet (Iceberg on a real cluster).
@@ -28,28 +28,28 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from .compression import BLOCK_SPAN, assign_doc_indexes, block_postings
 from .indexer import build_postings, docs_from_pages
 from .pagerank import extract_edges, pagerank, vertices_from_pages
+from . import sqltext as sql
 from .ranker import expand_query, score_bm25, score_tfidf
 from .wand import (
     _local_result_df,
     bm25_idf,
-    bm25_partial,
+    bm25_sql,
     blocked_maxscore_threshold,
     blocked_maxscore_topk,
     blocked_phrase_topk,
     blocked_proximity_topk,
     entry_partials,
-    filtered_scores,
-    idf_map,
-    maxscore_topk,
+    topk_rows,
 )
 
 # cap on the term-bucket count save_blocked derives from a shard's bytes
 TERM_BUCKETS = 64
 
 # one opened blocked index: the lazy blocks scan, the cached doc-stats
-# dimension, N, (avgdl, min_dl) and the driver-side {term: (df, max_tf,
-# bucket)} dictionary (None when it exceeds DICT_CAP)
-Shard = namedtuple("Shard", "blocks doc_stats_idx total stats term_stats")
+# dimension, N, (avgdl, min_dl), the driver-side {term: (df, max_tf,
+# bucket)} dictionary (None when it exceeds DICT_CAP) and the doc-index
+# span per block its meta records
+Shard = namedtuple("Shard", "blocks doc_stats_idx total stats term_stats block_span")
 # what reading an absent sidecar raises: pyarrow locally, Spark elsewhere
 _MISSING_SIDECAR = (FileNotFoundError, AnalysisException)
 
@@ -458,13 +458,13 @@ class SearchEngine:
                 f"it lacks {', '.join(gaps)}. Rebuild it with "
                 "SearchEngine.save_blocked."
             )
-        total, stats, term_stats = self._read_sidecars(index_path)
+        total, stats, term_stats, block_span = self._read_sidecars(index_path)
         doc_stats_idx = (
             self.spark.read.parquet(f"{index_path}/doc_stats_idx")
             .coalesce(_dimension_parts(total))
             .persist()
         )
-        return Shard(blocks, doc_stats_idx, total, stats, term_stats)
+        return Shard(blocks, doc_stats_idx, total, stats, term_stats, block_span)
 
     def _layout_gaps(self, index_path: str, blocks: DataFrame) -> list:
         """What ``index_path`` lacks of the one blocked layout
@@ -531,15 +531,17 @@ class SearchEngine:
         }
 
     def _read_sidecars(self, index_path: str):
-        """(total, (avgdl, min_dl), dictionary) from the tiny meta and
-        term_stats sidecars; the dictionary is None over DICT_CAP
-        (queries then read just their terms' rows, ``_shard_terms``)."""
+        """(total, (avgdl, min_dl), dictionary, block_span) from the tiny
+        meta and term_stats sidecars; the dictionary is None over
+        DICT_CAP (queries then read just their terms' rows,
+        ``_shard_terms``)."""
         m = self._sidecar_rows(index_path, "meta")[0]
         rows = self._sidecar_rows(index_path, "term_stats", cap=self.DICT_CAP)
         return (
             int(m["total_documents"]),
             (float(m["avgdl"] or 1.0), float(m["min_dl"] or 1.0)),
             None if rows is None else self._dictionary(rows),
+            int(m["block_span"]),
         )
 
     def _shard_terms(self, index_path: str, shard: Shard, terms: list) -> dict:
@@ -557,11 +559,23 @@ class SearchEngine:
     def _shard_scan(self, shard: Shard, info: dict) -> DataFrame:
         """The blocks of the terms in ``info`` (``_shard_terms`` output),
         pruned to their term_bucket partitions — the term filter becomes
-        partition pruning before any decode."""
+        partition pruning before any decode. The predicate is a SQL
+        string, one py4j call where the Column chain took ~40; the
+        term_bucket column stays, as every reader selects its columns."""
         if not info:
-            return shard.blocks.limit(0).drop("term_bucket")
-        buckets = sorted({v[2] for v in info.values()})
-        return shard.blocks.where(F.col("term_bucket").isin(buckets)).drop("term_bucket")
+            return shard.blocks.limit(0)
+        buckets = ", ".join(str(b) for b in sorted({v[2] for v in info.values()}))
+        return shard.blocks.where(f"term_bucket IN ({buckets})")
+
+    def _exchange_parts(self, shard: Shard) -> int:
+        """Shuffle partitions for a per-shard query's exchange (BM25's
+        per-doc aggregation, the positional pass's block groups): the
+        number of block groups the shard can hold — its doc count over
+        its recorded block span — capped at spark.sql.shuffle.partitions.
+        One partition for a shard of one block group, where the serving
+        default of 8 schedules 7 empty reduce tasks per query."""
+        cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return max(1, min(cap, -(-shard.total // shard.block_span)))
 
     URL_DICT_CAP = 250_000  # max forward-index entries held driver-side
 
@@ -674,11 +688,13 @@ class SearchEngine:
         namespace) are fused driver-side with
         rrf = sum 1/(rrf_k + rank), ties broken by url.
 
-        Serving shape: two independent retriever jobs (each already
-        top-k-pruned — MaxScore for the lexical side, the ANN index
-        for the vector side at scale), then a 2*pool-row Python merge
-        returning a VALUES LocalTableScan (zero extra jobs). The
-        fusion cost is O(pool), independent of corpus size.
+        Serving shape: two independent retriever jobs, each one SQL text
+        and one collect — the lexical side's per-shard BM25 text
+        (wand.bm25_sql), the vector side's cosine text
+        (simsearch.cosine_topk; the ANN index at scale) — then a
+        2*pool-row Python merge returning a VALUES LocalTableScan (zero
+        extra jobs). The fusion cost is O(pool), independent of corpus
+        size.
 
         ``index_path`` may be a LIST of blocked shard dirs: the lexical
         retriever then federates through search_bm25_sharded and fusion
@@ -728,7 +744,10 @@ class SearchEngine:
         keep its block-max bounds valid — and the shard winners merge by
         (score desc, url), row-identical to one index over the union
         corpus (pinned by test). Cost: one pruned scoring job per shard,
-        concurrently, plus a k*shards driver merge.
+        concurrently, plus a k*shards driver merge. A small or filtered
+        query's shard job is one SQL text (wand.bm25_sql) whose exchange
+        is sized to the shard (``_exchange_parts``), and its rows reach
+        the merge as tuples straight from that job's collect.
 
         ``required``/``excluded``: `+term -term` filters. Doc membership
         is shard-local, so applying them per shard is exact."""
@@ -739,18 +758,17 @@ class SearchEngine:
         infos, df = dep.lookup(words + req + exc)
 
         def shard(i):
-            info = infos[i]
+            info, s, lookup = infos[i], dep.shards[i], dep.url_lookups[i]
             gts = {w: (df[w],) + info[w][1:] for w in words if w in info}
             if not gts or any(w not in info for w in req):
                 return []
             part = blocked_maxscore_topk(
-                self.spark, query, self._shard_scan(dep.shards[i], info),
-                dep.shards[i].doc_stats_idx, dep.n, k=k + dep.extra[i],
-                doc_stats_agg=(dep.avgdl, dep.shards[i].stats[1]),
-                term_stats=gts, url_lookup=dep.url_lookups[i],
-                required=req, excluded=exc,
+                self.spark, query, self._shard_scan(s, info), s.doc_stats_idx,
+                dep.n, k=k + dep.extra[i], doc_stats_agg=(dep.avgdl, s.stats[1]),
+                term_stats=gts, url_lookup=lookup, required=req, excluded=exc,
+                partitions=self._exchange_parts(s),
             )
-            return [(r["url"], float(r["score"])) for r in part.collect()]
+            return topk_rows(part.collect(), lookup)
 
         return self._federate(dep, shard, k)
 
@@ -798,9 +816,10 @@ class SearchEngine:
 
         parts = []
         for p in shard_paths:
-            blocks, dsi, _t, _s, _ts = self._blocked_handles(p)
+            shard = self._blocked_handles(p)
+            dsi = shard.doc_stats_idx
             post = (
-                unblock_postings(blocks.drop("term_bucket"))
+                unblock_postings(shard.blocks.drop("term_bucket"))
                 .join(dsi, "doc_index")
                 .select(
                     F.col("url").alias("doc_id"),
@@ -833,8 +852,9 @@ class SearchEngine:
         words = [w.lower() for w in phrase.split() if w]
         return self._positional(
             index_paths, words, k, "n_occurrences",
-            lambda blocks, dsi, kk, lookup: blocked_phrase_topk(
-                self.spark, phrase, blocks, dsi, k=kk, url_lookup=lookup
+            lambda blocks, dsi, kk, lookup, parts: blocked_phrase_topk(
+                self.spark, phrase, blocks, dsi, k=kk, url_lookup=lookup,
+                partitions=parts,
             ),
         )
 
@@ -847,27 +867,30 @@ class SearchEngine:
         words = [w.lower() for w in terms if w]
         return self._positional(
             index_paths, words, k, "n_matches",
-            lambda blocks, dsi, kk, lookup: blocked_proximity_topk(
-                self.spark, words, window, blocks, dsi, k=kk, url_lookup=lookup
+            lambda blocks, dsi, kk, lookup, parts: blocked_proximity_topk(
+                self.spark, words, window, blocks, dsi, k=kk, url_lookup=lookup,
+                partitions=parts,
             ),
         )
 
     def _positional(self, index_paths, words, k, value_col, topk) -> DataFrame:
         """Positional counts need no collection stats, so federation is a
         plain scatter-gather of ``topk(blocks, doc_stats_idx, k, url
-        lookup)`` per shard: one job each. A shard missing any
-        query word contributes nothing, with zero jobs."""
+        lookup, partitions)`` per shard: one job each, its exchange sized
+        to the shard. A shard missing any query word contributes
+        nothing, with zero jobs."""
         dep = self._deployment(index_paths)
         infos, _df = dep.lookup(words)
 
         def shard(i):
             if not words or len(infos[i]) < len(set(words)):
                 return []
+            s, lookup = dep.shards[i], dep.url_lookups[i]
             part = topk(
-                self._shard_scan(dep.shards[i], infos[i]),
-                dep.shards[i].doc_stats_idx, k + dep.extra[i], dep.url_lookups[i],
+                self._shard_scan(s, infos[i]), s.doc_stats_idx, k + dep.extra[i],
+                lookup, self._exchange_parts(s),
             )
-            return [(r["url"], int(r[value_col])) for r in part.collect()]
+            return topk_rows(part.collect(), lookup)
 
         return self._federate(dep, shard, k, value_col, "bigint")
 
@@ -912,7 +935,8 @@ class SearchEngine:
         block METADATA only (no posting bytes decoded) — one aggregation
         over the pruned columns plus the driver-side sidecars. Reports
         per-term-bucket posting distribution so skew is visible."""
-        blocks, _dsi, total, _stats, term_stats = self._blocked_handles(index_path)
+        shard = self._blocked_handles(index_path)
+        blocks, total, term_stats = shard.blocks, shard.total, shard.term_stats
         agg = blocks.agg(
             F.count(F.lit(1)).alias("n_blocks"),
             F.countDistinct("term").alias("n_terms"),
@@ -1137,23 +1161,19 @@ class SearchEngine:
         pruned: bool = False,
         analyzer=None,
     ) -> DataFrame:
-        """BM25 top-k; ``pruned=True`` routes through the MaxScore plan
-        (identical scores). Its threshold only drops docs from the final
-        ranking: it still aggregates every posting of the query terms,
-        plus two driver-side jobs (term stats, theta seed), so it is
-        slower than the unpruned plan (~0.5 s against ~0.23 s warm on a
-        400-page build, 4 cores).
+        """BM25 top-k (ranker.score_bm25 with the build-time dictionary).
+        ``pruned`` is accepted for compatibility and changes nothing: on
+        the flat posting index a MaxScore threshold only drops docs from
+        the final ranking — every posting of the query terms is still
+        aggregated — and seeding it cost two more driver-side jobs, so
+        the flat index has one plan (MaxScore runs on the blocked
+        layout, where block metadata lets it skip whole blocks).
 
         ``analyzer``: query-side half of the pluggable-analyzer seam —
         a ``str -> list[str]`` callable producing the same terms the
         index's postings_fn emits (e.g. functions.cjk_query_terms for
         an index built with cjk_aware_postings)."""
         assert self.postings is not None, "build or load first"
-        if pruned:
-            return maxscore_topk(
-                self.spark, query, self.postings, self.doc_stats,
-                self.total_documents, k=k,
-            )
         return score_bm25(
             self.spark, query, self.postings, self.doc_stats,
             self.total_documents, avgdl=self._avgdl, term_df=self.term_df,
@@ -1356,14 +1376,22 @@ class SearchEngine:
         """Single-job BM25 top-k off the pinned serving state (score
         identical to search_bm25; property-tested).
 
+        Serving shape: the query is ONE literal-substituted SQL text over
+        the cached relation (wand.bm25_sql, the blocked path's kernel:
+        idf as a literal map, every number a DOUBLE literal), so building
+        it is one ``spark.sql`` call and the returned DataFrame's collect
+        is the one Spark job. Its exchange keeps the session's partition
+        count: a forced one-partition exchange allocated more per request
+        here.
+
         ``required``/``excluded``: boolean filters (the `+term -term`
         syntax) — results must contain every required term and no
         excluded term. A filtered query scans the cached serving
         relation once for query ∪ required ∪ excluded terms and
-        aggregates per url into the score plus presence flags
-        (wand.filtered_scores, the blocked path's shape), so it stays
-        one job. A required term absent from the dictionary
-        short-circuits empty; an absent excluded term is a no-op."""
+        aggregates per url into the score plus presence flags (the
+        blocked path's shape), so it stays one job. A required term
+        absent from the dictionary short-circuits empty; an absent
+        excluded term is a no-op."""
         assert getattr(self, "_served", None) is not None, "enable_serving first"
         words = sorted({w.lower() for w in expand_query(query)})
         hit = [w for w in words if w in self._dict]
@@ -1373,26 +1401,13 @@ class SearchEngine:
             return _local_result_df(self.spark, [])
         excluded = [w for w in excluded if w in self._dict]
         n = float(self.total_documents)
-        partial = bm25_partial(
-            F.col("tf"), F.col("n_term_entries"),
-            idf_map({w: bm25_idf(n, self._dict[w]) for w in hit}), self._avgdl, k1, b,
-        )
-        if required or excluded:
-            scanned = self._served.where(
-                F.col("term").isin(sorted({*hit, *required, *excluded}))
-            )
-            by_url = filtered_scores(
-                scanned.select("url", "term", partial.alias("partial")),
-                "url", hit, required, excluded,
-            )
-        else:
-            by_url = (
-                self._served.where(F.col("term").isin(hit))
-                .select("url", partial.alias("partial"))
-                .groupBy("url")
-                .agg(F.sum("partial").alias("score"))
-            )
-        return by_url.orderBy(F.desc("score"), F.asc("url")).limit(k)
+        scanned = sql.quotes(sorted({*hit, *required, *excluded}))
+        return sql.over(self._served, lambda v: bm25_sql(
+            f"(SELECT url, term, tf, n_term_entries AS dl FROM {v} "
+            f"WHERE term IN ({scanned}))",
+            "url", hit, {w: bm25_idf(n, self._dict[w]) for w in hit},
+            self._avgdl, k1, b, required, excluded, k=k,
+        ))
 
     def serving_clone(self) -> "SearchEngine":
         """A SearchEngine bound to a DEDICATED serving SparkSession —

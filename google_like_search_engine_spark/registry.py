@@ -400,11 +400,14 @@ def _multimodal_image_features(spark, sf_dir):
 
 
 def _bm25_maxscore_topk(spark, sf_dir):
-    """Exact BM25 top-k through the MaxScore/WAND pruned path over the
-    stemmed posting index (exactness vs the naive scorer is
-    property-tested; the SQL-oracle variant is bm25_search)."""
+    """Exact BM25 top-k over the stemmed flat posting index. The flat
+    index has one plan, ranker.score_bm25 (a MaxScore threshold there
+    only filters the final ranking, so the pruned form did no less
+    work); the pruned blocked path has its own oracle row
+    (bm25_maxscore_threshold), and the SQL-oracle variant is
+    bm25_search."""
     from .indexer import build_postings
-    from .wand import maxscore_topk
+    from .ranker import score_bm25
 
     docs = c.load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -416,7 +419,7 @@ def _bm25_maxscore_topk(spark, sf_dir):
         F.sum("tf").alias("n_term_entries")
     )
     n = docs.count()
-    out = maxscore_topk(spark, "spark shuffle join window", postings, doc_stats, n, k=20)
+    out = score_bm25(spark, "spark shuffle join window", postings, doc_stats, n).limit(20)
     return out.select("url", F.round("score", 4).alias("score"))
 
 
@@ -523,10 +526,10 @@ def _rolling_fingerprints(spark, sf_dir):
 
 
 # Implemented and tested, but NOT in the driver gate (50-entry cap).
-# bm25_maxscore_topk (the FLAT-posting MaxScore path) is demoted now
-# that the blocked pruned path has a full oracle row
-# (bm25_maxscore_threshold); flat-path exactness stays property-tested
-# against the naive scorer in tests/test_wand.py.
+# bm25_maxscore_topk (flat-index BM25 top-k) is demoted now that the
+# blocked pruned path has a full oracle row (bm25_maxscore_threshold);
+# the blocked MaxScore path's exactness stays property-tested against
+# the naive scorer in tests/test_wand_and_lineage.py.
 EXTRA_QUERIES = {
     "search_pipeline": _search_pipeline,
     "rolling_fingerprints": _rolling_fingerprints,

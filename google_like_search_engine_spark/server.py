@@ -206,18 +206,24 @@ def make_server(
         }
 
     # lazily-loaded, pinned embeddings relation for /hybrid (the
-    # vector retriever's input); loaded once under a lock — requests
-    # after the first reuse the cached DataFrame
+    # vector retriever's input) and, up to the forward-index cap, a
+    # driver-side {url: vector} map for the qurl point read (the
+    # url_dict stand-in for the reference's KVS get); loaded once under
+    # a lock — requests after the first reuse both
     emb_lock = threading.Lock()
-    emb_state: dict = {"df": None}
+    emb_state: dict = {"df": None, "vectors": None}
 
     def _emb_df():
         with emb_lock:
             if emb_state["df"] is None:
                 df = engine.spark.read.parquet(embeddings_path).persist()
-                df.count()
+                if df.count() <= engine.URL_DICT_CAP:
+                    vectors: dict = {}
+                    for r in df.select("url", "embedding").collect():
+                        vectors.setdefault(r["url"], r["embedding"])
+                    emb_state["vectors"] = vectors
                 emb_state["df"] = df
-            return emb_state["df"]
+            return emb_state["df"], emb_state["vectors"]
 
     from collections import OrderedDict
 
@@ -590,17 +596,17 @@ def make_server(
                     return
                 from pyspark.sql import functions as F
 
-                emb = _emb_df()
-                row = (
-                    emb.where(F.col("url") == qurl)
-                    .select("embedding")
-                    .take(1)
-                )
-                if not row:
+                emb, vectors = _emb_df()
+                if vectors is not None:
+                    vec = vectors.get(qurl)
+                else:  # past the cap: one lookup job per request
+                    row = emb.where(F.col("url") == qurl).select("embedding").take(1)
+                    vec = row[0][0] if row else None
+                if vec is None:
                     self._json(404, {"error": f"no embedding for url {qurl!r}"})
                     return
                 res = engine.search_hybrid_rrf(
-                    paths, query, emb, row[0][0],
+                    paths, query, emb, vec,
                     k=k, id_col="url",
                 )
                 rows = [

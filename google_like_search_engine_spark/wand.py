@@ -25,14 +25,16 @@ tests/test_wand_and_lineage.py and tests/test_blocked_search.py):
    full scan; Catalyst turns the term filter into partition pruning
    when postings are stored partitioned/bucketed by term.
 
-On blocked postings (compression.block_postings) step 4's semi-join
-additionally skips whole blocks via (base, max_doc_index, max_tf)
-metadata — the block-max part; the flat-posting form below keeps the
-same plan shape.
+It runs on blocked postings (compression.block_postings), where step
+4's semi-join additionally skips whole blocks via (base,
+max_doc_index, max_tf) metadata — the block-max part. The flat
+posting index has one plan, ranker.score_bm25: its per-query work is
+one aggregation over the query terms' postings either way.
 
 Every path scores through one kernel: ``bm25_idf`` for idf and
 ``bm25_partial`` for a term's contribution (a Column in plans, a float
-for upper bounds).
+for upper bounds), whose SQL-text form ``bm25_sql`` is the serving
+paths' per-doc top-k.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ import math
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from . import sqltext as sql
 from .ranker import expand_query
 
 _SCORED = "url string, score double"
@@ -91,28 +94,63 @@ def entry_partials(entries, idf: dict, avgdl, k1=1.2, b=0.75):
     )
 
 
-def filtered_scores(partials: DataFrame, key: str, words, required, excluded) -> DataFrame:
-    """(``key``, score) for `+term -term` filtered BM25: ONE per-doc
-    aggregation of (``key``, term, partial) rows scanned for words ∪
-    required ∪ excluded into score = sum(partial of ``words``), one
-    max(term == r) flag per required term and one max(term ∈ excluded)
-    flag; a doc survives with every required flag, no excluded flag and
-    a score (it holds a query word). No per-filter semi/anti join, so
-    the served and blocked paths each stay one job."""
-    keep = F.col("score").isNotNull()
-    flags = []
-    for i, w in enumerate(sorted(set(required))):
-        flags.append(F.max(F.col("term") == w).alias(f"_req{i}"))
-        keep &= F.col(f"_req{i}")
-    if excluded:
-        flags.append(F.max(F.col("term").isin(sorted(set(excluded)))).alias("_exc"))
-        keep &= ~F.col("_exc")
-    score = F.sum(F.when(F.col("term").isin(list(words)), F.col("partial")))
+def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.2,
+             b: float = 0.75, required=(), excluded=(), k: int | None = None,
+             partitions: int | None = None) -> str:
+    """The per-doc BM25 top-k as ONE SQL text, the shared kernel of the
+    served and blocked paths: building it is one ``spark.sql`` call
+    instead of a py4j round trip per Column. ``rows`` is a FROM item of
+    (``key``, term, tf, dl) rows already filtered to the scanned terms.
+
+    Every constant is a literal: idf a ``map(...)[term]`` and each
+    number a DOUBLE, so the partial is ``bm25_partial``'s Column
+    expression operand for operand and scores match it bit for bit.
+    Unfiltered, a doc's score is the sum of its partials. With
+    ``required``/``excluded`` (`+term -term`, rows scanned for words ∪
+    required ∪ excluded) it is ONE aggregation into score = the sum of
+    the ``words``' partials, one max(term = r) flag per required term
+    and one max(term IN excluded) flag; a doc survives with every
+    required flag, no excluded flag and a score (it holds a query
+    word) — no per-filter semi/anti join. With ``k`` the text ends in
+    ORDER BY (score DESC, ``key`` ASC) LIMIT k; ``partitions`` sizes
+    the aggregation's exchange (a REPARTITION hint on ``key``) instead
+    of spark.sql.shuffle.partitions."""
+    idf_sql = "map(" + ", ".join(
+        f"{sql.quote(t)}, {sql.dbl(v)}" for t, v in idf.items()
+    ) + ")[term]"
+    partial = (
+        f"{idf_sql} * (tf * {sql.dbl(k1 + 1)}) / "
+        f"(tf + (dl * {sql.dbl(b)} / {sql.dbl(avgdl)} + {sql.dbl(1 - b)}) * {sql.dbl(k1)})"
+    )
+    hint = f"/*+ REPARTITION({int(partitions)}, {key}) */ " if partitions else ""
+    scored = f"SELECT {hint}{key}, term, {partial} AS partial FROM {rows}"
+    if required or excluded:
+        req = sorted(set(required))
+        flags = [f"MAX(term = {sql.quote(w)}) AS _req{i}" for i, w in enumerate(req)]
+        keep = ["score IS NOT NULL"] + [f"_req{i}" for i in range(len(req))]
+        if excluded:
+            flags.append(f"MAX(term IN ({sql.quotes(sorted(set(excluded)))})) AS _exc")
+            keep.append("NOT _exc")
+        per_doc = (
+            f"SELECT {key}, score FROM (SELECT {key}, SUM(CASE WHEN term IN "
+            f"({sql.quotes(words)}) THEN partial END) AS score, {', '.join(flags)} "
+            f"FROM ({scored}) GROUP BY {key}) WHERE {' AND '.join(keep)}"
+        )
+    else:
+        per_doc = f"SELECT {key}, SUM(partial) AS score FROM ({scored}) GROUP BY {key}"
+    if k is None:
+        return per_doc
+    return f"{per_doc} ORDER BY score DESC, {key} ASC LIMIT {int(k)}"
+
+
+def entries_sql(view: str, terms) -> str:
+    """(term, doc_index, tf, dl) rows of ``terms`` from a blocks relation
+    bound to ``view``: compression.scoring_entries as SQL text (the
+    columnar arrays exploded in codegen, no Python worker)."""
     return (
-        partials.groupBy(key)
-        .agg(score.alias("score"), *flags)
-        .where(keep)
-        .select(key, "score")
+        "(SELECT term, base + e.doc_offs AS doc_index, e.tfs AS tf, e.dls AS dl "
+        "FROM (SELECT term, base, explode(arrays_zip(doc_offs, tfs, dls)) AS e "
+        f"FROM {view} WHERE term IN ({sql.quotes(terms)})))"
     )
 
 
@@ -142,9 +180,7 @@ def _local_result_df(spark: SparkSession, rows: list, schema: str = _SCORED) -> 
         return spark.sql(f"SELECT {nulls} WHERE false")
 
     def lit(v, t: str) -> str:
-        if t == "string":
-            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-        return f"CAST({v!r} AS {t.upper()})"
+        return sql.quote(v) if t == "string" else f"CAST({v!r} AS {t.upper()})"
 
     names = ", ".join(n for n, _t in cols)
     vals = ", ".join(
@@ -181,6 +217,15 @@ def _term_stats(qblocks: DataFrame, words: list, term_stats: dict | None) -> dic
     }
 
 
+def topk_rows(rows, url_lookup: dict | None) -> list:
+    """(url, value) pairs of a collected top-k: a result keyed by
+    doc_index (a ``url_lookup`` was passed) resolves its k winners'
+    urls through the lookup."""
+    if url_lookup is None:
+        return [tuple(r) for r in rows]
+    return [(url_lookup[d], v) for d, v in rows]
+
+
 def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
           value_col="score", value_type="double") -> DataFrame:
     """Top ``k`` of (doc_index, value) by (value desc, url), then
@@ -188,19 +233,21 @@ def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
 
     With ``url_lookup`` (the driver-side {doc_index: url} forward
     index — the in-process stand-in for the reference's KVS doc-store
-    lookup after ranking) this is ONE Spark job: TakeOrdered collects
-    the k winners and urls resolve driver-side. Engine layouts assign
-    doc_index in url order, so the doc_index tiebreak IS the url
-    tiebreak. Without it the url join runs distributed, and a result
-    that still reads ``cached`` inputs is materialized executor-side
-    first (k rows, no driver round-trip)."""
+    lookup after ranking) the result stays keyed by doc_index, and its
+    collect is ONE Spark job: TakeOrdered collects the k winners and the
+    caller resolves their urls driver-side (``topk_rows``). Engine
+    layouts assign doc_index in url order, so the doc_index tiebreak IS
+    the url tiebreak. A result that still reads ``cached`` inputs is
+    collected here, before they are unpersisted. Without a lookup the
+    url join runs distributed, and such a result is materialized
+    executor-side first (k rows, no driver round-trip)."""
     if url_lookup is not None:
-        rows = by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k).collect()
-        cast = float if value_type == "double" else int
-        out = _local_result_df(
-            spark, [(url_lookup[r["doc_index"]], cast(r[value_col])) for r in rows],
-            f"url string, {value_col} {value_type}",
-        )
+        out = by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k)
+        if cached:
+            out = _local_result_df(
+                spark, [tuple(r) for r in out.collect()],
+                f"doc_index bigint, {value_col} {value_type}",
+            )
     else:
         out = (
             by_doc.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
@@ -231,9 +278,17 @@ def blocked_maxscore_topk(
     url_lookup: dict | None = None,
     required: list | None = None,
     excluded: list | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Exact BM25 top-k over the compressed blocked index
     (compression.block_postings output) with block-level skipping.
+
+    Serving shape: a small or filtered query (every query of a
+    benchmark-sized shard) is ONE literal-substituted SQL text
+    (``bm25_sql`` over ``entries_sql``, the served path's kernel), and
+    the returned DataFrame is lazy: its collect is the query's one
+    Spark job. ``partitions`` sizes that aggregation's exchange (the
+    engine passes one partition per block group of the shard).
 
     ``required``/``excluded``: boolean doc filters (`+term -term`
     syntax) — results must contain every required term and no excluded
@@ -241,14 +296,13 @@ def blocked_maxscore_topk(
     A filtered query scans the blocks of words ∪ required ∪ excluded
     ONCE and aggregates per doc into its score (the query words'
     partials) plus one presence flag per required term and one for the
-    excluded set (``filtered_scores``, shared with the served path), so
-    it stays one job. It always scores every matched block: MaxScore's
-    unfiltered upper bounds cannot order a FILTERED top-k. A required
-    term absent from the index leaves its flag false everywhere, hence
-    an empty result, with no dictionary lookup needed.
+    excluded set, so it stays one job. It always scores every matched
+    block: MaxScore's unfiltered upper bounds cannot order a FILTERED
+    top-k. A required term absent from the index leaves its flag false
+    everywhere, hence an empty result, with no dictionary lookup needed.
 
     ``doc_stats_idx``: (doc_index, url, n_term_entries). Score-identical
-    to the flat maxscore_topk / naive scorer (property-tested).
+    to the naive scorer (property-tested).
 
     The block-max mechanics the doc-range-aligned layout enables:
     1. term stats come from block METADATA only (sum n_docs = df,
@@ -270,7 +324,9 @@ def blocked_maxscore_topk(
     result is identical either way (MaxScore is exact).
 
     ``url_lookup``: optional driver-side {doc_index: url} forward
-    index; see ``_topk``.
+    index. With it the result is keyed by doc_index — (doc_index,
+    score) — and the caller resolves the k winners' urls
+    (``topk_rows``); see ``_topk``.
     """
     from .compression import scoring_entries
 
@@ -284,49 +340,47 @@ def blocked_maxscore_topk(
 
     # isin (not a broadcast-join with a literal DF): reaches the parquet
     # scan as PushedFilters In(term, ...) and costs no driver round-trip
-    qblocks = blocks.where(F.col("term").isin(words))
-    cached = [qblocks.persist()] if term_stats is None else []
+    qblocks = None
+    if term_stats is None:
+        qblocks = blocks.where(F.col("term").isin(words)).persist()
     tstats = _term_stats(qblocks, words, term_stats)
-    if not tstats:
-        for df in cached:
-            df.unpersist()
-        return _local_result_df(spark, [])
     idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
+    # a filtered query, or a small one: total matched entries below the
+    # threshold -> pruning saves less than its driver round-trips cost;
+    # score all matched blocks in ONE job, built as one SQL text
+    if not tstats or req or exc or sum(df for df, _mt in tstats.values()) <= small_query_entries:
+        if qblocks is not None:
+            qblocks.unpersist()
+        if not tstats:
+            return _local_result_df(spark, [])
+        scanned = sorted({*words, *req, *exc})
+        by_doc = sql.over(blocks, lambda v: bm25_sql(
+            entries_sql(v, scanned), "doc_index", words, idf, avgdl, k1, b, req, exc,
+            k=None if url_lookup is None else k, partitions=partitions,
+        ))
+        if url_lookup is not None:
+            return by_doc
+        return _topk(spark, by_doc, doc_stats_idx, k, None)
+    # big query: the MaxScore path reads qblocks several times
+    if qblocks is None:
+        qblocks = blocks.where(F.col("term").isin(words)).persist()
     ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
           for t, (_df, mt) in tstats.items()}
-
-    if req or exc:
-        scanned = blocks.where(F.col("term").isin(sorted({*words, *req, *exc})))
-        by_doc = filtered_scores(
-            entry_partials(scoring_entries(scanned), idf, avgdl, k1, b),
-            "doc_index", words, req, exc,
+    # theta from the best term only
+    best = max(ub, key=ub.get)
+    seed = (
+        entry_partials(
+            scoring_entries(qblocks.where(F.col("term") == best)),
+            idf, avgdl, k1, b,
         )
-        return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
-    # small-query fast path: total matched entries below the threshold
-    # -> pruning saves less than its driver round-trips cost; score all
-    # matched blocks in ONE job (the single-job shape of the served
-    # path, engine.search_bm25_served)
-    if sum(df for df, _mt in tstats.values()) <= small_query_entries:
-        entries = scoring_entries(qblocks)
-    else:
-        # big query: the MaxScore path reads qblocks several times
-        if not cached:
-            cached = [qblocks.persist()]
-        # theta from the best term only
-        best = max(ub, key=ub.get)
-        seed = (
-            entry_partials(
-                scoring_entries(qblocks.where(F.col("term") == best)),
-                idf, avgdl, k1, b,
-            )
-            .orderBy(F.desc("partial"))
-            .limit(k)
-            .collect()
-        )
-        theta = float(seed[-1]["partial"]) if len(seed) >= k else 0.0
-        # essential is never empty here: theta <= ub[best]
-        entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
-        cached.append(ess)
+        .orderBy(F.desc("partial"))
+        .limit(k)
+        .collect()
+    )
+    theta = float(seed[-1]["partial"]) if len(seed) >= k else 0.0
+    # essential is never empty here: theta <= ub[best]
+    entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
+    cached = [qblocks, ess]
     by_doc = (
         entry_partials(entries, idf, avgdl, k1, b)
         .groupBy("doc_index")
@@ -483,67 +537,6 @@ def blocked_maxscore_threshold(
     return out
 
 
-def maxscore_topk(
-    spark: SparkSession,
-    query: str,
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    total_documents: int,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    use_stems: bool = True,
-) -> DataFrame:
-    """Exact BM25 top-k with MaxScore pruning. Returns (url, score) desc,
-    identical to ranker.score_bm25(...).limit(k). dl is the postings'
-    own column, so no plan joins; ``doc_stats`` supplies only avgdl and
-    min_dl."""
-    words = _query_words(query, use_stems)
-    if not words:
-        return _local_result_df(spark, [])
-    n = float(total_documents)
-    avgdl, min_dl = _dl_stats(doc_stats, None)
-    matched = postings.where(F.col("term").isin(words)).select(
-        "term", "doc_id", "url", "tf", "dl"
-    )
-
-    # term stats: df and max_tf -> tight upper bound per term
-    tstats = {
-        r["term"]: (int(r["df"]), int(r["max_tf"]))
-        for r in matched.groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"), F.max("tf").alias("max_tf"))
-        .collect()
-    }
-    if not tstats:
-        return _local_result_df(spark, [])
-    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
-    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
-          for t, (_df, mt) in tstats.items()}
-    partial = bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b)
-
-    # theta: exact k-th score scoring only the highest-ub term
-    best = max(ub, key=ub.get)
-    seed = (
-        matched.where(F.col("term") == best)
-        .select(partial.alias("s"))
-        .orderBy(F.desc("s"))
-        .limit(k)
-        .collect()
-    )
-    theta = float(seed[-1]["s"]) if len(seed) >= k else 0.0
-    # candidates: docs holding an essential term, as a presence flag in
-    # the scoring aggregation rather than a semi join on doc_id
-    essential = F.col("term").isin(sorted(essential_terms(ub, theta)))
-    return (
-        matched.groupBy("url")
-        .agg(F.sum(partial).alias("score"), F.max(essential).alias("candidate"))
-        .where("candidate")
-        .select("url", "score")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
-
-
 def blocked_phrase_topk(
     spark: SparkSession,
     phrase: str,
@@ -551,6 +544,7 @@ def blocked_phrase_topk(
     doc_stats_idx: DataFrame,
     k: int = 10,
     url_lookup: dict | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Positional phrase query straight off the compressed blocked index
     — the query the positions varint store exists for (the reference's
@@ -561,12 +555,13 @@ def blocked_phrase_topk(
     words so far that the next word holds, left to right over the
     phrase; a doc counts its surviving phrase ends. ``_positional_topk``
     runs it in one grouped pass with the block skipping and ranking.
-    Returns (url, n_occurrences) by descending count.
+    Returns (url, n_occurrences) by descending count, keyed by
+    doc_index instead with a ``url_lookup`` (see ``_topk``).
     """
     words = [w.lower() for w in phrase.split() if w]
     return _positional_topk(
         spark, words, words[1:], _adjacent, blocks, doc_stats_idx, k,
-        url_lookup, "n_occurrences",
+        url_lookup, "n_occurrences", partitions,
     )
 
 
@@ -578,6 +573,7 @@ def blocked_proximity_topk(
     doc_stats_idx: DataFrame,
     k: int = 10,
     url_lookup: dict | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Proximity query over the compressed blocked index: rank docs by
     the number of anchor positions of ``terms[0]`` that have EVERY
@@ -586,13 +582,14 @@ def blocked_proximity_topk(
     The fold (``_near``) keeps the anchor positions with a position of
     the next distinct non-anchor term within the window;
     ``_positional_topk`` runs it in one grouped pass with the block
-    skipping and ranking. Returns (url, n_matches) desc.
+    skipping and ranking. Returns (url, n_matches) desc, keyed by
+    doc_index instead with a ``url_lookup`` (see ``_topk``).
     """
     words = [w.lower() for w in terms if w]
     return _positional_topk(
         spark, words, list(dict.fromkeys(words[1:])),
         functools.partial(_near, window=int(window)), blocks, doc_stats_idx,
-        k, url_lookup, "n_matches",
+        k, url_lookup, "n_matches", partitions,
     )
 
 
@@ -615,7 +612,7 @@ def _near(p: list, other: list, window: int) -> list:
 
 
 def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
-                     url_lookup, value_col) -> DataFrame:
+                     url_lookup, value_col, partitions=None) -> DataFrame:
     """Shared positional core: ONE grouped Arrow pass keyed by
     ``block_id``, so a query is one Spark job. Blocks are doc-range
     aligned, so a block group holds every posting of its docs. A group
@@ -628,13 +625,10 @@ def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
     survive. Positions are the index's own 1-based blank-counting token
     positions, so results agree with the index by construction.
 
-    The exchange is sized from the shard's doc count (the size of
-    ``url_lookup``, when given) over the build's block span — the number
-    of block groups there can be — capped at
-    spark.sql.shuffle.partitions, which also applies without a lookup
-    (it is only absent past engine.URL_DICT_CAP docs, where the count
-    exceeds any serving partition setting anyway)."""
-    from .compression import BLOCK_SPAN, decode_block
+    ``partitions`` sizes the exchange (the engine passes one partition
+    per block group of the shard); without it
+    spark.sql.shuffle.partitions applies."""
+    from .compression import decode_block
 
     if not words:
         return _local_result_df(spark, [], f"url string, {value_col} bigint")
@@ -659,9 +653,7 @@ def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
                     out[value_col].append(len(p))
         return pd.DataFrame(out, dtype="int64")
 
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if url_lookup is not None:
-        nparts = max(1, min(nparts, -(-len(url_lookup) // BLOCK_SPAN)))
+    nparts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     counts = (
         blocks.where(F.col("term").isin(uniq))
         .select("term", "block_id", "base", "block")

@@ -30,6 +30,31 @@ def spark_jobs(sc):
             sc.setLocalProperty(key, None)
 
 
+@contextmanager
+def py4j_calls(sc):
+    """Record the py4j commands the driver sends to the JVM inside the
+    block, from any thread. Yields a counter: ``calls()`` is the number
+    sent so far, ``calls("sql")`` the number that invoke a JVM method of
+    that name. Object releases are not counted: Python's garbage
+    collector sends them whenever it runs, not when a query asks."""
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def record(command, *args, **kwargs):
+        if not command.startswith("m\n"):  # memory commands: releases
+            sent.append(command.split("\n", 3))
+        return send(command, *args, **kwargs)
+
+    client.send_command = record
+    try:
+        yield lambda method=None: len(sent) if method is None else sum(
+            1 for c in sent if c[0] == "c" and len(c) > 2 and c[2] == method
+        )
+    finally:
+        client.send_command = send
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),

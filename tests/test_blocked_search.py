@@ -1,6 +1,8 @@
 """Blocked-index MaxScore == flat naive BM25 (exactness through the
 compressed path: encode -> block-skip -> decode -> score)."""
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1207,6 +1209,220 @@ def test_no_hit_results_collect_with_zero_jobs(spark, url_hash_shards):
             with spark_jobs(sc) as jobs:
                 assert res.collect() == []
             assert jobs() == 0, res.columns
+    finally:
+        eng.unpersist()
+
+
+def _column_topk(rows, key, words, idf, avgdl, required=(), excluded=(), k=10):
+    """The Column-chain form of wand.bm25_sql's per-doc top-k — the
+    plan the served and blocked paths built before the SQL text — over
+    (``key``, term, tf, dl) rows: one partial per row, summed per doc,
+    with the +/- presence flags when filtered."""
+    from google_like_search_engine_spark.wand import bm25_partial, idf_map
+
+    partial = bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl)
+    scored = rows.select(key, "term", partial.alias("partial"))
+    if not (required or excluded):
+        per_doc = scored.groupBy(key).agg(F.sum("partial").alias("score"))
+    else:
+        keep, flags = F.col("score").isNotNull(), []
+        for i, w in enumerate(sorted(set(required))):
+            flags.append(F.max(F.col("term") == w).alias(f"_req{i}"))
+            keep &= F.col(f"_req{i}")
+        if excluded:
+            flags.append(F.max(F.col("term").isin(sorted(set(excluded)))).alias("_exc"))
+            keep &= ~F.col("_exc")
+        score = F.sum(F.when(F.col("term").isin(list(words)), F.col("partial")))
+        per_doc = (
+            scored.groupBy(key).agg(score.alias("score"), *flags)
+            .where(keep).select(key, "score")
+        )
+    return per_doc.orderBy(F.desc("score"), F.asc(key)).limit(k).collect()
+
+
+_IDENTITY_CASES = [
+    ("spark shuffle", [], []),
+    ("index merge join table", [], []),
+    ("stream block batch rank", [], []),
+    ("spark shuffle", ["index"], []),
+    ("index merge join table", [], ["spark"]),
+    ("query join", ["row"], ["block"]),
+]
+
+
+def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards, monkeypatch):
+    """The one-SQL-text BM25 kernel (wand.bm25_sql) gives the Column
+    kernel's urls and scores bit for bit (==, no tolerance), with and
+    without +/- filters, on a served, a blocked and a 2-shard index.
+    Unfiltered, the Column kernel is the MaxScore path the engine takes
+    with ``small_query_entries=0``; filtered (which never prunes), and
+    on the served relation, it is the Column chain the paths built
+    before the text (``_column_topk``) under the same stats."""
+    from google_like_search_engine_spark import engine as engine_mod
+    from google_like_search_engine_spark.compression import scoring_entries
+    from google_like_search_engine_spark.ranker import expand_query
+    from google_like_search_engine_spark.wand import bm25_idf
+
+    base, full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    served = SearchEngine(spark)
+    served.postings, served.doc_stats, served.total_documents = (
+        base.postings, base.doc_stats, 60
+    )
+    served.term_df = base.postings.groupBy("term").agg(
+        F.countDistinct("doc_id").alias("df")
+    )
+    served._avgdl = float(base.doc_stats.agg(F.avg("n_term_entries")).collect()[0][0])
+    assert served.enable_serving()
+    column_kernel = functools.partial(
+        engine_mod.blocked_maxscore_topk, small_query_entries=0
+    )
+
+    def shard_reference(dep, i, words, req, exc):
+        infos, df = dep.lookup(words + req + exc)
+        info, lookup = infos[i], dep.url_lookups[i]
+        idf = {w: bm25_idf(float(dep.n), df[w]) for w in words if w in info}
+        if not idf or any(w not in info for w in req):
+            return []
+        rows = scoring_entries(
+            dep.shards[i].blocks.drop("term_bucket")
+            .where(F.col("term").isin(sorted({*words, *req, *exc})))
+        )
+        got = _column_topk(rows, "doc_index", words, idf, dep.avgdl, req, exc)
+        return [(lookup[r["doc_index"]], r["score"]) for r in got]
+
+    try:
+        for query, req, exc in _IDENTITY_CASES:
+            words = sorted({w.lower() for w in expand_query(query)})
+            hit = [w for w in words if w in served._dict]
+            got = [tuple(r) for r in served.search_bm25_served(
+                query, k=10, required=req, excluded=exc).collect()]
+            srows = served._served.where(
+                F.col("term").isin(sorted({*hit, *req, *exc}))
+            ).select("url", "term", "tf", F.col("n_term_entries").alias("dl"))
+            want = _column_topk(
+                srows, "url", hit,
+                {w: bm25_idf(60.0, served._dict[w]) for w in hit},
+                served._avgdl, req, exc,
+            )
+            assert got == [tuple(r) for r in want] and got, (query, req, exc)
+            for shard_paths in ([full], paths):
+                got = [tuple(r) for r in eng.search_bm25_sharded(
+                    shard_paths, query, k=10, required=req, excluded=exc).collect()]
+                if req or exc:
+                    dep = eng._deployment(shard_paths)
+                    merged = [
+                        row for i in range(len(shard_paths))
+                        for row in shard_reference(dep, i, words, req, exc)
+                    ]
+                    want = sorted(merged, key=lambda x: (-x[1], x[0]))[:10]
+                else:
+                    with monkeypatch.context() as m:
+                        m.setattr(engine_mod, "blocked_maxscore_topk", column_kernel)
+                        want = [tuple(r) for r in eng.search_bm25_sharded(
+                            shard_paths, query, k=10).collect()]
+                assert got == want and got, (query, req, exc, shard_paths)
+    finally:
+        served._served.unpersist()
+        eng.unpersist()
+
+
+def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
+    """Query words and +/- terms are user input spliced into the SQL
+    text as string literals: quotes, backslashes and comment markers in
+    them stay data. Words the index lacks add nothing, so the answer is
+    the plain query's."""
+    _eng, full, _paths = url_hash_shards
+    eng = SearchEngine(spark)
+    hostile = ["it's", "back\\slash", "x') OR ('1'='1", "--", "/*"]
+    try:
+        want = [tuple(r) for r in eng.search_bm25_blocked(full, "spark").collect()]
+        got = eng.search_bm25_blocked(
+            full, " ".join(["spark", *hostile]), excluded=hostile
+        ).collect()
+        assert [tuple(r) for r in got] == want and want
+    finally:
+        eng.unpersist()
+
+
+def _engine_shard_call(eng, path, query, **kw):
+    """``run()`` makes the call search_bm25_sharded makes for a one-shard
+    deployment — blocked_maxscore_topk over the pruned shard scan with
+    the shard's dictionary, url lookup and sized exchange — and returns
+    its lazy DataFrame."""
+    from google_like_search_engine_spark.ranker import expand_query
+
+    words = sorted({w.lower() for w in expand_query(query)})
+    shard = eng._blocked_handles(path)
+    lookup = eng._blocked_url_dict(path)
+    ts = {w: v for w, v in shard.term_stats.items() if w in words}
+
+    def run():
+        return blocked_maxscore_topk(
+            eng.spark, query, eng._shard_scan(shard, ts), shard.doc_stats_idx,
+            shard.total, k=10, doc_stats_agg=shard.stats, term_stats=ts,
+            url_lookup=lookup, partitions=eng._exchange_parts(shard), **kw,
+        )
+
+    return run
+
+
+def test_warm_shard_bm25_query_is_one_sql_text(spark, url_hash_shards):
+    """A warm 2-word shard BM25 query, plain or +/- filtered, is built
+    as ONE spark.sql text and runs with at most 40 py4j commands in
+    all (construction, the shard scan's pruning, collect); the Column
+    chain it replaces sent ~200. Its rows come straight from that
+    collect, keyed by doc_index, and resolve through the url lookup."""
+    from tests.conftest import py4j_calls
+
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    try:
+        with eng.low_latency():
+            want = [tuple(r) for r in eng.search_bm25_blocked(paths[0], "spark shuffle").collect()]
+            for kw in ({}, {"required": ["index"], "excluded": ["merge"]}):
+                run = _engine_shard_call(eng, paths[0], "spark shuffle", **kw)
+                run().collect()
+                with py4j_calls(spark.sparkContext) as calls:
+                    rows = run().collect()
+                assert calls("sql") == 1 and calls() <= 40, (kw, calls())
+                assert rows and rows[0][0] in eng._blocked_url_dict(paths[0])
+                if not kw:
+                    lookup = eng._blocked_url_dict(paths[0])
+                    assert [(lookup[d], s) for d, s in rows] == want
+    finally:
+        eng.unpersist()
+
+
+def test_shard_exchange_is_sized_to_the_shard(spark, url_hash_shards):
+    """A per-shard query's exchange is sized from the shard's doc count
+    over its recorded meta.block_span: a test shard (~30 docs, one
+    block group) plans ONE shuffle partition for BM25 (plain and
+    filtered) and phrase, though the session default is 8."""
+    from google_like_search_engine_spark.wand import blocked_phrase_topk
+
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    try:
+        with eng.low_latency():
+            shard = eng._blocked_handles(paths[0])
+            assert shard.block_span == 8192 and eng._exchange_parts(shard) == 1
+            info = eng._shard_terms(paths[0], shard, ["index", "spark"])
+            plans = [
+                _engine_shard_call(eng, paths[0], "spark shuffle")(),
+                _engine_shard_call(
+                    eng, paths[0], "spark shuffle", required=["index"]
+                )(),
+                blocked_phrase_topk(
+                    spark, "spark index", eng._shard_scan(shard, info),
+                    shard.doc_stats_idx, url_lookup=eng._blocked_url_dict(paths[0]),
+                    partitions=eng._exchange_parts(shard),
+                ),
+            ]
+            for df in plans:
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert plan.count("Exchange") == 1, plan
+                assert "Exchange SinglePartition" in plan, plan
     finally:
         eng.unpersist()
 

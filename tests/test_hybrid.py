@@ -248,3 +248,63 @@ def test_warm_hybrid_is_two_spark_jobs(hybrid_setup):
                 blocked, "index merge", emb, qv, k=5, id_col="url"
             ).collect()
     assert jobs() == 2, jobs()
+
+
+def test_cosine_topk_matches_plain_python(hybrid_setup):
+    """simsearch.cosine_topk (one SQL text) against a plain-Python
+    cosine over the same vectors: same order (ties by url) and scores
+    to rel 1e-12."""
+    import math
+
+    from google_like_search_engine_spark.analytics.simsearch import cosine_topk
+
+    _eng, _blocked, emb = hybrid_setup
+    vecs = {r["url"]: [float(x) for x in r["embedding"]] for r in emb.collect()}
+    for qurl in sorted(vecs)[:3]:
+        q = vecs[qurl]
+        qn = math.sqrt(sum(x * x for x in q))
+        want = sorted(
+            (
+                (u, sum(a * b for a, b in zip(v, q)) / (math.sqrt(sum(a * a for a in v)) * qn))
+                for u, v in vecs.items()
+            ),
+            key=lambda t: (-t[1], t[0]),
+        )[:40]
+        got = [(r["url"], r["cos_sim"]) for r in cosine_topk(emb, q, k=40, id_col="url").collect()]
+        assert [u for u, _s in got] == [u for u, _s in want], qurl
+        for (_u, a), (_v, b) in zip(got, want):
+            assert a == pytest.approx(b, rel=1e-12)
+
+
+def test_warm_hybrid_route_needs_no_vector_lookup_job(hybrid_setup, tmp_path_factory):
+    """/hybrid resolves ?qurl= from a driver-side {url: vector} map
+    built once with the embeddings: a warm request runs TWO Spark jobs
+    (the BM25 shard job and the cosine job), one fewer than a per-request
+    lookup job made, and an unknown qurl is still a 404."""
+    eng, blocked, emb = hybrid_setup
+    emb_path = str(tmp_path_factory.mktemp("hyb_emb_jobs") / "emb.parquet")
+    emb.write.parquet(emb_path)
+    srv = make_server(
+        eng, "127.0.0.1", 0, blocked_path=blocked, embeddings_path=emb_path
+    )
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    tracker = eng.spark.sparkContext.statusTracker()
+    try:
+        qurl = eng.search_bm25_blocked(blocked, QUERY, k=1).collect()[0]["url"]
+        for query in (QUERY, "index merge"):
+            q = urllib.parse.urlencode({"query": query, "qurl": qurl, "k": 5})
+            # handler threads carry no job group: count the ungrouped
+            # jobs the second (warm) request adds
+            before = set(tracker.getJobIdsForGroup(None))
+            with urllib.request.urlopen(f"{base}/hybrid?{q}", timeout=120) as resp:
+                assert resp.status == 200 and json.loads(resp.read())["results"]
+            new_jobs = set(tracker.getJobIdsForGroup(None)) - before
+        assert len(new_jobs) == 2, new_jobs
+        q = urllib.parse.urlencode({"query": QUERY, "qurl": "http://nope/", "k": 5})
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"{base}/hybrid?{q}", timeout=60)
+        assert err.value.code == 404
+    finally:
+        srv.shutdown()

@@ -527,6 +527,20 @@ def test_warm_filtered_served_query_is_one_spark_job(engine):
     assert jobs() == 1 and rows
 
 
+def test_warm_served_query_is_one_sql_text(engine):
+    """A warm served BM25 request, plain or +/- filtered, is built as
+    ONE spark.sql text over the serving cache and runs with at most 40
+    py4j commands, collect included; the Column chain it replaces sent
+    ~400."""
+    from tests.conftest import py4j_calls
+
+    for kw in ({}, {"required": ["search"], "excluded": ["engine"]}):
+        engine.search_bm25_served("search engine", k=10, **kw).collect()
+        with py4j_calls(engine.spark.sparkContext) as calls:
+            rows = engine.search_bm25_served("index merge", k=10, **kw).collect()
+        assert rows and calls("sql") == 1 and calls() <= 40, (kw, calls())
+
+
 def test_no_hit_served_query_collects_with_zero_jobs(engine):
     """A served query with no indexed term returns a LocalRelation:
     its collect schedules no Spark job."""

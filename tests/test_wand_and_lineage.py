@@ -14,7 +14,7 @@ from google_like_search_engine_spark.plans.lineage import (
     read_lineage,
 )
 from google_like_search_engine_spark.ranker import score_bm25
-from google_like_search_engine_spark.wand import maxscore_topk
+from google_like_search_engine_spark.wand import blocked_maxscore_topk
 
 VOCAB = ["spark", "index", "query", "merge", "shuffle", "join", "table",
          "scan", "row", "page", "rank", "term", "block", "batch", "stream"]
@@ -39,19 +39,35 @@ def _random_docs(spark, n=120, seed=11):
     ("spark missingword", 5),
 ])
 def test_maxscore_equals_naive_bm25(spark, query, k):
+    """The MaxScore plan (theta seed, essential terms, block-max
+    candidates: forced by ``small_query_entries=0``) returns the naive
+    top-k. MaxScore runs on the blocked layout only; the flat index's
+    one plan is the naive scorer itself."""
+    from google_like_search_engine_spark.compression import (
+        assign_doc_indexes,
+        block_postings,
+    )
+
     docs = _random_docs(spark)
     postings = build_postings(docs).cache()
     doc_stats = postings.groupBy("doc_id", "url").agg(
         F.sum("tf").alias("n_term_entries")
     ).cache()
+    idx = assign_doc_indexes(docs, order_col="url").cache()
+    blocks = block_postings(postings.join(idx, "doc_id"), block_span=16).cache()
+    doc_stats_idx = doc_stats.join(idx, "doc_id").select(
+        "doc_index", "url", "n_term_entries"
+    ).cache()
     n = docs.count()
     naive = score_bm25(spark, query, postings, doc_stats, n).limit(k).collect()
-    fast = maxscore_topk(spark, query, postings, doc_stats, n, k=k).collect()
+    fast = blocked_maxscore_topk(
+        spark, query, blocks, doc_stats_idx, n, k=k, small_query_entries=0
+    ).collect()
     assert [r["url"] for r in fast] == [r["url"] for r in naive], query
     for a, b in zip(fast, naive):
         assert a["score"] == pytest.approx(b["score"], rel=1e-9)
-    postings.unpersist()
-    doc_stats.unpersist()
+    for df in (postings, doc_stats, idx, blocks, doc_stats_idx):
+        df.unpersist()
 
 
 def test_bm25_idf_python_twin_matches_jvm_log(spark):
