@@ -303,18 +303,19 @@ def block_postings(
     )
 
 
+# The one decode of the columnar block arrays into scoring entries, as
+# SQL expressions: ``scoring_entries`` applies them to a DataFrame and
+# wand.entries_sql embeds them in the serving text.
+ENTRY_EXPLODE = "explode(arrays_zip(doc_offs, tfs, dls)) AS e"
+ENTRY_COLUMNS = ("term", "base + e.doc_offs AS doc_index", "e.tfs AS tf", "e.dls AS dl")
+
+
 def scoring_entries(blocks: DataFrame) -> DataFrame:
     """(term, doc_index, tf, dl) from the columnar arrays — pure
     arrays_zip + explode, stays in whole-stage codegen (the BM25 hot
     path never touches a Python worker), and ``dl`` rides along, so
     scoring needs no doc-length join."""
-    e = F.explode(F.arrays_zip("doc_offs", "tfs", "dls")).alias("e")
-    return blocks.select("term", "base", e).select(
-        "term",
-        (F.col("base") + F.col("e.doc_offs")).alias("doc_index"),
-        F.col("e.tfs").alias("tf"),
-        F.col("e.dls").alias("dl"),
-    )
+    return blocks.selectExpr("term", "base", ENTRY_EXPLODE).selectExpr(*ENTRY_COLUMNS)
 
 
 def unblock_postings(blocks: DataFrame) -> DataFrame:

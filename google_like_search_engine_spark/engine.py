@@ -750,7 +750,9 @@ class SearchEngine:
         the merge as tuples straight from that job's collect.
 
         ``required``/``excluded``: `+term -term` filters. Doc membership
-        is shard-local, so applying them per shard is exact."""
+        is shard-local, so applying them per shard is exact: a required
+        term absent from a shard empties it, an absent excluded term is
+        dropped (as on the served path)."""
         words = sorted({w.lower() for w in expand_query(query)})
         req = [w.lower() for w in (required or [])]
         exc = [w.lower() for w in (excluded or [])]
@@ -765,7 +767,8 @@ class SearchEngine:
             part = blocked_maxscore_topk(
                 self.spark, query, self._shard_scan(s, info), s.doc_stats_idx,
                 dep.n, k=k + dep.extra[i], doc_stats_agg=(dep.avgdl, s.stats[1]),
-                term_stats=gts, url_lookup=lookup, required=req, excluded=exc,
+                term_stats=gts, url_lookup=lookup, required=req,
+                excluded=[w for w in exc if w in info],
                 partitions=self._exchange_parts(s),
             )
             return topk_rows(part.collect(), lookup)
@@ -1158,16 +1161,14 @@ class SearchEngine:
         self,
         query: str,
         k: int = 10,
-        pruned: bool = False,
         analyzer=None,
     ) -> DataFrame:
         """BM25 top-k (ranker.score_bm25 with the build-time dictionary).
-        ``pruned`` is accepted for compatibility and changes nothing: on
-        the flat posting index a MaxScore threshold only drops docs from
-        the final ranking — every posting of the query terms is still
-        aggregated — and seeding it cost two more driver-side jobs, so
-        the flat index has one plan (MaxScore runs on the blocked
-        layout, where block metadata lets it skip whole blocks).
+        The flat posting index has this one plan: a MaxScore threshold
+        there would only drop docs from the final ranking — every
+        posting of the query terms is still aggregated — so MaxScore
+        runs on the blocked layout, where block metadata lets it skip
+        whole blocks.
 
         ``analyzer``: query-side half of the pluggable-analyzer seam —
         a ``str -> list[str]`` callable producing the same terms the

@@ -28,6 +28,7 @@ Run: ``python scripts/serve.py --index <dir> --port 8080``.
 from __future__ import annotations
 
 import json
+from array import array
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -206,21 +207,27 @@ def make_server(
         }
 
     # lazily-loaded, pinned embeddings relation for /hybrid (the
-    # vector retriever's input) and, up to the forward-index cap, a
-    # driver-side {url: vector} map for the qurl point read (the
+    # vector retriever's input) and, while the vectors hold at most
+    # URL_DICT_CAP * 16 elements in all (32 MB as packed doubles), a
+    # driver-side {url: array('d')} map for the qurl point read (the
     # url_dict stand-in for the reference's KVS get); loaded once under
     # a lock — requests after the first reuse both
     emb_lock = threading.Lock()
     emb_state: dict = {"df": None, "vectors": None}
 
     def _emb_df():
+        from pyspark.sql import functions as F
+
         with emb_lock:
             if emb_state["df"] is None:
                 df = engine.spark.read.parquet(embeddings_path).persist()
-                if df.count() <= engine.URL_DICT_CAP:
+                # one job: materializes the cache and sizes the map
+                elems = df.agg(F.sum(F.size("embedding"))).collect()[0][0]
+                if (elems or 0) <= engine.URL_DICT_CAP * 16:
                     vectors: dict = {}
-                    for r in df.select("url", "embedding").collect():
-                        vectors.setdefault(r["url"], r["embedding"])
+                    for url, vec in df.select("url", "embedding").collect():
+                        if url not in vectors:
+                            vectors[url] = None if vec is None else array("d", vec)
                     emb_state["vectors"] = vectors
                 emb_state["df"] = df
             return emb_state["df"], emb_state["vectors"]
@@ -599,7 +606,7 @@ def make_server(
                 emb, vectors = _emb_df()
                 if vectors is not None:
                     vec = vectors.get(qurl)
-                else:  # past the cap: one lookup job per request
+                else:  # past the bound: one lookup job per request
                     row = emb.where(F.col("url") == qurl).select("embedding").take(1)
                     vec = row[0][0] if row else None
                 if vec is None:

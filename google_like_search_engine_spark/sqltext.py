@@ -28,8 +28,13 @@ def dbl(x) -> str:
 
 
 def quote(value: str) -> str:
-    """A string literal (backslash-escaped, as Spark renders its own)."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """A string literal (backslash-escaped, as Spark renders its own).
+    ``$`` is written as the escape ``\\u0024``: Spark substitutes
+    ``${var}`` in the raw text before parsing, string literals included
+    (spark.sql.variable.substitute), so no ``${`` may reach it."""
+    return "'" + (
+        value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    ) + "'"
 
 
 def quotes(values) -> str:

@@ -145,11 +145,13 @@ def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.
 
 def entries_sql(view: str, terms) -> str:
     """(term, doc_index, tf, dl) rows of ``terms`` from a blocks relation
-    bound to ``view``: compression.scoring_entries as SQL text (the
-    columnar arrays exploded in codegen, no Python worker)."""
+    bound to ``view``: compression.scoring_entries as SQL text (its
+    ENTRY_EXPLODE and ENTRY_COLUMNS; the columnar arrays exploded in
+    codegen, no Python worker)."""
+    from .compression import ENTRY_COLUMNS, ENTRY_EXPLODE
+
     return (
-        "(SELECT term, base + e.doc_offs AS doc_index, e.tfs AS tf, e.dls AS dl "
-        "FROM (SELECT term, base, explode(arrays_zip(doc_offs, tfs, dls)) AS e "
+        f"(SELECT {', '.join(ENTRY_COLUMNS)} FROM (SELECT term, base, {ENTRY_EXPLODE} "
         f"FROM {view} WHERE term IN ({sql.quotes(terms)})))"
     )
 
@@ -188,6 +190,13 @@ def _local_result_df(spark: SparkSession, rows: list, schema: str = _SCORED) -> 
         for row in rows
     )
     return spark.sql(f"SELECT {names} FROM (VALUES {vals}) AS t({names})")
+
+
+def _no_rows(spark, url_lookup, value_col="score", value_type="double") -> DataFrame:
+    """The empty top-k in the schema of a non-empty one: keyed by
+    doc_index with a ``url_lookup`` (see ``_topk``), else by url."""
+    key = "url string" if url_lookup is None else "doc_index bigint"
+    return _local_result_df(spark, [], f"{key}, {value_col} {value_type}")
 
 
 def _query_words(query: str, use_stems: bool) -> list:
@@ -332,7 +341,7 @@ def blocked_maxscore_topk(
 
     words = _query_words(query, use_stems)
     if not words:
-        return _local_result_df(spark, [])
+        return _no_rows(spark, url_lookup)
     req = sorted({w.lower() for w in (required or [])})
     exc = sorted({w.lower() for w in (excluded or [])})
     n = float(total_documents)
@@ -352,10 +361,13 @@ def blocked_maxscore_topk(
         if qblocks is not None:
             qblocks.unpersist()
         if not tstats:
-            return _local_result_df(spark, [])
-        scanned = sorted({*words, *req, *exc})
+            return _no_rows(spark, url_lookup)
+        # only dictionary words are scored: a word without postings
+        # adds no rows, and one without an idf would score NULL
+        hit = sorted(idf)
+        scanned = sorted({*hit, *req, *exc})
         by_doc = sql.over(blocks, lambda v: bm25_sql(
-            entries_sql(v, scanned), "doc_index", words, idf, avgdl, k1, b, req, exc,
+            entries_sql(v, scanned), "doc_index", hit, idf, avgdl, k1, b, req, exc,
             k=None if url_lookup is None else k, partitions=partitions,
         ))
         if url_lookup is not None:
@@ -631,7 +643,7 @@ def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
     from .compression import decode_block
 
     if not words:
-        return _local_result_df(spark, [], f"url string, {value_col} bigint")
+        return _no_rows(spark, url_lookup, value_col, "bigint")
     uniq = sorted(set(words))
     anchor = words[0]
 

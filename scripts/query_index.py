@@ -2,7 +2,7 @@
 """spark-submit entry point: query a built index.
 
   python scripts/query_index.py --index /path/to/index \
-      --query "apples figs" [--scorer tfidf|bm25|bm25-pruned|bm25-blocked|
+      --query "apples figs" [--scorer tfidf|bm25|bm25-blocked|
                              bm25-threshold|phrase|proximity|hybrid]
       [-k 10] [--threshold 1.5] [--window 5]
 
@@ -30,7 +30,7 @@ def main():
     ap.add_argument("--index", required=True)
     ap.add_argument("--query", required=True)
     ap.add_argument("--scorer", default="tfidf",
-                    choices=["tfidf", "bm25", "bm25-pruned", "bm25-blocked",
+                    choices=["tfidf", "bm25", "bm25-blocked",
                              "bm25-threshold", "phrase", "proximity",
                              "bm25-sharded", "boolean", "hybrid"])
     ap.add_argument("-k", type=int, default=10)
@@ -87,8 +87,6 @@ def _run_query(eng, args, blocked):
         res = eng.search(args.query, k=args.k)
     elif args.scorer == "bm25":
         res = eng.search_bm25(args.query, k=args.k)
-    elif args.scorer == "bm25-pruned":
-        res = eng.search_bm25(args.query, k=args.k, pruned=True)
     elif args.scorer == "bm25-blocked":
         res = eng.search_bm25_blocked(
             blocked, args.query, k=args.k,

@@ -1330,18 +1330,29 @@ def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards, monk
 def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
     """Query words and +/- terms are user input spliced into the SQL
     text as string literals: quotes, backslashes and comment markers in
-    them stay data. Words the index lacks add nothing, so the answer is
-    the plain query's."""
-    _eng, full, _paths = url_hash_shards
+    them stay data. So does ``${var}``, which Spark substitutes in the
+    raw text before parsing: a word or -term naming a variable (here one
+    set to the indexed word "spark") is the literal, unindexed term.
+    Words the index lacks add nothing, so the answer is the plain
+    query's, on one index and on two shards."""
+    from google_like_search_engine_spark import sqltext
+
+    _eng, full, paths = url_hash_shards
     eng = SearchEngine(spark)
-    hostile = ["it's", "back\\slash", "x') OR ('1'='1", "--", "/*"]
+    hostile = ["it's", "back\\slash", "x') OR ('1'='1", "--", "/*",
+               "${spark.sql.shuffle.partitions}", "${env:PATH}", "${sg.hostile}"]
+    for v in [*hostile, "$", "${", "a$b", "\\u0024"]:
+        assert spark.sql(f"SELECT {sqltext.quote(v)}").collect()[0][0] == v
+    spark.conf.set("sg.hostile", "spark")
     try:
-        want = [tuple(r) for r in eng.search_bm25_blocked(full, "spark").collect()]
-        got = eng.search_bm25_blocked(
-            full, " ".join(["spark", *hostile]), excluded=hostile
-        ).collect()
-        assert [tuple(r) for r in got] == want and want
+        for index in ([full], paths):
+            want = [tuple(r) for r in eng.search_bm25_sharded(index, "spark").collect()]
+            got = eng.search_bm25_sharded(
+                index, " ".join(["spark", *hostile]), excluded=hostile
+            ).collect()
+            assert [tuple(r) for r in got] == want and want, index
     finally:
+        spark.conf.unset("sg.hostile")
         eng.unpersist()
 
 
@@ -1365,6 +1376,29 @@ def _engine_shard_call(eng, path, query, **kw):
         )
 
     return run
+
+
+def test_shard_topk_schema_is_the_same_when_empty(spark, url_hash_shards):
+    """With a url lookup a shard top-k is keyed by doc_index whatever
+    the query: a hit, a query without words, one the shard lacks and an
+    empty phrase all return (doc_index, value) columns."""
+    from google_like_search_engine_spark.wand import blocked_phrase_topk
+
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    try:
+        for query in ("spark shuffle", "", "nosuchterm"):
+            df = _engine_shard_call(eng, paths[0], query)()
+            assert df.columns == ["doc_index", "score"], query
+        shard = eng._blocked_handles(paths[0])
+        for phrase in ("spark index", ""):
+            df = blocked_phrase_topk(
+                spark, phrase, eng._shard_scan(shard, {}), shard.doc_stats_idx,
+                url_lookup=eng._blocked_url_dict(paths[0]),
+            )
+            assert df.columns == ["doc_index", "n_occurrences"], phrase
+    finally:
+        eng.unpersist()
 
 
 def test_warm_shard_bm25_query_is_one_sql_text(spark, url_hash_shards):

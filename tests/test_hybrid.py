@@ -308,3 +308,37 @@ def test_warm_hybrid_route_needs_no_vector_lookup_job(hybrid_setup, tmp_path_fac
         assert err.value.code == 404
     finally:
         srv.shutdown()
+
+
+def test_hybrid_route_past_the_vector_map_bound(hybrid_setup, tmp_path_factory):
+    """Embeddings past the driver-side map's bound (URL_DICT_CAP * 16
+    vector elements; a zero cap forces it here) resolve ?qurl= with a
+    lookup job per request: same fused answer as the mapped path, and
+    an unknown qurl is still a 404."""
+    eng, blocked, emb = hybrid_setup
+    emb_path = str(tmp_path_factory.mktemp("hyb_emb_big") / "emb.parquet")
+    emb.write.parquet(emb_path)
+    uncapped = SearchEngine(eng.spark)
+    uncapped.URL_DICT_CAP = 0
+    _qv, want = _expected_fusion(eng, blocked, emb, 5)
+    qurl = eng.search_bm25_blocked(blocked, QUERY, k=1).collect()[0]["url"]
+    srv = make_server(
+        uncapped, "127.0.0.1", 0, blocked_path=blocked, embeddings_path=emb_path
+    )
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        q = urllib.parse.urlencode({"query": QUERY, "qurl": qurl, "k": 5})
+        with urllib.request.urlopen(f"{base}/hybrid?{q}", timeout=120) as resp:
+            rows = json.loads(resp.read())["results"]
+        assert [(r["url"], r["bm25_rnk"], r["cos_rnk"]) for r in rows] == [
+            (u, br, cr) for u, br, cr, _rrf in want
+        ]
+        q = urllib.parse.urlencode({"query": QUERY, "qurl": "http://nope/", "k": 5})
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"{base}/hybrid?{q}", timeout=60)
+        assert err.value.code == 404
+    finally:
+        srv.shutdown()
+        uncapped.unpersist()
