@@ -224,20 +224,19 @@ GROUP BY tf.doc_id
 # chosen (scripts-side scan over both test SFs) so the nearest BM25
 # score is >2.6e-3 away at sf0.001 AND sf0.01 — a top-k LIMIT over
 # float-ordered rows is banned for oracle outputs, but a threshold in a
-# wide score gap selects the identical set in any engine, and MaxScore
-# pruning is exact for threshold semantics too.
+# wide score gap selects the identical set in any engine.
 MAXSCORE_THRESHOLD = 1.4565
 
 
 def bm25_maxscore_threshold(spark, sf_dir):
-    """The blocked MaxScore/block-max PRUNED path (wand.
-    blocked_maxscore_threshold), oracle-checked end-to-end: build a
-    plain-dialect compressed blocked index over the documents table
-    (varint blocks + columnar sidecars + denormalized dls), then return
-    every doc whose BM25 score rounds to >= MAXSCORE_THRESHOLD through
-    the full pruning machinery — essential-term selection, metadata-only
-    block-max skipping, candidate semi-joins, join-free dl scoring. The
-    oracle recomputes relational BM25 with the same HAVING threshold."""
+    """The blocked BM25 threshold path (wand.blocked_maxscore_threshold),
+    oracle-checked end-to-end: build a plain-dialect compressed blocked
+    index over the documents table (varint blocks + columnar sidecars +
+    denormalized dls), then return every doc whose BM25 score rounds to
+    >= MAXSCORE_THRESHOLD through the blocked query's one SQL text —
+    the blocks decoded in codegen, join-free dl scoring, the rounded
+    score cut outside the kernel. The oracle recomputes relational BM25
+    with the same HAVING threshold."""
     from .compression import assign_doc_indexes, block_postings
     from .wand import blocked_maxscore_threshold
 
@@ -2798,7 +2797,8 @@ def hybrid_search_rrf(spark, sf_dir):
     across engines before its round(6). Scale: the rank window runs
     over the retriever's candidate set (df-bounded for BM25, pool-k for
     ANN), not the corpus — in the engine path the inputs are already
-    top-k lists from MaxScore / IVF, and the fusion is a k-row join."""
+    top-k lists from the blocked BM25 text / IVF, and the fusion is a
+    k-row join."""
     from pyspark.sql import Window
 
     bm = bm25_search(spark, sf_dir)

@@ -38,7 +38,7 @@ from .wand import (
     blocked_maxscore_topk,
     blocked_phrase_topk,
     blocked_proximity_topk,
-    entry_partials,
+    entries_sql,
     topk_rows,
 )
 
@@ -632,22 +632,26 @@ class SearchEngine:
             ]
             return [f.result() for f in futures]
 
-    def _federate(self, dep: Deployment, shard_rows, k: int | None = None,
-                  value_col: str = "score", value_type: str = "double") -> DataFrame:
+    def _merge(self, dep: Deployment, shard_rows, k: int | None = None) -> list:
         """Scatter ``shard_rows(i) -> [(url, value)]`` over the shards and
         merge: a url a later shard owns is masked, a later shard wins a
         url collision, rows order by (value desc, url) — the single-index
-        tie-break — and the top ``k`` (all when None) return as a VALUES
-        relation whose collect is zero jobs."""
+        tie-break — and the top ``k`` (all when None) return as a list."""
         per_url: dict = {}
         if dep.n:
             for i, rows in enumerate(self._scatter(shard_rows, range(len(dep.paths)))):
                 for url, v in rows:
                     if url not in dep.masked[i]:
                         per_url[url] = v
-        merged = sorted(per_url.items(), key=lambda x: (-x[1], x[0]))
+        return sorted(per_url.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+    def _federate(self, dep: Deployment, shard_rows, k: int | None = None,
+                  value_col: str = "score", value_type: str = "double") -> DataFrame:
+        """``_merge``'s rows as a VALUES relation whose collect is zero
+        jobs: the public entry points' result."""
         return _local_result_df(
-            self.spark, merged[:k], f"url string, {value_col} {value_type}"
+            self.spark, self._merge(dep, shard_rows, k),
+            f"url string, {value_col} {value_type}",
         )
 
     def search_bm25_blocked(
@@ -697,16 +701,17 @@ class SearchEngine:
         size.
 
         ``index_path`` may be a LIST of blocked shard dirs: the lexical
-        retriever then federates through search_bm25_sharded and fusion
-        is unchanged — hybrid search over a sharded deployment. The two
-        retrievers run concurrently (``_scatter``), so request latency is
-        the slower retriever, not the sum."""
+        retriever then federates through ``_bm25_rows`` (the merged
+        shard rows search_bm25_sharded wraps, fused as they are) and
+        fusion is unchanged — hybrid search over a sharded deployment.
+        The two retrievers run concurrently (``_scatter``), so request
+        latency is the slower retriever, not the sum."""
         from .analytics.simsearch import cosine_topk
 
         paths = list(index_path) if isinstance(index_path, (list, tuple)) else [index_path]
 
         def _lexical():
-            return self.search_bm25_sharded(paths, query, k=pool).collect()
+            return self._bm25_rows(paths, query, pool)
 
         def _vector():
             return cosine_topk(
@@ -715,8 +720,8 @@ class SearchEngine:
 
         bm_rows, cs_rows = self._scatter(lambda retrieve: retrieve(), [_lexical, _vector])
         ranks: dict = {}
-        for i, r in enumerate(bm_rows):
-            ranks[str(r["url"])] = [i + 1, 0]
+        for i, (url, _score) in enumerate(bm_rows):
+            ranks[url] = [i + 1, 0]
         for i, r in enumerate(cs_rows):
             ranks.setdefault(str(r[id_col]), [0, 0])[1] = i + 1
         fused = []
@@ -740,19 +745,25 @@ class SearchEngine:
     ) -> DataFrame:
         """BM25 top-k over a deployment of blocked indexes (one path is a
         single index). Each shard runs wand.blocked_maxscore_topk under
-        the deployment's global N/avgdl/df — its own max_tf and min_dl
-        keep its block-max bounds valid — and the shard winners merge by
-        (score desc, url), row-identical to one index over the union
-        corpus (pinned by test). Cost: one pruned scoring job per shard,
-        concurrently, plus a k*shards driver merge. A small or filtered
-        query's shard job is one SQL text (wand.bm25_sql) whose exchange
-        is sized to the shard (``_exchange_parts``), and its rows reach
-        the merge as tuples straight from that job's collect.
+        the deployment's global N/avgdl/df, and the shard winners merge
+        by (score desc, url), row-identical to one index over the union
+        corpus (pinned by test). Cost: one scoring job per shard,
+        concurrently, plus a k*shards driver merge. Each shard job is
+        one SQL text (wand.bm25_sql over wand.entries_sql) whose
+        exchange is sized to the shard (``_exchange_parts``), and its
+        rows reach the merge as tuples straight from that job's collect.
 
         ``required``/``excluded``: `+term -term` filters. Doc membership
         is shard-local, so applying them per shard is exact: a required
         term absent from a shard empties it, an absent excluded term is
         dropped (as on the served path)."""
+        return _local_result_df(
+            self.spark, self._bm25_rows(index_paths, query, k, required, excluded)
+        )
+
+    def _bm25_rows(self, index_paths: list, query: str, k: int,
+                   required: list | None = None, excluded: list | None = None) -> list:
+        """search_bm25_sharded's merged top-k as (url, score) tuples."""
         words = sorted({w.lower() for w in expand_query(query)})
         req = [w.lower() for w in (required or [])]
         exc = [w.lower() for w in (excluded or [])]
@@ -773,7 +784,7 @@ class SearchEngine:
             )
             return topk_rows(part.collect(), lookup)
 
-        return self._federate(dep, shard, k)
+        return self._merge(dep, shard, k)
 
     def promote_stream_index(self, store_dir: str, out_path: str) -> None:
         """Promote a Structured-Streaming incremental index store
@@ -902,9 +913,10 @@ class SearchEngine:
     ) -> DataFrame:
         """Every document scoring >= ``threshold`` (rounded BM25) over a
         deployment — the alerting form of search: per shard,
-        wand.blocked_maxscore_threshold with the global df/N/avgdl and
-        the shard's dictionary max_tf injected (no per-query metadata
-        job), then the union (no k to merge)."""
+        wand.blocked_maxscore_threshold (the top-k's one SQL text cut by
+        rounded score, one job) with the global df/N/avgdl injected from
+        the deployment's dictionary (no per-query metadata job), then the
+        union (no k to merge)."""
         words = sorted({w.lower() for w in expand_query(query)})
         dep = self._deployment(index_paths)
         infos, df = dep.lookup(words)
@@ -1164,11 +1176,8 @@ class SearchEngine:
         analyzer=None,
     ) -> DataFrame:
         """BM25 top-k (ranker.score_bm25 with the build-time dictionary).
-        The flat posting index has this one plan: a MaxScore threshold
-        there would only drop docs from the final ranking — every
-        posting of the query terms is still aggregated — so MaxScore
-        runs on the blocked layout, where block metadata lets it skip
-        whole blocks.
+        The flat posting index has this one plan; every path, flat or
+        blocked, aggregates every posting of the query terms.
 
         ``analyzer``: query-side half of the pluggable-analyzer seam —
         a ``str -> list[str]`` callable producing the same terms the
@@ -1289,15 +1298,10 @@ class SearchEngine:
         )
         if df is None:
             return matched.select("url").orderBy("url").limit(k)
-        scored = (
-            entry_partials(
-                entries.where(F.col("term").isin(sorted(df))),
-                {t: bm25_idf(float(dep.n), d) for t, d in df.items()},
-                dep.avgdl,
-            )
-            .groupBy("doc_index")
-            .agg(F.sum("partial").alias("score"))
-        )
+        scored = sql.over(blocks, lambda v: bm25_sql(
+            entries_sql(v, sorted(df)), "doc_index", sorted(df),
+            {t: bm25_idf(float(dep.n), d) for t, d in df.items()}, dep.avgdl,
+        ))
         return (
             scored.join(matched, "doc_index")
             .select("url", "score")

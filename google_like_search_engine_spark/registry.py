@@ -49,8 +49,8 @@ QUERIES = {
     # embeddings
     "cosine_scores": (t.cosine_scores, t.COSINE_SCORES_SQL),
     "bpe_tokens": (t.bpe_tokens, t.BPE_TOKENS_SQL),
-    # the MaxScore/block-max PRUNED path, oracle-checked via a literal
-    # score threshold (exact; no float-ordered LIMIT)
+    # the blocked BM25 path, oracle-checked via a literal score
+    # threshold (exact; no float-ordered LIMIT)
     "bm25_maxscore_threshold": (
         t.bm25_maxscore_threshold,
         t.BM25_MAXSCORE_THRESHOLD_SQL,
@@ -401,11 +401,9 @@ def _multimodal_image_features(spark, sf_dir):
 
 def _bm25_maxscore_topk(spark, sf_dir):
     """Exact BM25 top-k over the stemmed flat posting index. The flat
-    index has one plan, ranker.score_bm25 (a MaxScore threshold there
-    only filters the final ranking, so the pruned form did no less
-    work); the pruned blocked path has its own oracle row
-    (bm25_maxscore_threshold), and the SQL-oracle variant is
-    bm25_search."""
+    index has one plan, ranker.score_bm25; the blocked path has its
+    own oracle row (bm25_maxscore_threshold), and the SQL-oracle
+    variant is bm25_search."""
     from .indexer import build_postings
     from .ranker import score_bm25
 
@@ -527,9 +525,9 @@ def _rolling_fingerprints(spark, sf_dir):
 
 # Implemented and tested, but NOT in the driver gate (50-entry cap).
 # bm25_maxscore_topk (flat-index BM25 top-k) is demoted now that the
-# blocked pruned path has a full oracle row (bm25_maxscore_threshold);
-# the blocked MaxScore path's exactness stays property-tested against
-# the naive scorer in tests/test_wand_and_lineage.py.
+# blocked path has a full oracle row (bm25_maxscore_threshold); the
+# blocked top-k's exactness stays property-tested against the naive
+# scorer in tests/test_wand_and_lineage.py.
 EXTRA_QUERIES = {
     "search_pipeline": _search_pipeline,
     "rolling_fingerprints": _rolling_fingerprints,

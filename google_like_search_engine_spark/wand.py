@@ -1,40 +1,25 @@
-"""Exact top-k pruning for BM25: relational MaxScore (WAND family).
+"""BM25 and positional top-k over the blocked index, and the one BM25
+kernel.
 
-The naive path scores every document containing any query term. At
-10^12 docs a stopword-like query term makes that a full-corpus scan.
-MaxScore/WAND prune exactly: a document that appears ONLY in
-low-upper-bound ("non-essential") terms can never beat the running
-threshold, so those terms' posting lists are only consulted for
-candidate documents, never scanned in full.
-
-This implementation is a DataFrame-level MaxScore, provably
-score-identical to ranker.score_bm25 (property-tested in
-tests/test_wand_and_lineage.py and tests/test_blocked_search.py):
-
-1. per-term upper bound: ub_t = bm25_partial at the term's global
-   max_tf and the corpus min dl (the term contribution is monotone in
-   tf and antitone in dl).
-2. threshold theta = exact k-th best score using only the
-   highest-ub term's postings (a valid lower bound on the final k-th
-   score; 0 when that list has < k entries).
-3. essential terms = smallest suffix of terms (sorted by ub) whose
-   ub-sum >= theta. Documents absent from all essential lists are
-   provably below theta -> pruned.
-4. full scoring runs only on candidates (left-semi join), reading
-   non-essential lists through the candidate semi-join instead of a
-   full scan; Catalyst turns the term filter into partition pruning
-   when postings are stored partitioned/bucketed by term.
-
-It runs on blocked postings (compression.block_postings), where step
-4's semi-join additionally skips whole blocks via (base,
-max_doc_index, max_tf) metadata — the block-max part. The flat
-posting index has one plan, ranker.score_bm25: its per-query work is
-one aggregation over the query terms' postings either way.
+Every BM25 query over blocks — the top-k, the score threshold and the
+ranked boolean match — is ONE SQL text: ``bm25_sql`` over
+``entries_sql``, the query terms' blocks exploded to (doc_index, term,
+tf, dl) entries in codegen and summed per doc. A shard query is one
+Spark job and one collect. Like the reference ranker
+(Ranker.java:64-118) it scores every posting of the query terms. There
+is no MaxScore or block-max pruning: on a 95k-doc shard of 12 block
+groups (4 vCPU, warm) its extra jobs (5 per query against 1), persist
+and driver round trips made queries of 161k-541k postings 2-3.5x
+slower than scoring every posting. The blocks still record each
+block's ``max_tf`` and the dictionary each term's; fsck and
+index_stats read them.
 
 Every path scores through one kernel: ``bm25_idf`` for idf and
-``bm25_partial`` for a term's contribution (a Column in plans, a float
-for upper bounds), whose SQL-text form ``bm25_sql`` is the serving
-paths' per-doc top-k.
+``bm25_partial`` for a term's contribution (a Column), whose SQL-text
+form ``bm25_sql`` is the serving paths' per-doc top-k.
+
+Phrase and proximity queries fold positions in one grouped pass over
+the positions store (``_positional_topk``), also one job per shard.
 """
 
 from __future__ import annotations
@@ -65,14 +50,10 @@ def bm25_idf(n, df):
     return math.log((n - df + 0.5) / (df + 0.5) + 1.0)
 
 
-def bm25_partial(tf, dl, idf, avgdl: float, k1: float = 1.2, b: float = 0.75):
-    """One term's BM25 contribution, the one scoring kernel. With a
-    Column ``tf`` it builds the plan expression; with plain numbers it
-    is the Python twin MaxScore uses for upper bounds (tf = max_tf,
-    dl = min_dl)."""
-    if isinstance(tf, Column):
-        return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / F.lit(avgdl)))
-    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+def bm25_partial(tf: Column, dl, idf, avgdl: float, k1: float = 1.2, b: float = 0.75) -> Column:
+    """One term's BM25 contribution as a plan expression, the one
+    scoring kernel (``bm25_sql`` is its SQL-text form)."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / F.lit(avgdl)))
 
 
 def idf_map(idf: dict) -> Column:
@@ -82,16 +63,6 @@ def idf_map(idf: dict) -> Column:
     return F.create_map(*[x for t in idf for x in (F.lit(t), F.lit(idf[t]))])[
         F.col("term")
     ]
-
-
-def entry_partials(entries, idf: dict, avgdl, k1=1.2, b=0.75):
-    """(doc_index, term, partial) for decoded (term, doc_index, tf, dl)
-    entries (compression.scoring_entries): dl rides the blocks, so
-    scoring joins nothing."""
-    return entries.select(
-        "doc_index", "term",
-        bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl, k1, b).alias("partial"),
-    )
 
 
 def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.2,
@@ -156,19 +127,6 @@ def entries_sql(view: str, terms) -> str:
     )
 
 
-def essential_terms(ub: dict, theta: float) -> set:
-    """MaxScore split: drop the longest ub-ascending prefix whose ub sum
-    stays below ``theta`` (a doc holding only those terms scores below
-    theta) and return the remaining, essential, terms."""
-    cum, essential = 0.0, set(ub)
-    for t, u in sorted(ub.items(), key=lambda kv: kv[1]):
-        if cum + u >= theta:
-            break
-        cum += u
-        essential.discard(t)
-    return essential
-
-
 def _local_result_df(spark: SparkSession, rows: list, schema: str = _SCORED) -> DataFrame:
     """Rows already resolved driver-side (columns and SQL types given by
     the DDL ``schema``) -> a DataFrame whose collect() is a
@@ -203,27 +161,30 @@ def _query_words(query: str, use_stems: bool) -> list:
     return sorted({w.lower() for w in (expand_query(query) if use_stems else query.split())})
 
 
-def _dl_stats(doc_stats_idx: DataFrame, doc_stats_agg: tuple | None) -> tuple:
-    """(avgdl, min_dl): the build-time sidecar pair, else one aggregation."""
-    if doc_stats_agg is not None:
-        return float(doc_stats_agg[0]), float(doc_stats_agg[1])
-    r = doc_stats_idx.agg(F.avg("n_term_entries"), F.min("n_term_entries")).collect()[0]
-    return float(r[0] or 1.0), float(r[1] or 1.0)
+def _idf_avgdl(blocks, words, total_documents, doc_stats_idx, doc_stats_agg,
+               term_stats) -> tuple:
+    """({term: idf} for the query ``words`` the index holds, avgdl).
 
-
-def _term_stats(qblocks: DataFrame, words: list, term_stats: dict | None) -> dict:
-    """{term: (df, max_tf)} for the query words present in the index:
-    from the build-time dictionary (zero jobs), else one metadata-only
-    aggregation over the pruned block scan."""
+    df comes from the build-time dictionary ``term_stats`` ({term: (df,
+    ...)}, zero jobs), else from one metadata-only aggregation over the
+    words' blocks; avgdl from the sidecar pair ``doc_stats_agg``
+    ((avgdl, min_dl)), else from one aggregation. Only indexed words get
+    an idf: a word without postings adds no rows, and one without an
+    idf would score NULL."""
     if term_stats is not None:
-        return {w: (int(term_stats[w][0]), int(term_stats[w][1]))
-                for w in words if w in term_stats}
-    return {
-        r["term"]: (int(r["df"]), int(r["max_tf"]))
-        for r in qblocks.groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf"))
-        .collect()
-    }
+        dfs = {w: term_stats[w][0] for w in words if w in term_stats}
+    else:
+        dfs = {
+            r["term"]: r["df"]
+            for r in blocks.where(F.col("term").isin(words))
+            .groupBy("term").agg(F.sum("n_docs").alias("df")).collect()
+        }
+    if doc_stats_agg is not None:
+        avgdl = float(doc_stats_agg[0])
+    else:
+        avgdl = float(doc_stats_idx.agg(F.avg("n_term_entries")).collect()[0][0] or 1.0)
+    n = float(total_documents)
+    return {t: bm25_idf(n, int(df)) for t, df in dfs.items()}, avgdl
 
 
 def topk_rows(rows, url_lookup: dict | None) -> list:
@@ -235,10 +196,8 @@ def topk_rows(rows, url_lookup: dict | None) -> list:
     return [(url_lookup[d], v) for d, v in rows]
 
 
-def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
-          value_col="score", value_type="double") -> DataFrame:
-    """Top ``k`` of (doc_index, value) by (value desc, url), then
-    unpersist the per-query ``cached`` inputs.
+def _topk(by_doc, doc_stats_idx, k, url_lookup, value_col="score") -> DataFrame:
+    """Top ``k`` of (doc_index, value) by (value desc, url).
 
     With ``url_lookup`` (the driver-side {doc_index: url} forward
     index — the in-process stand-in for the reference's KVS doc-store
@@ -246,29 +205,15 @@ def _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached=(),
     collect is ONE Spark job: TakeOrdered collects the k winners and the
     caller resolves their urls driver-side (``topk_rows``). Engine
     layouts assign doc_index in url order, so the doc_index tiebreak IS
-    the url tiebreak. A result that still reads ``cached`` inputs is
-    collected here, before they are unpersisted. Without a lookup the
-    url join runs distributed, and such a result is materialized
-    executor-side first (k rows, no driver round-trip)."""
+    the url tiebreak. Without a lookup the url join runs distributed."""
     if url_lookup is not None:
-        out = by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k)
-        if cached:
-            out = _local_result_df(
-                spark, [tuple(r) for r in out.collect()],
-                f"doc_index bigint, {value_col} {value_type}",
-            )
-    else:
-        out = (
-            by_doc.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
-            .select("url", value_col)
-            .orderBy(F.desc(value_col), F.asc("url"))
-            .limit(k)
-        )
-        if cached:
-            out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+        return by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k)
+    return (
+        by_doc.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
+        .select("url", value_col)
+        .orderBy(F.desc(value_col), F.asc("url"))
+        .limit(k)
+    )
 
 
 def blocked_maxscore_topk(
@@ -283,21 +228,22 @@ def blocked_maxscore_topk(
     use_stems: bool = True,
     doc_stats_agg: tuple | None = None,
     term_stats: dict | None = None,
-    small_query_entries: int = 100_000,
     url_lookup: dict | None = None,
     required: list | None = None,
     excluded: list | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
     """Exact BM25 top-k over the compressed blocked index
-    (compression.block_postings output) with block-level skipping.
+    (compression.block_postings output), score-identical to the naive
+    scorer (property-tested).
 
-    Serving shape: a small or filtered query (every query of a
-    benchmark-sized shard) is ONE literal-substituted SQL text
-    (``bm25_sql`` over ``entries_sql``, the served path's kernel), and
-    the returned DataFrame is lazy: its collect is the query's one
-    Spark job. ``partitions`` sizes that aggregation's exchange (the
-    engine passes one partition per block group of the shard).
+    The query is ONE literal-substituted SQL text (``bm25_sql`` over
+    ``entries_sql``, the served path's kernel) over the blocks of the
+    query's words, and the returned DataFrame is lazy: its collect is
+    the query's one Spark job. ``partitions`` sizes that aggregation's
+    exchange (the engine passes one partition per block group of the
+    shard). The name is kept for its callers; no MaxScore pruning runs
+    (see the module docstring).
 
     ``required``/``excluded``: boolean doc filters (`+term -term`
     syntax) — results must contain every required term and no excluded
@@ -305,177 +251,39 @@ def blocked_maxscore_topk(
     A filtered query scans the blocks of words ∪ required ∪ excluded
     ONCE and aggregates per doc into its score (the query words'
     partials) plus one presence flag per required term and one for the
-    excluded set, so it stays one job. It always scores every matched
-    block: MaxScore's unfiltered upper bounds cannot order a FILTERED
-    top-k. A required term absent from the index leaves its flag false
-    everywhere, hence an empty result, with no dictionary lookup needed.
+    excluded set, so it stays one job. A required term absent from the
+    index leaves its flag false everywhere, hence an empty result, with
+    no dictionary lookup needed.
 
-    ``doc_stats_idx``: (doc_index, url, n_term_entries). Score-identical
-    to the naive scorer (property-tested).
-
-    The block-max mechanics the doc-range-aligned layout enables:
-    1. term stats come from block METADATA only (sum n_docs = df,
-       max max_tf) — no decoding;
-    2. theta is seeded by decoding only the highest-ub term's blocks;
-    3. candidate doc_indexes come from decoding essential terms'
-       blocks; non-essential terms then decode ONLY blocks whose
-       doc-range intersects a candidate block (semi-join on block_id —
-       whole blocks skip without touching their bytes).
-
+    ``doc_stats_idx``: (doc_index, url, n_term_entries).
     ``doc_stats_agg``: optional precomputed (avgdl, min_dl) and
-    ``term_stats``: optional driver-side {term: (df, max_tf, ...)}
-    dictionary — both written by the build as sidecars — together they
-    remove every per-query metadata job. When the matched posting
-    volume (sum of term dfs) is below ``small_query_entries``, the
-    theta-seeding and essential-term machinery is skipped and all
-    matched blocks score in ONE job — pruning can't save more than the
-    extra driver round-trips cost on a small candidate set, and the
-    result is identical either way (MaxScore is exact).
+    ``term_stats``: optional driver-side {term: (df, ...)} dictionary —
+    both written by the build as sidecars; together they remove every
+    per-query metadata job (see ``_idf_avgdl``).
 
     ``url_lookup``: optional driver-side {doc_index: url} forward
     index. With it the result is keyed by doc_index — (doc_index,
     score) — and the caller resolves the k winners' urls
     (``topk_rows``); see ``_topk``.
     """
-    from .compression import scoring_entries
-
     words = _query_words(query, use_stems)
     if not words:
         return _no_rows(spark, url_lookup)
+    idf, avgdl = _idf_avgdl(
+        blocks, words, total_documents, doc_stats_idx, doc_stats_agg, term_stats
+    )
+    if not idf:
+        return _no_rows(spark, url_lookup)
     req = sorted({w.lower() for w in (required or [])})
     exc = sorted({w.lower() for w in (excluded or [])})
-    n = float(total_documents)
-    avgdl, min_dl = _dl_stats(doc_stats_idx, doc_stats_agg)
-
-    # isin (not a broadcast-join with a literal DF): reaches the parquet
-    # scan as PushedFilters In(term, ...) and costs no driver round-trip
-    qblocks = None
-    if term_stats is None:
-        qblocks = blocks.where(F.col("term").isin(words)).persist()
-    tstats = _term_stats(qblocks, words, term_stats)
-    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
-    # a filtered query, or a small one: total matched entries below the
-    # threshold -> pruning saves less than its driver round-trips cost;
-    # score all matched blocks in ONE job, built as one SQL text
-    if not tstats or req or exc or sum(df for df, _mt in tstats.values()) <= small_query_entries:
-        if qblocks is not None:
-            qblocks.unpersist()
-        if not tstats:
-            return _no_rows(spark, url_lookup)
-        # only dictionary words are scored: a word without postings
-        # adds no rows, and one without an idf would score NULL
-        hit = sorted(idf)
-        scanned = sorted({*hit, *req, *exc})
-        by_doc = sql.over(blocks, lambda v: bm25_sql(
-            entries_sql(v, scanned), "doc_index", hit, idf, avgdl, k1, b, req, exc,
-            k=None if url_lookup is None else k, partitions=partitions,
-        ))
-        if url_lookup is not None:
-            return by_doc
-        return _topk(spark, by_doc, doc_stats_idx, k, None)
-    # big query: the MaxScore path reads qblocks several times
-    if qblocks is None:
-        qblocks = blocks.where(F.col("term").isin(words)).persist()
-    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
-          for t, (_df, mt) in tstats.items()}
-    # theta from the best term only
-    best = max(ub, key=ub.get)
-    seed = (
-        entry_partials(
-            scoring_entries(qblocks.where(F.col("term") == best)),
-            idf, avgdl, k1, b,
-        )
-        .orderBy(F.desc("partial"))
-        .limit(k)
-        .collect()
-    )
-    theta = float(seed[-1]["partial"]) if len(seed) >= k else 0.0
-    # essential is never empty here: theta <= ub[best]
-    entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
-    cached = [qblocks, ess]
-    by_doc = (
-        entry_partials(entries, idf, avgdl, k1, b)
-        .groupBy("doc_index")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(spark, by_doc, doc_stats_idx, k, url_lookup, cached)
-
-
-def _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl):
-    """MaxScore + block-max candidate generation, shared by the top-k
-    and threshold plans. Returns (entries of every doc that can reach
-    ``theta``, the persisted live essential-term blocks the caller must
-    unpersist), or (None, None) when no doc can.
-
-    1. essential terms: a doc holding only non-essential terms scores
-       below theta;
-    2. TRUE block-max: a block whose metadata upper bound is below theta
-       holds no qualifying doc, so it drops before any byte is decoded —
-       essential-term blocks too, the part plain MaxScore can't skip;
-    3. candidates decode from the essential terms' live blocks;
-       non-essential terms decode only the blocks of those block_ids,
-       read off the live blocks' metadata: the encoder emits no empty
-       block, so every live essential-term block holds a candidate, and
-       blocks are doc-range aligned, so no other block does.
-    """
-    from .compression import scoring_entries
-
-    essential = essential_terms(ub, theta)
-    if not essential:
-        return None, None
-    live = qblocks
-    if theta > 0.0:
-        live = qblocks.join(
-            _live_block_ids(qblocks, idf, theta, k1, b, min_dl, avgdl),
-            "block_id", "left_semi",
-        )
-    live_ess = (
-        live.where(F.col("term").isin(sorted(essential)))
-        .select("term", "block_id", "base", "doc_offs", "tfs", "dls")
-        .persist()
-    )
-    ess = scoring_entries(live_ess)
-    candidates = ess.select("doc_index").distinct()
-    decoded = ess
-    non_ess = sorted(set(ub) - essential)
-    if non_ess:
-        cand_blocks = live_ess.select("block_id").distinct()
-        ne_blocks = qblocks.where(F.col("term").isin(non_ess)).join(
-            F.broadcast(cand_blocks), "block_id", "left_semi"
-        )
-        decoded = ess.unionByName(scoring_entries(ne_blocks))
-    return decoded.join(candidates, "doc_index", "left_semi"), live_ess
-
-
-def _live_block_ids(
-    qblocks: DataFrame,
-    idf_by_term: dict,
-    theta: float,
-    k1: float,
-    b: float,
-    min_dl: float,
-    avgdl: float,
-) -> DataFrame:
-    """block_ids whose metadata-level BM25 upper bound can reach
-    ``theta``: sum over the query terms present in the block of the
-    term's contribution at the block's max_tf and the global min_dl.
-    Pure aggregation over (term, block_id, max_tf) metadata — no block
-    bytes are touched. Blocks below theta are provably top-k-free.
-
-    The comparison carries a relative epsilon slack. Theta is a doc's
-    score summed JVM-side in aggregation order, the bound a per-block
-    sum in another order (and the threshold plan's theta comes from a
-    rounded cut), so at an exact boundary — the k-th doc has tf ==
-    block max_tf and dl == min_dl — one ulp of summation-order or
-    log-library difference (see bm25_idf) could otherwise prune the
-    block holding a true top-k doc."""
-    block_ub = bm25_partial(F.col("max_tf"), min_dl, idf_map(idf_by_term), avgdl, k1, b)
-    return (
-        qblocks.groupBy("block_id")
-        .agg(F.sum(block_ub).alias("_ub"))
-        .where(F.col("_ub") >= theta * (1.0 - 1e-12) - 1e-300)
-        .select("block_id")
-    )
+    hit = sorted(idf)
+    by_doc = sql.over(blocks, lambda v: bm25_sql(
+        entries_sql(v, sorted({*hit, *req, *exc})), "doc_index", hit, idf, avgdl,
+        k1, b, req, exc, k=None if url_lookup is None else k, partitions=partitions,
+    ))
+    if url_lookup is not None:
+        return by_doc
+    return _topk(by_doc, doc_stats_idx, k, None)
 
 
 def blocked_maxscore_threshold(
@@ -492,61 +300,46 @@ def blocked_maxscore_threshold(
     round_to: int = 4,
     term_stats: dict | None = None,
 ) -> DataFrame:
-    """ALL documents whose BM25 score rounds to >= ``threshold`` —
-    the score-threshold form of the MaxScore/block-max pruned path
-    (reference capability: Ranker.java:64-118's scoring, pruned).
-
-    This exists so the pruning machinery itself is ORACLE-CHECKABLE:
-    MaxScore is exact, and unlike a top-k LIMIT over float-ordered rows
-    (banned — boundary ties pick different rows per engine) a literal
-    threshold with a wide score gap around it selects the same set in
-    any engine. The oracle is plain relational BM25 + HAVING.
-
-    The same pruning as blocked_maxscore_topk's big-query path runs
-    (``_candidate_entries``), with theta := threshold - 0.5*10^-round_to
-    - 1e-9: the final filter compares round(score, round_to) >=
-    threshold, so any doc with true score >= threshold -
-    0.5*10^-round_to can round up into the result set and must survive
-    pruning; the extra 1e-9 absorbs ulp-level float discrepancies.
+    """ALL documents whose BM25 score rounds to >= ``threshold``
+    (reference capability: Ranker.java:64-118's scoring, cut by score).
     Returns (url, score) with score rounded to ``round_to``.
 
-    ``term_stats``: optional driver-side {term: (df, max_tf, ...)}
-    dictionary, as in blocked_maxscore_topk; without it one
-    block-metadata aggregation supplies them. The sharded path passes
-    GLOBAL document frequencies here while max_tf/min_dl stay
-    shard-local (valid: they only bound this shard's scores).
+    The top-k's SQL text (``bm25_sql`` over ``entries_sql``) wrapped in
+    one ROUND/WHERE select, then joined to ``doc_stats_idx`` for the
+    urls: lazy, and ONE Spark job when collected. Unlike a top-k LIMIT
+    over float-ordered rows (banned for oracle outputs — boundary ties
+    pick different rows per engine), a literal threshold with a wide
+    score gap around it selects the same set in any engine, so this is
+    the blocked path's oracle-checked form (catalog_text
+    .bm25_maxscore_threshold; its oracle is plain relational BM25 +
+    HAVING).
+
+    ``term_stats`` and ``doc_stats_agg`` as in blocked_maxscore_topk.
+    The sharded path passes GLOBAL document frequencies and avgdl here.
     """
     words = _query_words(query, use_stems)
     if not words:
         return _local_result_df(spark, [])
-    n = float(total_documents)
-    theta = threshold - 0.5 * 10.0 ** (-round_to) - 1e-9
-    avgdl, min_dl = _dl_stats(doc_stats_idx, doc_stats_agg)
-
-    qblocks = blocks.where(F.col("term").isin(words)).persist()
-    tstats = _term_stats(qblocks, words, term_stats)
-    idf = {t: bm25_idf(n, df) for t, (df, _mt) in tstats.items()}
-    ub = {t: bm25_partial(float(mt), min_dl, idf[t], avgdl, k1, b)
-          for t, (_df, mt) in tstats.items()}
-    # no term indexed, or the sum of ALL ubs < theta: provably empty
-    entries, ess = _candidate_entries(qblocks, ub, idf, theta, k1, b, min_dl, avgdl)
-    if entries is None:
-        qblocks.unpersist()
+    idf, avgdl = _idf_avgdl(
+        blocks, words, total_documents, doc_stats_idx, doc_stats_agg, term_stats
+    )
+    if not idf:
         return _local_result_df(spark, [])
-    survivors = (
-        entry_partials(entries, idf, avgdl, k1, b)
-        .groupBy("doc_index")
-        .agg(F.round(F.sum("partial"), round_to).alias("score"))
-        .where(F.col("score") >= F.lit(threshold))
-    )
-    out = (
-        survivors.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
+    hit = sorted(idf)
+    rounded = f"ROUND(score, {int(round_to)})"
+    survivors = sql.over(blocks, lambda v: (
+        f"SELECT doc_index, {rounded} AS score FROM "
+        f"({bm25_sql(entries_sql(v, hit), 'doc_index', hit, idf, avgdl, k1, b)}) "
+        f"WHERE {rounded} >= {sql.dbl(threshold)}"
+    ))
+    # a shuffle-hash join built on the survivors: the aggregation's
+    # exchange already partitions them by doc_index, and a broadcast of
+    # the doc-stats dimension would be a second job per query
+    return (
+        survivors.hint("shuffle_hash")
+        .join(doc_stats_idx.select("doc_index", "url"), "doc_index")
         .select("url", "score")
-        .localCheckpoint(eager=True)
     )
-    qblocks.unpersist()
-    ess.unpersist()
-    return out
 
 
 def blocked_phrase_topk(
@@ -673,5 +466,4 @@ def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
         .groupBy("block_id")
         .applyInPandas(per_block, f"doc_index long, {value_col} long")
     )
-    return _topk(spark, counts, doc_stats_idx, k, url_lookup,
-                 value_col=value_col, value_type="bigint")
+    return _topk(counts, doc_stats_idx, k, url_lookup, value_col)

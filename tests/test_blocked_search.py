@@ -1,7 +1,5 @@
-"""Blocked-index MaxScore == flat naive BM25 (exactness through the
-compressed path: encode -> block-skip -> decode -> score)."""
-
-import functools
+"""Blocked-index BM25 == flat naive BM25 (exactness through the
+compressed path: encode -> decode -> score)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,107 +17,76 @@ from tests.conftest import spark_jobs
 from tests.test_wand_and_lineage import _random_docs
 
 
-@pytest.mark.parametrize("query,k", [
-    ("spark shuffle", 5),
-    ("spark", 10),
-    ("index merge join table", 7),
-    ("missingword", 5),
-])
-@pytest.mark.parametrize("small_query_entries", [100_000, 0])
-def test_blocked_maxscore_equals_naive(spark, query, k, small_query_entries):
-    """Exactness through BOTH plans: the single-job fast path (default
-    threshold) and the full MaxScore + block-max pruned path (threshold
-    0 forces it even on the small fixture)."""
-    docs = _random_docs(spark, n=150, seed=23)
-    postings = build_postings(docs).persist()
-    idx = assign_doc_indexes(docs).persist()
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=32).persist()
-
-    doc_stats = postings.groupBy("doc_id", "url").agg(
-        F.sum("tf").alias("n_term_entries")
-    )
-    doc_stats_idx = doc_stats.join(idx, "doc_id").select(
-        "doc_index", "url", "n_term_entries"
-    ).persist()
-    n = docs.count()
-
-    naive = score_bm25(spark, query, postings, doc_stats, n).limit(k).collect()
-    fast = blocked_maxscore_topk(
-        spark, query, blocks, doc_stats_idx, n, k=k,
-        small_query_entries=small_query_entries,
-    ).collect()
-    assert [r["url"] for r in fast] == [r["url"] for r in naive], query
-    for a, b in zip(fast, naive):
-        assert a["score"] == pytest.approx(b["score"], rel=1e-9)
-    for df in (postings, idx, blocks, doc_stats_idx):
-        df.unpersist()
+def _skewed_docs(spark):
+    """A tf-skewed corpus: 8 "hot" docs repeat "spark shuffle" 30 times,
+    152 "cold" docs mention it once among filler. Hot and cold docs
+    land in different doc-index ranges, so at block_span 16 the cold
+    blocks' max_tf stays 1 — the shape most favourable to block-max
+    skipping."""
+    rows = [(f"d{i:03d}", f"http://x.com/{i:03d}.html", " ".join(["spark shuffle"] * 30))
+            for i in range(8)]
+    rows += [(f"d{i:03d}", f"http://x.com/{i:03d}.html",
+              "filler words here spark shuffle other stuff") for i in range(8, 160)]
+    return spark.createDataFrame(rows, "doc_id string, url string, text string")
 
 
-def test_block_max_refinement_skips_blocks(spark):
-    """On a tf-skewed corpus the per-block upper bound prunes whole
-    blocks below theta — including ESSENTIAL-term blocks (the part
-    plain MaxScore's candidate logic can't skip) — while the pruned
-    result stays exactly the naive top-k."""
-    import math
+def _common_rare_docs(spark):
+    """40 docs that all say "common" 3 times; every fifth also says
+    "rare" 1-4 times: a low-idf term in every doc next to a high-idf
+    term in a few."""
+    rows = [
+        (f"d{i:02d}", f"http://x.com/{i:02d}.html",
+         "common " * 3 + ("rare " * (1 + i % 4) if i % 5 == 0 else "filler"))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "doc_id string, url string, text string")
 
-    from google_like_search_engine_spark.wand import _live_block_ids
 
-    # 8 "hot" docs repeat the query terms many times; 152 "cold" docs
-    # mention them once among filler — hot and cold docs land in
-    # different doc-index ranges, so cold blocks' max_tf stays 1
-    rows = []
-    for i in range(8):
-        rows.append((f"d{i:03d}", f"http://x.com/{i:03d}.html",
-                     " ".join(["spark shuffle"] * 30)))
-    for i in range(8, 160):
-        rows.append((f"d{i:03d}", f"http://x.com/{i:03d}.html",
-                     "filler words here spark shuffle other stuff"))
-    docs = spark.createDataFrame(rows, "doc_id string, url string, text string")
+# name -> (docs, block_span)
+_CORPORA = {
+    "random": (lambda spark, seed: _random_docs(spark, n=150, seed=seed), 32),
+    "skewed": (lambda spark, seed: _skewed_docs(spark), 16),
+    "common_rare": (lambda spark, seed: _common_rare_docs(spark), 8),
+}
+
+
+def _blocked_corpus(spark, corpus, seed):
+    """(postings, doc_stats, blocks, doc_stats_idx, n) of a named corpus,
+    persisted; the caller unpersists them."""
+    make, span = _CORPORA[corpus]
+    docs = make(spark, seed)
     postings = build_postings(docs).persist()
     idx = assign_doc_indexes(docs)
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=16).persist()
+    blocks = block_postings(postings.join(idx, "doc_id"), block_span=span).persist()
     doc_stats = postings.groupBy("doc_id", "url").agg(
         F.sum("tf").alias("n_term_entries")
     )
     doc_stats_idx = doc_stats.join(idx, "doc_id").select(
         "doc_index", "url", "n_term_entries"
     ).persist()
-    n = docs.count()
+    return postings, doc_stats, blocks, doc_stats_idx, docs.count()
 
-    # pruned path, k small enough that theta lands above cold blocks
-    k = 5
-    fast = blocked_maxscore_topk(
-        spark, "spark shuffle", blocks, doc_stats_idx, n, k=k,
-        small_query_entries=0,
-    ).collect()
-    naive = score_bm25(spark, "spark shuffle", postings, doc_stats, n).limit(k).collect()
-    assert [(r["url"], round(r["score"], 9)) for r in fast] == [
-        (r["url"], round(r["score"], 9)) for r in naive
-    ]
 
-    # direct evidence: the metadata bound keeps only the hot block(s)
-    from google_like_search_engine_spark.ranker import expand_query
-
-    words = sorted({w.lower() for w in expand_query("spark shuffle")})
-    qblocks = blocks.where(F.col("term").isin(words))
-    total_blocks = qblocks.select("block_id").distinct().count()
-    stats = doc_stats_idx.agg(
-        F.avg("n_term_entries").alias("a"), F.min("n_term_entries").alias("m")
-    ).collect()[0]
-    dfs = {
-        r["term"]: r["df"]
-        for r in qblocks.groupBy("term").agg(F.sum("n_docs").alias("df")).collect()
-    }
-    idf = {t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in dfs.items()}
-    # theta = k-th best real score (>= the seeded theta -> fewer live
-    # blocks with the real one would still be exact; use the seeded
-    # bound's weakest form: the k-th naive score)
-    theta = naive[-1]["score"]
-    live = _live_block_ids(
-        qblocks, idf, theta, 1.2, 0.75, float(stats["m"]), float(stats["a"])
-    ).count()
-    assert live < total_blocks, (live, total_blocks)
-    assert live >= 1
+@pytest.mark.parametrize("corpus,query,k", [
+    pytest.param("random", "spark shuffle", 5, id="spark shuffle-5"),
+    pytest.param("random", "spark", 10, id="spark-10"),
+    pytest.param("random", "index merge join table", 7, id="index merge join table-7"),
+    pytest.param("random", "missingword", 5, id="missingword-5"),
+    pytest.param("skewed", "spark shuffle", 5, id="skewed-spark shuffle-5"),
+    pytest.param("common_rare", "common rare", 3, id="common_rare-common rare-3"),
+])
+def test_blocked_maxscore_equals_naive(spark, corpus, query, k):
+    """Exactness through the compressed path (encode -> decode -> one
+    SQL text) against the naive scorer, on a random corpus and on the
+    tf-skewed shapes block-max pruning was built for. Scores differ at
+    most by the idf's one-ulp JVM/Python log difference and summation
+    order, so rel 1e-12 holds."""
+    postings, doc_stats, blocks, doc_stats_idx, n = _blocked_corpus(spark, corpus, 23)
+    naive = score_bm25(spark, query, postings, doc_stats, n).limit(k).collect()
+    fast = blocked_maxscore_topk(spark, query, blocks, doc_stats_idx, n, k=k).collect()
+    assert [r["url"] for r in fast] == [r["url"] for r in naive], query
+    for a, b in zip(fast, naive):
+        assert a["score"] == pytest.approx(b["score"], rel=1e-12)
     for df in (postings, blocks, doc_stats_idx):
         df.unpersist()
 
@@ -205,28 +172,27 @@ def test_blocked_proximity_topk_counts(spark):
     blocks.unpersist()
 
 
-@pytest.mark.parametrize("threshold", [0.5, 1.5, 3.0, 99.0])
-def test_blocked_maxscore_threshold_equals_naive(spark, threshold):
-    """The score-threshold form of the pruned path (the oracle-checked
-    driver entry's machinery) returns exactly the naive scorer's docs
-    with round(score,4) >= threshold — including the provably-empty
-    short-circuit when the threshold exceeds the total ub sum."""
+@pytest.mark.parametrize("corpus,query,threshold", [
+    pytest.param("random", "spark shuffle index", 0.5, id="0.5"),
+    pytest.param("random", "spark shuffle index", 1.5, id="1.5"),
+    pytest.param("random", "spark shuffle index", 3.0, id="3.0"),
+    pytest.param("random", "spark shuffle index", 99.0, id="99.0"),
+    pytest.param("skewed", "spark shuffle", None, id="skewed-gap"),
+    pytest.param("common_rare", "common rare", None, id="common_rare-gap"),
+])
+def test_blocked_maxscore_threshold_equals_naive(spark, corpus, query, threshold):
+    """The score-threshold form (the oracle-checked driver entry's
+    plan) returns exactly the naive scorer's docs with round(score,4)
+    >= threshold, an empty set above every score included. On the
+    tf-skewed corpora the threshold (None) sits in the gap between the
+    8 hot docs and the rest."""
     from google_like_search_engine_spark.wand import blocked_maxscore_threshold
 
-    docs = _random_docs(spark, n=150, seed=29)
-    postings = build_postings(docs).persist()
-    idx = assign_doc_indexes(docs)
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=32).persist()
-    doc_stats = postings.groupBy("doc_id", "url").agg(
-        F.sum("tf").alias("n_term_entries")
-    )
-    doc_stats_idx = doc_stats.join(idx, "doc_id").select(
-        "doc_index", "url", "n_term_entries"
-    ).persist()
-    n = docs.count()
-
-    query = "spark shuffle index"
+    postings, doc_stats, blocks, doc_stats_idx, n = _blocked_corpus(spark, corpus, 29)
     naive = score_bm25(spark, query, postings, doc_stats, n).collect()
+    if threshold is None:
+        scores = sorted((round(r["score"], 4) for r in naive), reverse=True)
+        threshold = round((scores[7] + scores[8]) / 2, 4)
     expected = {
         r["url"]: round(r["score"], 4)
         for r in naive
@@ -239,77 +205,9 @@ def test_blocked_maxscore_threshold_equals_naive(spark, threshold):
         ).collect()
     }
     assert set(got) == set(expected), (threshold, len(got), len(expected))
+    assert corpus == "random" or len(got) == 8
     for url, s in got.items():
         assert s == pytest.approx(expected[url], abs=1e-9)
-    for df in (postings, blocks, doc_stats_idx):
-        df.unpersist()
-
-
-def test_blocked_maxscore_threshold_prunes_blocks(spark):
-    """On the tf-skewed corpus a high threshold drops cold blocks via
-    the metadata bound while the surviving set stays exact."""
-    import math
-
-    from google_like_search_engine_spark.wand import (
-        _live_block_ids,
-        blocked_maxscore_threshold,
-    )
-
-    rows = []
-    for i in range(8):
-        rows.append((f"d{i:03d}", f"http://x.com/{i:03d}.html",
-                     " ".join(["spark shuffle"] * 30)))
-    for i in range(8, 160):
-        rows.append((f"d{i:03d}", f"http://x.com/{i:03d}.html",
-                     "filler words here spark shuffle other stuff"))
-    docs = spark.createDataFrame(rows, "doc_id string, url string, text string")
-    postings = build_postings(docs).persist()
-    idx = assign_doc_indexes(docs)
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=16).persist()
-    doc_stats = postings.groupBy("doc_id", "url").agg(
-        F.sum("tf").alias("n_term_entries")
-    )
-    doc_stats_idx = doc_stats.join(idx, "doc_id").select(
-        "doc_index", "url", "n_term_entries"
-    ).persist()
-    n = docs.count()
-    naive = score_bm25(spark, "spark shuffle", postings, doc_stats, n).collect()
-    scores = sorted((round(r["score"], 4) for r in naive), reverse=True)
-    threshold = round((scores[7] + scores[8]) / 2, 4)  # between hot and cold
-
-    got = {
-        r["url"]: r["score"]
-        for r in blocked_maxscore_threshold(
-            spark, "spark shuffle", blocks, doc_stats_idx, n, threshold=threshold
-        ).collect()
-    }
-    expected = {
-        r["url"]: round(r["score"], 4)
-        for r in naive
-        if round(r["score"], 4) >= threshold
-    }
-    assert got == pytest.approx(expected)
-    assert len(got) == 8
-
-    # direct evidence the metadata bound drops cold blocks at this theta
-    from google_like_search_engine_spark.ranker import expand_query
-
-    words = sorted({w.lower() for w in expand_query("spark shuffle")})
-    qblocks = blocks.where(F.col("term").isin(words))
-    dfs = {
-        r["term"]: r["df"]
-        for r in qblocks.groupBy("term").agg(F.sum("n_docs").alias("df")).collect()
-    }
-    idf = {t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in dfs.items()}
-    stats = doc_stats_idx.agg(
-        F.avg("n_term_entries").alias("a"), F.min("n_term_entries").alias("m")
-    ).collect()[0]
-    total_blocks = qblocks.select("block_id").distinct().count()
-    live = _live_block_ids(
-        qblocks, idf, threshold - 1e-6, 1.2, 0.75,
-        float(stats["m"]), float(stats["a"]),
-    ).count()
-    assert 1 <= live < total_blocks, (live, total_blocks)
     for df in (postings, blocks, doc_stats_idx):
         df.unpersist()
 
@@ -1168,12 +1066,12 @@ def test_warm_positional_and_filtered_queries_are_one_job_per_shard(
 
 
 def test_threshold_uses_deployment_dictionary(spark, url_hash_shards):
-    """/threshold reads (df, max_tf) from the deployment's dictionary:
-    no block-metadata aggregation job per shard, and the non-essential
-    term's candidate blocks come from block metadata, with no block-span
-    probe job, so this 2-shard threshold query runs 12 jobs (16 when
-    each shard aggregated its own term stats, 14 with the probe), and
-    the answer is the single index's."""
+    """/threshold reads df from the deployment's dictionary (no
+    block-metadata aggregation job per shard) and scores each shard in
+    ONE SQL text cut by rounded score, so this 2-shard threshold query
+    runs 2 jobs, one per shard (12 under MaxScore pruning, 16 when each
+    shard aggregated its own term stats), and the answer is the single
+    index's."""
     _eng, full, paths = url_hash_shards
     eng = SearchEngine(spark)
     sc = spark.sparkContext
@@ -1190,7 +1088,7 @@ def test_threshold_uses_deployment_dictionary(spark, url_hash_shards):
                     eng.search_bm25_threshold_sharded(paths, "spark shuffle", 0.5).collect()
                 )
             assert got == want and got
-            assert jobs() == 12, jobs()
+            assert jobs() == 2, jobs()
     finally:
         eng.unpersist()
 
@@ -1250,15 +1148,14 @@ _IDENTITY_CASES = [
 ]
 
 
-def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards, monkeypatch):
+def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards):
     """The one-SQL-text BM25 kernel (wand.bm25_sql) gives the Column
     kernel's urls and scores bit for bit (==, no tolerance), with and
     without +/- filters, on a served, a blocked and a 2-shard index.
-    Unfiltered, the Column kernel is the MaxScore path the engine takes
-    with ``small_query_entries=0``; filtered (which never prunes), and
-    on the served relation, it is the Column chain the paths built
-    before the text (``_column_topk``) under the same stats."""
-    from google_like_search_engine_spark import engine as engine_mod
+    The Column kernel is the chain the paths built before the text
+    (``_column_topk``) under the same stats: over the shard's decoded
+    entries per shard, merged by (score desc, url), and over the served
+    relation."""
     from google_like_search_engine_spark.compression import scoring_entries
     from google_like_search_engine_spark.ranker import expand_query
     from google_like_search_engine_spark.wand import bm25_idf
@@ -1274,9 +1171,6 @@ def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards, monk
     )
     served._avgdl = float(base.doc_stats.agg(F.avg("n_term_entries")).collect()[0][0])
     assert served.enable_serving()
-    column_kernel = functools.partial(
-        engine_mod.blocked_maxscore_topk, small_query_entries=0
-    )
 
     def shard_reference(dep, i, words, req, exc):
         infos, df = dep.lookup(words + req + exc)
@@ -1309,18 +1203,12 @@ def test_sql_text_matches_column_kernel_bit_for_bit(spark, url_hash_shards, monk
             for shard_paths in ([full], paths):
                 got = [tuple(r) for r in eng.search_bm25_sharded(
                     shard_paths, query, k=10, required=req, excluded=exc).collect()]
-                if req or exc:
-                    dep = eng._deployment(shard_paths)
-                    merged = [
-                        row for i in range(len(shard_paths))
-                        for row in shard_reference(dep, i, words, req, exc)
-                    ]
-                    want = sorted(merged, key=lambda x: (-x[1], x[0]))[:10]
-                else:
-                    with monkeypatch.context() as m:
-                        m.setattr(engine_mod, "blocked_maxscore_topk", column_kernel)
-                        want = [tuple(r) for r in eng.search_bm25_sharded(
-                            shard_paths, query, k=10).collect()]
+                dep = eng._deployment(shard_paths)
+                merged = [
+                    row for i in range(len(shard_paths))
+                    for row in shard_reference(dep, i, words, req, exc)
+                ]
+                want = sorted(merged, key=lambda x: (-x[1], x[0]))[:10]
                 assert got == want and got, (query, req, exc, shard_paths)
     finally:
         served._served.unpersist()
@@ -1461,48 +1349,55 @@ def test_shard_exchange_is_sized_to_the_shard(spark, url_hash_shards):
         eng.unpersist()
 
 
-def test_maxscore_candidate_blocks_need_no_span_probe(spark):
-    """The big-query MaxScore path reads the non-essential terms'
-    candidate block ids off the live essential-term blocks' metadata,
-    so a query with a non-essential term runs no job to probe the
-    block span: 9 jobs warm without sidecar stats (10 with the probe),
-    with the naive answer."""
+def test_warm_topk_over_100k_entries_is_one_job(spark):
+    """A query matching 105k postings (35k docs x 3 terms, 5 block
+    groups at block_span 8192) runs the same one SQL text as a small
+    one: called as the engine calls it (dictionary, sidecar avgdl, url
+    lookup), a warm top-k is ONE Spark job (MaxScore pruning ran 4),
+    and its urls are the naive scorer's. Docs 0-9 repeat every term 2-11
+    times, so the top 10 are distinct and far above the tied rest."""
     from google_like_search_engine_spark.engine import low_latency
 
-    rows = [
-        (f"d{i:02d}", f"http://x.com/{i:02d}.html",
-         "common " * 3 + ("rare " * (1 + i % 4) if i % 5 == 0 else "filler"))
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, url string, text string")
-    postings = build_postings(docs).persist()
-    idx = assign_doc_indexes(docs).persist()
-    blocks = block_postings(postings.join(idx, "doc_id"), block_span=8).persist()
-    doc_stats = postings.groupBy("doc_id", "url").agg(
-        F.sum("tf").alias("n_term_entries")
+    docs = spark.range(35_000).selectExpr(
+        "format_string('http://x.com/%05d.html', id) AS doc_id",
+        "format_string('http://x.com/%05d.html', id) AS url",
+        "CASE WHEN id < 10 THEN trim(repeat('alpha beta gamma ', CAST(id AS INT) + 2))"
+        " ELSE 'alpha beta gamma' END AS text",
     )
-    dsi = doc_stats.join(idx, "doc_id").select(
-        "doc_index", "url", "n_term_entries"
-    ).persist()
+    postings = build_postings(docs).persist()
+    idx = assign_doc_indexes(docs)
+    blocks = block_postings(postings.join(idx, "doc_id"), block_span=8192).persist()
+    doc_stats = postings.groupBy("doc_id", "url").agg(F.sum("tf").alias("n_term_entries"))
+    dsi = doc_stats.join(idx, "doc_id").select("doc_index", "url", "n_term_entries").persist()
+    n = 35_000
     sc = spark.sparkContext
-
-    def run():
-        return blocked_maxscore_topk(
-            spark, "common rare", blocks, dsi, 40, k=3, small_query_entries=0
-        ).collect()
-
     try:
-        naive = score_bm25(spark, "common rare", postings, doc_stats, 40).limit(3).collect()
+        term_stats = {
+            r["term"]: (int(r["df"]), int(r["max_tf"]))
+            for r in blocks.groupBy("term").agg(
+                F.sum("n_docs").alias("df"), F.max("max_tf").alias("max_tf")
+            ).collect()
+        }
+        assert sum(df for df, _mt in term_stats.values()) > 100_000
+        avgdl = dsi.agg(F.avg("n_term_entries")).collect()[0][0]
+        lookup = {r["doc_index"]: r["url"] for r in dsi.collect()}
+
+        def run():
+            return blocked_maxscore_topk(
+                spark, "alpha beta gamma", blocks, dsi, n, k=10,
+                doc_stats_agg=(avgdl, 3.0), term_stats=term_stats, url_lookup=lookup,
+            ).collect()
+
         with low_latency(spark, shuffle_partitions=8):
             run()
             with spark_jobs(sc) as jobs:
-                fast = run()
-        assert [r["url"] for r in fast] == [r["url"] for r in naive]
-        for a, b in zip(fast, naive):
-            assert a["score"] == pytest.approx(b["score"], rel=1e-9)
-        assert jobs() == 9, jobs()
+                rows = run()
+        assert jobs() == 1, jobs()
+        naive = score_bm25(spark, "alpha beta gamma", postings, doc_stats, n).limit(10).collect()
+        assert [lookup[d] for d, _s in rows] == [r["url"] for r in naive]
+        assert [r["url"] for r in naive] == [f"http://x.com/{i:05d}.html" for i in range(9, -1, -1)]
     finally:
-        for df in (postings, idx, blocks, dsi):
+        for df in (postings, blocks, dsi):
             df.unpersist()
 
 

@@ -229,6 +229,36 @@ def test_hybrid_route_sharded(hybrid_setup, hybrid_shards, tmp_path_factory):
         srv.shutdown()
 
 
+def test_warm_sharded_hybrid_route_sends_four_sql_texts(
+    hybrid_setup, hybrid_shards, tmp_path_factory
+):
+    """A warm 2-shard /hybrid builds 4 spark.sql texts: one BM25 text
+    per shard, the cosine text and the fused VALUES result. The merged
+    shard rows fuse as they are; wrapping them in a VALUES relation
+    first, and collecting it, was a fifth."""
+    from tests.conftest import py4j_calls
+
+    eng, blocked, emb = hybrid_setup
+    emb_path = str(tmp_path_factory.mktemp("hyb_emb_sql") / "emb.parquet")
+    emb.write.parquet(emb_path)
+    srv = make_server(
+        eng, "127.0.0.1", 0, shard_paths=hybrid_shards, embeddings_path=emb_path
+    )
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        qurl = eng.search_bm25_blocked(blocked, QUERY, k=1).collect()[0]["url"]
+        q = urllib.parse.urlencode({"query": QUERY, "qurl": qurl, "k": 5})
+        for _request in range(2):  # the second one is warm
+            with py4j_calls(eng.spark.sparkContext) as calls:
+                with urllib.request.urlopen(f"{base}/hybrid?{q}", timeout=120) as resp:
+                    assert resp.status == 200 and json.loads(resp.read())["results"]
+        assert calls("sql") == 4, calls("sql")
+    finally:
+        srv.shutdown()
+
+
 def _qv(emb, url):
     return emb.where(F.col("url") == url).select("embedding").take(1)[0][0]
 

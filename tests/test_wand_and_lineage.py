@@ -1,4 +1,4 @@
-"""MaxScore exactness (vs naive BM25) + checkpoint/lineage resume tests."""
+"""Blocked BM25 exactness (vs naive BM25) + checkpoint/lineage resume tests."""
 
 import json
 import os
@@ -39,10 +39,9 @@ def _random_docs(spark, n=120, seed=11):
     ("spark missingword", 5),
 ])
 def test_maxscore_equals_naive_bm25(spark, query, k):
-    """The MaxScore plan (theta seed, essential terms, block-max
-    candidates: forced by ``small_query_entries=0``) returns the naive
-    top-k. MaxScore runs on the blocked layout only; the flat index's
-    one plan is the naive scorer itself."""
+    """The blocked top-k (one SQL text over a 16-span build, several
+    blocks per term) returns the naive top-k; the flat index's one plan
+    is the naive scorer itself."""
     from google_like_search_engine_spark.compression import (
         assign_doc_indexes,
         block_postings,
@@ -60,9 +59,7 @@ def test_maxscore_equals_naive_bm25(spark, query, k):
     ).cache()
     n = docs.count()
     naive = score_bm25(spark, query, postings, doc_stats, n).limit(k).collect()
-    fast = blocked_maxscore_topk(
-        spark, query, blocks, doc_stats_idx, n, k=k, small_query_entries=0
-    ).collect()
+    fast = blocked_maxscore_topk(spark, query, blocks, doc_stats_idx, n, k=k).collect()
     assert [r["url"] for r in fast] == [r["url"] for r in naive], query
     for a, b in zip(fast, naive):
         assert a["score"] == pytest.approx(b["score"], rel=1e-9)
@@ -76,8 +73,7 @@ def test_bm25_idf_python_twin_matches_jvm_log(spark):
     (the flat path) over (N, df) grids spanning the test and bench
     corpus sizes. The JVM's StrictMath log and Python's libm log are not
     bit-identical: they differ by at most one ulp, on a few percent of
-    the points, which is why cross-path scores are compared to rel 1e-9
-    and block-max pruning keeps an epsilon."""
+    the points, which is why cross-path scores are compared to rel 1e-9."""
     import math
 
     from google_like_search_engine_spark.wand import bm25_idf
