@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import load
+from .wand import bm25_idf, bm25_partial
 
 QUERY_TERMS = ["spark", "shuffle", "join", "window", "stream"]
 STOP_TERMS = ["the", "a", "of", "and", "to", "in", "is", "it", "on", "for"]
@@ -192,11 +193,10 @@ def bm25_search(spark, sf_dir, k1: float = 1.2, b: float = 0.75):
         .groupBy("doc_id")
         .agg(
             F.round(
-                F.sum(
-                    F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                    * (F.col("tf") * (k1 + 1))
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-                ),
+                F.sum(bm25_partial(
+                    F.col("tf"), F.col("dl"), bm25_idf(F.col("n"), F.col("df")),
+                    F.col("avgdl"), k1, b,
+                )),
                 4,
             ).alias("score")
         )
@@ -1024,11 +1024,10 @@ def bm25_filtered_search(spark, sf_dir, k1: float = 1.2, b: float = 0.75):
         .groupBy("doc_id")
         .agg(
             F.round(
-                F.sum(
-                    F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                    * (F.col("tf") * (k1 + 1))
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-                ),
+                F.sum(bm25_partial(
+                    F.col("tf"), F.col("dl"), bm25_idf(F.col("n"), F.col("df")),
+                    F.col("avgdl"), k1, b,
+                )),
                 4,
             ).alias("score")
         )
@@ -1698,11 +1697,9 @@ def search_eval_ndcg(spark, sf_dir, k1: float = 1.2, b: float = 0.75):
         .groupBy("qid", "n_q", "doc_id", "lang")
         .agg(
             F.round(
-                F.sum(
-                    F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                    * (F.col("tf") * (k1 + 1))
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl)))
-                ),
+                F.sum(bm25_partial(
+                    F.col("tf"), F.col("dl"), bm25_idf(n, F.col("df")), avgdl, k1, b
+                )),
                 4,
             ).alias("score"),
             F.countDistinct("w").alias("n_matched"),
@@ -2051,11 +2048,9 @@ def search_eval_mrr(spark, sf_dir, k1: float = 1.2, b: float = 0.75):
         .groupBy("qid", "n_q", "doc_id", "lang")
         .agg(
             F.round(
-                F.sum(
-                    F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                    * (F.col("tf") * (k1 + 1))
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl)))
-                ),
+                F.sum(bm25_partial(
+                    F.col("tf"), F.col("dl"), bm25_idf(n, F.col("df")), avgdl, k1, b
+                )),
                 4,
             ).alias("score"),
             F.countDistinct("w").alias("n_matched"),

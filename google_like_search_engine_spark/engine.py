@@ -1148,12 +1148,12 @@ class SearchEngine:
         )
         try:
             self.term_df = self.spark.read.parquet(f"{path}/term_df").persist()
-        except Exception:
+        except _MISSING_SIDECAR:
             self.term_df = None
         if with_pageranks:
             try:
                 self.pageranks = self.spark.read.parquet(f"{path}/pageranks").persist()
-            except Exception:
+            except _MISSING_SIDECAR:
                 self.pageranks = None
         return self
 
@@ -1175,9 +1175,10 @@ class SearchEngine:
         k: int = 10,
         analyzer=None,
     ) -> DataFrame:
-        """BM25 top-k (ranker.score_bm25 with the build-time dictionary).
-        The flat posting index has this one plan; every path, flat or
-        blocked, aggregates every posting of the query terms.
+        """BM25 top-k: ranker.score_bm25 with the build-time dictionary,
+        one SQL text (wand.bm25_sql, the served and blocked paths'
+        kernel) after one df lookup job. Every path, flat or blocked,
+        aggregates every posting of the query terms.
 
         ``analyzer``: query-side half of the pluggable-analyzer seam —
         a ``str -> list[str]`` callable producing the same terms the

@@ -22,13 +22,16 @@ Reference semantics pinned (rank-identity invariants):
 
 BM25 is the scale-path scorer the rebuild adds (north-star): standard
 Robertson/Sparck-Jones idf = ln((N-df+0.5)/(df+0.5)+1), k1=1.2, b=0.75,
-dl = per-doc term-entry count, carried by every posting.
+dl = per-doc term-entry count, carried by every posting. Over the flat
+postings it is one SQL text, the ``wand.bm25_sql`` kernel every BM25
+path renders, with idf resolved driver-side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import sqltext as sql
 from .kernels.porter import porter_stem
 
 
@@ -113,26 +116,29 @@ def score_bm25(
     term_df: DataFrame | None = None,
     terms: list | None = None,
 ) -> DataFrame:
-    """BM25 top-k scoring; returns (url, score) ordered desc.
+    """BM25 scoring over the flat postings; returns every matching url
+    as (url, score) ordered by (score desc, url asc).
 
     ``terms``: pre-analyzed query terms — the query-side half of the
     pluggable-analyzer seam (an index built with a custom postings_fn
     must analyze queries the same way, e.g. CJK bigrams); bypasses the
-    default expand_query/split tokenization.
+    default expand_query/split tokenization. Query expansion mirrors
+    expand_query but dedupes on the lowercase form (BM25 is our own
+    scorer; no reference quirk to preserve).
 
-    dl = the postings' ``dl`` column, the per-document term-entry count
-    (sum tf over the doc's terms, raw+stem — consistent between index
-    and query side), so scoring joins nothing; df counted on distinct
-    docs per term. Query expansion mirrors expand_query but dedupes on
-    the lowercase form (BM25 is our own scorer; no reference quirk to
-    preserve).
+    The plan is ONE literal-substituted SQL text, ``wand.bm25_sql``
+    keyed by url, the served and blocked paths' kernel: the postings'
+    rows of the query words (their ``dl`` column is the per-document
+    term-entry count, so scoring joins nothing), summed per url. df is
+    resolved driver-side by one collect over the words: from
+    ``term_df``, the build-time dictionary (term, df), when given, else
+    from distinct docs per term counted over ``postings``. A word
+    without a df gets no idf, as on the served path.
 
     ``avgdl``: precomputed at build time; when None, one aggregation
-    over ``doc_stats`` supplies it. ``term_df``: the build-time
-    dictionary table (term, df); it removes the per-query df
-    aggregation (a real engine's dictionary stores df).
+    over ``doc_stats`` supplies it.
     """
-    from .wand import _local_result_df, bm25_idf, bm25_partial, idf_map
+    from .wand import _local_result_df, bm25_idf, bm25_sql
 
     if terms is not None:
         words = sorted({w.lower() for w in terms})
@@ -144,44 +150,18 @@ def score_bm25(
         return _local_result_df(spark, [])
 
     if avgdl is None:
-        avgdl_row = doc_stats.agg(F.avg("n_term_entries").alias("avgdl")).collect()[0]
-        avgdl = float(avgdl_row["avgdl"] or 1.0)
-
-    # isin, not a broadcast-join with a literal term DF: the filter
-    # pushes to the scan / cache batch stats and costs no per-query
-    # createDataFrame driver round-trip
+        avgdl = float(doc_stats.agg(F.avg("n_term_entries")).collect()[0][0] or 1.0)
+    if term_df is None:
+        term_df = postings.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    dfs = {
+        r["term"]: int(r["df"])
+        for r in term_df.where(f"term IN ({sql.quotes(words)})").collect()
+    }
+    hit = [w for w in words if w in dfs]
+    if not hit:
+        return _local_result_df(spark, [])
     n = float(total_documents)
-    if term_df is not None:
-        # dictionary path (serving): resolve the (tiny, <= |words|-row)
-        # df lookup driver-side and inline the idf values as a literal
-        # map, like search_bm25_served does — the per-query broadcast
-        # exchange + hash join disappear from the plan, which both
-        # shrinks per-query planning time and removes the broadcast
-        # machinery from the latency path (idf: wand.bm25_idf's Python
-        # twin of the JVM expression below)
-        dfmap = {
-            r["term"]: int(r["df"])
-            for r in term_df.where(F.col("term").isin(words)).collect()
-        }
-        hit = [w for w in words if w in dfmap]
-        if not hit:
-            return _local_result_df(spark, [])
-        matched = postings.where(F.col("term").isin(hit)).select(
-            "term", "url", "tf", "dl"
-        )
-        idf_col = idf_map({w: bm25_idf(n, dfmap[w]) for w in hit})
-    else:
-        matched = postings.where(F.col("term").isin(words)).select(
-            "term", "doc_id", "url", "tf", "dl"
-        )
-        dfc = matched.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-        matched = matched.join(F.broadcast(dfc), "term")
-        idf_col = bm25_idf(n, F.col("df"))
-    scored = matched.select(
-        "url", bm25_partial(F.col("tf"), F.col("dl"), idf_col, avgdl, k1, b).alias("partial")
-    )
-    return (
-        scored.groupBy("url")
-        .agg(F.sum("partial").alias("score"))
-        .orderBy(F.desc("score"), F.asc("url"))
-    )
+    return sql.over(postings, lambda v: bm25_sql(
+        f"(SELECT url, term, tf, dl FROM {v} WHERE term IN ({sql.quotes(hit)}))",
+        "url", hit, {w: bm25_idf(n, dfs[w]) for w in hit}, avgdl, k1, b,
+    ) + " ORDER BY score DESC, url ASC")

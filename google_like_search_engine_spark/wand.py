@@ -14,9 +14,10 @@ slower than scoring every posting. The blocks still record each
 block's ``max_tf`` and the dictionary each term's; fsck and
 index_stats read them.
 
-Every path scores through one kernel: ``bm25_idf`` for idf and
-``bm25_partial`` for a term's contribution (a Column), whose SQL-text
-form ``bm25_sql`` is the serving paths' per-doc top-k.
+Every BM25 query path — flat (ranker.score_bm25), served, blocked
+and sharded — is the one SQL text ``bm25_sql`` with idf from
+``bm25_idf``. ``bm25_partial`` is the same partial as a Column, for the
+catalog's relational BM25 queries.
 
 Phrase and proximity queries fold positions in one grouped pass over
 the positions store (``_positional_topk``), also one job per shard.
@@ -39,37 +40,32 @@ _SCORED = "url string, score double"
 
 def bm25_idf(n, df):
     """Robertson/Sparck-Jones idf ln((N - df + 0.5) / (df + 0.5) + 1),
-    the one idf source. A Column ``df`` gives the JVM expression (the
-    flat path counts df in-plan); a number gives the driver-side float
-    that literal idf maps carry. The JVM log (StrictMath) and Python's
-    libm log differ by one ulp on a few percent of (N, df) pairs —
-    pinned by tests/test_wand_and_lineage.py — so scores agree across
-    paths to ~1e-16 relative, not bit for bit."""
+    the one idf source. A number gives the driver-side float that every
+    query path's literal idf map carries; a Column ``df`` gives the JVM
+    expression, used only by the catalog's relational BM25 queries
+    (catalog_text), which count df in-plan. The JVM log (StrictMath)
+    and Python's libm log differ by one ulp on a few percent of (N, df)
+    pairs — pinned by tests/test_wand_and_lineage.py — so the catalog's
+    scores agree with the query paths' to ~1e-16 relative, not bit for
+    bit."""
     if isinstance(df, Column):
         return F.log((F.lit(n) - df + 0.5) / (df + 0.5) + 1.0)
     return math.log((n - df + 0.5) / (df + 0.5) + 1.0)
 
 
-def bm25_partial(tf: Column, dl, idf, avgdl: float, k1: float = 1.2, b: float = 0.75) -> Column:
-    """One term's BM25 contribution as a plan expression, the one
-    scoring kernel (``bm25_sql`` is its SQL-text form)."""
+def bm25_partial(tf: Column, dl, idf, avgdl, k1: float = 1.2, b: float = 0.75) -> Column:
+    """One term's BM25 contribution as a plan expression: the Column
+    form of ``bm25_sql``'s partial, operand for operand. Its callers are
+    the catalog's relational BM25 queries (catalog_text); every query
+    path renders ``bm25_sql``."""
     return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / F.lit(avgdl)))
-
-
-def idf_map(idf: dict) -> Column:
-    """{term: idf} as a literal map looked up by the ``term`` column:
-    idf enters the plan as literals (no df join, no per-query
-    createDataFrame)."""
-    return F.create_map(*[x for t in idf for x in (F.lit(t), F.lit(idf[t]))])[
-        F.col("term")
-    ]
 
 
 def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.2,
              b: float = 0.75, required=(), excluded=(), k: int | None = None,
              partitions: int | None = None) -> str:
     """The per-doc BM25 top-k as ONE SQL text, the shared kernel of the
-    served and blocked paths: building it is one ``spark.sql`` call
+    flat, served and blocked paths: building it is one ``spark.sql`` call
     instead of a py4j round trip per Column. ``rows`` is a FROM item of
     (``key``, term, tf, dl) rows already filtered to the scanned terms.
 

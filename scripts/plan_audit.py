@@ -122,6 +122,25 @@ def main():
          lambda p: "ReadSchema" in p),
     ])
 
+    # flat BM25 (ranker.score_bm25 with a dictionary): one SQL text
+    # whose term filter reaches the parquet scan; no df join, no Python
+    postings.write.mode("overwrite").parquet("/tmp/plan_audit_postings")
+    fpost = spark.read.parquet("/tmp/plan_audit_postings")
+    fstats = fpost.groupBy("doc_id", "url").agg(F.sum("tf").alias("n_term_entries"))
+    fdict = fpost.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    from google_like_search_engine_spark.ranker import score_bm25
+
+    audit("flat_bm25_text", score_bm25(
+        spark, "spark join window", fpost, fstats, fstats.count(), term_df=fdict,
+    ), [
+        ("term In pushed to parquet scan",
+         lambda p: any("PushedFilters" in ln and "In(term" in ln
+                       for ln in p.splitlines())),
+        ("no join", not_has("Join")),
+        ("no python udf", not_has("BatchEvalPython")),
+        ("whole-stage codegen", has("[codegen id :")),
+    ])
+
     # wordcount (the flatMap archetype): explode stays JVM-side
     audit("wordcount", t.wordcount(spark, sf_dir), [
         ("no python udf", not_has("BatchEvalPython")),

@@ -1115,10 +1115,14 @@ def _column_topk(rows, key, words, idf, avgdl, required=(), excluded=(), k=10):
     """The Column-chain form of wand.bm25_sql's per-doc top-k — the
     plan the served and blocked paths built before the SQL text — over
     (``key``, term, tf, dl) rows: one partial per row, summed per doc,
-    with the +/- presence flags when filtered."""
-    from google_like_search_engine_spark.wand import bm25_partial, idf_map
+    with the +/- presence flags when filtered; idf is a literal map
+    looked up by the term column."""
+    from google_like_search_engine_spark.wand import bm25_partial
 
-    partial = bm25_partial(F.col("tf"), F.col("dl"), idf_map(idf), avgdl)
+    idf_col = F.create_map(*[x for t in idf for x in (F.lit(t), F.lit(idf[t]))])[
+        F.col("term")
+    ]
+    partial = bm25_partial(F.col("tf"), F.col("dl"), idf_col, avgdl)
     scored = rows.select(key, "term", partial.alias("partial"))
     if not (required or excluded):
         per_doc = scored.groupBy(key).agg(F.sum("partial").alias("score"))
@@ -1222,11 +1226,16 @@ def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
     raw text before parsing: a word or -term naming a variable (here one
     set to the indexed word "spark") is the literal, unindexed term.
     Words the index lacks add nothing, so the answer is the plain
-    query's, on one index and on two shards."""
+    query's, on one index and on two shards, and over the flat postings
+    with the dictionary (search_bm25) and without it (score_bm25)."""
     from google_like_search_engine_spark import sqltext
 
-    _eng, full, paths = url_hash_shards
+    base, full, paths = url_hash_shards
     eng = SearchEngine(spark)
+    flat = SearchEngine(spark)
+    flat.postings, flat.doc_stats, flat.total_documents = base.postings, base.doc_stats, 60
+    flat.term_df = base.postings.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    flat._avgdl = float(base.doc_stats.agg(F.avg("n_term_entries")).collect()[0][0])
     hostile = ["it's", "back\\slash", "x') OR ('1'='1", "--", "/*",
                "${spark.sql.shuffle.partitions}", "${env:PATH}", "${sg.hostile}"]
     for v in [*hostile, "$", "${", "a$b", "\\u0024"]:
@@ -1239,6 +1248,13 @@ def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
                 index, " ".join(["spark", *hostile]), excluded=hostile
             ).collect()
             assert [tuple(r) for r in got] == want and want, index
+        for run in (
+            lambda q: flat.search_bm25(q, k=60),
+            lambda q: score_bm25(spark, q, base.postings, base.doc_stats, 60),
+        ):
+            want = [tuple(r) for r in run("spark").collect()]
+            got = run(" ".join(["spark", *hostile])).collect()
+            assert [tuple(r) for r in got] == want and want
     finally:
         spark.conf.unset("sg.hostile")
         eng.unpersist()

@@ -47,8 +47,51 @@ def test_engine_served_bm25_identical(spark):
         served = eng.search_bm25_served(q, k=8).collect()
         assert [r["url"] for r in served] == [r["url"] for r in naive], q
         for a, b in zip(served, naive):
-            assert a["score"] == pytest.approx(b["score"], rel=1e-9)
+            assert a["score"] == pytest.approx(b["score"], rel=1e-12)
     eng.unpersist()
+
+
+def test_warm_flat_bm25_query_is_one_sql_text(spark):
+    """A warm flat search_bm25 is built as ONE spark.sql text (after its
+    dictionary lookup) and runs with at most 40 py4j commands in all,
+    construction and collect; the Column chain it replaces sent ~350."""
+    from tests.conftest import py4j_calls
+
+    pages = generate_pages(spark, 60, partitions=2).where("lang = 'en'")
+    eng = SearchEngine(spark).build(pages, run_pagerank=False)
+    try:
+        want = eng.search_bm25("search engine", k=10).collect()
+        with py4j_calls(spark.sparkContext) as calls:
+            rows = eng.search_bm25("search engine", k=10).collect()
+        assert calls("sql") == 1 and calls() <= 40, calls()
+        assert rows == want and rows
+    finally:
+        eng.unpersist()
+
+
+def test_load_missing_and_corrupt_sidecars(spark, tmp_path):
+    """An index saved without a dictionary or pageranks loads with both
+    None; a corrupt dictionary file raises instead of being dropped."""
+    from py4j.protocol import Py4JJavaError
+
+    pages = generate_pages(spark, 40, partitions=2).where("lang = 'en'")
+    eng = SearchEngine(spark).build(pages, run_pagerank=False)
+    eng.term_df.unpersist()
+    eng.term_df = None
+    path = str(tmp_path / "idx")
+    eng.save(path)
+    eng.unpersist()
+    loaded = SearchEngine(spark).load(path)
+    assert loaded.term_df is None and loaded.pageranks is None
+    assert loaded.search_bm25("search engine", k=5).collect()
+    loaded.unpersist()
+    os.makedirs(f"{path}/term_df")
+    with open(f"{path}/term_df/part-0.parquet", "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    bad = SearchEngine(spark)
+    with pytest.raises(Py4JJavaError, match="term_df/part-0.parquet"):
+        bad.load(path)
+    bad.unpersist()
 
 
 def _parquet_files(path):

@@ -69,11 +69,12 @@ def test_maxscore_equals_naive_bm25(spark, query, k):
 
 def test_bm25_idf_python_twin_matches_jvm_log(spark):
     """One idf source: wand.bm25_idf's Python twin (the literal idf maps
-    of the served, blocked and sharded paths) against its JVM expression
-    (the flat path) over (N, df) grids spanning the test and bench
-    corpus sizes. The JVM's StrictMath log and Python's libm log are not
-    bit-identical: they differ by at most one ulp, on a few percent of
-    the points, which is why cross-path scores are compared to rel 1e-9."""
+    of the flat, served, blocked and sharded paths) against its JVM
+    expression (the catalog's relational BM25) over (N, df) grids
+    spanning the test and bench corpus sizes. The JVM's StrictMath log
+    and Python's libm log are not bit-identical: they differ by at most
+    one ulp, on a few percent of the points, which is why scores built
+    on the two idf forms are compared with a relative tolerance."""
     import math
 
     from google_like_search_engine_spark.wand import bm25_idf
