@@ -83,7 +83,7 @@ def main():
 
     def _build():
         # single-pass production pipeline: tokenize -> doc-index join ->
-        # (term, doc-range-block) exchange -> varint-compressed blocks
+        # (term, doc-range-block) exchange -> columnar posting blocks
         d = docs.repartition(CPUS * 2)
         flat = build_postings(d)
         idx = assign_doc_indexes(d)

@@ -231,7 +231,7 @@ MAXSCORE_THRESHOLD = 1.4565
 def bm25_maxscore_threshold(spark, sf_dir):
     """The blocked BM25 threshold path (wand.blocked_maxscore_threshold),
     oracle-checked end-to-end: build a plain-dialect compressed blocked
-    index over the documents table (varint blocks + columnar sidecars +
+    index over the documents table (columnar block arrays with
     denormalized dls), then return every doc whose BM25 score rounds to
     >= MAXSCORE_THRESHOLD through the blocked query's one SQL text —
     the blocks decoded in codegen, join-free dl scoring, the rounded

@@ -1,21 +1,25 @@
-"""Delta-gap + varint block compression for posting lists.
+"""Doc-range posting blocks for the blocked index.
 
 The scale path for the 10^12-doc tier (north-star): posting lists are
-stored as fixed-size blocks of delta-gapped, varint-encoded doc indexes
-with per-block skip metadata (max doc index), enabling block-max WAND
-pruning and bounded-memory merges. Logical arrays stay queryable; the
-binary codec runs in Arrow-batched pandas UDFs.
+stored as blocks aligned to doc-index ranges, one row per (term,
+block) with per-block skip metadata (max doc index, max tf), so a
+query reads only its terms' blocks and a merge streams bounded rows.
+Every block column is a plain parquet column (parquet's own dictionary,
+bit-packing and page compression do the byte work), and the block
+build, the scoring path and the positional path are all SQL: no Python
+worker touches a block.
 
 Doc IDs in this engine are 40-char hash strings (reference row keys);
 compression operates on a dense int64 *doc index* assigned per build
 (``assign_doc_indexes``), with the (doc_index -> doc_id/url) mapping
 kept as a dimension table.
 
-Wire format per block (little-endian):
-  varint(n_docs)
-  varint gaps of doc indexes (first = delta from block base, then gaps)
-  varint tfs
-  varint(len positions_i) + varint position gaps, per doc
+Layout per block row (``block_postings``):
+  term, block_id, base = block_id * span, max_doc_index, n_docs,
+  max_tf, span;
+  doc_offs, tfs, dls: one int per doc (doc_index - base, tf, doc
+  length), ascending by doc_offs;
+  pos: one ascending position list per doc, aligned with doc_offs.
 """
 
 from __future__ import annotations
@@ -29,80 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 # assign_doc_indexes); at real corpus sizes the shuffle.partitions cap
 # governs instead.
 RANGE_SPLIT_BYTES = 4 * 1024 * 1024
-
-
-def varint_encode(values, out: bytearray) -> None:
-    for v in values:
-        v = int(v)
-        while True:
-            b = v & 0x7F
-            v >>= 7
-            if v:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                break
-
-
-def varint_decode(buf: bytes, pos: int, count: int):
-    vals = []
-    for _ in range(count):
-        shift = 0
-        v = 0
-        while True:
-            b = buf[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        vals.append(v)
-    return vals, pos
-
-
-def encode_block(doc_idxs, tfs, positions_lists, base: int = 0) -> bytes:
-    """Encode one posting block (doc_idxs ascending)."""
-    out = bytearray()
-    varint_encode([len(doc_idxs)], out)
-    gaps = []
-    prev = base
-    for d in doc_idxs:
-        gaps.append(d - prev)
-        prev = d
-    varint_encode(gaps, out)
-    varint_encode(tfs, out)
-    for plist in positions_lists:
-        varint_encode([len(plist)], out)
-        pgaps = []
-        prev = 0
-        for p in plist:
-            pgaps.append(p - prev)
-            prev = p
-        varint_encode(pgaps, out)
-    return bytes(out)
-
-
-def decode_block(buf: bytes, base: int = 0):
-    """-> (doc_idxs, tfs, positions_lists)."""
-    (n,), pos = varint_decode(buf, 0, 1)
-    gaps, pos = varint_decode(buf, pos, n)
-    doc_idxs = []
-    acc = base
-    for g in gaps:
-        acc += g
-        doc_idxs.append(acc)
-    tfs, pos = varint_decode(buf, pos, n)
-    positions_lists = []
-    for _ in range(n):
-        (ln,), pos = varint_decode(buf, pos, 1)
-        pgaps, pos = varint_decode(buf, pos, ln)
-        plist = []
-        p = 0
-        for g in pgaps:
-            p += g
-            plist.append(p)
-        positions_lists.append(plist)
-    return doc_idxs, tfs, positions_lists
 
 
 def assign_doc_indexes(docs: DataFrame, order_col: str = "doc_id") -> DataFrame:
@@ -119,11 +49,23 @@ def assign_doc_indexes(docs: DataFrame, order_col: str = "doc_id") -> DataFrame:
 
     The (doc_id -> doc_index) map is broadcast-joinable at test scale;
     at 10^12 docs persist it bucketed by doc_id and bucket-join instead.
+
+    A floating-point ``order_col`` (or doc_id) raises ValueError: the
+    counts job compares rows with Spark's struct equality, where NaN
+    equals NaN, but the numbering pass compares pandas tuples, where it
+    does not, so duplicate NaN rows would be numbered more often than
+    counted and collide with the next partition's indexes.
     """
     spark = docs.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     cols = ["doc_id"] if order_col == "doc_id" else [order_col, "doc_id"]
     sel = docs.select(*cols)
+    floats = [c for c, t in sel.dtypes if t in ("float", "double")]
+    if floats:
+        raise ValueError(
+            f"assign_doc_indexes orders by {', '.join(floats)}: floating-point "
+            "keys are not supported (NaN breaks the duplicate collapse)"
+        )
     # size-derived range-partition count (guide §2): a small id set in
     # shuffle.partitions range buckets pays 30+ scheduled tasks in each
     # of the three numbering jobs for droplets of data. Estimated plan
@@ -189,15 +131,14 @@ def assign_doc_indexes(docs: DataFrame, order_col: str = "doc_id") -> DataFrame:
     return ids.mapInPandas(number, schema="doc_id string, doc_index long")
 
 
-BLOCKS_SCHEMA = (
-    "term string, block_id long, base long, max_doc_index long, "
-    "n_docs int, max_tf int, span int, doc_offs array<int>, "
-    "tfs array<int>, dls array<int>, block binary"
-)
-
 # doc-index span per block: a head term contributes <= span entries per
 # block; a block's doc range is [block_id*span, (block_id+1)*span).
 BLOCK_SPAN = 8192
+
+# the in-memory bytes of one block row's int arrays (4 per doc offset,
+# tf, doc length and position): the one size measure save_blocked sizes
+# its term buckets by and index_stats reports
+BLOCK_BYTES = "4 * (3 * n_docs + aggregate(pos, 0L, (acc, p) -> acc + size(p)))"
 
 
 def block_postings(
@@ -205,7 +146,7 @@ def block_postings(
     block_span: int = BLOCK_SPAN,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(term, doc_index, tf, positions, dl) -> compressed posting blocks.
+    """(term, doc_index, tf, positions, dl) -> posting blocks, lazily.
 
     Blocks are aligned to *doc-index ranges* (block_id = doc_index //
     block_span), not fixed entry counts: block assignment is a pure
@@ -218,88 +159,48 @@ def block_postings(
     ``span`` is persisted per row (constant per build, RLE-free in
     parquet) so readers never have to infer it.
 
-    Two physical representations per block:
-    - ``doc_offs``/``tfs``/``dls``: columnar int arrays (offset =
-      doc_index - base, always < span so int32 is safe at any corpus
-      size; ``dls`` the per-doc lengths from the input's ``dl``) — the
-      SCORING path reads these via arrays_zip + explode, fully inside
-      whole-stage codegen, no Python workers in the query hot path
-      (``scoring_entries``). With ``dls`` denormalized into the block,
-      BM25 scoring needs NO join at all until the final top-k url
-      lookup — the self-contained-postings serving layout.
-    - ``block``: the delta-gap varint blob holding the full posting
-      incl. positions — the PHRASE/positions path decodes it in an
-      Arrow-batched pass (``unblock_postings``).
+    One columnar representation per block: ``doc_offs``/``tfs``/``dls``
+    int arrays (offset = doc_index - base, always < span so int32 is
+    safe at any corpus size; ``dls`` the per-doc lengths from the
+    input's ``dl``) and ``pos``, each doc's position list. The scoring
+    path explodes ``arrays_zip(doc_offs, tfs, dls)`` and the phrase and
+    proximity paths ``arrays_zip(doc_offs, pos)``, both inside
+    whole-stage codegen (``scoring_entries``, wand.blocked_phrase_topk).
+    With ``dls`` denormalized into the block, BM25 scoring needs NO
+    join at all until the final top-k url lookup — the
+    self-contained-postings serving layout.
 
-    Invariant: exactly ONE output row per (term, block_id). The
-    exchange co-locates each block's entries on one reducer and
-    sortWithinPartitions makes each group contiguous; the encoder
-    streams Arrow batches, carrying the open group across batch
-    boundaries so a group straddling a batch still emits one block.
+    The build is ONE aggregation per (term, block_id): each entry
+    becomes a struct keyed by its doc offset, and ``array_sort`` over
+    the collected structs orders a block's entries by doc offset
+    whatever order the exchange delivered them in, so the output is
+    deterministic and holds exactly one row per (term, block_id).
+    ``num_partitions`` pins the exchange's partition count; without it
+    spark.sql.shuffle.partitions applies (AQE may coalesce it).
     """
-    with_block = postings_idx.select(
-        "term", "doc_index", "tf", "positions", "dl"
-    ).withColumn("block_id", (F.col("doc_index") / block_span).cast("long"))
-
-    cols = [
-        "term", "block_id", "base", "max_doc_index", "n_docs", "max_tf",
-        "span", "doc_offs", "tfs", "dls", "block",
-    ]
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None  # open (term, block_id) group
-
-        def emit(g: pd.DataFrame):
-            term = g["term"].iloc[0]
-            block_id = int(g["block_id"].iloc[0])
-            g = g.sort_values("doc_index")
-            idxs = g["doc_index"].tolist()
-            tfs = [int(x) for x in g["tf"]]
-            base = block_id * block_span
-            blob = encode_block(idxs, tfs, g["positions"].tolist(), base)
-            return (
-                term, block_id, base, idxs[-1], len(idxs),
-                int(g["tf"].max()), block_span,
-                [int(d - base) for d in idxs], tfs, [int(x) for x in g["dl"]],
-                blob,
-            )
-
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
-                continue
-            last_key = (pdf["term"].iloc[-1], pdf["block_id"].iloc[-1])
-            tail = pdf[(pdf["term"] == last_key[0]) & (pdf["block_id"] == last_key[1])]
-            head = pdf.drop(tail.index)
-            pending = tail
-            if not head.empty:
-                rows = [
-                    emit(g) for _, g in head.groupby(["term", "block_id"], sort=False)
-                ]
-                yield pd.DataFrame(rows, columns=cols)
-        if pending is not None and not pending.empty:
-            yield pd.DataFrame([emit(pending)], columns=cols)
-
-    # exchange on (term, block_id), then sort within partitions so each
-    # group is contiguous for the streaming encoder above. The partition
-    # count is pinned EXPLICITLY: a bare repartition(cols) is
-    # AQE-coalescible, and the 64 MB advisory target collapses the
-    # encode stage to a handful of Python workers regardless of core
-    # count — the encoder is CPU-bound (varint loops), not bytes-bound,
-    # so parallelism must track cores, not shuffle bytes. (A
-    # size-derived count like build_postings' was measured and
-    # reverted: the typical input here is a join of two python-stage
-    # outputs, whose size ESTIMATE explodes multiplicatively — 79 GB
-    # estimated for a 1.6 MB index — so the derivation never fires and
-    # only adds a ~100 ms stats analysis per build.)
-    spark = postings_idx.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
-        with_block.repartition(n, "term", "block_id")
-        .sortWithinPartitions("term", "block_id")
-        .mapInPandas(encode, schema=BLOCKS_SCHEMA)
+    entries = postings_idx.selectExpr(
+        "term",
+        f"doc_index DIV {int(block_span)} AS block_id",
+        f"struct(CAST(doc_index % {int(block_span)} AS INT) AS doc_offs,"
+        " CAST(tf AS INT) AS tfs, CAST(dl AS INT) AS dls,"
+        " CAST(positions AS ARRAY<INT>) AS pos) AS e",
+    )
+    if num_partitions:
+        entries = entries.repartition(int(num_partitions), "term", "block_id")
+    return entries.groupBy("term", "block_id").agg(
+        F.expr("array_sort(collect_list(e))").alias("e")
+    ).selectExpr(
+        "term",
+        "block_id",
+        f"block_id * {int(block_span)} AS base",
+        f"block_id * {int(block_span)} + element_at(e, -1).doc_offs AS max_doc_index",
+        "size(e) AS n_docs",
+        "array_max(e.tfs) AS max_tf",
+        f"{int(block_span)} AS span",
+        "e.doc_offs AS doc_offs",
+        "e.tfs AS tfs",
+        "e.dls AS dls",
+        "e.pos AS pos",
     )
 
 
@@ -319,26 +220,10 @@ def scoring_entries(blocks: DataFrame) -> DataFrame:
 
 
 def unblock_postings(blocks: DataFrame) -> DataFrame:
-    """Inverse of block_postings -> (term, doc_index, tf, positions)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms, idxs_out, tfs_out, pos_out = [], [], [], []
-            for term, base, blob in zip(pdf["term"], pdf["base"], pdf["block"]):
-                idxs, tfs, plists = decode_block(bytes(blob), base=int(base))
-                terms.extend([term] * len(idxs))
-                idxs_out.extend(idxs)
-                tfs_out.extend(tfs)
-                pos_out.extend(plists)
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_index": idxs_out,
-                    "tf": tfs_out,
-                    "positions": pos_out,
-                }
-            )
-
-    return blocks.mapInPandas(
-        decode, schema="term string, doc_index long, tf int, positions array<int>"
+    """Inverse of block_postings -> (term, doc_index, tf, positions):
+    one explode of the aligned arrays, in codegen."""
+    return blocks.selectExpr(
+        "term", "base", "explode(arrays_zip(doc_offs, tfs, pos)) AS e"
+    ).selectExpr(
+        "term", "base + e.doc_offs AS doc_index", "e.tfs AS tf", "e.pos AS positions"
     )

@@ -25,7 +25,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .compression import BLOCK_SPAN, assign_doc_indexes, block_postings
+from .compression import BLOCK_BYTES, BLOCK_SPAN, assign_doc_indexes, block_postings
 from .indexer import build_postings, docs_from_pages
 from .pagerank import extract_edges, pagerank, vertices_from_pages
 from . import sqltext as sql
@@ -354,8 +354,8 @@ class SearchEngine:
 
         The bucket count comes from the data: one bucket per input split
         (spark.sql.files.maxPartitionBytes, the size the reader packs
-        files by) of encoded blob bytes, at least 1 and at most
-        TERM_BUCKETS, and each bucket is written as one file. A small
+        files by) of block array bytes (BLOCK_BYTES), at least 1 and at
+        most TERM_BUCKETS, and each bucket is written as one file. A small
         shard is one blocks file; a large one keeps TERM_BUCKETS-way
         pruning, and the reader splits an oversized bucket file by row
         group. ``meta`` records the count (``term_buckets``) and the
@@ -374,9 +374,9 @@ class SearchEngine:
             self.postings.join(F.broadcast(idx), "doc_id")
         ).persist()
         try:
-            blob_bytes = blocks.agg(F.sum(F.length("block"))).collect()[0][0] or 0
+            block_bytes = blocks.agg(F.sum(F.expr(BLOCK_BYTES))).collect()[0][0] or 0
             split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-            term_buckets = max(1, min(-(-blob_bytes // split), TERM_BUCKETS))
+            term_buckets = max(1, min(-(-block_bytes // split), TERM_BUCKETS))
             bucket = F.pmod(F.xxhash64("term"), F.lit(term_buckets))
             (
                 blocks.withColumn("term_bucket", bucket)
@@ -468,12 +468,13 @@ class SearchEngine:
 
     def _layout_gaps(self, index_path: str, blocks: DataFrame) -> list:
         """What ``index_path`` lacks of the one blocked layout
-        save_blocked writes: a columnar block array, the meta or
+        save_blocked writes: a block array (``pos`` included: an index
+        of the old varint-blob layout lacks it), the meta or
         term_stats sidecar, meta's bucket count or block span, or
         term_stats' bucket column. Empty for a current index; the read
         path refuses any other and fsck reports it."""
         gaps = [
-            f"blocks.{c}" for c in ("doc_offs", "tfs", "dls", "span")
+            f"blocks.{c}" for c in ("doc_offs", "tfs", "dls", "pos", "span")
             if c not in blocks.columns
         ]
         for name, needed in (
@@ -568,12 +569,13 @@ class SearchEngine:
         return shard.blocks.where(f"term_bucket IN ({buckets})")
 
     def _exchange_parts(self, shard: Shard) -> int:
-        """Shuffle partitions for a per-shard query's exchange (BM25's
-        per-doc aggregation, the positional pass's block groups): the
-        number of block groups the shard can hold — its doc count over
-        its recorded block span — capped at spark.sql.shuffle.partitions.
-        One partition for a shard of one block group, where the serving
-        default of 8 schedules 7 empty reduce tasks per query."""
+        """Partitions for a per-shard query's per-doc aggregation (BM25's
+        and the positional text's): the number of block groups the shard
+        can hold — its doc count over its recorded block span — capped
+        at spark.sql.shuffle.partitions. One partition for a shard of
+        one block group (the serving default of 8 would schedule 7 empty
+        reduce tasks), which wand.exchange_hint turns into a coalesce,
+        so the query runs in one stage."""
         cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         return max(1, min(cap, -(-shard.total // shard.block_span)))
 
@@ -750,7 +752,7 @@ class SearchEngine:
         corpus (pinned by test). Cost: one scoring job per shard,
         concurrently, plus a k*shards driver merge. Each shard job is
         one SQL text (wand.bm25_sql over wand.entries_sql) whose
-        exchange is sized to the shard (``_exchange_parts``), and its
+        aggregation is sized to the shard (``_exchange_parts``), and its
         rows reach the merge as tuples straight from that job's collect.
 
         ``required``/``excluded``: `+term -term` filters. Doc membership
@@ -815,15 +817,16 @@ class SearchEngine:
         into one, WITHOUT re-tokenizing — the Lucene-style background
         compaction a sharded 100 TB deployment runs to keep shard
         counts bounded (tokenize/stem is the expensive pass; a merge
-        is decode -> renumber -> re-encode). Later shards take
+        is explode -> renumber -> re-block). Later shards take
         precedence per url (merge_pages semantics), so merging a base
         shard with a fresher delta shard is an index update.
 
-        Plan shape: each shard's varint blocks decode in one Arrow
-        pass, re-keyed to urls through the shard's doc-stats dimension
-        (broadcastable), the union renumbers doc_indexes globally (the
-        two-phase numbering, url order) and re-blocks — every step is
-        the build pipeline minus tokenize. The merged index is
+        Plan shape: each shard's blocks explode back to postings
+        (compression.unblock_postings, in codegen), re-keyed to urls
+        through the shard's doc-stats dimension (broadcastable), the
+        union renumbers doc_indexes globally (the two-phase numbering,
+        url order) and re-blocks — every step is the build pipeline
+        minus tokenize. The merged index is
         byte-compatible with save_blocked output (same sidecars), so
         every query path including search_bm25_sharded serves it."""
         from .compression import unblock_postings
@@ -890,9 +893,10 @@ class SearchEngine:
     def _positional(self, index_paths, words, k, value_col, topk) -> DataFrame:
         """Positional counts need no collection stats, so federation is a
         plain scatter-gather of ``topk(blocks, doc_stats_idx, k, url
-        lookup, partitions)`` per shard: one job each, its exchange sized
-        to the shard. A shard missing any query word contributes
-        nothing, with zero jobs."""
+        lookup, partitions)`` per shard: one job each (one SQL text,
+        wand.positional_sql), its aggregation sized to the shard. A
+        shard missing any query word contributes nothing, with zero
+        jobs."""
         dep = self._deployment(index_paths)
         infos, _df = dep.lookup(words)
 
@@ -947,16 +951,18 @@ class SearchEngine:
 
     def index_stats(self, index_path: str) -> dict:
         """Observability over a blocked index: size/shape numbers from
-        block METADATA only (no posting bytes decoded) — one aggregation
-        over the pruned columns plus the driver-side sidecars. Reports
-        per-term-bucket posting distribution so skew is visible."""
+        block metadata and array sizes (``compressed_bytes`` is the
+        blocks' BLOCK_BYTES, the measure save_blocked sizes its buckets
+        by) — one aggregation over the pruned columns plus the
+        driver-side sidecars. Reports per-term-bucket posting
+        distribution so skew is visible."""
         shard = self._blocked_handles(index_path)
         blocks, total, term_stats = shard.blocks, shard.total, shard.term_stats
         agg = blocks.agg(
             F.count(F.lit(1)).alias("n_blocks"),
             F.countDistinct("term").alias("n_terms"),
             F.sum("n_docs").alias("n_postings"),
-            F.sum(F.length("block")).alias("compressed_bytes"),
+            F.sum(F.expr(BLOCK_BYTES)).alias("compressed_bytes"),
             F.max("n_docs").alias("max_block_docs"),
         ).collect()[0]
         per_bucket = (
@@ -1003,9 +1009,10 @@ class SearchEngine:
         - doc_stats_idx doc_index is dense 0..N-1 and every doc a block
           references exists;
         - meta sidecar totals match doc_stats_idx;
-        - with ``deep=True``: Arrow-batched varint decode of every blob
-          cross-checked against the columnar arrays (the two physical
-          representations must agree byte-for-byte).
+        - with ``deep=True``, ``bad_positions``: blocks whose ``pos``
+          does not hold one list per doc, or holds a list that is not
+          strictly ascending, or a non-empty list whose length is not
+          the doc's tf (positionless builds write empty lists).
 
         An index of another layout (``_layout_gaps``) reports only
         ``bad_layout`` (the count of missing parts, named in
@@ -1013,8 +1020,6 @@ class SearchEngine:
 
         Returns {"ok": bool, "checks": {name: violation_count}, ...}.
         """
-        from .compression import decode_block
-
         spark = self.spark
         blocks = spark.read.parquet(f"{index_path}/blocks")
         gaps = self._layout_gaps(index_path, blocks)
@@ -1038,18 +1043,22 @@ class SearchEngine:
         span_ok = F.col("span") == int(meta["block_span"])
         term_bucket = F.pmod(F.xxhash64("term"), F.lit(int(meta["term_buckets"])))
         bucket_ok = F.col("term_bucket") == term_bucket
+        positions_ok = F.expr(
+            "coalesce(size(pos) = n_docs AND forall(arrays_zip(pos, tfs), z -> "
+            "z.pos = array_sort(array_distinct(z.pos)) "
+            "AND (size(z.pos) = 0 OR size(z.pos) = z.tfs)), false)"
+        )
+        counted = {
+            "bad_block_shape": ~(offs_ok & span_ok),
+            "bad_doc_order": ~sorted_ok,
+            "bad_term_bucket": ~bucket_ok,
+            **({"bad_positions": ~positions_ok} if deep else {}),
+        }
         bad = blocks.agg(
             F.count(F.lit(1)).alias("n_blocks"),
-            F.sum((~(offs_ok & span_ok)).cast("int")).alias("bad_block_shape"),
-            F.sum((~sorted_ok).cast("int")).alias("bad_doc_order"),
-            F.sum((~bucket_ok).cast("int")).alias("bad_term_bucket"),
+            *[F.sum(c.cast("int")).alias(name) for name, c in counted.items()],
         ).collect()[0]
-        checks = {
-            "bad_layout": 0,
-            "bad_block_shape": int(bad["bad_block_shape"] or 0),
-            "bad_doc_order": int(bad["bad_doc_order"] or 0),
-            "bad_term_bucket": int(bad["bad_term_bucket"] or 0),
-        }
+        checks = {"bad_layout": 0, **{name: int(bad[name] or 0) for name in counted}}
 
         ts = spark.read.parquet(f"{index_path}/term_stats")
         from_blocks = blocks.groupBy("term").agg(
@@ -1092,37 +1101,6 @@ class SearchEngine:
         checks["dangling_doc_refs"] = referenced.join(
             dsi.select("doc_index"), "doc_index", "left_anti"
         ).count()
-
-        if deep:
-            import pandas as pd
-
-            def verify(batches):
-                for pdf in batches:
-                    n_bad = 0
-                    for base, offs, tfs_a, blob in zip(
-                        pdf["base"], pdf["doc_offs"], pdf["tfs"], pdf["block"]
-                    ):
-                        try:
-                            d_idx, d_tfs, _pos = decode_block(
-                                bytes(blob), int(base)
-                            )
-                        except Exception:
-                            n_bad += 1
-                            continue
-                        want = [int(base) + int(o) for o in offs]
-                        if d_idx != want or [int(t) for t in d_tfs] != [
-                            int(t) for t in tfs_a
-                        ]:
-                            n_bad += 1
-                    yield pd.DataFrame({"n_bad": [n_bad]})
-
-            checks["bad_blob_decode"] = int(
-                blocks.select("base", "doc_offs", "tfs", "block")
-                .mapInPandas(verify, schema="n_bad long")
-                .agg(F.sum("n_bad"))
-                .collect()[0][0]
-                or 0
-            )
 
         return {
             "ok": all(v == 0 for v in checks.values()),

@@ -96,9 +96,10 @@ QUERIES = {
 
 def _phrase_search_blocked(spark, sf_dir):
     """The same positional phrase query as phrase_search, but answered
-    from the compressed blocked index's varint positions store
-    (encode -> one grouped pass per block_id: skip groups lacking a
-    word, decode, fold adjacency per doc), checked against the identical relational oracle. The documents
+    from the blocked index's position lists (one SQL text: explode
+    the words' blocks, one {term: positions} map per doc holding every
+    word, count the anchor positions the later words continue),
+    checked against the identical relational oracle. The documents
     table has no blank/punct tokens, so the index's blank-counting
     1-based positions coincide with the oracle's non-empty renumbering."""
     from .compression import assign_doc_indexes, block_postings

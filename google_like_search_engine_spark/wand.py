@@ -19,17 +19,22 @@ and sharded — is the one SQL text ``bm25_sql`` with idf from
 ``bm25_idf``. ``bm25_partial`` is the same partial as a Column, for the
 catalog's relational BM25 queries.
 
-Phrase and proximity queries fold positions in one grouped pass over
-the positions store (``_positional_topk``), also one job per shard.
+Phrase and proximity queries are one SQL text each too
+(``positional_sql``): the query terms' ``arrays_zip(doc_offs, pos)``
+exploded to (doc_index, term, positions), one map {term: positions}
+per doc holding every term, and a ``filter`` over the anchor's
+positions counting its matches — a phrase as a per-doc intersection of
+shifted position sets, no Python worker.
+
+A shard of one block group runs its text in ONE stage: the hint
+(``exchange_hint``) coalesces its scan to one partition, which already
+satisfies the per-doc aggregation, instead of shuffling into one.
 """
 
 from __future__ import annotations
 
-import bisect
-import functools
 import math
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import sqltext as sql
@@ -80,8 +85,8 @@ def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.
     required flag, no excluded flag and a score (it holds a query
     word) — no per-filter semi/anti join. With ``k`` the text ends in
     ORDER BY (score DESC, ``key`` ASC) LIMIT k; ``partitions`` sizes
-    the aggregation's exchange (a REPARTITION hint on ``key``) instead
-    of spark.sql.shuffle.partitions."""
+    the aggregation's input (``exchange_hint``) instead of
+    spark.sql.shuffle.partitions."""
     idf_sql = "map(" + ", ".join(
         f"{sql.quote(t)}, {sql.dbl(v)}" for t, v in idf.items()
     ) + ")[term]"
@@ -89,7 +94,7 @@ def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.
         f"{idf_sql} * (tf * {sql.dbl(k1 + 1)}) / "
         f"(tf + (dl * {sql.dbl(b)} / {sql.dbl(avgdl)} + {sql.dbl(1 - b)}) * {sql.dbl(k1)})"
     )
-    hint = f"/*+ REPARTITION({int(partitions)}, {key}) */ " if partitions else ""
+    hint = exchange_hint(partitions, key)
     scored = f"SELECT {hint}{key}, term, {partial} AS partial FROM {rows}"
     if required or excluded:
         req = sorted(set(required))
@@ -108,6 +113,19 @@ def bm25_sql(rows: str, key: str, words, idf: dict, avgdl: float, k1: float = 1.
     if k is None:
         return per_doc
     return f"{per_doc} ORDER BY score DESC, {key} ASC LIMIT {int(k)}"
+
+
+def exchange_hint(partitions: int | None, key: str) -> str:
+    """The hint that sizes a shard text's per-``key`` aggregation input:
+    none without ``partitions`` (spark.sql.shuffle.partitions applies),
+    ``COALESCE(1)`` for one partition — the scan's tasks fold into one
+    partition, which satisfies the aggregation with no exchange, so the
+    query is one stage — and ``REPARTITION(n, key)`` above one."""
+    if not partitions:
+        return ""
+    if int(partitions) == 1:
+        return "/*+ COALESCE(1) */ "
+    return f"/*+ REPARTITION({int(partitions)}, {key}) */ "
 
 
 def entries_sql(view: str, terms) -> str:
@@ -192,18 +210,16 @@ def topk_rows(rows, url_lookup: dict | None) -> list:
     return [(url_lookup[d], v) for d, v in rows]
 
 
-def _topk(by_doc, doc_stats_idx, k, url_lookup, value_col="score") -> DataFrame:
-    """Top ``k`` of (doc_index, value) by (value desc, url).
-
-    With ``url_lookup`` (the driver-side {doc_index: url} forward
-    index — the in-process stand-in for the reference's KVS doc-store
-    lookup after ranking) the result stays keyed by doc_index, and its
-    collect is ONE Spark job: TakeOrdered collects the k winners and the
-    caller resolves their urls driver-side (``topk_rows``). Engine
-    layouts assign doc_index in url order, so the doc_index tiebreak IS
-    the url tiebreak. Without a lookup the url join runs distributed."""
-    if url_lookup is not None:
-        return by_doc.orderBy(F.desc(value_col), F.asc("doc_index")).limit(k)
+def _topk(by_doc, doc_stats_idx, k, value_col="score") -> DataFrame:
+    """Top ``k`` of (doc_index, value) by (value desc, url), the url
+    joined distributed: the form a query without a driver-side url
+    lookup returns. With a lookup (the in-process stand-in for the
+    reference's KVS doc-store lookup after ranking) the query's text
+    carries its own ORDER BY (value desc, doc_index) LIMIT k instead
+    and stays keyed by doc_index, so its collect is ONE Spark job and
+    the caller resolves the k winners' urls driver-side
+    (``topk_rows``). Engine layouts assign doc_index in url order, so
+    the doc_index tiebreak IS the url tiebreak."""
     return (
         by_doc.join(doc_stats_idx.select("doc_index", "url"), "doc_index")
         .select("url", value_col)
@@ -279,7 +295,7 @@ def blocked_maxscore_topk(
     ))
     if url_lookup is not None:
         return by_doc
-    return _topk(by_doc, doc_stats_idx, k, None)
+    return _topk(by_doc, doc_stats_idx, k)
 
 
 def blocked_maxscore_threshold(
@@ -347,23 +363,22 @@ def blocked_phrase_topk(
     url_lookup: dict | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Positional phrase query straight off the compressed blocked index
-    — the query the positions varint store exists for (the reference's
-    index keeps per-doc position lists, Indexer.java:64-82; its ranker
-    never used them for phrases, so this is the capability completed).
+    """Positional phrase query straight off the blocked index's ``pos``
+    arrays (the reference's index keeps per-doc position lists,
+    Indexer.java:64-82; its ranker never used them for phrases, so this
+    is the capability completed).
 
-    The fold is adjacency (``_adjacent``): the positions x + 1 of the
-    words so far that the next word holds, left to right over the
-    phrase; a doc counts its surviving phrase ends. ``_positional_topk``
-    runs it in one grouped pass with the block skipping and ranking.
-    Returns (url, n_occurrences) by descending count, keyed by
-    doc_index instead with a ``url_lookup`` (see ``_topk``).
+    A doc's count is the number of positions x of the first word such
+    that the i-th word holds x + i for every later word — the phrase
+    occurrences, repeated words included. Returns (url, n_occurrences)
+    by descending count, keyed by doc_index instead with a
+    ``url_lookup`` (see ``_topk``).
     """
     words = [w.lower() for w in phrase.split() if w]
-    return _positional_topk(
-        spark, words, words[1:], _adjacent, blocks, doc_stats_idx, k,
-        url_lookup, "n_occurrences", partitions,
-    )
+    matches = [f"array_contains(m[{sql.quote(w)}], x + {i})"
+               for i, w in enumerate(words[1:], 1)]
+    return _positional_topk(spark, words, matches, blocks, doc_stats_idx, k,
+                            url_lookup, "n_occurrences", partitions)
 
 
 def blocked_proximity_topk(
@@ -376,90 +391,64 @@ def blocked_proximity_topk(
     url_lookup: dict | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Proximity query over the compressed blocked index: rank docs by
-    the number of anchor positions of ``terms[0]`` that have EVERY
-    other term within ``window`` tokens (either side).
-
-    The fold (``_near``) keeps the anchor positions with a position of
-    the next distinct non-anchor term within the window;
-    ``_positional_topk`` runs it in one grouped pass with the block
-    skipping and ranking. Returns (url, n_matches) desc, keyed by
-    doc_index instead with a ``url_lookup`` (see ``_topk``).
+    """Proximity query over the blocked index: rank docs by the number
+    of anchor positions of ``terms[0]`` that have EVERY other term
+    within ``window`` tokens (either side). Positions are int32, so a
+    window past 2**31 - 1 is clamped to it (it already means anywhere
+    in the doc), and a negative one matches nothing. Returns (url,
+    n_matches) desc, keyed by doc_index instead with a ``url_lookup``
+    (see ``_topk``).
     """
     words = [w.lower() for w in terms if w]
-    return _positional_topk(
-        spark, words, list(dict.fromkeys(words[1:])),
-        functools.partial(_near, window=int(window)), blocks, doc_stats_idx,
-        k, url_lookup, "n_matches", partitions,
+    window = max(-1, min(int(window), 2**31 - 1))
+    matches = [f"exists(m[{sql.quote(w)}], y -> abs(y - x) <= {window})"
+               for w in dict.fromkeys(words[1:])]
+    return _positional_topk(spark, words, matches, blocks, doc_stats_idx, k,
+                            url_lookup, "n_matches", partitions)
+
+
+def positional_sql(view: str, words, matches, value_col: str,
+                   k: int | None = None, partitions: int | None = None) -> str:
+    """The per-doc positional count as ONE SQL text over a blocks
+    relation bound to ``view``. The blocks of the distinct ``words``
+    explode to (doc_index, term, positions) in codegen; per doc one
+    ``map_from_entries`` {term: positions}, kept only when it holds
+    every word (a block group lacking a word holds no qualifying doc);
+    then ``value_col`` = how many positions x of the anchor
+    ``words[0]`` satisfy every predicate in ``matches`` (SQL over ``m``
+    and ``x``). A doc with no match drops. With ``k`` the text ends in
+    ORDER BY (value desc, doc_index) LIMIT k; ``partitions`` sizes the
+    aggregation's input (``exchange_hint``)."""
+    uniq = sorted(set(words))
+    match = " AND ".join(matches) or "true"
+    per_doc = (
+        f"SELECT doc_index, CAST(size(filter(m[{sql.quote(words[0])}], x -> {match})) "
+        f"AS BIGINT) AS {value_col} FROM (SELECT doc_index, "
+        "map_from_entries(collect_list(struct(term, p))) AS m FROM (SELECT "
+        f"{exchange_hint(partitions, 'doc_index')}term, base + e.doc_offs AS doc_index, "
+        "e.pos AS p FROM (SELECT term, base, explode(arrays_zip(doc_offs, pos)) AS e "
+        f"FROM {view} WHERE term IN ({sql.quotes(uniq)}))) GROUP BY doc_index "
+        f"HAVING count(1) = {len(uniq)})"
     )
+    text = f"SELECT * FROM ({per_doc}) WHERE {value_col} > 0"
+    if k is None:
+        return text
+    return f"{text} ORDER BY {value_col} DESC, doc_index ASC LIMIT {int(k)}"
 
 
-def _adjacent(p: list, nxt: list) -> list:
-    """Phrase fold: the positions x + 1 (x in ``p``) that ``nxt`` holds."""
-    held = set(nxt)
-    return [x + 1 for x in p if x + 1 in held]
-
-
-def _near(p: list, other: list, window: int) -> list:
-    """Proximity fold: the positions of ``p`` with a position of
-    ``other`` at most ``window`` tokens away (``other`` is ascending, as
-    decoded, so one bisect per position finds its nearest candidate)."""
-    out = []
-    for x in p:
-        i = bisect.bisect_left(other, x - window)
-        if i < len(other) and other[i] <= x + window:
-            out.append(x)
-    return out
-
-
-def _positional_topk(spark, words, partners, fold, blocks, doc_stats_idx, k,
-                     url_lookup, value_col, partitions=None) -> DataFrame:
-    """Shared positional core: ONE grouped Arrow pass keyed by
-    ``block_id``, so a query is one Spark job. Blocks are doc-range
-    aligned, so a block group holds every posting of its docs. A group
-    lacking any query term holds no qualifying doc and is skipped
-    without decoding (the block skipping); otherwise each term's varint
-    blob decodes once (compression.decode_block) and, per doc holding
-    every term, the anchor ``words[0]``'s positions fold against each
-    partner's positions in turn (``fold(p, positions) -> p``). A doc
-    whose positions fold to nothing drops; the rest rank by how many
-    survive. Positions are the index's own 1-based blank-counting token
-    positions, so results agree with the index by construction.
-
-    ``partitions`` sizes the exchange (the engine passes one partition
-    per block group of the shard); without it
-    spark.sql.shuffle.partitions applies."""
-    from .compression import decode_block
-
+def _positional_topk(spark, words, matches, blocks, doc_stats_idx, k, url_lookup,
+                     value_col, partitions=None) -> DataFrame:
+    """Shared positional core: ``positional_sql`` over ``blocks``, one
+    Spark job. Positions are the index's own 1-based blank-counting
+    token positions, so results agree with the index by construction.
+    With a ``url_lookup`` the text carries the top-k; without one the
+    url join runs distributed (``_topk``)."""
     if not words:
         return _no_rows(spark, url_lookup, value_col, "bigint")
-    uniq = sorted(set(words))
-    anchor = words[0]
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"doc_index": [], value_col: []}
-        if pdf["term"].nunique() == len(uniq):
-            pos = {}
-            for term, base, blob in zip(pdf["term"], pdf["base"], pdf["block"]):
-                idxs, _tfs, plists = decode_block(bytes(blob), base=int(base))
-                pos[term] = dict(zip(idxs, plists))
-            for d in set.intersection(*(set(m) for m in pos.values())):
-                p = pos[anchor][d]
-                for w in partners:
-                    p = fold(p, pos[w][d])
-                    if not p:
-                        break
-                else:
-                    out["doc_index"].append(d)
-                    out[value_col].append(len(p))
-        return pd.DataFrame(out, dtype="int64")
-
-    nparts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    counts = (
-        blocks.where(F.col("term").isin(uniq))
-        .select("term", "block_id", "base", "block")
-        .repartition(nparts, "block_id")
-        .groupBy("block_id")
-        .applyInPandas(per_block, f"doc_index long, {value_col} long")
-    )
-    return _topk(counts, doc_stats_idx, k, url_lookup, value_col)
+    counts = sql.over(blocks, lambda v: positional_sql(
+        v, words, matches, value_col, k if url_lookup is not None else None,
+        partitions,
+    ))
+    if url_lookup is not None:
+        return counts
+    return _topk(counts, doc_stats_idx, k, value_col)

@@ -3,7 +3,7 @@
 
 At 100 TB the parquet compression codec is a first-order storage and
 scan-throughput decision. This writes the same blocked-index relation
-(varint posting blobs + columnar sidecars over the sf corpus) under
+(columnar doc/tf/dl/position block arrays over the sf corpus) under
 snappy / zstd / gzip / uncompressed and records the on-disk bytes per
 codec — sizes are deterministic (unlike wall-clock on this host), so
 the artifact is reproducible at any epoch. Wall-clock per write is

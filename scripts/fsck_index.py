@@ -6,9 +6,9 @@
 Verifies every invariant the serving path relies on — block shapes,
 doc ordering, partition-bucket layout, sidecar agreement, doc-index
 density, dangling references — as distributed aggregations; --deep
-additionally decodes every varint blob and cross-checks it against
-the columnar arrays. Prints one JSON report; exit code 1 when any
-check finds violations.
+additionally checks every block's position lists (one per doc,
+strictly ascending, tf long unless empty). Prints one JSON report;
+exit code 1 when any check finds violations.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True, help="save_blocked dir")
     ap.add_argument("--deep", action="store_true",
-                    help="also decode every posting blob")
+                    help="also check every block's position lists")
     ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 

@@ -122,6 +122,38 @@ def main():
          lambda p: "ReadSchema" in p),
     ])
 
+    # the shard texts at one block group (the engine's partitions=1):
+    # the phrase text's term filter reaches the scan, no Python worker
+    # runs, the scan and explode stay in codegen, and neither it nor
+    # the BM25 shard text plans an Exchange — COALESCE(1) folds the
+    # scan into the one partition the per-doc aggregation needs
+    from google_like_search_engine_spark import sqltext
+    from google_like_search_engine_spark.wand import (
+        blocked_phrase_topk,
+        bm25_sql,
+        entries_sql,
+    )
+
+    bscan = spark.read.parquet("/tmp/plan_audit_blocks")
+    words = ["shuffle", "spark"]
+    bm25_plan = formatted_plan(sqltext.over(bscan, lambda v: bm25_sql(
+        entries_sql(v, words), "doc_index", words, {w: 1.0 for w in words}, 1.0,
+        k=10, partitions=1,
+    )))
+    # an (empty) url lookup keys the result by doc_index, as a shard's is
+    phrase = blocked_phrase_topk(spark, "spark shuffle", bscan, None, url_lookup={},
+                                 partitions=1)
+    audit("blocked_positional_text", phrase, [
+        ("term In pushed to parquet scan",
+         lambda p: any("PushedFilters" in ln and "In(term" in ln
+                       for ln in p.splitlines())),
+        ("no python exec",
+         lambda p: not any(n in p for n in ("EvalPython", "InPandas"))),
+        ("whole-stage codegen", has("[codegen id :")),
+        ("no exchange in the phrase or BM25 shard text",
+         lambda p: "Exchange" not in p and "Exchange" not in bm25_plan),
+    ])
+
     # flat BM25 (ranker.score_bm25 with a dictionary): one SQL text
     # whose term filter reaches the parquet scan; no df join, no Python
     postings.write.mode("overwrite").parquet("/tmp/plan_audit_postings")

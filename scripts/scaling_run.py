@@ -118,8 +118,8 @@ for trial in range(2):  # warmup + timed: trial 0 pays python-worker spin-up
     docs = docs_from_pages(pages).repartition(cores * 3)
     idx = assign_doc_indexes(docs)  # from docs (N rows), not postings (50N)
     # single-pass production pipeline: tokenize -> broadcast doc-index
-    # join -> (term, doc-range-block) exchange -> varint encode -> one
-    # compressed output (the flat intermediate never touches disk)
+    # join -> (term, doc-range-block) exchange -> block aggregation ->
+    # one blocked output (the flat intermediate never touches disk)
     flat = build_postings(docs)
     blocked = block_postings(flat.join(F.broadcast(idx), "doc_id"))
     blocked.write.mode("overwrite").parquet(out_dir)
@@ -215,8 +215,8 @@ def main():
 
 Same full inverted-index build (page filter -> doc-ID hash ->
 tokenize + Porter stem + positions + L2 norm -> flat postings write ->
-dense doc-index assignment -> doc-range-blocked delta-gap+varint
-compressed posting blocks sharded by (term, block) -> parquet write),
+dense doc-index assignment -> doc-range-blocked columnar posting
+blocks sharded by (term, block) -> parquet write),
 same pre-generated synthetic Common-Crawl-style corpus
 ({lo['n_docs']} pages), two parallelism levels in separate JVMs:
 

@@ -14,7 +14,7 @@ This script measures exactly that, the way the round-5 brief asks:
   * generate a Zipf corpus (exponent ~1.1, head term forced into every
     doc) and a uniform corpus with IDENTICAL doc count + doc length;
   * run the same build (real kernels: tokenize+stem -> doc-index join
-    -> (term, block) exchange -> varint encode) on both, at local[N]
+    -> (term, block) exchange -> block aggregation) on both, at local[N]
     and local[4N], each in its own JVM;
   * record wall, per-reduce-partition posting-row counts (max/median/
     nonempty tasks), the head term's df / block count / largest single

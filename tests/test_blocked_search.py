@@ -1,5 +1,5 @@
 """Blocked-index BM25 == flat naive BM25 (exactness through the
-compressed path: encode -> decode -> score)."""
+blocked path: block -> explode -> score)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +11,11 @@ from google_like_search_engine_spark.compression import (
 from google_like_search_engine_spark.engine import SearchEngine
 from google_like_search_engine_spark.indexer import build_postings
 from google_like_search_engine_spark.ranker import score_bm25
-from google_like_search_engine_spark.wand import blocked_maxscore_topk
+from google_like_search_engine_spark.wand import (
+    blocked_maxscore_topk,
+    blocked_phrase_topk,
+    blocked_proximity_topk,
+)
 
 from tests.conftest import spark_jobs
 from tests.test_wand_and_lineage import _random_docs
@@ -92,10 +96,8 @@ def test_blocked_maxscore_equals_naive(spark, corpus, query, k):
 
 
 def test_blocked_phrase_topk_counts(spark):
-    """Positional phrase counts off the varint positions store equal a
+    """Positional phrase counts off the blocks' position lists equal a
     direct adjacency computation on the flat postings."""
-    from google_like_search_engine_spark.wand import blocked_phrase_topk
-
     docs = spark.createDataFrame(
         [
             ("d0", "u0", "table scan table scan table"),
@@ -919,11 +921,13 @@ def test_concurrent_first_queries_share_one_deployment(spark, tmp_path):
 
 
 def test_positional_topk_matches_flat_positions(spark):
-    """Phrase and proximity counts off the one-pass positional core
+    """Phrase and proximity counts off the one-text positional core
     equal a plain-Python check over the flat postings' positions. A
     4-doc block span splits the corpus into ten block groups, and the
-    rare term ``stream`` is missing from half of them (groups skipped
-    without decoding)."""
+    rare term ``stream`` is missing from half of them (their docs lack
+    a word, so none qualifies). Repeated words count as the reference
+    counts them: a phrase ``a b a`` needs ``a`` at both ends, and a
+    repeated proximity partner is one condition."""
     import random
 
     from google_like_search_engine_spark.wand import (
@@ -985,13 +989,15 @@ def test_positional_topk_matches_flat_positions(spark):
         }
 
     for phrase in ["spark index", "table table", "spark spark spark",
-                   "index query table", "stream spark", "spark stream"]:
+                   "index query table", "stream spark", "spark stream",
+                   "spark index spark", "table query table spark"]:
         got = {
             r["url"]: r["n_occurrences"]
             for r in blocked_phrase_topk(spark, phrase, blocks, dsi, k=1000).collect()
         }
         assert got == phrase_ref(phrase.split()), phrase
-    for terms in (["spark", "table"], ["table", "table"], ["stream", "spark", "index"]):
+    for terms in (["spark", "table"], ["table", "table"], ["stream", "spark", "index"],
+                  ["spark", "table", "table"], ["query", "spark", "index", "spark"]):
         for window in range(4):
             got = {
                 r["url"]: r["n_matches"]
@@ -1227,7 +1233,11 @@ def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
     set to the indexed word "spark") is the literal, unindexed term.
     Words the index lacks add nothing, so the answer is the plain
     query's, on one index and on two shards, and over the flat postings
-    with the dictionary (search_bm25) and without it (score_bm25)."""
+    with the dictionary (search_bm25) and without it (score_bm25). The
+    phrase and proximity texts splice words in as map keys and IN-list
+    entries: run straight over the blocks, a phrase or proximity query
+    naming a hostile word matches nothing, where the same query with
+    "spark" in its place matches."""
     from google_like_search_engine_spark import sqltext
 
     base, full, paths = url_hash_shards
@@ -1255,6 +1265,25 @@ def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
             want = [tuple(r) for r in run("spark").collect()]
             got = run(" ".join(["spark", *hostile])).collect()
             assert [tuple(r) for r in got] == want and want
+        shard = eng._blocked_handles(full)
+
+        def positional(topk, words, *args):
+            return topk(spark, words, *args, shard.blocks, shard.doc_stats_idx,
+                        k=60).collect()
+
+        for word in hostile:
+            for topk, words, args in (
+                (blocked_phrase_topk, "spark {}", ()),
+                (blocked_phrase_topk, "{} spark", ()),
+                (blocked_proximity_topk, ["spark", "{}"], (3,)),
+                (blocked_proximity_topk, ["{}", "spark"], (3,)),
+            ):
+                fill = (words.format if isinstance(words, str)
+                        else lambda w: [t.format(w) for t in words])
+                assert positional(topk, fill("spark"), *args), (topk, words)
+                assert positional(topk, fill(word), *args) == [], (topk, words, word)
+        assert eng.search_phrase_sharded(paths, " ".join(hostile)).collect() == []
+        assert eng.search_proximity_sharded(paths, hostile, window=3).collect() == []
     finally:
         spark.conf.unset("sg.hostile")
         eng.unpersist()
@@ -1263,7 +1292,7 @@ def test_sql_text_quotes_hostile_terms(spark, url_hash_shards):
 def _engine_shard_call(eng, path, query, **kw):
     """``run()`` makes the call search_bm25_sharded makes for a one-shard
     deployment — blocked_maxscore_topk over the pruned shard scan with
-    the shard's dictionary, url lookup and sized exchange — and returns
+    the shard's dictionary, url lookup and sized exchange hint — and returns
     its lazy DataFrame."""
     from google_like_search_engine_spark.ranker import expand_query
 
@@ -1286,8 +1315,6 @@ def test_shard_topk_schema_is_the_same_when_empty(spark, url_hash_shards):
     """With a url lookup a shard top-k is keyed by doc_index whatever
     the query: a hit, a query without words, one the shard lacks and an
     empty phrase all return (doc_index, value) columns."""
-    from google_like_search_engine_spark.wand import blocked_phrase_topk
-
     _eng, _full, paths = url_hash_shards
     eng = SearchEngine(spark)
     try:
@@ -1332,13 +1359,57 @@ def test_warm_shard_bm25_query_is_one_sql_text(spark, url_hash_shards):
         eng.unpersist()
 
 
+def test_warm_shard_positional_query_is_one_sql_text(spark, url_hash_shards):
+    """A warm shard phrase or proximity query, called as the engine
+    calls it (pruned scan, url lookup, sized aggregation), is built as
+    ONE spark.sql text and runs with at most 40 py4j commands in all;
+    the grouped pandas pass it replaces sent ~275. Its rows are the
+    engine's answer, keyed by doc_index."""
+    from tests.conftest import py4j_calls
+
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    try:
+        with eng.low_latency():
+            shard = eng._blocked_handles(paths[0])
+            lookup = eng._blocked_url_dict(paths[0])
+            info = eng._shard_terms(paths[0], shard, ["index", "spark", "table"])
+            runs = {
+                "phrase": (
+                    lambda: blocked_phrase_topk(
+                        spark, "spark index", eng._shard_scan(shard, info),
+                        shard.doc_stats_idx, url_lookup=lookup,
+                        partitions=eng._exchange_parts(shard),
+                    ),
+                    eng.search_phrase_blocked(paths[0], "spark index"),
+                ),
+                "proximity": (
+                    lambda: blocked_proximity_topk(
+                        spark, ["spark", "table"], 2, eng._shard_scan(shard, info),
+                        shard.doc_stats_idx, url_lookup=lookup,
+                        partitions=eng._exchange_parts(shard),
+                    ),
+                    eng.search_proximity_blocked(paths[0], ["spark", "table"], 2),
+                ),
+            }
+            for name, (run, engine_answer) in runs.items():
+                run().collect()
+                with py4j_calls(spark.sparkContext) as calls:
+                    rows = run().collect()
+                assert calls("sql") == 1 and calls() <= 40, (name, calls())
+                want = [tuple(r) for r in engine_answer.collect()]
+                assert [(lookup[d], n) for d, n in rows] == want and want, name
+    finally:
+        eng.unpersist()
+
+
 def test_shard_exchange_is_sized_to_the_shard(spark, url_hash_shards):
     """A per-shard query's exchange is sized from the shard's doc count
     over its recorded meta.block_span: a test shard (~30 docs, one
-    block group) plans ONE shuffle partition for BM25 (plain and
-    filtered) and phrase, though the session default is 8."""
-    from google_like_search_engine_spark.wand import blocked_phrase_topk
-
+    block group) coalesces its scan to ONE partition for BM25 (plain
+    and filtered) and phrase, so the plan has no exchange at all,
+    though the session default is 8. Above one partition the text
+    shuffles on doc_index into that many."""
     _eng, _full, paths = url_hash_shards
     eng = SearchEngine(spark)
     try:
@@ -1359,8 +1430,58 @@ def test_shard_exchange_is_sized_to_the_shard(spark, url_hash_shards):
             ]
             for df in plans:
                 plan = df._jdf.queryExecution().executedPlan().toString()
-                assert plan.count("Exchange") == 1, plan
-                assert "Exchange SinglePartition" in plan, plan
+                assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+            wide = blocked_phrase_topk(
+                spark, "spark index", eng._shard_scan(shard, info),
+                shard.doc_stats_idx, url_lookup=eng._blocked_url_dict(paths[0]),
+                partitions=3,
+            )
+            plan = wide._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning(doc_index" in plan, plan
+            assert plan.count("Exchange") == 1 and "Coalesce" not in plan, plan
+    finally:
+        eng.unpersist()
+
+
+def test_warm_shard_queries_are_one_stage_per_job(spark, url_hash_shards):
+    """Over shards of one block group, a warm 2-shard /search and
+    /phrase run one Spark job per shard, each of ONE stage: the scan,
+    the per-doc aggregation and the top-k share a stage (the shard
+    text coalesces instead of shuffling), and the phrase plan runs no
+    Python worker."""
+    _eng, _full, paths = url_hash_shards
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    queries = {
+        "search": lambda: eng.search_bm25_sharded(paths, "spark shuffle", k=10),
+        "phrase": lambda: eng.search_phrase_sharded(paths, "spark index", k=10),
+    }
+    try:
+        with eng.low_latency():
+            for name, run in queries.items():
+                run().collect()  # warm the handles
+                group = f"stages_{name}"
+                sc.setJobGroup(group, "stage count probe")
+                try:
+                    assert run().collect(), name
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+                jobs = tracker.getJobIdsForGroup(group)
+                stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+                assert len(jobs) == len(paths) and stages == [1] * len(jobs), (
+                    name, stages,
+                )
+            shard = eng._blocked_handles(paths[0])
+            info = eng._shard_terms(paths[0], shard, ["index", "spark"])
+            plan = blocked_phrase_topk(
+                spark, "spark index", eng._shard_scan(shard, info),
+                shard.doc_stats_idx, url_lookup=eng._blocked_url_dict(paths[0]),
+                partitions=eng._exchange_parts(shard),
+            )._jdf.queryExecution().executedPlan().toString()
+            assert "FlatMapGroupsInPandas" not in plan, plan
+            assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     finally:
         eng.unpersist()
 

@@ -1,51 +1,15 @@
-"""Round-trip + property tests for the posting-block codec."""
+"""Round-trip and invariant tests for the posting blocks and the
+doc numbering."""
 
-import random
-
-from hypothesis import given, settings, strategies as st
+import pytest
 from pyspark.sql import functions as F
 
 from google_like_search_engine_spark.compression import (
     assign_doc_indexes,
     block_postings,
-    decode_block,
-    encode_block,
     unblock_postings,
-    varint_decode,
-    varint_encode,
 )
 from google_like_search_engine_spark.indexer import build_postings
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=200))
-@settings(max_examples=200, deadline=None)
-def test_varint_roundtrip(values):
-    buf = bytearray()
-    varint_encode(values, buf)
-    out, pos = varint_decode(bytes(buf), 0, len(values))
-    assert out == values and pos == len(buf)
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=50),
-            st.lists(st.integers(min_value=1, max_value=10000), min_size=1, max_size=20),
-        ),
-        min_size=1,
-        max_size=64,
-    ),
-    st.integers(min_value=0, max_value=1000),
-)
-@settings(max_examples=100, deadline=None)
-def test_block_roundtrip(entries, base):
-    rng = random.Random(7)
-    doc_idxs = sorted(rng.sample(range(base, base + 10**6), len(entries)))
-    tfs = [e[0] for e in entries]
-    plists = [sorted(set(e[1])) for e in entries]
-    blob = encode_block(doc_idxs, tfs, plists, base)
-    d, t, p = decode_block(blob, base)
-    assert d == doc_idxs and t == tfs and p == plists
 
 
 def test_block_postings_spark_roundtrip(spark):
@@ -78,17 +42,13 @@ def test_block_postings_spark_roundtrip(spark):
         assert b["base"] == b["block_id"] * 16
         assert b["base"] <= b["max_doc_index"] < b["base"] + 16
 
-    # compression actually compresses vs raw int arrays
-    raw_bytes = sum(4 + 4 + 4 * len(v[1]) for v in orig.values())
-    packed = sum(len(bytes(b["block"])) for b in blocks.collect())
-    assert packed < raw_bytes
-
 
 def test_block_postings_one_row_per_key_across_arrow_batches(spark):
     """A (term, block_id) group larger than the Arrow batch size
     (spark.sql.execution.arrow.maxRecordsPerBatch = 10000) must still
-    encode to exactly ONE block row — regression for the encoder
-    emitting duplicate rows when a group straddled a batch boundary."""
+    build exactly ONE block row, its entries in doc order — regression
+    for the old streaming encoder emitting duplicate rows when a group
+    straddled a batch boundary."""
     n = 12001
     pidx = spark.range(n).select(
         F.lit("hot").alias("term"),
@@ -101,8 +61,8 @@ def test_block_postings_one_row_per_key_across_arrow_batches(spark):
     assert len(blocks) == 1
     b = blocks[0]
     assert b["n_docs"] == n and b["span"] == 16384 and b["block_id"] == 0
-    d, t, p = decode_block(bytes(b["block"]), base=0)
-    assert d == list(range(n)) and t == [1] * n
+    assert b["doc_offs"] == list(range(n)) and b["tfs"] == [1] * n
+    assert b["pos"] == [[1]] * n
 
 
 def test_assign_doc_indexes_dense_and_deterministic(spark):
@@ -137,6 +97,18 @@ def test_assign_doc_indexes_url_order_with_duplicates(spark):
     )
     want_order = [d for d, _u in sorted(rows, key=lambda t: (t[1], t[0]))]
     assert got == sorted((d, i) for i, d in enumerate(want_order))
+
+
+def test_assign_doc_indexes_refuses_float_order_col(spark):
+    """Duplicate NaN keys count once in the Spark counts job but twice
+    in the pandas numbering pass, which would number more rows than it
+    counted: a floating-point order_col is refused up front."""
+    docs = spark.createDataFrame(
+        [("a", float("nan")), ("a", float("nan")), ("b", 1.0)],
+        "doc_id string, score double",
+    )
+    with pytest.raises(ValueError, match="score"):
+        assign_doc_indexes(docs, order_col="score")
 
 
 def test_build_postings_sizes_python_stage_from_input(spark):

@@ -101,7 +101,7 @@ def _parquet_files(path):
 def test_engine_blocked_index_path(spark, tmp_path):
     """The blocked layout is sized to the shard: under the default split
     size a small shard is one blocks file in one term bucket; with the
-    split lowered below the shard's blob bytes it derives several
+    split lowered below the shard's block bytes it derives several
     buckets, still one file each, and a query's scan prunes to its
     terms' buckets. Both layouts serve the flat path's results and pass
     fsck."""
@@ -458,7 +458,7 @@ def test_versioned_index_save_load_time_travel(spark, tmp_path):
 
 def test_fsck_blocked_clean_and_corrupted(spark, tmp_path):
     """A freshly-saved blocked index passes every check incl. the deep
-    blob/columnar cross-check; corrupting the term_stats sidecar is
+    position-list check; corrupting the term_stats sidecar is
     caught with an exact violation count and flips ok to False."""
     from pyspark.sql import functions as F
 
@@ -472,7 +472,7 @@ def test_fsck_blocked_clean_and_corrupted(spark, tmp_path):
 
     report = eng.fsck_blocked(out, deep=True)
     assert report["ok"], report
-    assert report["checks"]["bad_blob_decode"] == 0
+    assert report["checks"]["bad_positions"] == 0
     assert report["n_blocks"] > 0 and report["total_documents"] > 0
 
     # corrupt: bump df for one term in the sidecar
@@ -492,3 +492,35 @@ def test_fsck_blocked_clean_and_corrupted(spark, tmp_path):
     assert sum(v for k, v in report2["checks"].items()
                if k != "bad_term_stats") == 0
     eng.unpersist()
+
+
+def test_fsck_deep_flags_descending_positions(spark, tmp_path):
+    """A copy of a clean index with one blocks row rewritten so that its
+    first doc's positions descend: the deep fsck counts exactly that
+    block as bad_positions and nothing else; the shallow fsck, which
+    reads no positions, still passes."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, 40).where(F.col("lang") == "en")
+    eng = SearchEngine(spark).build(pages, run_pagerank=False)
+    out, bad = str(tmp_path / "blocked"), str(tmp_path / "bad")
+    eng.save_blocked(out)
+    blocks = spark.read.parquet(f"{out}/blocks")
+    victim = blocks.where("size(pos[0]) >= 2").select("term", "block_id").first()
+    hit = (F.col("term") == victim["term"]) & (F.col("block_id") == victim["block_id"])
+    descending = F.expr("concat(array(reverse(pos[0])), slice(pos, 2, n_docs))")
+    (
+        blocks.withColumn("pos", F.when(hit, descending).otherwise(F.col("pos")))
+        .write.partitionBy("term_bucket").parquet(f"{bad}/blocks")
+    )
+    for part in ("doc_stats_idx", "meta", "term_stats"):
+        shutil.copytree(f"{out}/{part}", f"{bad}/{part}")
+    try:
+        report = eng.fsck_blocked(bad, deep=True)
+        assert not report["ok"] and report["checks"]["bad_positions"] == 1, report
+        assert sum(v for k, v in report["checks"].items() if k != "bad_positions") == 0
+        assert eng.fsck_blocked(bad)["ok"]
+    finally:
+        eng.unpersist()

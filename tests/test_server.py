@@ -205,6 +205,20 @@ def test_proximity_route_validation(blocked_url):
     assert code == 400
 
 
+def test_proximity_window_past_int32_is_clamped(blocked_url):
+    """Positions are int32, so any window past 2**31 - 1 already means
+    anywhere in the doc: a 41-digit window answers 200 with the rows of
+    the int32 maximum, instead of failing to parse as a SQL literal."""
+    rows = {}
+    for window in (2**31 - 1, 10**40):
+        code, body = _get_allow_error(
+            f"{blocked_url}/proximity?terms=search,engine&window={window}&k=20"
+        )
+        assert code == 200, body
+        rows[window] = body["results"]
+    assert rows[10**40] == rows[2**31 - 1] and rows[10**40]
+
+
 def test_positional_routes_404_without_blocked(base_url):
     code, _ = _get_allow_error(f"{base_url}/phrase?query=a+b")
     assert code == 404
